@@ -26,12 +26,10 @@ import pandas as pd  # module-level: pandas_udf resolves type hints here
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline queries: flagship UDF pipeline + one per operator family.
-# Round-3 registry trim (VERDICT r2 #2): pricing_summary / events_hourly /
-# user_sessions / regional_customer_volume / orders_no_big_lineitem were
-# demo queries, now unregistered; their headline slots are taken by the
-# merged dim_join_filters + order_stats_histogram (same operators, one
-# plan). See BASELINE.md round-3 notes for the r2→r3 comparability map.
+# Headline queries: flagship UDF pipeline + one per operator family
+# (dim_join_filters and order_stats_histogram each cover several TPC-H
+# operators in one plan). See BASELINE.md round-3 notes for the r2→r3
+# comparability map.
 HEADLINE = [
     "extract_spans_pipeline",
     "extraction_summary",

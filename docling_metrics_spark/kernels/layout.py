@@ -213,6 +213,17 @@ def _ap_all_thresholds(tp: np.ndarray, n_gt: int) -> np.ndarray:
     return prec_at.mean(axis=1)
 
 
+def _check_box_budget(gt: list, pred: list) -> None:
+    """Refuse a document with more than 100,000 boxes.
+
+    Predictions are truncated to max_det per class, but GT is unbounded
+    input: a hostile document with millions of boxes would allocate a
+    gigabyte IoU matrix. The ValueError lets the UDF wrapper emit its
+    sentinel instead of killing the task."""
+    if len(gt) + len(pred) > 100_000:
+        raise ValueError(f"too many boxes: {len(gt)} gt + {len(pred)} pred")
+
+
 def _fill_pools(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
@@ -225,12 +236,7 @@ def _fill_pools(
     long-form :func:`evaluate_map_detail` the layout_map oracle
     re-aggregates."""
     classes = sorted({c for c, _ in gt} | {c for c, _, _ in pred})
-    # predictions are truncated to max_det per class below, but GT is
-    # unbounded input: a hostile document with millions of boxes would
-    # allocate a gigabyte IoU matrix — refuse with ValueError (the UDF
-    # wrapper emits the sentinel row instead of killing the task)
-    if len(gt) + len(pred) > 100_000:
-        raise ValueError(f"too many boxes: {len(gt)} gt + {len(pred)} pred")
+    _check_box_budget(gt, pred)
     ap: dict[tuple, float] = {}   # (cls, thr_idx, area) -> AP at max_det
     ar: dict[tuple, float] = {}   # (cls, thr_idx, area, maxdet) -> AR
     if not classes:
@@ -671,7 +677,10 @@ def match_stats(
     TP counts at maxdet 1/10 (per-image truncation), and the in-range GT
     count — the shuffle key is (class, threshold, area), tiny and uniform.
 
-    Returns [{cls, thr_idx, area, scores, tp, n_gt, tp_md1, tp_md10}]."""
+    Returns [{cls, thr_idx, area, scores, tp, n_gt, tp_md1, tp_md10}].
+    Raises ValueError past the :func:`_check_box_budget` limit, like
+    :func:`evaluate_map`."""
+    _check_box_budget(gt, pred)
     classes = sorted(
         {c for c, _ in gt} | {c for c, _, _ in pred}
     )

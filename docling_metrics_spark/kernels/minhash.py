@@ -121,16 +121,6 @@ def minhash_signature(shingle_hashes: "set[int] | np.ndarray",
     return np.min(ax, axis=0)
 
 
-def minhash_bands(signature: np.ndarray, num_bands: int = 32) -> list[int]:
-    """LSH band keys: hash of each band's slice of the signature."""
-    rows = len(signature) // num_bands
-    keys = []
-    for band in range(num_bands):
-        chunk = signature[band * rows : (band + 1) * rows].tobytes()
-        keys.append(stable_hash64(struct.pack("<I", band) + chunk))
-    return keys
-
-
 def minhash_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(sig_a == sig_b))
 

@@ -87,13 +87,14 @@ _ENDING_QUOTES = [
 # RE2 `(?i)` performs Unicode SIMPLE case folding (CaseFolding.txt C+S
 # entries) even though its \b/\w stay ASCII — so the reference's
 # case-insensitive contraction rules fold 'ſ' (U+017F) into the s orbit
-# and 'K' (U+212A) into the k orbit, but do NOT fold 'ı'/'İ' (Turkic-only
-# fold entries). Python can't mix ASCII \b with Unicode folding in one
-# compiled flag set, and Python's own Unicode IGNORECASE OVER-folds
-# (it matches ı/İ with i, per the re docs) — so each folded literal is
-# spelled as its exact RE2 fold orbit and the patterns compile with
-# re.ASCII and NO IGNORECASE.
-_FOLD_ORBITS = {"s": "sSſ", "k": "kKK"}
+# but do NOT fold 'ı'/'İ' (Turkic-only fold entries). The other non-ASCII
+# simple fold of an ASCII letter, the Kelvin sign U+212A in the k orbit,
+# needs no entry: no contraction literal contains 'k'. Python can't mix
+# ASCII \b with Unicode folding in one compiled flag set, and Python's
+# own Unicode IGNORECASE OVER-folds (it matches ı/İ with i, per the re
+# docs) — so each folded literal is spelled as its exact RE2 fold orbit
+# and the patterns compile with re.ASCII and NO IGNORECASE.
+_FOLD_ORBITS = {"s": "sSſ"}
 
 
 def _ci(literal: str) -> str:

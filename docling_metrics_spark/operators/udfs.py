@@ -35,13 +35,11 @@ from docling_metrics_spark.kernels.layout import (
 )
 from docling_metrics_spark.kernels.minhash import (
     char_shingle_hashes,
-    minhash_bands,
     minhash_signature,
     simhash,
 )
 from docling_metrics_spark.kernels.teds import teds_from_brackets, html_to_bracket
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
-from docling_metrics_spark.kernels.grits import grits_all
 
 SPAN_STRUCT = StructType(
     [
@@ -71,31 +69,6 @@ TEDS_DOC_TYPE = StructType(
         StructField("n_tables_pred", IntegerType()),
         StructField("n_pairs", IntegerType()),
         StructField("error_count", IntegerType()),
-    ]
-)
-
-# Full reference result surface (map_layout_evaluator.py:146-199 /
-# torchmetrics MeanAveragePrecision): -1.0 = undefined bucket sentinel.
-# Per-class dicts are emitted as KEY-SORTED JSON strings, not MapType:
-# map columns are unhashable in pandas and crash generic row
-# canonicalizers downstream (VERDICT r2 #1) — a deterministic string
-# carries the same information and sorts/hashes like any scalar.
-MAP_TYPE = StructType(
-    [
-        StructField("map", DoubleType()),
-        StructField("map_50", DoubleType()),
-        StructField("map_75", DoubleType()),
-        StructField("map_small", DoubleType()),
-        StructField("map_medium", DoubleType()),
-        StructField("map_large", DoubleType()),
-        StructField("mar_1", DoubleType()),
-        StructField("mar_10", DoubleType()),
-        StructField("mar_100", DoubleType()),
-        StructField("mar_small", DoubleType()),
-        StructField("mar_medium", DoubleType()),
-        StructField("mar_large", DoubleType()),
-        StructField("map_per_class", StringType()),
-        StructField("mar_100_per_class", StringType()),
     ]
 )
 
@@ -136,31 +109,6 @@ def _sorted_json6(d: dict) -> str:
     cross-engine-stable variant of :func:`_sorted_json` (float repr is not
     reproducible in SQL; a fixed-width decimal string is)."""
     return _sorted_json({k: _fmt6_half_up(v) for k, v in d.items()})
-
-GRITS_TYPE = StructType(
-    [
-        StructField("grits_top", DoubleType()),
-        StructField("grits_con", DoubleType()),
-        StructField("grits_loc", DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(SPANS_TYPE)
-def extract_spans_udf(raw_html: pd.Series) -> pd.Series:
-    """HTML boilerplate strip → ordered spans. The flagship extraction op."""
-    return raw_html.map(extract_spans_from_html)
-
-
-@F.pandas_udf(TEXT_SCORES_TYPE)
-def text_scores_udf(text_a: pd.Series, text_b: pd.Series) -> pd.DataFrame:
-    """Six text metrics per (gt, pred) pair — TextMetrics.evaluate_sample
-    re-expressed as one Arrow batch kernel."""
-    rows = [
-        evaluate_text_pair(a if a is not None else "", b if b is not None else "").__dict__
-        for a, b in zip(text_a, text_b)
-    ]
-    return pd.DataFrame(rows)
 
 
 TOKEN_PAIR_TYPE = StructType(
@@ -294,13 +242,14 @@ def _doc_teds_pairs(gt_tables: list[str] | None,
     return rows
 
 
-def _doc_teds(gt_tables: list[str] | None, pred_tables: list[str] | None,
-              to_bracket=None) -> dict:
-    """Doc-level aggregate of :func:`_doc_teds_pairs` (mean over pairs
-    including the 0.0 unpaired rows, table/pair/error counts)."""
+def _doc_teds(gt_tables: list[str] | None,
+              pred_tables: list[str] | None) -> dict:
+    """Doc-level aggregate of :func:`_doc_teds_pairs` in HTML input mode
+    (mean over pairs including the 0.0 unpaired rows, table/pair/error
+    counts)."""
     gt = list(gt_tables) if gt_tables is not None else []
     pred = list(pred_tables) if pred_tables is not None else []
-    rows = _doc_teds_pairs(gt, pred, to_bracket)
+    rows = _doc_teds_pairs(gt, pred)
     if not rows:
         return {
             "teds_mean": None,
@@ -342,8 +291,11 @@ def teds_pairs_detail_udf(gt_tables: pd.Series, pred_tables: pd.Series) -> pd.Se
 def teds_cells_pairs_detail_udf(
     gt_tables: pd.Series, pred_tables: pd.Series
 ) -> pd.Series:
-    """Per-pair TEDS rows through the CELLS input mode (html → cells →
-    canonical html → bracket), long form of :func:`teds_cells_doc_udf`."""
+    """Per-pair TEDS rows through the CELLS input mode (reference
+    docling_metrics_table.py:190-199): each table's HTML is parsed to the
+    GriTS cell schema, re-serialized through cells_to_html
+    canonicalization, and only then TEDS-scored. Pairing and error
+    semantics are shared with the HTML mode via :func:`_doc_teds_pairs`."""
     from docling_metrics_spark.kernels.grits import cells_to_html, html_to_cells
 
     def via_cells(html: str) -> str:
@@ -355,26 +307,6 @@ def teds_cells_pairs_detail_udf(
             for g, p in zip(gt_tables, pred_tables)
         ]
     )
-
-
-@F.pandas_udf(TEDS_DOC_TYPE)
-def teds_doc_udf(gt_tables: pd.Series, pred_tables: pd.Series) -> pd.DataFrame:
-    """Per-document TEDS over table-span HTML lists (pre-filtered JVM-side
-    with ``filter(spans, s -> s.kind = 'table')`` so only table text crosses
-    the Arrow boundary — column pruning for nested data)."""
-    return pd.DataFrame(
-        [_doc_teds(g, p) for g, p in zip(gt_tables, pred_tables)]
-    )
-
-
-def _boxes_to_tuples(boxes) -> tuple[list, list]:
-    gt, pred = [], []
-    for b in boxes or []:
-        if b["score"] is None:
-            gt.append((int(b["category_id"]), list(b["bbox"])))
-        else:
-            pred.append((int(b["category_id"]), list(b["bbox"]), float(b["score"])))
-    return gt, pred
 
 
 def _gt_tuples(boxes) -> list:
@@ -391,31 +323,6 @@ def _pred_tuples(boxes) -> list:
         (int(b["category_id"]), list(b["bbox"]), float(b["score"]))
         for b in (boxes if boxes is not None else [])
     ]
-
-
-@F.pandas_udf(MAP_TYPE)
-def map_doc_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.DataFrame:
-    """Per-document COCO mAP over layout boxes. Documents the kernel
-    refuses (hostile box counts) emit the -1.0 sentinel row instead of
-    failing the task."""
-    sentinel = {
-        k: -1.0
-        for k in ("map", "map_50", "map_75", "map_small", "map_medium",
-                  "map_large", "mar_1", "mar_10", "mar_100", "mar_small",
-                  "mar_medium", "mar_large")
-    }
-    sentinel["map_per_class"] = "{}"
-    sentinel["mar_100_per_class"] = "{}"
-    rows = []
-    for g, p in zip(gt_boxes, pred_boxes):
-        try:
-            m = evaluate_map(_gt_tuples(g), _pred_tuples(p))
-            m["map_per_class"] = _sorted_json(m["map_per_class"])
-            m["mar_100_per_class"] = _sorted_json(m["mar_100_per_class"])
-            rows.append(m)
-        except ValueError:
-            rows.append(dict(sentinel))
-    return pd.DataFrame(rows)
 
 
 MAP_DETAIL_TYPE = ArrayType(
@@ -435,11 +342,12 @@ MAP_DETAIL_TYPE = ArrayType(
 
 @F.pandas_udf(MAP_DETAIL_TYPE)
 def map_detail_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-    """Long form of :func:`map_doc_udf`: the per-(cls, thr_idx, area) AP/AR
-    pool rows the surface means are built from, materialized so a DuckDB
-    oracle re-derives every per-doc field. Kernel refusals (hostile box
-    counts) emit an empty list — the sentinel row falls out of the
-    re-derivation (all-NULL means → −1.0, empty per-class dicts)."""
+    """Per-document COCO mAP in long form: the per-(cls, thr_idx, area)
+    AP/AR pool rows the full surface means (kernels.layout.evaluate_map)
+    are built from, materialized so a DuckDB oracle re-derives every
+    per-doc field. Kernel refusals (hostile box counts) emit an empty
+    list — the sentinel row falls out of the re-derivation (all-NULL
+    means → −1.0, empty per-class dicts)."""
     from docling_metrics_spark.kernels.layout import evaluate_map_detail
 
     out = []
@@ -449,25 +357,6 @@ def map_detail_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
         except ValueError:
             out.append([])
     return pd.Series(out)
-
-
-@F.pandas_udf(MAP_CORE_TYPE)
-def map_core_doc_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.DataFrame:
-    """Core-surface per-document mAP for the flagship pipeline: the kernel
-    computes ONLY all-area map/map_50/map_75/mar_100 (surface="core"),
-    skipping the size buckets, mar_1/10, and per-class dicts the pipeline
-    would throw away (VERDICT r2 #3). Values are bit-identical to the full
-    surface's overlapping fields (pinned in tests/test_kernels.py)."""
-    sentinel = {k: -1.0 for k in ("map", "map_50", "map_75", "mar_100")}
-    rows = []
-    for g, p in zip(gt_boxes, pred_boxes):
-        try:
-            rows.append(
-                evaluate_map(_gt_tuples(g), _pred_tuples(p), surface="core")
-            )
-        except ValueError:
-            rows.append(dict(sentinel))
-    return pd.DataFrame(rows)
 
 
 # Fused flagship surface: extraction + all three metric families from ONE
@@ -567,27 +456,6 @@ def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
     return tore_partial_udf
 
 
-@F.pandas_udf(GRITS_TYPE)
-def grits_doc_udf(cells_a: pd.Series, cells_b: pd.Series) -> pd.DataFrame:
-    """GriTS over two cell lists (array<struct<bbox,cell_text,row_nums,column_nums>>)."""
-    rows = []
-    for a, b in zip(cells_a, cells_b):
-        ca = [dict(c) for c in (a if a is not None else [])]
-        cb = [dict(c) for c in (b if b is not None else [])]
-        rows.append(grits_all(ca, cb))
-    return pd.DataFrame(rows)
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def minhash_bands_udf(text: pd.Series) -> pd.Series:
-    """LSH band keys (hex strings) for near-dup candidate generation."""
-    out = []
-    for t in text:
-        sig = minhash_signature(char_shingle_hashes(t or "", 5), num_perm=128)
-        out.append([format(k, "016x") for k in minhash_bands(sig, num_bands=32)])
-    return pd.Series(out)
-
-
 @F.pandas_udf(LongType())
 def simhash_udf(text: pd.Series) -> pd.Series:
     """64-bit SimHash as BIGINT (two's-complement view of the uint64), so
@@ -599,23 +467,6 @@ def simhash_udf(text: pd.Series) -> pd.Series:
         [simhash((t or "").split()) for t in text], dtype=np.uint64
     )
     return pd.Series(vals.view("int64"))
-
-
-def make_lsh_sig_udf(dim: int, n_planes: int = 8, seed: int = 42):
-    """Random-hyperplane LSH signature UDF for embedding ANN bucketing
-    (Charikar 2002 SRP-LSH). The plane matrix is captured in the closure and
-    shipped once per executor."""
-    import numpy as np
-
-    planes = np.random.RandomState(seed).randn(n_planes, dim)
-
-    @F.pandas_udf(StringType())
-    def lsh_sig_udf(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())
-        bits = (mat @ planes.T) > 0
-        return pd.Series(["".join("1" if b else "0" for b in row) for row in bits])
-
-    return lsh_sig_udf
 
 
 def make_multi_lsh_buckets_udf(dim: int, n_planes: int, n_tables: int,
@@ -652,57 +503,6 @@ def minhash_sig_udf(text: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-CELLS_GRITS_TYPE = StructType(
-    [
-        StructField("grits_top", DoubleType()),
-        StructField("grits_con", DoubleType()),
-        StructField("grits_loc", DoubleType()),
-        StructField("n_cells_gt", IntegerType()),
-        StructField("n_cells_pred", IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(CELLS_GRITS_TYPE)
-def grits_tables_udf(gt_tables: pd.Series, pred_tables: pd.Series) -> pd.DataFrame:
-    """Per-document GriTS over order-paired table-span HTML lists:
-    html→cells (stack walk with colspan placement, reference pattern
-    grits.py:487-534) then factored 2D-MSS per pair, averaged."""
-    from docling_metrics_spark.kernels.grits import grits_all, html_to_cells
-
-    rows = []
-    for gts, prs in zip(gt_tables, pred_tables):
-        gts = list(gts) if gts is not None else []
-        prs = list(prs) if prs is not None else []
-        accum = {"grits_top": 0.0, "grits_con": 0.0, "grits_loc": 0.0}
-        n_gt = n_pred = 0
-        n = 0
-        for i in range(min(len(gts), len(prs))):
-            try:
-                ca, cb = html_to_cells(gts[i]), html_to_cells(prs[i])
-            except ValueError:
-                # malformed table HTML → scored 0, mirroring the reference's
-                # error-sentinel semantics (docling_metrics_text.py:49-54)
-                n += 1
-                continue
-            n_gt += len(ca)
-            n_pred += len(cb)
-            g = grits_all(ca, cb)
-            for k in accum:
-                accum[k] += g[k]
-            n += 1
-        rows.append(
-            {
-                "grits_top": accum["grits_top"] / n if n else None,
-                "grits_con": accum["grits_con"] / n if n else None,
-                "grits_loc": accum["grits_loc"] / n if n else None,
-                "n_cells_gt": n_gt,
-                "n_cells_pred": n_pred,
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 GRITS_PAIR_DETAIL_TYPE = ArrayType(
     StructType(
         [
@@ -724,11 +524,13 @@ GRITS_PAIR_DETAIL_TYPE = ArrayType(
 def grits_pairs_detail_udf(
     gt_tables: pd.Series, pred_tables: pd.Series
 ) -> pd.Series:
-    """Long form of :func:`grits_tables_udf`: per order-paired table, the
-    un-normalized 2D-MSS reward totals and grid/cell cardinalities for all
-    three tasks — materialized so a DuckDB oracle re-derives the f-score
-    normalization (2·total/(na+nb) with the empty-grid edge cases) and the
-    doc-level means. The alignment itself stays kernel-side."""
+    """Per-document GriTS over order-paired table-span HTML lists, in long
+    form: html→cells (stack walk with colspan placement, reference pattern
+    grits.py:487-534), then per pair the un-normalized 2D-MSS reward
+    totals and grid/cell cardinalities for all three tasks — materialized
+    so a DuckDB oracle re-derives the f-score normalization
+    (2·total/(na+nb) with the empty-grid edge cases) and the doc-level
+    means. The alignment itself stays kernel-side."""
     from docling_metrics_spark.kernels.grits import grits_detail, html_to_cells
 
     out = []
@@ -834,12 +636,18 @@ MATCH_STATS_TYPE = ArrayType(
 def match_stats_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
     """Per-document COCO matching partials for dataset-level mAP
     (decomposition of map_layout_evaluator.py:50-99, see
-    kernels.layout.match_stats): one entry per (class, threshold, area)."""
+    kernels.layout.match_stats): one entry per (class, threshold, area).
+    Kernel refusals (hostile box counts) emit an empty list, so the
+    document adds nothing to the pools instead of failing the task."""
     from docling_metrics_spark.kernels.layout import match_stats
 
     out = []
     for g, p in zip(gt_boxes, pred_boxes):
-        stats = match_stats(_gt_tuples(g), _pred_tuples(p))
+        try:
+            stats = match_stats(_gt_tuples(g), _pred_tuples(p))
+        except ValueError:
+            out.append([])
+            continue
         out.append(
             [
                 {
@@ -943,27 +751,6 @@ def markush_pair_udf(gt_cx: pd.Series, pred_cx: pd.Series) -> pd.DataFrame:
             "num_fragments_pred", "num_fragments_equal", "cxsmi_equality",
         )})
     return pd.DataFrame(rows)
-
-
-@F.pandas_udf(TEDS_DOC_TYPE)
-def teds_cells_doc_udf(gt_tables: pd.Series, pred_tables: pd.Series) -> pd.DataFrame:
-    """TEDS through the CELLS input mode (reference
-    docling_metrics_table.py:190-199): each table's HTML is parsed to the
-    GriTS cell schema, re-serialized through cells_to_html canonicalization,
-    and only then TEDS-scored — exercising the third of the reference's
-    three table input modes (bracket / HTML / cells). Pairing and error
-    semantics are shared with the HTML mode via :func:`_doc_teds`."""
-    from docling_metrics_spark.kernels.grits import cells_to_html, html_to_cells
-
-    def via_cells(html: str) -> str:
-        return html_to_bracket(cells_to_html(html_to_cells(html)))
-
-    return pd.DataFrame(
-        [
-            _doc_teds(g, p, to_bracket=via_cells)
-            for g, p in zip(gt_tables, pred_tables)
-        ]
-    )
 
 
 TREE_STATS_TYPE = StructType(

@@ -27,10 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_metrics_spark.operators.skew import salted_agg
-from docling_metrics_spark.operators.udfs import (
-    extract_spans_udf,
-    flagship_doc_udf,
-)
+from docling_metrics_spark.operators.udfs import flagship_doc_udf
 
 
 def _span_text(col: str) -> F.Column:
@@ -53,18 +50,6 @@ def _table_htmls(col: str) -> F.Column:
         .otherwise(0),
     )
     return F.transform(tables, lambda s: s.text)
-
-
-def extract_and_verify(docs: DataFrame) -> DataFrame:
-    """Run extraction and assert span-sequence equality per document.
-
-    ``span_equal`` is a JVM-native comparison of two array<struct> columns —
-    exact on (kind, text, media_ref, offset) including order, no Python.
-    (Standalone extraction surface; the full pipeline fuses extraction into
-    :func:`run_pipeline`'s single scoring UDF.)"""
-    return docs.withColumn("extracted", extract_spans_udf("raw_html")).withColumn(
-        "span_equal", F.col("extracted").eqNullSafe(F.col("spans"))
-    )
 
 
 def run_pipeline(docs: DataFrame) -> DataFrame:

@@ -11,8 +11,10 @@ engine's continuous-ingest extension, built the idiomatic Spark way:
   operator Spark's built-ins can't express),
 - ``Trigger.AvailableNow`` for batch-incremental runs: the same code path
   serves a nightly catch-up job and a 24/7 stream. Tests assert the
-  streaming result equals the batch twin (events_hourly/user_sessions in
-  plans/queries.py) on the same input.
+  streaming result equals a batch aggregation on the same input, and the
+  registered streaming_windowed_counts / streaming_sessionize queries are
+  DuckDB-oracled (the sessionize oracle is ``_SESSIONS_SQL`` in
+  plans/queries.py).
 
 At scale: state lives in the state store keyed by (window, event_type) or
 user_id — partitioned by key hash, so 1000 executors shard state evenly;
@@ -77,8 +79,9 @@ SESSION_OUT_SCHEMA = "user_id bigint, n_events bigint, n_sessions bigint"
 def _sessionize(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
     """Gap-based session counting per user (30-min inactivity gap).
 
-    The incremental twin of plans/queries.py::user_sessions — state carries
-    (last event time, running counts) across micro-batches."""
+    The incremental twin of the batch window SQL ``_SESSIONS_SQL`` in
+    plans/queries.py (the oracle of ``streaming_sessionize``) — state
+    carries (last event time, running counts) across micro-batches."""
     gap = 1800.0
     if state.exists:
         last_ts, n_events, n_sessions = state.get

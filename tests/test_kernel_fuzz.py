@@ -102,104 +102,104 @@ def test_grits_on_arbitrary_cells(cells_a, cells_b):
         assert 0.0 <= v <= 1.0
 
 
+def _boxes(n, with_score):
+    """``n`` identical 10×10 boxes over 5 classes, as a Spark column."""
+    from pyspark.sql import functions as F
+
+    return F.transform(
+        F.sequence(F.lit(1), F.lit(n)),
+        lambda i: F.struct(
+            F.pmod(i, F.lit(5)).cast("int").alias("category_id"),
+            F.array(
+                F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(10.0)
+            ).alias("bbox"),
+            *(
+                [(i.cast("double") / 1e6).alias("score")]
+                if with_score
+                else []
+            ),
+        ),
+    )
+
+
 def test_map_udf_hostile_box_count_degrades_one_row(spark):
-    """evaluate_map's 100k-box refusal must surface END-TO-END through
-    map_doc_udf as the -1.0 sentinel row — one hostile document degrades
-    one row, never the task (VERDICT r2 #8). The healthy sibling row in
-    the same Arrow batch scores normally."""
+    """The 100k-box refusal must surface END-TO-END through both mAP
+    long-form UDFs as an empty list — one hostile document degrades one
+    row, never the task (VERDICT r2 #8). ``map_detail_udf`` feeds the
+    per-doc ``layout_map`` pools, ``match_stats_udf`` the dataset-level
+    ``layout_map_dataset`` pools. The healthy sibling row in the same
+    Arrow batch scores normally."""
     from pyspark.sql import functions as F
 
     from docling_metrics_spark.operators.udfs import (
-        map_core_doc_udf,
-        map_doc_udf,
+        map_detail_udf,
+        match_stats_udf,
     )
-
-    def boxes(n, with_score):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(n)),
-            lambda i: F.struct(
-                F.pmod(i, F.lit(5)).cast("int").alias("category_id"),
-                F.array(
-                    F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(10.0)
-                ).alias("bbox"),
-                *(
-                    [(i.cast("double") / 1e6).alias("score")]
-                    if with_score
-                    else []
-                ),
-            ),
-        )
 
     df = spark.range(2).select(
         F.col("id").alias("doc_id"),
-        F.when(F.col("id") == 0, boxes(60_000, False))
-        .otherwise(boxes(1, False))
+        F.when(F.col("id") == 0, _boxes(60_000, False))
+        .otherwise(_boxes(1, False))
         .alias("gt_boxes"),
-        F.when(F.col("id") == 0, boxes(60_000, True))
-        .otherwise(boxes(1, True))
+        F.when(F.col("id") == 0, _boxes(60_000, True))
+        .otherwise(_boxes(1, True))
         .alias("pred_boxes"),
     ).repartition(1)
 
-    rows = {
-        r.doc_id: r
+    detail = {
+        r.doc_id: r.d
         for r in df.select(
-            "doc_id", map_doc_udf("gt_boxes", "pred_boxes").alias("m")
-        ).select("doc_id", "m.*").collect()
+            "doc_id", map_detail_udf("gt_boxes", "pred_boxes").alias("d")
+        ).collect()
     }
-    assert rows[0].map == -1.0 and rows[0].mar_100 == -1.0
-    assert rows[0].map_per_class == "{}"  # sentinel JSON, not a crash
-    assert rows[1].map == 1.0  # healthy doc in the same batch unaffected
+    assert detail[0] == []  # refusal, not a crash
+    all_area = [e for e in detail[1] if e.area == "all"]
+    assert len(all_area) == 10  # one entry per IoU threshold
+    assert all(e.ap == 1.0 for e in all_area)
 
-    core = {
-        r.doc_id: r
+    stats = {
+        r.doc_id: r.s
         for r in df.select(
-            "doc_id", map_core_doc_udf("gt_boxes", "pred_boxes").alias("m")
-        ).select("doc_id", "m.*").collect()
+            "doc_id", match_stats_udf("gt_boxes", "pred_boxes").alias("s")
+        ).collect()
     }
-    assert core[0].map == -1.0 and core[1].map == 1.0
+    assert stats[0] == []  # refusal, not 12,000×100 IoU matrices per class
+    all_area = [e for e in stats[1] if e.area == "all"]
+    assert len(all_area) == 10
+    assert all(e.tp == [1] and e.n_gt == 1 for e in all_area)
 
 
 def test_fused_flagship_udf_hostile_inputs_degrade_one_row(spark):
     """The FUSED flagship UDF inherits every kernel's error channel: a
     hostile box count emits the mAP sentinel while the same row's text and
     TEDS fields still score; a deeply-nested DOM extracts flattened instead
-    of dying; the healthy sibling row in the same Arrow batch is
-    untouched."""
+    of dying; a malformed prediction table is scored 0 and counted in
+    ``error_count`` (reference error_id channel analog); the healthy
+    sibling row in the same Arrow batch is untouched."""
     from pyspark.sql import functions as F
 
     from docling_metrics_spark.operators.udfs import flagship_doc_udf
 
-    def boxes(n, with_score):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(n)),
-            lambda i: F.struct(
-                F.pmod(i, F.lit(5)).cast("int").alias("category_id"),
-                F.array(
-                    F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(10.0)
-                ).alias("bbox"),
-                *(
-                    [(i.cast("double") / 1e6).alias("score")]
-                    if with_score
-                    else []
-                ),
-            ),
-        )
-
     deep_html = "<html><body>" + "<div>" * 500 + "hello world" + \
         "</div>" * 500 + "</body></html>"
     sane_html = "<html><body><p>hello world</p></body></html>"
-    df = spark.range(2).select(
+    table_html = "<html><body><p>hello world</p>" \
+        "<table><tr><td>a</td></tr></table></body></html>"
+    df = spark.range(3).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") == 0, F.lit(deep_html))
+        .when(F.col("id") == 2, F.lit(table_html))
         .otherwise(F.lit(sane_html))
         .alias("raw_html"),
         F.lit("hello world").alias("pred_text"),
-        F.array().cast("array<string>").alias("pred_tables"),
-        F.when(F.col("id") == 0, boxes(60_000, False))
-        .otherwise(boxes(1, False))
+        F.when(F.col("id") == 2, F.array(F.lit("<table")))
+        .otherwise(F.array().cast("array<string>"))
+        .alias("pred_tables"),
+        F.when(F.col("id") == 0, _boxes(60_000, False))
+        .otherwise(_boxes(1, False))
         .alias("gt_boxes"),
-        F.when(F.col("id") == 0, boxes(60_000, True))
-        .otherwise(boxes(1, True))
+        F.when(F.col("id") == 0, _boxes(60_000, True))
+        .otherwise(_boxes(1, True))
         .alias("pred_boxes"),
     ).repartition(1)
 
@@ -213,8 +213,13 @@ def test_fused_flagship_udf_hostile_inputs_degrade_one_row(spark):
             ).alias("r"),
         ).select("doc_id", "r.*").collect()
     }
-    hostile, healthy = rows[0], rows[1]
+    hostile, healthy, bad_table = rows[0], rows[1], rows[2]
     assert hostile.map == -1.0 and hostile.mar_100 == -1.0  # mAP sentinel
     assert hostile.f1_score == 1.0  # text still scored (deep DOM flattened)
     assert hostile.extracted is not None and len(hostile.extracted) >= 1
     assert healthy.map == 1.0 and healthy.f1_score == 1.0
+    assert healthy.error_count == 0 and healthy.teds_mean is None
+    # one GT table vs the malformed "<table": paired, scored 0, one error
+    assert bad_table.n_pairs == 1 and bad_table.error_count == 1
+    assert bad_table.teds_mean == 0.0
+    assert bad_table.map == 1.0  # the row's other metrics still score

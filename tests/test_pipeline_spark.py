@@ -9,11 +9,7 @@ from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.kernels.layout import evaluate_map
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 from docling_metrics_spark.operators.skew import salted_agg, salted_array_sum
-from docling_metrics_spark.pipeline import (
-    aggregate_metrics,
-    extract_and_verify,
-    run_pipeline,
-)
+from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
 
 N_DOCS = 120
 REL = 1e-6
@@ -33,11 +29,11 @@ def per_doc(spark, docs):
     return df
 
 
-def test_span_equality_all_docs(spark, docs):
-    """North-rule gate: distributed extraction == reference spans, exactly."""
-    ev = extract_and_verify(docs)
-    n_total = ev.count()
-    n_equal = ev.filter("span_equal").count()
+def test_span_equality_all_docs(spark, per_doc):
+    """North-rule gate: distributed extraction == reference spans, exactly
+    (the fused flagship UDF's extraction, compared JVM-side)."""
+    n_total = per_doc.count()
+    n_equal = per_doc.filter("span_equal").count()
     assert n_total == N_DOCS
     assert n_equal == N_DOCS
 
@@ -222,16 +218,18 @@ def test_checkpoint_resume(spark, docs, tmp_path):
 
 
 def test_teds_error_channel(spark):
-    """Malformed table HTML inside spans must not kill the job — the UDF
-    surfaces an error count (reference error_id channel analog)."""
-    from docling_metrics_spark.operators.udfs import teds_doc_udf
+    """Malformed table HTML inside spans must not kill the job — the
+    per-pair TEDS UDF scores the pair 0 and flags it in ``err``
+    (reference error_id channel analog)."""
+    from docling_metrics_spark.operators.udfs import teds_pairs_detail_udf
 
     df = spark.createDataFrame(
         [(["<table><tr><td>a</td></tr></table>"], ["<table"],)],
         "gt array<string>, pred array<string>",
     )
-    row = df.select(teds_doc_udf("gt", "pred").alias("t")).collect()[0].t
-    assert row.error_count >= 0 and row.teds_mean is not None
+    row = df.select(teds_pairs_detail_udf("gt", "pred").alias("t")).collect()[0].t
+    assert len(row) == 1
+    assert row[0].idx == 0 and row[0].err is True and row[0].score == 0.0
 
 
 def test_dataset_map_matches_local(spark):
@@ -312,13 +310,14 @@ def test_dataset_map_matches_local(spark):
 
 def test_dataset_map_single_doc_equals_per_doc(spark):
     """On a one-document corpus the pooled dataset path must equal the
-    per-document full surface field-by-field (VERDICT r2 #6) — the same
+    per-document full surface (the evaluate_map kernel, run here in the
+    driver on the collected row) field-by-field (VERDICT r2 #6) — the same
     consistency pattern the reference's benchmark doubles as
     (edit_distance_benchmark.py:90-102). Dataset values are rounded to 6
     decimals in-query, hence the 1e-6 tolerance."""
     import json
 
-    from docling_metrics_spark.operators.udfs import map_doc_udf
+    from docling_metrics_spark.operators.udfs import _gt_tuples, _pred_tuples
     from docling_metrics_spark.plans.queries import _dataset_map_df
 
     one = (
@@ -330,11 +329,8 @@ def test_dataset_map_single_doc_equals_per_doc(spark):
     )
     assert one.count() == 1
 
-    per = (
-        one.select(map_doc_udf("gt_boxes", "pred_boxes").alias("m"))
-        .select("m.*")
-        .collect()[0]
-    )
+    doc = one.collect()[0]
+    per = evaluate_map(_gt_tuples(doc.gt_boxes), _pred_tuples(doc.pred_boxes))
     ds = _dataset_map_df(one).collect()[0]
 
     for k in ("map", "map_50", "map_75", "map_small", "map_medium",
@@ -348,7 +344,7 @@ def test_dataset_map_single_doc_equals_per_doc(spark):
             assert got is not None and abs(got - want) < 1.01e-6, (k, got, want)
 
     for col in ("map_per_class", "mar_100_per_class"):
-        want_d = json.loads(per[col])
+        want_d = per[col]
         got_d = json.loads(ds[col])
         assert set(want_d) == set(got_d), col
         for cat, want in want_d.items():

@@ -101,7 +101,7 @@ def worker(master: str, shuffle_partitions: int, corpus: str) -> None:
 
 
 def _submit_cmd(master: str, shuffle: int, out_json: str,
-                corpus: str = CORPUS) -> list[str]:
+                corpus: str) -> list[str]:
     """spark-submit invocation for one tier: engine from the zip alone."""
     import shutil
 
@@ -134,11 +134,13 @@ def orchestrate(n_docs: int, via_submit: bool = False,
     # the path encodes n_docs AND the skew parameters: a _SUCCESS-only
     # check on a shared path would silently benchmark a stale corpus when
     # either knob changes between invocations
-    corpus = f"{CORPUS}{'_skew100x60' if skew else ''}_{n_docs}"
+    skew_kw = {"skew_every": 100, "skew_factor": 60} if skew else {}
+    tag = (f"_skew{skew_kw['skew_every']}x{skew_kw['skew_factor']}"
+           if skew_kw else "")
+    corpus = f"{CORPUS}{tag}_{n_docs}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
         spark = build_session(master="local[8]", shuffle_partitions=8)
-        kw = {"skew_every": 100, "skew_factor": 60} if skew else {}
-        write_corpus(spark, corpus, n_docs=n_docs, partitions=128, **kw)
+        write_corpus(spark, corpus, n_docs=n_docs, partitions=128, **skew_kw)
         spark.stop()
 
     results = {}
@@ -226,8 +228,8 @@ def orchestrate(n_docs: int, via_submit: bool = False,
         "pass": eff_2_8 >= 0.8 or eff_4_16 >= 0.8 or eff_8_32 >= 0.8,
         "span_equal_rate": results["local[8]"]["span_equal_rate"],
     }
-    if skew:
-        report["skew"] = {"skew_every": 100, "skew_factor": 60}
+    if skew_kw:
+        report["skew"] = skew_kw
     print(json.dumps(report))
     return report
 
