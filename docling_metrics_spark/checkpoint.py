@@ -3,22 +3,30 @@
 North-rule requirement: "every partition writes lineage + metric rows to a
 checkpoint table so a killed job resumes without recomputation."
 
-Design (batch-incremental, Iceberg-shaped; plain parquet in this sandbox —
-with Iceberg the metric write + lineage append become one atomic snapshot):
+Design (batch-incremental, Iceberg-shaped; plain parquet on a local
+filesystem, which the driver reads and writes directly — with Iceberg the
+metric write + lineage commit become one atomic snapshot):
 
 - Documents hash-bucket by ``pmod(xxhash64(doc_id), n_buckets)`` — a
   deterministic, data-independent partitioning that survives re-runs and
   input reordering.
 - Each bucket is one unit of work: metric rows land under
   ``out/metrics/bucket=K/`` (dynamic partition overwrite ⇒ idempotent on
-  retry), then a lineage row ``(batch_id, bucket, n_docs, committed_at)``
-  is appended to ``out/checkpoint/``. The lineage append is the commit
-  point: a crash between metric write and lineage append re-does that
-  bucket idempotently.
-- Resume = read the checkpoint table, skip committed buckets
-  (an anti-join; the checkpoint side is tiny ⇒ broadcast).
+  retry), then its lineage row ``(batch_id, bucket, n_docs, committed_at)``
+  is committed to ``out/checkpoint/``. The commit point is a driver-side
+  atomic file create, the analogue of Iceberg's metadata commit (a
+  metadata swap on the driver, not a distributed job): the one-row
+  parquet file is written under a hidden temp name and ``os.replace``-d to
+  a name derived from ``batch_id``. Readers (Spark, DuckDB's
+  ``checkpoint/*.parquet``) never see a half-written file, and a re-commit
+  of the same batch overwrites its file instead of appending a duplicate
+  row. A crash between metric write and lineage commit re-does that bucket
+  idempotently.
+- Resume = read the lineage files' ``bucket`` column on the driver and
+  skip committed buckets. A missing checkpoint dir means a fresh run; an
+  unreadable lineage file is an error, never a silent full recompute.
 - ``batch_id`` is deterministic from (corpus fingerprint, bucket), so a
-  resumed run and an uninterrupted run produce byte-identical lineage.
+  resumed run and an uninterrupted run commit the same lineage files.
 
 At 10^12 docs: n_buckets in the thousands; each bucket is an independent
 job stage processing ~10^9 docs; failures cost one bucket, not the run.
@@ -26,27 +34,80 @@ job stage processing ~10^9 docs; failures cost one bucket, not the run.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from docling_metrics_spark.pipeline import run_pipeline
 
 CHECKPOINT_SCHEMA = "batch_id string, bucket int, n_docs long, committed_at double"
+# The same four columns with the physical types Spark reads back for
+# CHECKPOINT_SCHEMA (int → int32, long → int64).
+_LINEAGE_ARROW_SCHEMA = pa.schema(
+    [
+        ("batch_id", pa.string()),
+        ("bucket", pa.int32()),
+        ("n_docs", pa.int64()),
+        ("committed_at", pa.float64()),
+    ]
+)
 
 
 def bucket_of(doc_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+def _lineage_name(batch_id: str, bucket: int) -> str:
+    """File name of a batch's lineage commit. ``batch_id`` is
+    ``"<fingerprint>:<bucket>"`` and Hadoop ``Path`` rejects ``:`` in a
+    file name, so the name carries a hex digest of it instead."""
+    digest = hashlib.sha1(batch_id.encode("utf-8")).hexdigest()
+    return f"lineage-{bucket:05d}-{digest}.parquet"
+
+
+def _commit_lineage(ckpt_dir: str, batch_id: str, bucket: int, n_docs: int) -> None:
+    """Atomically create the one-row lineage file for ``batch_id``: write it
+    under a hidden temp name, then ``os.replace`` it into place. Atomic
+    against a killed job; there is no fsync, so an OS crash can leave an
+    empty file, which the next resume reports as unreadable."""
+    os.makedirs(ckpt_dir, exist_ok=True)
+    row = pa.table(
+        {
+            "batch_id": [batch_id],
+            "bucket": [bucket],
+            "n_docs": [n_docs],
+            "committed_at": [time.time()],
+        },
+        schema=_LINEAGE_ARROW_SCHEMA,
+    )
+    tmp = os.path.join(ckpt_dir, f"_inflight-{uuid.uuid4().hex}")
+    pq.write_table(row, tmp)
+    os.replace(tmp, os.path.join(ckpt_dir, _lineage_name(batch_id, bucket)))
+
+
+def committed_buckets(out_dir: str) -> set[int]:
+    """Buckets with a lineage row under ``out_dir/checkpoint``, read from the
+    lineage files on the driver. No checkpoint dir ⇒ nothing committed; a
+    lineage file that cannot be read raises, naming it."""
     path = os.path.join(out_dir, "checkpoint")
-    try:
-        rows = spark.read.schema(CHECKPOINT_SCHEMA).parquet(path).select("bucket").collect()
-    except Exception:
+    if not os.path.isdir(path):
         return set()
-    return {r.bucket for r in rows}
+    done: set[int] = set()
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):  # hidden from Spark's reader too
+            continue
+        f = os.path.join(path, name)
+        try:
+            buckets = pq.read_table(f, columns=["bucket"]).column("bucket")
+        except (OSError, pa.ArrowException) as exc:
+            raise RuntimeError(f"unreadable checkpoint lineage file {f}") from exc
+        done.update(b for b in buckets.to_pylist() if b is not None)
+    return done
 
 
 def _footer_count(bucket_dir: str) -> int:
@@ -54,8 +115,6 @@ def _footer_count(bucket_dir: str) -> int:
     count must not re-run the pipeline (VERDICT r1: the old post-write
     ``per_doc.count()`` recomputed every metric UDF). On an object store /
     Iceberg this is the manifest row-count field."""
-    import pyarrow.parquet as pq
-
     if not os.path.isdir(bucket_dir):
         return 0
     return sum(
@@ -80,13 +139,15 @@ def run_checkpointed(
     buckets, run the pipeline, write every bucket at once with
     ``partitionBy("bucket")`` under dynamic partition overwrite (only the
     buckets present in the data are replaced — idempotent on retry), then
-    append one lineage row per bucket with counts taken from parquet
-    footers. By default all uncommitted buckets form a single wave, so a
-    fresh run scans the corpus exactly once — the previous design filtered
-    the full corpus once PER BUCKET (n_buckets scans, the 100 TB
-    scale-killer flagged in VERDICT r1). At lake scale the input table is
-    itself bucket-partitioned, so the filter prunes committed buckets at
-    the scan.
+    commit one lineage row per bucket, in bucket order, with counts taken
+    from parquet footers. Each commit is a driver-side atomic file create
+    (the Iceberg metadata-commit analogue), not a Spark job, so the job
+    count does not grow with ``n_buckets``. By default all uncommitted
+    buckets form a single wave, so a fresh run scans the corpus exactly
+    once — the previous design filtered the full corpus once PER BUCKET
+    (n_buckets scans, the 100 TB scale-killer flagged in VERDICT r1). At
+    lake scale the input table is itself bucket-partitioned, so the filter
+    prunes committed buckets at the scan.
 
     ``fail_after_buckets`` injects a crash after K lineage commits (the
     resume test's kill switch): data already written for the wave's
@@ -94,7 +155,7 @@ def run_checkpointed(
     metrics_dir = os.path.join(out_dir, "metrics")
     ckpt_dir = os.path.join(out_dir, "checkpoint")
 
-    done = committed_buckets(spark, out_dir)
+    done = committed_buckets(out_dir)
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
         return 0
@@ -116,7 +177,7 @@ def run_checkpointed(
             per_doc.write.mode("overwrite").partitionBy("bucket").parquet(
                 metrics_dir
             )
-            # Commit point: one lineage append per bucket, in bucket order.
+            # Commit point: one lineage file per bucket, in bucket order.
             for bucket in wave:
                 if (
                     fail_after_buckets is not None
@@ -128,10 +189,9 @@ def run_checkpointed(
                 n_docs = _footer_count(
                     os.path.join(metrics_dir, f"bucket={bucket}")
                 )
-                batch_id = f"{corpus_fingerprint}:{bucket}"
-                spark.createDataFrame(
-                    [(batch_id, bucket, n_docs, time.time())], CHECKPOINT_SCHEMA
-                ).write.mode("append").parquet(ckpt_dir)
+                _commit_lineage(
+                    ckpt_dir, f"{corpus_fingerprint}:{bucket}", bucket, n_docs
+                )
                 processed += 1
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)

@@ -607,12 +607,11 @@ def _src_fingerprint() -> str:
         _os.path.join(kdir, f) for f in sorted(_os.listdir(kdir))
         if f.endswith(".py")
     ]
+    # An unreadable source file raises: skipping it would drop it from the
+    # cache key, and its edits would then serve stale caches.
     for f in paths:
-        try:
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        except OSError:
-            pass
+        with open(f, "rb") as fh:
+            h.update(fh.read())
     return h.hexdigest()[:8]
 
 

@@ -1,6 +1,8 @@
 """End-to-end Spark pipeline tests: extraction equality, metric parity vs
 the single-process oracle, salted-agg correctness, checkpoint resume."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -215,6 +217,108 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     assert {r.batch_id for r in ckpt.collect()} == {
         f"corpus:{b}" for b in range(4)
     }
+
+
+def _parquet_mtimes(out_dir):
+    """{bucket dir: {file: mtime}} of every written metric bucket."""
+    import os
+
+    metrics = os.path.join(out_dir, "metrics")
+    return {
+        b: {
+            f: os.path.getmtime(os.path.join(metrics, b, f))
+            for f in os.listdir(os.path.join(metrics, b))
+            if f.endswith(".parquet")
+        }
+        for b in os.listdir(metrics)
+        if b.startswith("bucket=")
+    }
+
+
+def test_checkpoint_corrupt_lineage_fails_loudly(spark, docs, tmp_path):
+    """An unreadable lineage file must stop the resume with an error naming
+    it — not read as "nothing committed" and silently recompute (and
+    re-commit) every bucket."""
+    from docling_metrics_spark.checkpoint import run_checkpointed
+
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, docs, out, n_buckets=4, fail_after_buckets=2)
+    bad = tmp_path / "out" / "checkpoint" / "x.parquet"
+    bad.write_bytes(b"not a parquet file")
+    before = _parquet_mtimes(out)
+    assert len(before) == 4
+
+    with pytest.raises(RuntimeError, match=re.escape(str(bad))):
+        run_checkpointed(spark, docs, out, n_buckets=4)
+    assert _parquet_mtimes(out) == before
+
+
+def test_checkpoint_lineage_idempotent_on_batch_id(spark, docs, tmp_path, monkeypatch):
+    """Re-committing a batch replaces its lineage row: after a crash, a
+    resume that does not see the committed buckets (``committed_buckets``
+    forced empty) re-commits them, and still leaves exactly one row per
+    bucket, for Spark and for DuckDB, with the CHECKPOINT_SCHEMA types on
+    disk."""
+    import duckdb
+
+    from docling_metrics_spark import checkpoint
+    from docling_metrics_spark.checkpoint import (
+        read_checkpoint,
+        read_metrics,
+        run_checkpointed,
+    )
+
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, docs, out, n_buckets=4, fail_after_buckets=2)
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "committed_buckets", lambda *a: set())
+        assert run_checkpointed(spark, docs, out, n_buckets=4) == 4
+
+    want = {(f"corpus:{b}", b) for b in range(4)}
+    rows = read_checkpoint(spark, out).collect()
+    assert sorted((r.batch_id, r.bucket) for r in rows) == sorted(want)
+    written = read_metrics(spark, out).groupBy("bucket").count().collect()
+    assert {r.bucket: r.n_docs for r in rows} == {
+        r.bucket: r["count"] for r in written
+    }
+    # the types written on disk are CHECKPOINT_SCHEMA's, not just cast to it
+    assert (
+        spark.read.parquet(f"{out}/checkpoint").schema.simpleString()
+        == read_checkpoint(spark, out).schema.simpleString()
+        == "struct<batch_id:string,bucket:int,n_docs:bigint,committed_at:double>"
+    )
+
+    lineage = f"read_parquet('{out}/checkpoint/*.parquet')"
+    con = duckdb.connect()
+    got = con.execute(f"SELECT batch_id, bucket FROM {lineage}").fetchall()
+    assert sorted(got) == sorted(want)
+    assert [
+        (r[0], r[1]) for r in con.execute(f"DESCRIBE SELECT * FROM {lineage}").fetchall()
+    ] == [("batch_id", "VARCHAR"), ("bucket", "INTEGER"), ("n_docs", "BIGINT"),
+          ("committed_at", "DOUBLE")]
+
+
+def test_checkpoint_commit_jobs_do_not_grow_with_buckets(spark, docs, tmp_path):
+    """Lineage commits launch no Spark job: a fresh 8-bucket run starts as
+    many jobs as a 2-bucket run."""
+    from docling_metrics_spark.checkpoint import run_checkpointed
+
+    sc = spark.sparkContext
+
+    def jobs(n_buckets):
+        group = f"ckpt-jobs-{n_buckets}"
+        sc.setJobGroup(group, "checkpoint job-count guard")
+        try:
+            run_checkpointed(
+                spark, docs, str(tmp_path / f"b{n_buckets}"), n_buckets=n_buckets
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(8) == jobs(2) > 0
 
 
 def test_teds_error_channel(spark):

@@ -395,3 +395,27 @@ def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
     assert CACHE_EVENTS[ev0:] == [(path, "build")]
     invalidate_cache(path)  # idempotent on a missing marker
     invalidate_cache(path)
+
+
+def test_src_fingerprint_unreadable_source_raises(monkeypatch):
+    """An unreadable source file must fail the cache key, not silently drop
+    out of it (its edits would then serve stale caches)."""
+    import builtins
+    import os
+
+    import pytest
+
+    from docling_metrics_spark.plans import queries
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(queries.__file__)))
+    blocked = os.path.join(pkg, "operators", "udfs.py")
+    real_open = builtins.open
+
+    def fake_open(path, *args, **kwargs):
+        if os.path.abspath(path) == blocked:
+            raise PermissionError(13, "Permission denied", path)
+        return real_open(path, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", fake_open)
+    with pytest.raises(PermissionError):
+        queries._src_fingerprint()

@@ -28,8 +28,10 @@ time the same region.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -122,6 +124,19 @@ def _submit_cmd(master: str, shuffle: int, out_json: str,
     ]
 
 
+def prune_stale_corpora(keep: str) -> list[str]:
+    """Delete every ``{CORPUS}_*`` corpus directory except ``keep`` and print
+    each one removed: every (n_docs, skew) choice leaves its own corpus
+    behind, so /tmp would otherwise fill up across invocations."""
+    removed = sorted(
+        d for d in glob.glob(f"{CORPUS}_*") if d != keep and os.path.isdir(d)
+    )
+    for d in removed:
+        shutil.rmtree(d)
+        print(f"removed stale corpus {d}", file=sys.stderr)
+    return removed
+
+
 def orchestrate(n_docs: int, via_submit: bool = False,
                 skew: bool = False) -> dict:
     """``skew=True`` turns the giant-document knob up 5× (a giant with
@@ -139,6 +154,7 @@ def orchestrate(n_docs: int, via_submit: bool = False,
            if skew_kw else "")
     corpus = f"{CORPUS}{tag}_{n_docs}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
+        prune_stale_corpora(keep=corpus)
         spark = build_session(master="local[8]", shuffle_partitions=8)
         write_corpus(spark, corpus, n_docs=n_docs, partitions=128, **skew_kw)
         spark.stop()
