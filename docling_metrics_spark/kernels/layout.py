@@ -54,27 +54,6 @@ def iou_matrix(boxes_a: np.ndarray, boxes_b: np.ndarray) -> np.ndarray:
     return np.divide(inter, union, out=np.zeros_like(inter), where=union > 0)
 
 
-def _match_predictions(
-    ious: np.ndarray, scores: np.ndarray, thr: float
-) -> np.ndarray:
-    """Greedy COCO matching: predictions (pre-sorted by descending score)
-    claim the highest-IoU unmatched GT ≥ thr. Returns bool TP flags per
-    prediction in that order."""
-    n_gt = ious.shape[0]
-    # caller passes predictions already sorted by descending score
-    gt_taken = np.zeros(n_gt, dtype=bool)
-    tp = np.zeros(len(scores), dtype=bool)
-    for pi in range(len(scores)):
-        best, best_iou = -1, thr
-        for gi in range(n_gt):
-            if not gt_taken[gi] and ious[gi, pi] >= best_iou:
-                best, best_iou = gi, ious[gi, pi]
-        if best >= 0:
-            gt_taken[best] = True
-            tp[pi] = True
-    return tp
-
-
 def average_precision(
     tp_sorted: np.ndarray, n_gt: int
 ) -> float:
@@ -232,9 +211,8 @@ def _fill_pools(
 ) -> tuple[list, dict, dict]:
     """The COCO matching/AP loop behind :func:`evaluate_map`: fills the
     per-(cls, thr_idx, area) AP pool and the per-(…, maxdet) AR pool
-    (NaN = empty pool). Shared by the per-document surface and the
-    long-form :func:`evaluate_map_detail` the layout_map oracle
-    re-aggregates."""
+    (NaN = empty pool). The long-form twin the layout queries
+    materialize is :func:`match_stats`."""
     classes = sorted({c for c, _ in gt} | {c for c, _, _ in pred})
     _check_box_budget(gt, pred)
     ap: dict[tuple, float] = {}   # (cls, thr_idx, area) -> AP at max_det
@@ -404,40 +382,6 @@ def evaluate_map(
     }
 
 
-def evaluate_map_detail(
-    gt: list[tuple[int, list[float]]],
-    pred: list[tuple[int, list[float], float]],
-    max_det: int = 100,
-) -> list[dict]:
-    """Long form of the full per-document surface: one row per
-    (cls, thr_idx, area) pool with its AP and AR at maxdets 1/10/max_det
-    ('all' area only for the truncated maxdets, mirroring COCO), NaN →
-    None. The layout_map query materializes these rows so Spark and a
-    DuckDB oracle both re-derive every surface field (nan-skipping means,
-    −1.0 empty sentinels, per-class dicts) from the same table."""
-    classes, ap, ar = _fill_pools(gt, pred, max_det, core=False)
-
-    def _nn(v):
-        return None if v is None or v != v else float(v)
-
-    rows = []
-    for cls in classes:
-        for ti in range(len(IOU_THRESHOLDS)):
-            for area in AREA_RANGES:
-                rows.append(
-                    {
-                        "cls": int(cls),
-                        "thr_idx": ti,
-                        "area": area,
-                        "ap": _nn(ap[(cls, ti, area)]),
-                        "ar_1": _nn(ar.get((cls, ti, area, 1))),
-                        "ar_10": _nn(ar.get((cls, ti, area, 10))),
-                        "ar_100": _nn(ar[(cls, ti, area, max_det)]),
-                    }
-                )
-    return rows
-
-
 # ---------------------------------------------------------------------------
 # TORE multi-label pixel confusion matrix — the reference's exact 4-case
 # weighted contribution algebra (multi_label_confusion_matrix.py:163-377),
@@ -456,20 +400,14 @@ def unpackbits64(x: np.ndarray, num_bits: int) -> np.ndarray:
 
 def rasterize_multilabel(
     boxes: list[tuple[int, list[float]]], width: int, height: int,
-    n_classes: int, set_background: bool = True,
+    n_classes: int,
 ) -> np.ndarray:
     """Rasterize (category_id, xyxy) boxes into a (h, w) uint64 bitmask image.
 
     Pixel bit layout: data class k sets bit (k+1); bit 0 is set on pixels no
     class covers (the background class, category index 0 in the matrix) —
     the reference's encoding (multi_label_confusion_matrix.py:75-121) with
-    our synthetic category ids shifted up one so background owns bit 0.
-
-    With ``set_background=False`` (reference parity option) empty pixels
-    carry mask 0; like the reference, case 3 of the confusion algebra then
-    divides by a zero pred popcount and yields non-finite entries — use it
-    only for inputs whose every pixel is covered (the reference's paper
-    fixture does exactly that)."""
+    our synthetic category ids shifted up one so background owns bit 0."""
     if n_classes > 62:
         raise ValueError("at most 62 classes fit the uint64 bitmask encoding")
     img = np.zeros((height, width), dtype=np.uint64)
@@ -478,8 +416,7 @@ def rasterize_multilabel(
         xb, yb = min(int(np.ceil(x2)), width), min(int(np.ceil(y2)), height)
         if xb > xa and yb > ya:
             img[ya:yb, xa:xb] |= np.uint64(1 << (cls + 1))
-    if set_background:
-        img[img == 0] = np.uint64(1 << BACKGROUND_BIT)
+    img[img == 0] = np.uint64(1 << BACKGROUND_BIT)
     return img
 
 
@@ -666,19 +603,27 @@ def match_stats(
     pred: list[tuple[int, list[float], float]],
     max_det: int = 100,
 ) -> list[dict]:
-    """Per-document COCO matching partials for DATASET-level mAP.
+    """Per-document COCO matching partials: the one long-form mAP table
+    behind both the per-document and the dataset-level surface.
 
     The reference's dataset evaluation pools every page into one COCO run
     (map_layout_evaluator.py:50-99). That pooling IS decomposable: greedy
     TP matching is per-image-independent; only the AP integration needs all
     images' (score, tp) pairs per (class, iou_threshold, area bucket). So
     each document emits, per (class, threshold, area): its non-ignored
-    prediction scores + TP flags (COCO ignore semantics applied locally),
-    TP counts at maxdet 1/10 (per-image truncation), and the in-range GT
-    count — the shuffle key is (class, threshold, area), tiny and uniform.
+    prediction scores + 0/1 TP flags (COCO ignore semantics applied
+    locally), the kept TP count and TP counts at maxdet 1/10 (per-image
+    truncation), the in-range GT count — the shuffle key is (class,
+    threshold, area), tiny and uniform — and the row's own per-document AP
+    (None when ``n_gt`` is 0). The per-document surface is then plain
+    means over these rows: AP as is, AR = tp count / ``n_gt``.
 
-    Returns [{cls, thr_idx, area, scores, tp, n_gt, tp_md1, tp_md10}].
-    Raises ValueError past the :func:`_check_box_budget` limit, like
+    Empty size buckets emit no rows; an empty ``"all"`` bucket still does
+    (``n_gt`` 0, no scores), so every class keeps its per-class key exactly
+    like :func:`evaluate_map`'s pools.
+
+    Returns [{cls, thr_idx, area, scores, tp, n_gt, n_tp, tp_md1, tp_md10,
+    ap}]. Raises ValueError past the :func:`_check_box_budget` limit, like
     :func:`evaluate_map`."""
     _check_box_budget(gt, pred)
     classes = sorted(
@@ -699,8 +644,8 @@ def match_stats(
             gt_ig = (g_area < lo) | (g_area > hi)
             dt_out = (p_area < lo) | (p_area > hi)
             npig = int((~gt_ig).sum())
-            if npig == 0 and bool(dt_out.all()):
-                continue  # empty bucket contributes nothing to the pool
+            if area != "all" and npig == 0 and bool(dt_out.all()):
+                continue  # empty size bucket contributes nothing
             order = np.argsort(gt_ig, kind="stable")
             ious_o = ious[order]
             git = gt_ig[order]
@@ -715,10 +660,12 @@ def match_stats(
                         "thr_idx": int(ti),
                         "area": area,
                         "scores": ps[keep].tolist(),
-                        "tp": tp[keep].tolist(),
+                        "tp": tp[keep].astype(np.int32).tolist(),
                         "n_gt": npig,
+                        "n_tp": int(tp.sum()),
                         "tp_md1": int(tp[:1].sum()),
                         "tp_md10": int(tp[:10].sum()),
+                        "ap": average_precision(tp[keep], npig) if npig else None,
                     }
                 )
     return out

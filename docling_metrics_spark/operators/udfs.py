@@ -325,40 +325,6 @@ def _pred_tuples(boxes) -> list:
     ]
 
 
-MAP_DETAIL_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("cls", IntegerType()),
-            StructField("thr_idx", IntegerType()),
-            StructField("area", StringType()),
-            StructField("ap", DoubleType()),
-            StructField("ar_1", DoubleType()),
-            StructField("ar_10", DoubleType()),
-            StructField("ar_100", DoubleType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(MAP_DETAIL_TYPE)
-def map_detail_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-    """Per-document COCO mAP in long form: the per-(cls, thr_idx, area)
-    AP/AR pool rows the full surface means (kernels.layout.evaluate_map)
-    are built from, materialized so a DuckDB oracle re-derives every
-    per-doc field. Kernel refusals (hostile box counts) emit an empty
-    list — the sentinel row falls out of the re-derivation (all-NULL
-    means → −1.0, empty per-class dicts)."""
-    from docling_metrics_spark.kernels.layout import evaluate_map_detail
-
-    out = []
-    for g, p in zip(gt_boxes, pred_boxes):
-        try:
-            out.append(evaluate_map_detail(_gt_tuples(g), _pred_tuples(p)))
-        except ValueError:
-            out.append([])
-    return pd.Series(out)
-
-
 # Fused flagship surface: extraction + all three metric families from ONE
 # Arrow crossing. The unfused plan ran two chained ArrowEvalPython stages
 # (extract, then the three scoring UDFs co-evaluated together), each with
@@ -433,8 +399,6 @@ def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
     the partial+final pattern of the reference's TORE dataset aggregation
     (tore_layout_evaluator.py:224-245) mapped onto Spark's native two-stage
     aggregation."""
-    size = (n_classes + 1) ** 2
-
     @F.pandas_udf(ArrayType(DoubleType()))
     def tore_partial_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
         out = []
@@ -452,7 +416,6 @@ def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
         return pd.Series(out)
 
     assert tore_partial_udf.returnType.elementType == DoubleType()
-    tore_partial_udf._cm_size = size  # introspection aid
     return tore_partial_udf
 
 
@@ -625,8 +588,10 @@ MATCH_STATS_TYPE = ArrayType(
             StructField("scores", ArrayType(DoubleType())),
             StructField("tp", ArrayType(IntegerType())),
             StructField("n_gt", IntegerType()),
+            StructField("n_tp", IntegerType()),
             StructField("tp_md1", IntegerType()),
             StructField("tp_md10", IntegerType()),
+            StructField("ap", DoubleType()),
         ]
     )
 )
@@ -634,41 +599,26 @@ MATCH_STATS_TYPE = ArrayType(
 
 @F.pandas_udf(MATCH_STATS_TYPE)
 def match_stats_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-    """Per-document COCO matching partials for dataset-level mAP
-    (decomposition of map_layout_evaluator.py:50-99, see
-    kernels.layout.match_stats): one entry per (class, threshold, area).
-    Kernel refusals (hostile box counts) emit an empty list, so the
-    document adds nothing to the pools instead of failing the task."""
+    """Per-document COCO matching partials (kernels.layout.match_stats):
+    one entry per (class, threshold, area), the rows both the per-document
+    ``layout_map`` surface and the pooled ``layout_map_dataset`` derive
+    from. Kernel refusals (hostile box counts) emit an empty list, so the
+    document scores the per-doc sentinel and adds nothing to the dataset
+    pools instead of failing the task."""
     from docling_metrics_spark.kernels.layout import match_stats
 
     out = []
     for g, p in zip(gt_boxes, pred_boxes):
         try:
-            stats = match_stats(_gt_tuples(g), _pred_tuples(p))
+            out.append(match_stats(_gt_tuples(g), _pred_tuples(p)))
         except ValueError:
             out.append([])
-            continue
-        out.append(
-            [
-                {
-                    "cls": s["cls"],
-                    "thr_idx": s["thr_idx"],
-                    "area": s["area"],
-                    "scores": s["scores"],
-                    "tp": [int(v) for v in s["tp"]],
-                    "n_gt": s["n_gt"],
-                    "tp_md1": s["tp_md1"],
-                    "tp_md10": s["tp_md10"],
-                }
-                for s in stats
-            ]
-        )
     return pd.Series(out)
 
 
 POOLED_AP_SCHEMA = (
     "cls int, thr_idx int, area string, ap double, "
-    "rec_1 double, rec_10 double, rec_100 double, n_gt bigint"
+    "ar_1 double, ar_10 double, ar_100 double, n_gt bigint"
 )
 
 
@@ -708,9 +658,9 @@ def pooled_ap_group(pdf: pd.DataFrame) -> pd.DataFrame:
                 "thr_idx": int(pdf["thr_idx"].iloc[0]),
                 "area": str(pdf["area"].iloc[0]),
                 "ap": _nn(ap),
-                "rec_1": recs[0],
-                "rec_10": recs[1],
-                "rec_100": recs[2],
+                "ar_1": recs[0],
+                "ar_10": recs[1],
+                "ar_100": recs[2],
                 "n_gt": n_gt,
             }
         ]

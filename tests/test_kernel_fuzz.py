@@ -123,17 +123,21 @@ def _boxes(n, with_score):
 
 
 def test_map_udf_hostile_box_count_degrades_one_row(spark):
-    """The 100k-box refusal must surface END-TO-END through both mAP
-    long-form UDFs as an empty list — one hostile document degrades one
-    row, never the task (VERDICT r2 #8). ``map_detail_udf`` feeds the
-    per-doc ``layout_map`` pools, ``match_stats_udf`` the dataset-level
-    ``layout_map_dataset`` pools. The healthy sibling row in the same
-    Arrow batch scores normally."""
+    """The 100k-box refusal must surface END-TO-END through the long-form
+    mAP UDF as an empty list — one hostile document degrades one row,
+    never the task (VERDICT r2 #8). ``match_stats_udf`` feeds both the
+    per-doc ``layout_map`` surface, where the refused document scores the
+    −1.0 / "{}" sentinel row, and the dataset-level ``layout_map_dataset``
+    pools. The healthy sibling row in the same Arrow batch scores
+    normally."""
     from pyspark.sql import functions as F
 
-    from docling_metrics_spark.operators.udfs import (
-        map_detail_udf,
-        match_stats_udf,
+    from docling_metrics_spark.operators.udfs import match_stats_udf
+    from docling_metrics_spark.plans.queries import (
+        _MAP_SURFACE_SPECS,
+        _map_doc_pools,
+        _map_surface,
+        _match_stats_rows,
     )
 
     df = spark.range(2).select(
@@ -146,17 +150,6 @@ def test_map_udf_hostile_box_count_degrades_one_row(spark):
         .alias("pred_boxes"),
     ).repartition(1)
 
-    detail = {
-        r.doc_id: r.d
-        for r in df.select(
-            "doc_id", map_detail_udf("gt_boxes", "pred_boxes").alias("d")
-        ).collect()
-    }
-    assert detail[0] == []  # refusal, not a crash
-    all_area = [e for e in detail[1] if e.area == "all"]
-    assert len(all_area) == 10  # one entry per IoU threshold
-    assert all(e.ap == 1.0 for e in all_area)
-
     stats = {
         r.doc_id: r.s
         for r in df.select(
@@ -165,8 +158,21 @@ def test_map_udf_hostile_box_count_degrades_one_row(spark):
     }
     assert stats[0] == []  # refusal, not 12,000×100 IoU matrices per class
     all_area = [e for e in stats[1] if e.area == "all"]
-    assert len(all_area) == 10
-    assert all(e.tp == [1] and e.n_gt == 1 for e in all_area)
+    assert len(all_area) == 10  # one entry per IoU threshold
+    assert all(e.tp == [1] and e.n_gt == 1 and e.ap == 1.0 for e in all_area)
+
+    surface = {
+        r.doc_id: r
+        for r in _map_surface(
+            _map_doc_pools(_match_stats_rows(df)), ["doc_id"], -1.0
+        ).collect()
+    }
+    refused, healthy = surface[0], surface[1]
+    for alias, _, _, _ in _MAP_SURFACE_SPECS:
+        assert refused[alias] == -1.0, alias
+    assert refused.map_per_class == refused.mar_100_per_class == "{}"
+    assert healthy["map"] == healthy["mar_100"] == 1.0
+    assert healthy.map_per_class == '{"cat_1":"1.000000"}'
 
 
 def test_fused_flagship_udf_hostile_inputs_degrade_one_row(spark):

@@ -337,10 +337,16 @@ def test_teds_error_channel(spark):
 
 
 def test_dataset_map_matches_local(spark):
-    """Distributed pooled mAP == single-process merged oracle."""
+    """Distributed pooled mAP (the production ``_dataset_map_df`` plan) ==
+    single-process merged oracle, all 12 scalars + per-class dicts."""
+    import json
+
     from docling_metrics_spark.datagen import gen_document
     from docling_metrics_spark.kernels.layout import merged_map_local
-    from docling_metrics_spark.plans.queries import layout_map_dataset
+    from docling_metrics_spark.plans.queries import (
+        _dataset_map_df,
+        _match_stats_rows,
+    )
 
     local_docs = [gen_document(i) for i in range(200)]
     args = [
@@ -351,44 +357,11 @@ def test_dataset_map_matches_local(spark):
         for d in local_docs
     ]
     want = merged_map_local(args)
-    # the query caps the corpus at 500 docs ≥ sf0.001's 500 rows → use a
-    # matching 200-doc slice via a monkey-ish direct build instead
-    from docling_metrics_spark.datagen import generate_documents_df
-    from docling_metrics_spark.operators.udfs import (
-        POOLED_AP_SCHEMA,
-        match_stats_udf,
-        pooled_ap_group,
-    )
-    from pyspark.sql import functions as F
-
-    docs = generate_documents_df(spark, 200)
-    parts = docs.select(
-        F.explode(match_stats_udf("gt_boxes", "pred_boxes")).alias("s")
-    ).select("s.*")
-    aps = parts.groupBy("cls", "thr_idx", "area").applyInPandas(
-        pooled_ap_group, schema=POOLED_AP_SCHEMA
-    )
-
-    def _area(col, area, thr=None):
-        cond = F.col("area") == area
-        if thr is not None:
-            cond = cond & (F.col("thr_idx") == thr)
-        return F.avg(F.when(cond, F.col(col)))
-
-    got = aps.agg(
-        _area("ap", "all").alias("map"),
-        _area("ap", "all", 0).alias("map_50"),
-        _area("ap", "all", 5).alias("map_75"),
-        _area("ap", "small").alias("map_small"),
-        _area("ap", "medium").alias("map_medium"),
-        _area("ap", "large").alias("map_large"),
-        _area("rec_1", "all").alias("mar_1"),
-        _area("rec_10", "all").alias("mar_10"),
-        _area("rec_100", "all").alias("mar_100"),
-        _area("rec_100", "small").alias("mar_small"),
-        _area("rec_100", "medium").alias("mar_medium"),
-        _area("rec_100", "large").alias("mar_large"),
+    got = _dataset_map_df(
+        _match_stats_rows(generate_documents_df(spark, 200))
     ).collect()[0]
+
+    # the query rounds to 6 decimals, hence the 5e-7 tolerance
     for k in ("map", "map_50", "map_75", "map_small", "map_medium",
               "map_large", "mar_1", "mar_10", "mar_100", "mar_small",
               "mar_medium", "mar_large"):
@@ -397,19 +370,13 @@ def test_dataset_map_matches_local(spark):
         if w == -1.0:  # no in-range GT anywhere → null in Spark
             assert g is None, k
         else:
-            assert g is not None and abs(g - w) < 1e-9, (k, g, w)
+            assert g is not None and abs(g - w) < 5.01e-7, (k, g, w)
 
-    # per-class means (area=all) from the same pooled frame
-    per_cls = {
-        r.cls: (r.m, r.r100)
-        for r in aps.filter(F.col("area") == "all")
-        .groupBy("cls")
-        .agg(F.avg("ap").alias("m"), F.avg("rec_100").alias("r100"))
-        .collect()
-    }
-    for cls, (m, r100) in per_cls.items():
-        assert abs(m - want["map_per_class"][f"cat_{cls}"]) < 1e-9
-        assert abs(r100 - want["mar_100_per_class"][f"cat_{cls}"]) < 1e-9
+    for col in ("map_per_class", "mar_100_per_class"):
+        got_d = json.loads(got[col])
+        assert set(got_d) == set(want[col]), col
+        for cat, w in want[col].items():
+            assert abs(float(got_d[cat]) - w) < 5.01e-7, (col, cat)
 
 
 def test_dataset_map_single_doc_equals_per_doc(spark):
@@ -419,10 +386,7 @@ def test_dataset_map_single_doc_equals_per_doc(spark):
     consistency pattern the reference's benchmark doubles as
     (edit_distance_benchmark.py:90-102). Dataset values are rounded to 6
     decimals in-query, hence the 1e-6 tolerance."""
-    import json
-
-    from docling_metrics_spark.operators.udfs import _gt_tuples, _pred_tuples
-    from docling_metrics_spark.plans.queries import _dataset_map_df
+    from docling_metrics_spark.datagen import BOXES_SCHEMA_DDL
 
     one = (
         generate_documents_df(spark, 30)
@@ -432,10 +396,37 @@ def test_dataset_map_single_doc_equals_per_doc(spark):
         .cache()
     )
     assert one.count() == 1
+    _assert_one_doc_dataset_equals_per_doc(one)
+    one.unpersist()
+
+    # a class whose only box is inverted (x2 < x1) has an empty "all"
+    # bucket: the per-doc surface keeps its key at -1.0, so must the pool
+    degenerate = spark.createDataFrame(
+        [(
+            "degenerate",
+            [(1, [0.0, 0.0, 50.0, 50.0], None),
+             (2, [100.0, 100.0, 60.0, 160.0], None)],
+            [(1, [0.0, 0.0, 50.0, 50.0], 0.9),
+             (2, [100.0, 100.0, 60.0, 160.0], 0.8)],
+        )],
+        f"doc_id string, gt_boxes {BOXES_SCHEMA_DDL}, "
+        f"pred_boxes {BOXES_SCHEMA_DDL}",
+    )
+    _assert_one_doc_dataset_equals_per_doc(degenerate)
+
+
+def _assert_one_doc_dataset_equals_per_doc(one):
+    import json
+
+    from docling_metrics_spark.operators.udfs import _gt_tuples, _pred_tuples
+    from docling_metrics_spark.plans.queries import (
+        _dataset_map_df,
+        _match_stats_rows,
+    )
 
     doc = one.collect()[0]
     per = evaluate_map(_gt_tuples(doc.gt_boxes), _pred_tuples(doc.pred_boxes))
-    ds = _dataset_map_df(one).collect()[0]
+    ds = _dataset_map_df(_match_stats_rows(one)).collect()[0]
 
     for k in ("map", "map_50", "map_75", "map_small", "map_medium",
               "map_large", "mar_1", "mar_10", "mar_100", "mar_small",
@@ -456,4 +447,3 @@ def test_dataset_map_single_doc_equals_per_doc(spark):
             # pool, matching the per-doc surface's -1.0 sentinel
             got = float(got_d[cat])
             assert abs(got - want) < 1.01e-6, (col, cat, got, want)
-    one.unpersist()

@@ -316,6 +316,7 @@ def test_materialized_derivations_are_jvm_only(spark):
     for fn in (
         Q.extract_spans_pipeline,
         Q.layout_map,
+        Q.layout_map_dataset,
         Q.teds_table_pairs,
         Q.teds_cells_pairs,
         Q.teds_bracket_pairs,
@@ -395,6 +396,40 @@ def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
     assert CACHE_EVENTS[ev0:] == [(path, "build")]
     invalidate_cache(path)  # idempotent on a missing marker
     invalidate_cache(path)
+
+
+def test_layout_map_queries_share_one_match_stats_table(spark):
+    """``layout_map`` builds the one mAP partials table and
+    ``layout_map_dataset`` reuses it: the matching kernel runs once for
+    both layout queries on the same (tier, cap)."""
+    from docling_metrics_spark.plans import queries as Q
+
+    sf = "/root/testdata/sf0.001"
+    Q.invalidate_cache(Q._MAP_STATS_PATH)
+    ev0 = len(Q.CACHE_EVENTS)
+    Q.layout_map(spark, sf).collect()
+    Q.layout_map_dataset(spark, sf).collect()
+    shared = [e for e in Q.CACHE_EVENTS[ev0:] if e[0] == Q._MAP_STATS_PATH]
+    assert shared == [
+        (Q._MAP_STATS_PATH, "build"), (Q._MAP_STATS_PATH, "reuse"),
+    ]
+
+
+def test_file_fixture_paths_embed_src_tag():
+    """The COCO and markdown-pair fixtures are cached by existence, so
+    their paths (and the oracle SQL reading them) must carry the source
+    tag: a datagen edit then writes fresh fixtures instead of serving
+    stale ones."""
+    from docling_metrics_spark.plans import queries as Q
+
+    sf = "/root/testdata/sf0.001"
+    coco = Q._coco_fixture(None, sf)
+    mdpairs = Q._mdpair_fixture(None, sf)
+    assert Q._SRC_TAG in coco and Q._SRC_TAG in mdpairs
+    oracles = Q.all_oracles()
+    assert coco in oracles["coco_layout_load"]
+    assert mdpairs in oracles["md_pair_scan"]
+    assert mdpairs in oracles["md_pair_missing"]
 
 
 def test_src_fingerprint_unreadable_source_raises(monkeypatch):
