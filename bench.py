@@ -212,11 +212,18 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
     return result
 
 
+def master_and_shuffle() -> tuple[str, int]:
+    """``local[N]`` master and shuffle width. N is $SPARK_GRAFT_CPUS, else
+    the CPUs this process may run on; the shuffle width is N, at least 8
+    (a non-numeric N such as ``*`` counts as the available CPUs)."""
+    host_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
+    return f"local[{cpus}]", max(int(cpus) if cpus.isdigit() else host_cpus, 8)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = f"local[{cpus}]"
-    shuffle = max(int(cpus) if cpus.isdigit() else 32, 8)
+    master, shuffle = master_and_shuffle()
     result = run_bench(sf_dir, master, shuffle)
     # Detailed per-run stats go to a sidecar file; the FINAL stdout line is
     # the compact headline JSON only — round 2's single fat line overran the

@@ -4,11 +4,17 @@ pixel confusion matrix. Pure numpy — runs inside Arrow UDFs.
 - :func:`iou_matrix` — pairwise xyxy IoU (reference IoU reward
   grits.py:257-275; xywh↔xyxy conversions layout/utils/utils.py:18-49 are
   plain column arithmetic in our Spark layer).
-- :func:`average_precision` / :func:`evaluate_map` — the published COCO
-  evaluation protocol (Lin et al. 2014 + pycocotools reference protocol):
-  greedy matching of score-sorted predictions to GT at a given IoU
-  threshold, 101-point interpolated AP, thresholds 0.50:0.05:0.95,
-  mAP = mean over classes present in GT. The reference delegates to
+- COCO mAP, the published evaluation protocol (Lin et al. 2014 +
+  pycocotools reference protocol): greedy matching of score-sorted
+  predictions to GT at IoU thresholds 0.50:0.05:0.95 with the area-range
+  ignore rule, 101-point interpolated AP, mAP = mean over classes present
+  in GT. ONE matcher, :func:`_match_all_thresholds`, matches a class's
+  predictions for all ten thresholds in one pass; :func:`_map_partials`
+  runs it per (class, area bucket) and is read by :func:`match_stats` (the
+  long-form rows both layout queries materialize) and
+  :func:`evaluate_map` (the per-document surface). :func:`_surface` is the
+  one reduction to the 12 scalars + per-class dicts, shared with the
+  dataset-level :func:`merged_map_local`. The reference delegates to
   torchmetrics/faster_coco_eval (map_layout_evaluator.py:201-208); we
   implement the protocol directly (torch unavailable, and from-scratch is
   the point).
@@ -82,120 +88,81 @@ AREA_RANGES: dict[str, tuple[float, float]] = {
     "medium": (32.0**2, 96.0**2),
     "large": (96.0**2, 1e10),
 }
+MAX_DET = 100  # detections kept per class, best score first (COCO maxDets)
 
 
-def _match_with_ignore(
-    ious: np.ndarray, gt_ig: np.ndarray, thr: float
+def _match_all_thresholds(
+    ious: np.ndarray, gt_ig: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Greedy COCO matching with ignore semantics (the published
-    pycocotools evaluateImg algorithm): dts in descending-score order claim
-    the highest-IoU unmatched GT ≥ thr; GT rows are pre-sorted non-ignored
-    first, and a dt may fall through to an ignored GT only when no valid GT
-    remains. Returns (dtm gt-row-index or -1 per dt, dt_ignored flags)."""
-    n_gt, n_dt = ious.shape
-    # plain-python lists: the tight greedy loop on ≤tens of boxes is
-    # dominated by numpy scalar-indexing overhead otherwise
-    ious_l = ious.T.tolist()  # [n_dt][n_gt]
-    ig_l = gt_ig.tolist()
-    gtm = [-1] * n_gt
-    dtm = np.full(n_dt, -1, dtype=np.int64)
-    dt_ig = np.zeros(n_dt, dtype=bool)
-    for d in range(n_dt):
-        row = ious_l[d]
-        best = min(thr, 1.0 - 1e-10)
-        m = -1
-        for g in range(n_gt):
-            if gtm[g] >= 0:
-                continue
-            if m > -1 and not ig_l[m] and ig_l[g]:
-                break  # remaining gts are all ignored (sorted)
-            if row[g] < best:
-                continue
-            best = row[g]
-            m = g
-        if m == -1:
-            continue
-        dtm[d] = m
-        gtm[m] = d
-        dt_ig[d] = ig_l[m]
-    return dtm, dt_ig
+    pycocotools evaluateImg algorithm) for ALL IoU thresholds in one pass
+    over the detections.
 
+    ``ious`` is [G, D] with detections in descending-score order; ``gt_ig``
+    flags the GTs outside the area range. Each detection claims the
+    highest-IoU untaken in-range GT with IoU ≥ thr and falls through to the
+    highest-IoU untaken ignored GT only when no in-range GT qualifies;
+    equal-IoU ties go to the LAST GT index. Ignored GTs compete at a
+    quarter of their IoU: an eligible IoU is ≥ 0.5, so a quartered one
+    (≤ 0.25, exact under power-of-two scaling) ranks below every in-range
+    candidate while ties among ignored GTs stay ties — both tiers resolve
+    in one [T, G] pass per detection.
 
-def _ap_ar_from_match(
-    dtm: np.ndarray, dt_ig: np.ndarray, npig: int
-) -> tuple[float, float]:
-    """101-point AP and max recall from score-ordered match results,
-    ignored detections excluded (COCO accumulate)."""
-    if npig == 0:
-        return float("nan"), float("nan")
-    keep = ~dt_ig
-    tp = (dtm >= 0)[keep]
-    if tp.size == 0:
-        return 0.0, 0.0
-    return average_precision(tp, npig), float(tp.sum() / npig)
-
-
-def _match_all_thresholds(ious: np.ndarray) -> np.ndarray:
-    """Greedy COCO matching for ALL IoU thresholds in one dt pass, for the
-    no-ignore case (area="all" with every box in range — the core surface).
-
-    Semantics are bit-identical to running :func:`_match_with_ignore` per
-    threshold with no ignored GT: dts in descending-score order claim the
-    max-IoU unmatched GT with IoU ≥ thr, equal-IoU ties going to the LAST
-    GT index. Vectorizing the threshold axis turns the T×D×G Python loop
-    into D passes of [T,G] numpy ops — ~2× on typical documents and ~20×
-    on skew-giant pages where G is in the hundreds.
-
-    Returns bool TP flags [T, D] in dt order."""
+    Returns bool [T, D] flags: matched to an in-range GT, matched to an
+    ignored GT."""
     n_gt, n_dt = ious.shape
     n_thr = len(IOU_THRESHOLDS)
-    tp = np.zeros((n_thr, n_dt), dtype=bool)
     if n_gt == 0 or n_dt == 0:
-        return tp
-    thr_col = IOU_THRESHOLDS[:, None]  # [T,1]
-    taken = np.zeros((n_thr, n_gt), dtype=bool)
+        none = np.zeros((n_thr, n_dt), dtype=bool)
+        return none, none
     rows = ious.T  # [D,G]
+    rank = np.where(gt_ig, rows * 0.25, rows)
+    thr_col = IOU_THRESHOLDS[:, None]  # [T,1]
+    free = np.ones((n_thr, n_gt), dtype=bool)
     t_idx = np.arange(n_thr)
+    matched = np.empty((n_thr, n_dt), dtype=bool)
+    gt_idx = np.empty((n_thr, n_dt), dtype=np.int64)
     for d in range(n_dt):
-        row = rows[d]
-        masked = np.where((row[None, :] >= thr_col) & ~taken, row[None, :], -1.0)
-        # last argmax (ties → highest GT index), matching the loop's
-        # `>=` replacement rule
+        masked = np.where((rows[d] >= thr_col) & free, rank[d], -1.0)
+        # last argmax: ties go to the highest GT index
         sel = (n_gt - 1) - np.argmax(masked[:, ::-1], axis=1)
         ok = masked[t_idx, sel] > -1.0
-        taken[ok, sel[ok]] = True
-        tp[ok, d] = True
-    return tp
+        free[ok, sel[ok]] = False
+        matched[:, d] = ok
+        gt_idx[:, d] = sel
+    on_ig = matched & gt_ig[gt_idx]
+    return matched ^ on_ig, on_ig
 
 
-def _ap_all_thresholds(tp: np.ndarray, n_gt: int) -> np.ndarray:
-    """101-point interpolated AP for every threshold at once: the batched
-    twin of :func:`average_precision` over TP flags [T, D] (dt order =
-    descending score). Returns AP [T]; caller guards n_gt == 0."""
+def _ap_all_thresholds(
+    tp: np.ndarray, keep: np.ndarray, n_gt: int
+) -> np.ndarray:
+    """101-point interpolated AP for every threshold at once, from TP flags
+    [T, D] in descending-score order; ``keep`` [T, D] is False for ignored
+    detections (every TP is kept). An ignored detection repeats the
+    previous point of the curve, so each AP is bit-identical to
+    :func:`average_precision` over that threshold's kept flags. Returns
+    AP [T]; caller guards n_gt == 0."""
     n_thr, n_dt = tp.shape
     if n_dt == 0:
         return np.zeros(n_thr)
     tp_cum = np.cumsum(tp, axis=1)
-    fp_cum = np.cumsum(~tp, axis=1)
     recall = tp_cum / n_gt
-    precision = tp_cum / (tp_cum + fp_cum)
+    # kept detections so far = TP + FP; 0 before the first kept one
+    precision = tp_cum / np.maximum(np.cumsum(keep, axis=1), 1)
     precision = np.maximum.accumulate(precision[:, ::-1], axis=1)[:, ::-1]
     # first dt index where recall ≥ each of the 101 points (searchsorted
     # batched via argmax over a [T, D, 101] comparison)
     ge = recall[:, :, None] >= RECALL_POINTS[None, None, :]
-    idx = ge.argmax(axis=1)
-    prec_at = np.where(
-        ge.any(axis=1),
-        np.take_along_axis(precision, np.minimum(idx, n_dt - 1), axis=1),
-        0.0,
-    )
+    rows = np.arange(n_thr)[:, None]
+    prec_at = np.where(ge.any(axis=1), precision[rows, ge.argmax(axis=1)], 0.0)
     return prec_at.mean(axis=1)
 
 
 def _check_box_budget(gt: list, pred: list) -> None:
     """Refuse a document with more than 100,000 boxes.
 
-    Predictions are truncated to max_det per class, but GT is unbounded
+    Predictions are truncated to MAX_DET per class, but GT is unbounded
     input: a hostile document with millions of boxes would allocate a
     gigabyte IoU matrix. The ValueError lets the UDF wrapper emit its
     sentinel instead of killing the task."""
@@ -203,104 +170,95 @@ def _check_box_budget(gt: list, pred: list) -> None:
         raise ValueError(f"too many boxes: {len(gt)} gt + {len(pred)} pred")
 
 
-def _fill_pools(
+def _map_partials(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
-    max_det: int,
-    core: bool,
-) -> tuple[list, dict, dict]:
-    """The COCO matching/AP loop behind :func:`evaluate_map`: fills the
-    per-(cls, thr_idx, area) AP pool and the per-(…, maxdet) AR pool
-    (NaN = empty pool). The long-form twin the layout queries
-    materialize is :func:`match_stats`."""
-    classes = sorted({c for c, _ in gt} | {c for c, _, _ in pred})
-    _check_box_budget(gt, pred)
-    ap: dict[tuple, float] = {}   # (cls, thr_idx, area) -> AP at max_det
-    ar: dict[tuple, float] = {}   # (cls, thr_idx, area, maxdet) -> AR
-    if not classes:
-        return classes, ap, ar
-    n_thr = len(IOU_THRESHOLDS)
-    area_ranges = {"all": AREA_RANGES["all"]} if core else AREA_RANGES
+    areas: dict[str, tuple[float, float]] = AREA_RANGES,
+):
+    """The per-document COCO match behind :func:`match_stats` and
+    :func:`evaluate_map`: one IoU matrix per class, one batched match per
+    (class, area bucket).
 
-    for cls in classes:
+    Yields ``(cls, area, n_gt, scores, tp, keep, ap)``: the class's
+    prediction scores (descending, at most MAX_DET), TP flags and kept
+    (not ignored) flags [T, D] in score order, the in-range GT count and
+    the per-threshold AP [T] (NaN when ``n_gt`` is 0). A size bucket with
+    nothing in range on either side yields nothing; an empty ``"all"``
+    bucket still yields (``n_gt`` 0, nothing kept) so every class keeps
+    its per-class key."""
+    _check_box_budget(gt, pred)
+    n_thr = len(IOU_THRESHOLDS)
+    for cls in sorted({c for c, _ in gt} | {c for c, _, _ in pred}):
         g = np.array([b for c, b in gt if c == cls], dtype=np.float64).reshape(-1, 4)
         p = [(b, s) for c, b, s in pred if c == cls]
         p.sort(key=lambda x: -x[1])
-        p = p[:max_det]
+        p = p[:MAX_DET]
         pb = np.array([b for b, _ in p], dtype=np.float64).reshape(-1, 4)
+        scores = np.array([s for _, s in p], dtype=np.float64)
         g_area = (g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
         p_area = (pb[:, 2] - pb[:, 0]) * (pb[:, 3] - pb[:, 1])
-        ious_full = iou_matrix(g, pb)
-
-        if core:
-            # Fast path for the overwhelmingly common case where the "all"
-            # area range ignores nothing: matching + AP batch across the
-            # whole threshold axis. Degenerate (inverted/negative-area) or
-            # giant (>1e10) boxes DO get ignored by the "all" range, so any
-            # out-of-range box falls through to the generic ignore-aware
-            # loop below — keeping the core surface bit-identical to the
-            # full surface on every input, not just well-formed ones.
-            lo_all, hi_all = AREA_RANGES["all"]
-            if (
-                not ((g_area < lo_all) | (g_area > hi_all)).any()
-                and not ((p_area < lo_all) | (p_area > hi_all)).any()
-            ):
-                npig = len(g)
-                if npig == 0:
-                    for ti in range(n_thr):
-                        ap[(cls, ti, "all")] = float("nan")
-                        ar[(cls, ti, "all", max_det)] = float("nan")
-                    continue
-                tp_all = _match_all_thresholds(ious_full)
-                ap_t = _ap_all_thresholds(tp_all, npig)
-                rec_t = tp_all.sum(axis=1) / npig
-                for ti in range(n_thr):
-                    ap[(cls, ti, "all")] = float(ap_t[ti])
-                    ar[(cls, ti, "all", max_det)] = float(rec_t[ti])
-                continue
-
-        for area, (lo, hi) in area_ranges.items():
+        ious = iou_matrix(g, pb)
+        for area, (lo, hi) in areas.items():
             gt_ig = (g_area < lo) | (g_area > hi)
             dt_out = (p_area < lo) | (p_area > hi)
-            npig = int((~gt_ig).sum())
-            maxdets = (
-                (1, 10, max_det) if area == "all" and not core else (max_det,)
-            )
-            if npig == 0 and bool(dt_out.all()):
-                # bucket empty on both sides: every AP/AR is NaN — skip the
-                # threshold loop (most documents have no small boxes, so
-                # this saves ~1/2 the matching work)
-                for ti in range(n_thr):
-                    ap[(cls, ti, area)] = float("nan")
-                    for md in maxdets:
-                        ar[(cls, ti, area, md)] = float("nan")
+            n_gt = int((~gt_ig).sum())
+            if n_gt == 0 and dt_out.all():
+                if area == "all":
+                    none = np.zeros((n_thr, len(p)), dtype=bool)
+                    yield cls, area, 0, scores, none, none, np.full(n_thr, np.nan)
                 continue
-            order = np.argsort(gt_ig, kind="stable")  # non-ignored first
-            ious_o = ious_full[order]
-            git = gt_ig[order]
-            for ti in range(n_thr):
-                dtm, dt_ig = _match_with_ignore(ious_o, git, IOU_THRESHOLDS[ti])
-                # unmatched out-of-range dts are ignored, not false positives
-                dt_ig = dt_ig | ((dtm == -1) & dt_out)
-                for md in maxdets:
-                    if md == max_det:
-                        a, r = _ap_ar_from_match(dtm, dt_ig, npig)
-                        ap[(cls, ti, area)] = a
-                    elif npig == 0:
-                        r = float("nan")
-                    else:
-                        # truncated maxdets only need the recall — skip
-                        # the (comparatively costly) AP integration
-                        keep = ~dt_ig[:md]
-                        r = float(((dtm[:md] >= 0) & keep).sum() / npig)
-                    ar[(cls, ti, area, md)] = r
-    return classes, ap, ar
+            tp, on_ig = _match_all_thresholds(ious, gt_ig)
+            # an out-of-range dt counts only as a TP: unmatched, it is
+            # ignored, not a false positive
+            keep = np.where(dt_out, tp, ~on_ig)
+            ap = (_ap_all_thresholds(tp, keep, n_gt) if n_gt
+                  else np.full(n_thr, np.nan))
+            yield cls, area, n_gt, scores, tp, keep, ap
+
+
+def _surface(pools: dict, core: bool = False) -> dict:
+    """The COCO result surface from pools keyed (cls, area), each a [4, T]
+    array over the IoU thresholds: row 0 the AP, rows 1-3 the recall at
+    maxdet 1/10/100. NaN marks an empty pool and is skipped; a mean over
+    nothing is the torchmetrics -1.0 sentinel. Means run in pool insertion
+    order. ``core`` stops after map/map_50/map_75/mar_100."""
+
+    def mean(vals) -> float:
+        arr = np.array(vals, dtype=np.float64).ravel()
+        arr = arr[~np.isnan(arr)]
+        return float(arr.mean()) if arr.size else -1.0
+
+    def over(area: str, row: int) -> float:
+        return mean([v[row] for (_, a), v in pools.items() if a == area])
+
+    per_cls = [(c, v) for (c, a), v in pools.items() if a == "all"]
+    head = {
+        "map": over("all", 0),
+        "map_50": mean([v[0, 0] for _, v in per_cls]),
+        "map_75": mean([v[0, 5] for _, v in per_cls]),
+    }
+    if core:
+        return {**head, "mar_100": over("all", 3)}
+    per_cls.sort(key=lambda cv: cv[0])
+    return {
+        **head,
+        "map_small": over("small", 0),
+        "map_medium": over("medium", 0),
+        "map_large": over("large", 0),
+        "mar_1": over("all", 1),
+        "mar_10": over("all", 2),
+        "mar_100": over("all", 3),
+        "mar_small": over("small", 3),
+        "mar_medium": over("medium", 3),
+        "mar_large": over("large", 3),
+        "map_per_class": {f"cat_{c}": mean(v[0]) for c, v in per_cls},
+        "mar_100_per_class": {f"cat_{c}": mean(v[3]) for c, v in per_cls},
+    }
 
 
 def evaluate_map(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
-    max_det: int = 100,
     surface: str = "full",
 ) -> dict:
     """COCO-protocol mAP for one document/page (or one merged group), with
@@ -311,75 +269,21 @@ def evaluate_map(
     undefined bucket (no in-range GT), matching the torchmetrics sentinel.
 
     ``surface="core"`` restricts the computation to the flagship pipeline's
-    kept fields (all-area map/map_50/map_75/mar_100): the size buckets,
-    mar_1/mar_10, and per-class dicts are skipped entirely, not computed
-    and discarded. Overlapping fields are bit-identical to the full
-    surface (same matching loop, same threshold grid).
+    kept fields (all-area map/map_50/map_75/mar_100): the size buckets are
+    never matched. Overlapping fields are bit-identical to the full
+    surface (same matcher, same threshold grid).
 
     gt: [(category_id, xyxy)], pred: [(category_id, xyxy, score)].
     """
     core = surface == "core"
-    classes, ap, ar = _fill_pools(gt, pred, max_det, core)
-    sent = -1.0
-    if not classes:
-        if core:
-            return {"map": sent, "map_50": sent, "map_75": sent,
-                    "mar_100": sent}
-        return {
-            "map": sent, "map_50": sent, "map_75": sent,
-            "map_small": sent, "map_medium": sent, "map_large": sent,
-            "mar_1": sent, "mar_10": sent, "mar_100": sent,
-            "mar_small": sent, "mar_medium": sent, "mar_large": sent,
-            "map_per_class": {}, "mar_100_per_class": {},
-        }
-
-    n_thr = len(IOU_THRESHOLDS)
-
-    def _mean(vals: list[float]) -> float:
-        arr = np.array(vals, dtype=np.float64)
-        arr = arr[~np.isnan(arr)]
-        return float(arr.mean()) if arr.size else sent
-
-    def _map_area(area: str) -> float:
-        return _mean([ap[(c, t, area)] for c in classes for t in range(n_thr)])
-
-    def _mar(area: str, md: int) -> float:
-        return _mean(
-            [ar[(c, t, area, md)] for c in classes for t in range(n_thr)]
-        )
-
-    if core:
-        return {
-            "map": _map_area("all"),
-            "map_50": _mean([ap[(c, 0, "all")] for c in classes]),
-            "map_75": _mean([ap[(c, 5, "all")] for c in classes]),
-            "mar_100": _mar("all", max_det),
-        }
-
-    per_cls_map = {
-        f"cat_{c}": _mean([ap[(c, t, "all")] for t in range(n_thr)])
-        for c in classes
-    }
-    per_cls_mar = {
-        f"cat_{c}": _mean([ar[(c, t, "all", max_det)] for t in range(n_thr)])
-        for c in classes
-    }
-    return {
-        "map": _map_area("all"),
-        "map_50": _mean([ap[(c, 0, "all")] for c in classes]),
-        "map_75": _mean([ap[(c, 5, "all")] for c in classes]),
-        "map_small": _map_area("small"),
-        "map_medium": _map_area("medium"),
-        "map_large": _map_area("large"),
-        "mar_1": _mar("all", 1),
-        "mar_10": _mar("all", 10),
-        "mar_100": _mar("all", max_det),
-        "mar_small": _mar("small", max_det),
-        "mar_medium": _mar("medium", max_det),
-        "mar_large": _mar("large", max_det),
-        "map_per_class": per_cls_map,
-        "mar_100_per_class": per_cls_mar,
-    }
+    areas = {"all": AREA_RANGES["all"]} if core else AREA_RANGES
+    pools: dict[tuple, np.ndarray] = {}
+    for cls, area, n_gt, _, tp, _, ap in _map_partials(gt, pred, areas):
+        v = np.array([ap, tp[:, :1].sum(axis=1), tp[:, :10].sum(axis=1),
+                      tp.sum(axis=1)], dtype=np.float64)
+        v[1:] = v[1:] / n_gt if n_gt else np.nan
+        pools[(cls, area)] = v
+    return _surface(pools, core)
 
 
 # ---------------------------------------------------------------------------
@@ -517,21 +421,19 @@ def confusion_matrix_from_masks(
     return confusion_matrix_binary(gt_img, pred_img, n_classes + 1)
 
 
+def _per_class_prf(cm: np.ndarray) -> list[np.ndarray]:
+    """Per-class precision/recall/F1 vectors: the diagonals of
+    :func:`confusion_matrices` (diag / column sum, diag / row sum and their
+    harmonic mean, zero where a denominator is empty)."""
+    return [np.diag(m) for m in confusion_matrices(cm)]
+
+
 def confusion_metrics(cm: np.ndarray) -> dict[str, float]:
     """Per-class P/R/F1 means from a confusion matrix, matching the
     reference's math exactly (multi_label_confusion_matrix.py:419-488):
     zero (not NaN) where a row/column sum is empty, plain mean over ALL
     classes in the matrix."""
-    diag = np.diag(cm)
-    col_sums = cm.sum(axis=0)
-    row_sums = cm.sum(axis=1)
-    precision = np.divide(diag, col_sums, out=np.zeros_like(diag),
-                          where=col_sums != 0)
-    recall = np.divide(diag, row_sums, out=np.zeros_like(diag),
-                       where=row_sums != 0)
-    denom = precision + recall
-    f1 = np.divide(2 * precision * recall, denom, out=np.zeros_like(diag),
-                   where=denom != 0)
+    precision, recall, f1 = _per_class_prf(cm)
     return {
         "precision_mean": float(np.average(precision)),
         "recall_mean": float(np.average(recall)),
@@ -544,16 +446,7 @@ def confusion_per_class(cm: np.ndarray) -> dict[str, dict[str, float]]:
     MultiLabelMatrixAggMetrics classes_* fields,
     multi_label_confusion_matrix.py:459-478). Index 0 is the background
     class; data class k sits at index k+1, keyed "cat_<k>"."""
-    diag = np.diag(cm)
-    col_sums = cm.sum(axis=0)
-    row_sums = cm.sum(axis=1)
-    precision = np.divide(diag, col_sums, out=np.zeros_like(diag),
-                          where=col_sums != 0)
-    recall = np.divide(diag, row_sums, out=np.zeros_like(diag),
-                       where=row_sums != 0)
-    denom = precision + recall
-    f1 = np.divide(2 * precision * recall, denom, out=np.zeros_like(diag),
-                   where=denom != 0)
+    precision, recall, f1 = _per_class_prf(cm)
 
     def name(i: int) -> str:
         return "background" if i == 0 else f"cat_{i - 1}"
@@ -570,7 +463,8 @@ def confusion_matrices(cm: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarr
     the reference's exporter renders (multi_label_confusion_matrix.py:
     425-449): precision = column-normalized, recall = row-normalized,
     F1 = element-wise harmonic mean; zeros (not NaN) where a denominator
-    is empty. The diagonals reproduce :func:`confusion_metrics`."""
+    is empty. Their diagonals are the per-class metrics of
+    :func:`confusion_metrics` and :func:`confusion_per_class`."""
     cm = np.asarray(cm, dtype=float)
     col_sums = cm.sum(axis=0)
     row_sums = cm.sum(axis=1)
@@ -601,7 +495,6 @@ def collapsed_confusion_matrix(cm: np.ndarray) -> np.ndarray:
 def match_stats(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
-    max_det: int = 100,
 ) -> list[dict]:
     """Per-document COCO matching partials: the one long-form mAP table
     behind both the per-document and the dataset-level surface.
@@ -618,56 +511,35 @@ def match_stats(
     (None when ``n_gt`` is 0). The per-document surface is then plain
     means over these rows: AP as is, AR = tp count / ``n_gt``.
 
-    Empty size buckets emit no rows; an empty ``"all"`` bucket still does
-    (``n_gt`` 0, no scores), so every class keeps its per-class key exactly
-    like :func:`evaluate_map`'s pools.
+    Rows flatten :func:`_map_partials`: empty size buckets emit no rows; an
+    empty ``"all"`` bucket still does (``n_gt`` 0, no scores), so every
+    class keeps its per-class key exactly like :func:`evaluate_map`.
 
     Returns [{cls, thr_idx, area, scores, tp, n_gt, n_tp, tp_md1, tp_md10,
     ap}]. Raises ValueError past the :func:`_check_box_budget` limit, like
     :func:`evaluate_map`."""
-    _check_box_budget(gt, pred)
-    classes = sorted(
-        {c for c, _ in gt} | {c for c, _, _ in pred}
-    )
     out = []
-    for cls in classes:
-        g = np.array([b for c, b in gt if c == cls], dtype=np.float64).reshape(-1, 4)
-        p = [(b, s) for c, b, s in pred if c == cls]
-        p.sort(key=lambda x: -x[1])
-        p = p[:max_det]
-        pb = np.array([b for b, _ in p], dtype=np.float64).reshape(-1, 4)
-        ps = np.array([s for _, s in p], dtype=np.float64)
-        g_area = (g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
-        p_area = (pb[:, 2] - pb[:, 0]) * (pb[:, 3] - pb[:, 1])
-        ious = iou_matrix(g, pb)
-        for area, (lo, hi) in AREA_RANGES.items():
-            gt_ig = (g_area < lo) | (g_area > hi)
-            dt_out = (p_area < lo) | (p_area > hi)
-            npig = int((~gt_ig).sum())
-            if area != "all" and npig == 0 and bool(dt_out.all()):
-                continue  # empty size bucket contributes nothing
-            order = np.argsort(gt_ig, kind="stable")
-            ious_o = ious[order]
-            git = gt_ig[order]
-            for ti, thr in enumerate(IOU_THRESHOLDS):
-                dtm, dt_ig = _match_with_ignore(ious_o, git, thr)
-                dt_ig = dt_ig | ((dtm == -1) & dt_out)
-                keep = ~dt_ig
-                tp = (dtm >= 0) & keep
-                out.append(
-                    {
-                        "cls": int(cls),
-                        "thr_idx": int(ti),
-                        "area": area,
-                        "scores": ps[keep].tolist(),
-                        "tp": tp[keep].astype(np.int32).tolist(),
-                        "n_gt": npig,
-                        "n_tp": int(tp.sum()),
-                        "tp_md1": int(tp[:1].sum()),
-                        "tp_md10": int(tp[:10].sum()),
-                        "ap": average_precision(tp[keep], npig) if npig else None,
-                    }
-                )
+    for cls, area, n_gt, scores, tp, keep, ap in _map_partials(gt, pred):
+        n_tp = tp.sum(axis=1).tolist()
+        md1 = tp[:, :1].sum(axis=1).tolist()
+        md10 = tp[:, :10].sum(axis=1).tolist()
+        ap_l = ap.tolist()
+        for t in range(len(IOU_THRESHOLDS)):
+            k = keep[t]
+            out.append(
+                {
+                    "cls": int(cls),
+                    "thr_idx": t,
+                    "area": area,
+                    "scores": scores[k].tolist(),
+                    "tp": tp[t][k].astype(np.int32).tolist(),
+                    "n_gt": n_gt,
+                    "n_tp": n_tp[t],
+                    "tp_md1": md1[t],
+                    "tp_md10": md10[t],
+                    "ap": ap_l[t] if n_gt else None,
+                }
+            )
     return out
 
 
@@ -700,53 +572,10 @@ def merged_map_local(docs: list[tuple[list, list]]) -> dict[str, float]:
             slot[3] += st["tp_md1"]
             slot[4] += st["tp_md10"]
 
-    ap: dict[tuple, float] = {}
-    rec: dict[tuple, tuple] = {}
-    for key, (scores, tp, n_gt, t1, t10) in pool.items():
-        ap[key] = pooled_average_precision(np.array(scores), np.array(tp), n_gt)
-        if n_gt == 0:
-            rec[key] = (float("nan"),) * 3
-        else:
-            rec[key] = (t1 / n_gt, t10 / n_gt, int(np.sum(tp)) / n_gt)
-
-    def _mean(vals):
-        arr = np.asarray(vals, dtype=np.float64)
-        arr = arr[~np.isnan(arr)]
-        return float(arr.mean()) if arr.size else -1.0
-
-    def _ap_area(area, thr=None):
-        return _mean([
-            v for (c, t, a), v in ap.items()
-            if a == area and (thr is None or t == thr)
-        ])
-
-    def _rec_area(area, idx):
-        return _mean([v[idx] for (c, t, a), v in rec.items() if a == area])
-
-    classes = sorted({c for (c, _, _) in ap})
-    return {
-        "map": _ap_area("all"),
-        "map_50": _ap_area("all", 0),
-        "map_75": _ap_area("all", 5),
-        "map_small": _ap_area("small"),
-        "map_medium": _ap_area("medium"),
-        "map_large": _ap_area("large"),
-        "mar_1": _rec_area("all", 0),
-        "mar_10": _rec_area("all", 1),
-        "mar_100": _rec_area("all", 2),
-        "mar_small": _rec_area("small", 2),
-        "mar_medium": _rec_area("medium", 2),
-        "mar_large": _rec_area("large", 2),
-        "map_per_class": {
-            f"cat_{c}": _mean(
-                [v for (cc, t, a), v in ap.items() if cc == c and a == "all"]
-            )
-            for c in classes
-        },
-        "mar_100_per_class": {
-            f"cat_{c}": _mean(
-                [v[2] for (cc, t, a), v in rec.items() if cc == c and a == "all"]
-            )
-            for c in classes
-        },
-    }
+    pools: dict[tuple, np.ndarray] = {}
+    for (cls, t, area), (scores, tp, n_gt, t1, t10) in pool.items():
+        v = pools.setdefault((cls, area), np.full((4, len(IOU_THRESHOLDS)), np.nan))
+        v[0, t] = pooled_average_precision(np.array(scores), np.array(tp), n_gt)
+        if n_gt:
+            v[1:, t] = (t1 / n_gt, t10 / n_gt, int(np.sum(tp)) / n_gt)
+    return _surface(pools)

@@ -32,6 +32,7 @@ from docling_metrics_spark.kernels.layout import (
     confusion_metrics,
     evaluate_map,
     iou_matrix,
+    merged_map_local,
     rasterize_multilabel,
 )
 from docling_metrics_spark.kernels.minhash import (
@@ -507,6 +508,7 @@ def test_map_core_surface_matches_full():
         assert set(core) == {"map", "map_50", "map_75", "mar_100"}
         for k in core:
             assert core[k] == full[k], (k, core[k], full[k])
+        assert merged_map_local([(gt, pred)]) == full
         checked += 1
     assert checked == 60
     # empty-input sentinel shape agrees too
@@ -517,9 +519,9 @@ def test_map_core_surface_matches_full():
 
 def test_map_core_matches_full_on_degenerate_boxes():
     """The "all" area range IGNORES degenerate (inverted, negative-area)
-    and giant (>1e10 area) boxes; the core fast path must fall back to the
-    ignore-aware loop on such inputs so core == full holds on EVERY input,
-    not just well-formed ones (round-3 review finding)."""
+    and giant (>1e10 area) boxes; the core surface applies the same ignore
+    rule, so core == full holds on EVERY input, not just well-formed ones
+    (round-3 review finding)."""
     import math
     import random
 
@@ -554,6 +556,108 @@ def test_map_core_matches_full_on_degenerate_boxes():
                 math.isnan(core[k]) and math.isnan(full[k])
             )
             assert same, (k, core[k], full[k], gt, pred)
+        assert merged_map_local([(gt, pred)]) == full
+
+
+def _reference_match(ious, gt_ig, thr):
+    """Scalar greedy COCO matching with ignore semantics (the published
+    pycocotools evaluateImg algorithm), one threshold at a time: the
+    reference the batched matcher is fuzzed against. dts in
+    descending-score order claim the highest-IoU unmatched GT ≥ thr; GT
+    rows are pre-sorted non-ignored first, and a dt may fall through to an
+    ignored GT only when no valid GT remains. Returns (dtm gt-row-index or
+    -1 per dt, matched-an-ignored-GT flags)."""
+    import numpy as np
+
+    n_gt, n_dt = ious.shape
+    ious_l = ious.T.tolist()  # [n_dt][n_gt]
+    ig_l = gt_ig.tolist()
+    gtm = [-1] * n_gt
+    dtm = np.full(n_dt, -1, dtype=np.int64)
+    dt_ig = np.zeros(n_dt, dtype=bool)
+    for d in range(n_dt):
+        row = ious_l[d]
+        best = min(thr, 1.0 - 1e-10)
+        m = -1
+        for g in range(n_gt):
+            if gtm[g] >= 0:
+                continue
+            if m > -1 and not ig_l[m] and ig_l[g]:
+                break  # remaining gts are all ignored (sorted)
+            if row[g] < best:
+                continue
+            best = row[g]
+            m = g
+        if m == -1:
+            continue
+        dtm[d] = m
+        gtm[m] = d
+        dt_ig[d] = ig_l[m]
+    return dtm, dt_ig
+
+
+def test_batched_matcher_equals_scalar_reference():
+    """The one COCO matcher (all IoU thresholds in one pass over the
+    detections) equals the scalar loop run per threshold on GTs sorted
+    in-range first, for every area range's ignore mask: inverted and giant
+    (area > 1e10) boxes, IoU ties from boxes on a coarse grid,
+    and empty GT or prediction sides."""
+    import random
+
+    import numpy as np
+
+    from docling_metrics_spark.kernels.layout import (
+        AREA_RANGES,
+        IOU_THRESHOLDS,
+        _match_all_thresholds,
+    )
+
+    rng = random.Random(606)
+
+    def rbox(coarse):
+        if coarse:
+            # 40×40 boxes on a 5-px grid: a dt halfway between two GTs
+            # ties on IoU, and which one it takes decides later dts
+            x, y = 5.0 * rng.randrange(9), 5.0 * rng.randrange(9)
+            w, h = 40.0, 40.0
+        else:
+            x, y = rng.uniform(-10, 300), rng.uniform(-10, 300)
+            w, h = rng.uniform(0.5, 150), rng.uniform(0.5, 150)
+        r = rng.random()
+        if r < 0.1:
+            return [x + w, y, x, y + h]  # inverted: negative area
+        if r < 0.2:
+            return [x, y, x + 2e5, y + 2e5]  # giant: area > 1e10
+        return [x, y, x + w, y + h]
+
+    seen = {"ignored_match": 0, "tie": 0, "empty": 0}
+    for case in range(400):
+        coarse = case % 2 == 1
+        g = np.array([rbox(coarse) for _ in range(rng.randint(0, 12))],
+                     dtype=np.float64).reshape(-1, 4)
+        p = []
+        for _ in range(rng.randint(0, 15)):
+            if len(g) and not coarse and rng.random() < 0.6:
+                p.append(list(g[rng.randrange(len(g))] + rng.uniform(-6, 6)))
+            else:
+                p.append(rbox(coarse))
+        pb = np.array(p, dtype=np.float64).reshape(-1, 4)
+        ious = iou_matrix(g, pb)
+        g_area = (g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
+        seen["empty"] += ious.size == 0
+        seen["tie"] += any(len(set(r)) < len(r) for r in ious.T.tolist()
+                           if max(r, default=0) >= 0.5)
+        for lo, hi in AREA_RANGES.values():
+            gt_ig = (g_area < lo) | (g_area > hi)
+            tp, on_ig = _match_all_thresholds(ious, gt_ig)
+            order = np.argsort(gt_ig, kind="stable")
+            for ti, thr in enumerate(IOU_THRESHOLDS):
+                dtm, dt_ig = _reference_match(ious[order], gt_ig[order], thr)
+                assert tp[ti].tolist() == ((dtm >= 0) & ~dt_ig).tolist(), (
+                    case, thr)
+                assert on_ig[ti].tolist() == dt_ig.tolist(), (case, thr)
+            seen["ignored_match"] += bool(on_ig.any())
+    assert all(n >= 20 for n in seen.values()), seen
 
 
 def test_cells_to_html_roundtrip_fixed_point():

@@ -6,13 +6,31 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load_bench_scaling():
-    spec = importlib.util.spec_from_file_location(
-        "bench_scaling", os.path.join(REPO, "tools", "bench_scaling.py")
-    )
+def _load(name, *path):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, *path))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _load_bench_scaling():
+    return _load("bench_scaling", "tools", "bench_scaling.py")
+
+
+def test_bench_defaults_to_the_available_cpus(monkeypatch):
+    """Without $SPARK_GRAFT_CPUS, bench.py runs local[N] with N the CPUs
+    this process may use (not a fixed 32) and derives the shuffle width
+    from N; an explicit setting still wins."""
+    bench = _load("bench", "bench.py")
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2, 3})
+    assert bench.master_and_shuffle() == ("local[4]", 8)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(12)))
+    assert bench.master_and_shuffle() == ("local[12]", 12)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert bench.master_and_shuffle() == ("local[*]", 12)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
+    assert bench.master_and_shuffle() == ("local[16]", 16)
 
 
 def test_bench_scaling_prunes_stale_corpora(tmp_path, monkeypatch, capsys):
