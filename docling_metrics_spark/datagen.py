@@ -50,7 +50,7 @@ def _words(rng: random.Random, lo: int, hi: int) -> str:
 
 
 def _make_table_html(rng: random.Random) -> str:
-    """Canonical table HTML (the form canonicalize_table_html is stable on)."""
+    """Canonical table HTML (the form extraction serializes tables to)."""
     rows = rng.randint(2, 4)
     cols = rng.randint(2, 4)
     parts = ["<table>"]

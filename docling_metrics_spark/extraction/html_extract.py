@@ -13,9 +13,18 @@ class priors). The DOM-walk pattern mirrors how the reference walks table
 DOMs (utils/teds.py:211-244, utils/grits.py:487-534) but is written fresh on
 stdlib ``html.parser`` (lxml is unavailable here and unnecessary).
 
+Each document is parsed once. A table's events go from the DOM builder
+straight to the TEDS table parser (``kernels.teds._TableHTMLParser``), and
+the table span's text is the canonical serialization of the tree it
+builds, so entities are decoded exactly once. A table that parser refuses
+(nesting past ``MAX_TABLE_DEPTH``) keeps its whitespace-normalized raw
+re-serialization as span text; a table still open at the end of the
+document is an empty table span. Extraction never raises on such input.
+
 This module is pure Python: it is both the single-process oracle for the
-pytest span-equality suite and the body of the Spark ``mapInPandas``
-extraction operator (one call per document, Arrow-batched).
+pytest span-equality suite and the extraction step of the fused flagship
+UDF (``operators.udfs.flagship_doc_udf``, one call per document,
+Arrow-batched).
 """
 
 from __future__ import annotations
@@ -24,7 +33,7 @@ import re
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
-from docling_metrics_spark.kernels.teds import html_to_tree, _node_to_html
+from docling_metrics_spark.kernels.teds import _node_to_html, _TableHTMLParser
 
 # Subtrees never part of main content (block-level tag classification).
 _DROP_TAGS = {
@@ -64,15 +73,20 @@ class _Node:
 
 
 class _DOMBuilder(HTMLParser):
-    """Minimal DOM: elements + text nodes, dropped subtrees pruned inline."""
+    """Minimal DOM: elements + text nodes, dropped subtrees pruned inline.
+
+    A table region's events go straight to a :class:`_TableHTMLParser`,
+    so each table is parsed once; the region ends when every non-void tag
+    opened inside it has closed, whatever its name."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.root = _Node("document")
         self._stack = [self.root]
         self._drop_depth = 0
-        self._raw_depth = 0  # inside <table>: keep raw HTML for canonical reserialization
-        self._raw_parts: list[str] = []
+        self._table_depth = 0  # open non-void tags of the current table region
+        self._table: _TableHTMLParser | None = None  # None once it refused
+        self._table_events: list = []  # for a refused table's span text
         self._suppress_depth = 0  # wrappers beyond MAX_DOM_DEPTH (transparent)
 
     def handle_starttag(self, tag, attrs):
@@ -81,10 +95,10 @@ class _DOMBuilder(HTMLParser):
                 return
             self._drop_depth += 1
             return
-        if self._raw_depth:
-            self._raw_parts.append(_raw_tag(tag, attrs))
+        if self._table_depth:
+            self._table_event((tag, attrs))
             if tag not in _VOID_TAGS:
-                self._raw_depth += 1
+                self._table_depth += 1
             return
         if tag in _DROP_TAGS:
             self._drop_depth = 1
@@ -107,15 +121,17 @@ class _DOMBuilder(HTMLParser):
         node = _Node(tag, dict(attrs))
         self._stack[-1].children.append(node)
         if tag == "table":
-            self._raw_depth = 1
-            self._raw_parts = [_raw_tag(tag, attrs)]
+            self._table_depth = 1
+            self._table = _TableHTMLParser(structure_only=False)
+            self._table_events = []
+            self._table_event((tag, attrs))
             self._stack.append(node)
         elif tag not in _VOID_TAGS:
             self._stack.append(node)
 
     def handle_startendtag(self, tag, attrs):
         self.handle_starttag(tag, attrs)
-        if tag not in _VOID_TAGS and not self._drop_depth and not self._raw_depth:
+        if tag not in _VOID_TAGS and not self._drop_depth and not self._table_depth:
             self.handle_endtag(tag)
 
     def handle_endtag(self, tag):
@@ -127,14 +143,16 @@ class _DOMBuilder(HTMLParser):
             if tag not in _VOID_TAGS:
                 self._drop_depth -= 1
             return
-        if self._raw_depth:
-            self._raw_parts.append(f"</{tag}>")
+        if self._table_depth:
+            self._table_event((tag, None))
             if tag not in _VOID_TAGS:
-                self._raw_depth -= 1
-            if self._raw_depth == 0:
-                table_node = self._stack.pop()
-                table_node.text = "".join(self._raw_parts)
-                self._raw_parts = []
+                self._table_depth -= 1
+            if self._table_depth == 0:
+                # a table never closed keeps text "" and swallows the rest
+                self._stack.pop().text = (
+                    _node_to_html(self._table.root) if self._table is not None
+                    else _norm_text(_raw_html(self._table_events))
+                )
             return
         for i in range(len(self._stack) - 1, 0, -1):
             if self._stack[i].tag == tag:
@@ -144,11 +162,42 @@ class _DOMBuilder(HTMLParser):
     def handle_data(self, data):
         if self._drop_depth:
             return
-        if self._raw_depth:
-            self._raw_parts.append(data)
+        if self._table_depth:
+            self._table_event(data)
             return
         if data.strip():
             self._stack[-1].children.append(_Node("", text=data))
+
+    def _table_event(self, event) -> None:
+        """Log one table event — ``(tag, attrs)`` start, ``(tag, None)``
+        end, or a data string — and forward it to the table parser. A
+        table the parser refuses (nesting past MAX_TABLE_DEPTH) gets its
+        whitespace-normalized raw re-serialization as span text."""
+        self._table_events.append(event)
+        if self._table is None:
+            return
+        try:
+            if isinstance(event, str):
+                self._table.handle_data(event)
+            elif event[1] is None:
+                self._table.handle_endtag(event[0])
+            else:
+                self._table.handle_starttag(*event)
+        except ValueError:
+            self._table = None
+
+
+def _raw_html(events: list) -> str:
+    """Re-serialize logged table events (see ``_DOMBuilder._table_event``)."""
+    parts = []
+    for ev in events:
+        if isinstance(ev, str):
+            parts.append(ev)
+        elif ev[1] is None:
+            parts.append(f"</{ev[0]}>")
+        else:
+            parts.append(_raw_tag(*ev))
+    return "".join(parts)
 
 
 def _raw_tag(tag: str, attrs) -> str:
@@ -206,11 +255,7 @@ def _emit(node: _Node, out: list[dict]) -> None:
             out.append({"kind": "heading", "text": text, "media_ref": None})
         return
     if tag == "table":
-        out.append({
-            "kind": "table",
-            "text": canonicalize_table_html(node.text),
-            "media_ref": None,
-        })
+        out.append({"kind": "table", "text": node.text, "media_ref": None})
         return
     if tag == "img":
         src = node.attrs.get("src")
@@ -252,15 +297,6 @@ def _emit(node: _Node, out: list[dict]) -> None:
     # Unknown inline tag: recurse (content may hide in spans/b/i wrappers).
     for c in node.children:
         _emit(c, out)
-
-
-def canonicalize_table_html(table_html: str) -> str:
-    """Round-trip table HTML through the TableNode tree to the canonical
-    serialization used in span text (matches kernels.teds._node_to_html)."""
-    try:
-        return _node_to_html(html_to_tree(table_html, structure_only=False))
-    except ValueError:
-        return _norm_text(table_html)
 
 
 def extract_spans_from_html(raw_html: str) -> list[dict]:

@@ -8,13 +8,16 @@ pixel confusion matrix. Pure numpy — runs inside Arrow UDFs.
   pycocotools reference protocol): greedy matching of score-sorted
   predictions to GT at IoU thresholds 0.50:0.05:0.95 with the area-range
   ignore rule, 101-point interpolated AP, mAP = mean over classes present
-  in GT. ONE matcher, :func:`_match_all_thresholds`, matches a class's
-  predictions for all ten thresholds in one pass; :func:`_map_partials`
-  runs it per (class, area bucket) and is read by :func:`match_stats` (the
-  long-form rows both layout queries materialize) and
-  :func:`evaluate_map` (the per-document surface). :func:`_surface` is the
-  one reduction to the 12 scalars + per-class dicts, shared with the
-  dataset-level :func:`merged_map_local`. The reference delegates to
+  in GT. ONE matcher, :func:`_match_all_thresholds`, matches all ten
+  thresholds for a batch of (document, class, area bucket) groups in one
+  pass over the detections; :func:`_map_partials` pads the groups of a
+  batch of documents into power-of-two shape buckets, one matcher call
+  per bucket. A single document is the one-document batch. It is read by
+  :func:`match_stats` (the long-form rows both layout queries
+  materialize), :func:`evaluate_map` (the per-document surface; the
+  flagship scores a whole Arrow batch with :func:`evaluate_map_docs`) and
+  :func:`merged_map_local`. :func:`_surface` is the one reduction to the
+  12 scalars + per-class dicts. The reference delegates to
   torchmetrics/faster_coco_eval (map_layout_evaluator.py:201-208); we
   implement the protocol directly (torch unavailable, and from-scratch is
   the point).
@@ -45,18 +48,22 @@ RECALL_POINTS = np.linspace(0.0, 1.0, 101)
 
 def iou_matrix(boxes_a: np.ndarray, boxes_b: np.ndarray) -> np.ndarray:
     """Pairwise IoU of two (n,4) / (m,4) xyxy float arrays → (n,m)."""
-    if len(boxes_a) == 0 or len(boxes_b) == 0:
-        return np.zeros((len(boxes_a), len(boxes_b)))
-    a = np.asarray(boxes_a, dtype=np.float64)
-    b = np.asarray(boxes_b, dtype=np.float64)
-    x1 = np.maximum(a[:, None, 0], b[None, :, 0])
-    y1 = np.maximum(a[:, None, 1], b[None, :, 1])
-    x2 = np.minimum(a[:, None, 2], b[None, :, 2])
-    y2 = np.minimum(a[:, None, 3], b[None, :, 3])
+    a = np.asarray(boxes_a, dtype=np.float64).reshape(-1, 4)
+    b = np.asarray(boxes_b, dtype=np.float64).reshape(-1, 4)
+    return _iou_batch(a[None], b[None])[0]
+
+
+def _iou_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Pairwise IoU per group: [n, G, 4] × [n, D, 4] → [n, G, D].
+    An all-zero padding box has IoU 0 with anything."""
+    x1 = np.maximum(a[:, :, None, 0], b[:, None, :, 0])
+    y1 = np.maximum(a[:, :, None, 1], b[:, None, :, 1])
+    x2 = np.minimum(a[:, :, None, 2], b[:, None, :, 2])
+    y2 = np.minimum(a[:, :, None, 3], b[:, None, :, 3])
     inter = np.clip(x2 - x1, 0, None) * np.clip(y2 - y1, 0, None)
-    area_a = (a[:, 2] - a[:, 0]) * (a[:, 3] - a[:, 1])
-    area_b = (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
-    union = area_a[:, None] + area_b[None, :] - inter
+    area_a = (a[:, :, 2] - a[:, :, 0]) * (a[:, :, 3] - a[:, :, 1])
+    area_b = (b[:, :, 2] - b[:, :, 0]) * (b[:, :, 3] - b[:, :, 1])
+    union = area_a[:, :, None] + area_b[:, None, :] - inter
     return np.divide(inter, union, out=np.zeros_like(inter), where=union > 0)
 
 
@@ -91,72 +98,92 @@ AREA_RANGES: dict[str, tuple[float, float]] = {
 MAX_DET = 100  # detections kept per class, best score first (COCO maxDets)
 
 
+# Padded IoU cells (groups × (G + thresholds) × D) per matcher call; a
+# shape bucket with more groups is matched in several calls.
+_BATCH_CELLS = 1 << 20
+
+
+def _pow2(n: int) -> int:
+    return 1 << max(n - 1, 0).bit_length()
+
+
 def _match_all_thresholds(
     ious: np.ndarray, gt_ig: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Greedy COCO matching with ignore semantics (the published
-    pycocotools evaluateImg algorithm) for ALL IoU thresholds in one pass
-    over the detections.
+    pycocotools evaluateImg algorithm) for ALL IoU thresholds of a batch
+    of groups in one pass over the detections.
 
-    ``ious`` is [G, D] with detections in descending-score order; ``gt_ig``
-    flags the GTs outside the area range. Each detection claims the
-    highest-IoU untaken in-range GT with IoU ≥ thr and falls through to the
-    highest-IoU untaken ignored GT only when no in-range GT qualifies;
+    ``ious`` is [n, G, D]: per group, GTs × detections in descending-score
+    order; ``gt_ig`` [n, G] flags the GTs outside the area range. Padding
+    (IoU 0, not ignored) never matches. Each detection claims the
+    highest-IoU untaken in-range GT with IoU ≥ thr and falls through to
+    the highest-IoU untaken ignored GT only when no in-range GT qualifies;
     equal-IoU ties go to the LAST GT index. Ignored GTs compete at a
     quarter of their IoU: an eligible IoU is ≥ 0.5, so a quartered one
     (≤ 0.25, exact under power-of-two scaling) ranks below every in-range
     candidate while ties among ignored GTs stay ties — both tiers resolve
-    in one [T, G] pass per detection.
+    in one [n, T, G] pass per detection.
 
-    Returns bool [T, D] flags: matched to an in-range GT, matched to an
+    Returns bool [n, T, D] flags: matched to an in-range GT, matched to an
     ignored GT."""
-    n_gt, n_dt = ious.shape
+    n, n_gt, n_dt = ious.shape
     n_thr = len(IOU_THRESHOLDS)
+    matched = np.zeros((n, n_thr, n_dt), dtype=bool)
     if n_gt == 0 or n_dt == 0:
-        none = np.zeros((n_thr, n_dt), dtype=bool)
-        return none, none
-    rows = ious.T  # [D,G]
-    rank = np.where(gt_ig, rows * 0.25, rows)
-    thr_col = IOU_THRESHOLDS[:, None]  # [T,1]
-    free = np.ones((n_thr, n_gt), dtype=bool)
-    t_idx = np.arange(n_thr)
-    matched = np.empty((n_thr, n_dt), dtype=bool)
-    gt_idx = np.empty((n_thr, n_dt), dtype=np.int64)
+        return matched, matched
+    rows = ious.transpose(0, 2, 1)  # [n,D,G]
+    rank = np.where(gt_ig[:, None, :], rows * 0.25, rows)
+    thr = IOU_THRESHOLDS[None, :, None]  # [1,T,1]
+    free = np.ones((n, n_thr, n_gt), dtype=bool)
+    grp, t_idx = np.arange(n)[:, None], np.arange(n_thr)[None, :]
+    gt_idx = np.empty((n, n_thr, n_dt), dtype=np.int64)
     for d in range(n_dt):
-        masked = np.where((rows[d] >= thr_col) & free, rank[d], -1.0)
+        masked = np.where((rows[:, d, None, :] >= thr) & free,
+                          rank[:, d, None, :], -1.0)
         # last argmax: ties go to the highest GT index
-        sel = (n_gt - 1) - np.argmax(masked[:, ::-1], axis=1)
-        ok = masked[t_idx, sel] > -1.0
-        free[ok, sel[ok]] = False
-        matched[:, d] = ok
-        gt_idx[:, d] = sel
-    on_ig = matched & gt_ig[gt_idx]
+        sel = (n_gt - 1) - np.argmax(masked[:, :, ::-1], axis=2)
+        ok = masked[grp, t_idx, sel] > -1.0
+        free[grp, t_idx, sel] &= ~ok
+        matched[:, :, d] = ok
+        gt_idx[:, :, d] = sel
+    on_ig = matched & np.take_along_axis(gt_ig[:, None, :], gt_idx, axis=2)
     return matched ^ on_ig, on_ig
 
 
 def _ap_all_thresholds(
-    tp: np.ndarray, keep: np.ndarray, n_gt: int
+    tp: np.ndarray, keep: np.ndarray, n_gt: np.ndarray
 ) -> np.ndarray:
-    """101-point interpolated AP for every threshold at once, from TP flags
-    [T, D] in descending-score order; ``keep`` [T, D] is False for ignored
-    detections (every TP is kept). An ignored detection repeats the
-    previous point of the curve, so each AP is bit-identical to
-    :func:`average_precision` over that threshold's kept flags. Returns
-    AP [T]; caller guards n_gt == 0."""
-    n_thr, n_dt = tp.shape
+    """101-point interpolated AP for every group and threshold at once,
+    from TP flags [n, T, D] in descending-score order; ``keep`` [n, T, D]
+    is False for ignored and padded detections (every TP is kept). An
+    unkept detection repeats the previous point of the curve, so each AP
+    is bit-identical to :func:`average_precision` over that threshold's
+    kept flags. Returns AP [n, T]; a group with ``n_gt`` 0 gets a
+    meaningless value the caller replaces."""
+    n, n_thr, n_dt = tp.shape
     if n_dt == 0:
-        return np.zeros(n_thr)
-    tp_cum = np.cumsum(tp, axis=1)
-    recall = tp_cum / n_gt
+        return np.zeros((n, n_thr))
+    n_rows = n * n_thr
+    tp_cum = np.cumsum(tp, axis=2).reshape(n_rows, n_dt)
+    recall = tp_cum / np.repeat(np.maximum(n_gt, 1), n_thr)[:, None]
     # kept detections so far = TP + FP; 0 before the first kept one
-    precision = tp_cum / np.maximum(np.cumsum(keep, axis=1), 1)
+    keep_cum = np.cumsum(keep, axis=2).reshape(n_rows, n_dt)
+    precision = tp_cum / np.maximum(keep_cum, 1)
     precision = np.maximum.accumulate(precision[:, ::-1], axis=1)[:, ::-1]
-    # first dt index where recall ≥ each of the 101 points (searchsorted
-    # batched via argmax over a [T, D, 101] comparison)
-    ge = recall[:, :, None] >= RECALL_POINTS[None, None, :]
-    rows = np.arange(n_thr)[:, None]
-    prec_at = np.where(ge.any(axis=1), precision[rows, ge.argmax(axis=1)], 0.0)
-    return prec_at.mean(axis=1)
+    # first dt index where recall ≥ each of the 101 points: recall rises
+    # along a row, so it is the count of dts reaching fewer points
+    # (searchsorted "right" counts the points ≤ each recall, exactly)
+    n_pts = len(RECALL_POINTS)
+    reached = np.searchsorted(RECALL_POINTS, recall, side="right")
+    reached += (np.arange(n_rows) * (n_pts + 1))[:, None]
+    first = np.cumsum(
+        np.bincount(reached.ravel(), minlength=n_rows * (n_pts + 1))
+        .reshape(n_rows, n_pts + 1)[:, :n_pts], axis=1)
+    row = np.arange(n_rows)[:, None]
+    prec_at = np.where(first < n_dt,
+                       precision[row, np.minimum(first, n_dt - 1)], 0.0)
+    return prec_at.mean(axis=1).reshape(n, n_thr)
 
 
 def _check_box_budget(gt: list, pred: list) -> None:
@@ -170,24 +197,21 @@ def _check_box_budget(gt: list, pred: list) -> None:
         raise ValueError(f"too many boxes: {len(gt)} gt + {len(pred)} pred")
 
 
-def _map_partials(
+def _doc_groups(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
-    areas: dict[str, tuple[float, float]] = AREA_RANGES,
-):
-    """The per-document COCO match behind :func:`match_stats` and
-    :func:`evaluate_map`: one IoU matrix per class, one batched match per
-    (class, area bucket).
-
-    Yields ``(cls, area, n_gt, scores, tp, keep, ap)``: the class's
-    prediction scores (descending, at most MAX_DET), TP flags and kept
-    (not ignored) flags [T, D] in score order, the in-range GT count and
-    the per-threshold AP [T] (NaN when ``n_gt`` is 0). A size bucket with
-    nothing in range on either side yields nothing; an empty ``"all"``
-    bucket still yields (``n_gt`` 0, nothing kept) so every class keeps
-    its per-class key."""
+    areas: dict[str, tuple[float, float]],
+) -> list[list]:
+    """One document's (class, area bucket) match groups, classes ascending:
+    ``[cls, area, n_gt, scores, g, pb, gt_ig, dt_out]`` with the class's
+    GT boxes ``g``, its predictions ``pb`` (descending score, at most
+    MAX_DET) and their scores, the out-of-range flags of both sides and
+    the in-range GT count. A size bucket with nothing in range on either
+    side is left out; an empty ``"all"`` bucket stays, with ``g`` None, so
+    every class keeps its per-class key. Raises ValueError for a refused
+    or malformed box list."""
     _check_box_budget(gt, pred)
-    n_thr = len(IOU_THRESHOLDS)
+    out = []
     for cls in sorted({c for c, _ in gt} | {c for c, _, _ in pred}):
         g = np.array([b for c, b in gt if c == cls], dtype=np.float64).reshape(-1, 4)
         p = [(b, s) for c, b, s in pred if c == cls]
@@ -197,23 +221,100 @@ def _map_partials(
         scores = np.array([s for _, s in p], dtype=np.float64)
         g_area = (g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
         p_area = (pb[:, 2] - pb[:, 0]) * (pb[:, 3] - pb[:, 1])
-        ious = iou_matrix(g, pb)
         for area, (lo, hi) in areas.items():
             gt_ig = (g_area < lo) | (g_area > hi)
             dt_out = (p_area < lo) | (p_area > hi)
             n_gt = int((~gt_ig).sum())
             if n_gt == 0 and dt_out.all():
                 if area == "all":
-                    none = np.zeros((n_thr, len(p)), dtype=bool)
-                    yield cls, area, 0, scores, none, none, np.full(n_thr, np.nan)
+                    out.append([cls, area, 0, scores, None, pb, None, None])
                 continue
-            tp, on_ig = _match_all_thresholds(ious, gt_ig)
-            # an out-of-range dt counts only as a TP: unmatched, it is
-            # ignored, not a false positive
-            keep = np.where(dt_out, tp, ~on_ig)
-            ap = (_ap_all_thresholds(tp, keep, n_gt) if n_gt
-                  else np.full(n_thr, np.nan))
-            yield cls, area, n_gt, scores, tp, keep, ap
+            out.append([cls, area, n_gt, scores, g, pb, gt_ig, dt_out])
+    return out
+
+
+def _match_groups(groups: list[list]) -> list[tuple]:
+    """``(tp, keep, ap)`` per :func:`_doc_groups` group, any mix of
+    documents: groups are bucketed by power-of-two (G, D), each bucket
+    padded and matched in one :func:`_match_all_thresholds` call (a lone
+    group keeps its own shape). ``keep`` [T, D] is False for an ignored
+    detection — an out-of-range dt counts only as a TP: unmatched, it is
+    ignored, not a false positive; AP is NaN when ``n_gt`` is 0."""
+    n_thr = len(IOU_THRESHOLDS)
+    out: list = [None] * len(groups)
+    buckets: dict[tuple[int, int], list[int]] = {}
+    for k, (_, _, _, _, g, pb, _, _) in enumerate(groups):
+        if g is None:
+            none = np.zeros((n_thr, len(pb)), dtype=bool)
+            out[k] = none, none, np.full(n_thr, np.nan)
+        else:
+            buckets.setdefault((_pow2(len(g)), _pow2(len(pb))), []).append(k)
+    for (gp, dp), ks in buckets.items():
+        step = max(1, _BATCH_CELLS // ((gp + n_thr) * dp))
+        for s in range(0, len(ks), step):
+            chunk = ks[s:s + step]
+            n = len(chunk)
+            g_w, d_w = ((len(groups[chunk[0]][4]), len(groups[chunk[0]][5]))
+                        if n == 1 else (gp, dp))
+            gb = np.zeros((n, g_w, 4))
+            pbb = np.zeros((n, d_w, 4))
+            ig = np.zeros((n, g_w), dtype=bool)
+            dt_out = np.ones((n, d_w), dtype=bool)  # padding: never kept
+            n_gt = np.empty(n, dtype=np.int64)
+            for r, k in enumerate(chunk):
+                _, _, n_gt[r], _, g, pb, g_ig, d_out = groups[k]
+                gb[r, :len(g)] = g
+                pbb[r, :len(pb)] = pb
+                ig[r, :len(g)] = g_ig
+                dt_out[r, :len(pb)] = d_out
+            tp, on_ig = _match_all_thresholds(_iou_batch(gb, pbb), ig)
+            keep = np.where(dt_out[:, None, :], tp, ~on_ig)
+            ap = _ap_all_thresholds(tp, keep, n_gt)
+            for r, k in enumerate(chunk):
+                n_dt = len(groups[k][5])
+                out[k] = (tp[r, :, :n_dt], keep[r, :, :n_dt],
+                          ap[r] if n_gt[r] else np.full(n_thr, np.nan))
+    return out
+
+
+def _map_partials(
+    docs: list[tuple[list, list]],
+    areas: dict[str, tuple[float, float]] = AREA_RANGES,
+) -> list:
+    """The COCO match behind :func:`match_stats`, :func:`evaluate_map`
+    and :func:`merged_map_local`, for a batch of ``(gt, pred)`` documents
+    matched together (:func:`_match_groups`).
+
+    Per document, ``[(cls, area, n_gt, scores, tp, keep, ap)]``: the
+    class's prediction scores (descending, at most MAX_DET), TP flags and
+    kept (not ignored) flags [T, D] in score order, the in-range GT count
+    and the per-threshold AP [T] (NaN when ``n_gt`` is 0) — or, for a
+    document :func:`_doc_groups` refuses, its ValueError, so one hostile
+    document degrades only its own result."""
+    per_doc: list = []
+    groups: list = []
+    for gt, pred in docs:
+        try:
+            doc = _doc_groups(gt, pred, areas)
+        except ValueError as exc:
+            per_doc.append(exc)
+            continue
+        per_doc.append(doc)
+        groups += doc
+    matches = iter(_match_groups(groups))
+    return [
+        doc if isinstance(doc, ValueError)
+        else [(c, a, n_gt, sc, *next(matches)) for c, a, n_gt, sc, *_ in doc]
+        for doc in per_doc
+    ]
+
+
+def _one(parts):
+    """A single document's :func:`_map_partials` entry; re-raises a
+    refusal."""
+    if isinstance(parts, ValueError):
+        raise parts
+    return parts
 
 
 def _surface(pools: dict, core: bool = False) -> dict:
@@ -256,6 +357,29 @@ def _surface(pools: dict, core: bool = False) -> dict:
     }
 
 
+def _pools(parts: list, core: bool) -> dict:
+    """:func:`_surface` pools from one document's :func:`_map_partials`."""
+    pools: dict[tuple, np.ndarray] = {}
+    for cls, area, n_gt, _, tp, _, ap in parts:
+        v = np.array([ap, tp[:, :1].sum(axis=1), tp[:, :10].sum(axis=1),
+                      tp.sum(axis=1)], dtype=np.float64)
+        v[1:] = v[1:] / n_gt if n_gt else np.nan
+        pools[(cls, area)] = v
+    return pools
+
+
+def evaluate_map_docs(docs: list[tuple[list, list]],
+                      surface: str = "full") -> list[dict | None]:
+    """:func:`evaluate_map` for a batch of ``(gt, pred)`` documents matched
+    together; a refused document's entry is None."""
+    core = surface == "core"
+    areas = {"all": AREA_RANGES["all"]} if core else AREA_RANGES
+    return [
+        None if isinstance(parts, ValueError) else _surface(_pools(parts, core), core)
+        for parts in _map_partials(docs, areas)
+    ]
+
+
 def evaluate_map(
     gt: list[tuple[int, list[float]]],
     pred: list[tuple[int, list[float], float]],
@@ -271,19 +395,14 @@ def evaluate_map(
     ``surface="core"`` restricts the computation to the flagship pipeline's
     kept fields (all-area map/map_50/map_75/mar_100): the size buckets are
     never matched. Overlapping fields are bit-identical to the full
-    surface (same matcher, same threshold grid).
+    surface (same matcher, same threshold grid). Raises ValueError for a
+    refused document (:func:`_check_box_budget`).
 
     gt: [(category_id, xyxy)], pred: [(category_id, xyxy, score)].
     """
     core = surface == "core"
     areas = {"all": AREA_RANGES["all"]} if core else AREA_RANGES
-    pools: dict[tuple, np.ndarray] = {}
-    for cls, area, n_gt, _, tp, _, ap in _map_partials(gt, pred, areas):
-        v = np.array([ap, tp[:, :1].sum(axis=1), tp[:, :10].sum(axis=1),
-                      tp.sum(axis=1)], dtype=np.float64)
-        v[1:] = v[1:] / n_gt if n_gt else np.nan
-        pools[(cls, area)] = v
-    return _surface(pools, core)
+    return _surface(_pools(_one(_map_partials([(gt, pred)], areas)[0]), core), core)
 
 
 # ---------------------------------------------------------------------------
@@ -518,8 +637,19 @@ def match_stats(
     Returns [{cls, thr_idx, area, scores, tp, n_gt, n_tp, tp_md1, tp_md10,
     ap}]. Raises ValueError past the :func:`_check_box_budget` limit, like
     :func:`evaluate_map`."""
+    return _stats_rows(_one(_map_partials([(gt, pred)])[0]))
+
+
+def match_stats_docs(docs: list[tuple[list, list]]) -> list[list[dict] | None]:
+    """:func:`match_stats` for a batch of ``(gt, pred)`` documents matched
+    together; a refused document's entry is None."""
+    return [None if isinstance(parts, ValueError) else _stats_rows(parts)
+            for parts in _map_partials(docs)]
+
+
+def _stats_rows(parts: list) -> list[dict]:
     out = []
-    for cls, area, n_gt, scores, tp, keep, ap in _map_partials(gt, pred):
+    for cls, area, n_gt, scores, tp, keep, ap in parts:
         n_tp = tp.sum(axis=1).tolist()
         md1 = tp[:, :1].sum(axis=1).tolist()
         md10 = tp[:, :10].sum(axis=1).tolist()
@@ -563,8 +693,8 @@ def merged_map_local(docs: list[tuple[list, list]]) -> dict[str, float]:
     from collections import defaultdict
 
     pool: dict[tuple, list] = defaultdict(lambda: [[], [], 0, 0, 0])
-    for gt, pred in docs:
-        for st in match_stats(gt, pred):
+    for parts in _map_partials(docs):
+        for st in _stats_rows(_one(parts)):
             slot = pool[(st["cls"], st["thr_idx"], st["area"])]
             slot[0].extend(st["scores"])
             slot[1].extend(st["tp"])

@@ -12,17 +12,24 @@ Pipeline pieces (reference parity targets, not copies):
 - :func:`html_to_tree` — stdlib ``html.parser`` DOM walk replacing the
   reference's lxml walk (teds.py:211-244): th normalized to td,
   colspan/rowspan attributes parsed with default 1, cell text
-  char-tokenized.
+  char-tokenized. Its handlers also build the trees of extraction's table
+  spans, fed event by event from the document parse.
+- :func:`normalize_spans` / :func:`teds_tree` — HTML and cells input are
+  scored on their trees directly: normalizing the spans as the bracket
+  round trip would (0 → 1, negative → error) makes that exactly the
+  bracket path's score without serializing. Bracket strings are parsed
+  only when they are the input (the bracket input mode and the TEDS join).
 - :func:`tree_edit_distance` — the Zhang–Shasha algorithm (Zhang & Shasha,
   SIAM J. Comput. 1989 — published) with the reference's custom costs
   (teds.py:13-34): insert/delete cost 1; rename cost 1 if tag/colspan/rowspan
   differ, else the normalized character Levenshtein of cell content for
-  td/th, else 0. (The reference's C++ path uses APTED with identical costs;
-  Zhang–Shasha computes the same exact TED value, per the north rule which
-  names Zhang-Shasha explicitly.)
-- :func:`teds_score` — ``1 − distance / max(n_nodes_a, n_nodes_b)`` with
-  node counts taken from the full trees (C++ path semantics,
-  cpp_src/pybind/teds_manager.h:87-96).
+  td/th, else 0, over flat postorder label/content arrays. (The
+  reference's C++ path uses APTED with identical costs; Zhang–Shasha
+  computes the same exact TED value, per the north rule which names
+  Zhang-Shasha explicitly.)
+- :func:`teds_from_trees` / :func:`teds_from_brackets` —
+  ``1 − distance / max(n_nodes_a, n_nodes_b)`` with node counts taken from
+  the full trees (C++ path semantics, cpp_src/pybind/teds_manager.h:87-96).
 
 Malformed bracket strings raise ``ValueError`` — the reference surfaces an
 (error_id, error_msg) channel and re-raises (docling_metrics_table.py:219-220);
@@ -222,7 +229,9 @@ class _TableHTMLParser(HTMLParser):
                     break
 
     def handle_data(self, data):
-        if self._cell_depth > 0 and not self.structure_only and data:
+        # a structural end tag may have popped an unclosed cell (and with
+        # the root, the whole stack): then the text belongs to no cell
+        if self._cell_depth > 0 and not self.structure_only and data and self._stack:
             cell = self._stack[-1]
             if cell.content is not None:
                 # char-tokenized cell text (reference teds.py:197-209)
@@ -275,104 +284,128 @@ def _node_to_html(node: TableNode) -> str:
     return f"<{node.tag}>{inner}</{node.tag}>"
 
 
+def normalize_spans(root: TableNode) -> TableNode:
+    """Give ``root``'s cells the spans the bracket round trip would: a
+    missing or 0 span becomes 1, and a negative span raises ValueError
+    (the bracket grammar's spans are unsigned, so the round trip rejects
+    the table). A normalized tree scores exactly as its bracket string
+    does, without serializing and re-parsing it. Mutates and returns
+    ``root``."""
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        if node.is_cell():
+            if (node.colspan or 0) < 0 or (node.rowspan or 0) < 0:
+                raise ValueError("negative cell span")
+            node.colspan = node.colspan or 1
+            node.rowspan = node.rowspan or 1
+        stack.extend(node.children)
+    return root
+
+
+def teds_tree(html: str, structure_only: bool = False) -> TableNode:
+    """HTML table → the tree TEDS scores (:func:`html_to_tree`, then
+    :func:`normalize_spans`); raises ValueError like the parser."""
+    return normalize_spans(html_to_tree(html, structure_only))
+
+
+def teds_from_trees(tree_a: TableNode, tree_b: TableNode) -> tuple[float, int, int]:
+    """TEDS = 1 − TED / max(sizes); returns (teds, size_a, size_b)."""
+    na, nb = tree_a.size(), tree_b.size()
+    return 1.0 - tree_edit_distance(tree_a, tree_b) / max(na, nb), na, nb
+
+
 # ---------------------------------------------------------------------------
 # Zhang–Shasha tree edit distance with the reference's custom costs
 # ---------------------------------------------------------------------------
 
 
-def rename_cost(n1: TableNode, n2: TableNode) -> float:
-    """Reference CustomConfig.rename semantics (teds.py:23-34)."""
-    if (
-        n1.tag != n2.tag
-        or (n1.colspan or None) != (n2.colspan or None)
-        or (n1.rowspan or None) != (n2.rowspan or None)
-    ):
-        return 1.0
-    if n1.tag in ("td", "th"):
-        c1, c2 = n1.content or [], n2.content or []
-        if c1 or c2:
-            return levenshtein(c1, c2) / max(len(c1), len(c2))
-    return 0.0
-
-
-def _postorder(root: TableNode) -> tuple[list[TableNode], list[int]]:
-    """Iterative postorder; returns (nodes, leftmost-leaf index per node)."""
-    nodes: list[TableNode] = []
+def _postorder(root: TableNode, label_ids: dict) -> tuple[list, list, list]:
+    """Postorder arrays of one tree: a label id per node (equal ids ⇔
+    equal ``(tag, colspan or None, rowspan or None)``), the cell content
+    (None for a non-cell) and the leftmost-leaf index."""
+    labels: list[int] = []
+    contents: list = []
     lml: list[int] = []
 
     def visit(node: TableNode) -> int:
-        if not node.children:
-            nodes.append(node)
-            lml.append(len(nodes) - 1)
-            return len(nodes) - 1
-        first_leaf = None
+        first = None
         for child in node.children:
-            idx = visit(child)
-            if first_leaf is None:
-                first_leaf = lml[idx]
-        nodes.append(node)
-        lml.append(first_leaf)
-        return len(nodes) - 1
+            leaf = visit(child)
+            if first is None:
+                first = leaf
+        idx = len(labels)
+        key = (node.tag, node.colspan or None, node.rowspan or None)
+        labels.append(label_ids.setdefault(key, len(label_ids)))
+        contents.append((node.content or []) if node.is_cell() else None)
+        lml.append(idx if first is None else first)
+        return lml[idx]
 
     visit(root)
-    return nodes, lml
+    return labels, contents, lml
 
 
 def tree_edit_distance(root1: TableNode, root2: TableNode) -> float:
-    """Zhang–Shasha TED with unit insert/delete and custom rename cost."""
-    t1, l1 = _postorder(root1)
-    t2, l2 = _postorder(root2)
-    _rename_memo.clear()
-    n1, n2 = len(t1), len(t2)
+    """Zhang–Shasha TED with unit insert/delete and the reference's rename
+    cost (CustomConfig.rename, teds.py:23-34): 1 if tag/colspan/rowspan
+    differ, else the normalized Levenshtein of two cells' contents, else 0.
 
+    Each (node, node) rename is needed by exactly one keyroot pair (the
+    pair sharing both nodes' leftmost leaves), so costs are computed
+    inline, never cached. The forest DP runs one row per node of the
+    first forest."""
+    label_ids: dict = {}
+    lab1, con1, l1 = _postorder(root1, label_ids)
+    lab2, con2, l2 = _postorder(root2, label_ids)
+    n1, n2 = len(lab1), len(lab2)
     # keyroot = last node (in postorder) with its leftmost-leaf value
     keyroots1 = sorted({l1[i]: i for i in range(n1)}.values())
     keyroots2 = sorted({l2[i]: i for i in range(n2)}.values())
 
+    def rename(x: int, y: int) -> float:
+        if lab1[x] != lab2[y]:
+            return 1.0
+        ca, cb = con1[x], con2[y]
+        if ca is None or ca == cb:
+            return 0.0
+        return levenshtein(ca, cb) / max(len(ca), len(cb))
+
     td = [[0.0] * n2 for _ in range(n1)]
-
-    for k1 in keyroots1:
-        for k2 in keyroots2:
-            _treedist(k1, k2, t1, t2, l1, l2, td)
+    for i in keyroots1:
+        li = l1[i]
+        for j in keyroots2:
+            lj = l2[j]
+            if li == i and lj == j:
+                # two leaves: min(1 + 1, 1 + 1, 0 + rename) is the rename
+                td[i][j] = rename(i, j)
+                continue
+            ys = range(lj, j + 1)
+            # fd[x][y]: forest l1[li..li+x-1] vs l2[lj..lj+y-1]
+            prev = [float(y) for y in range(j - lj + 2)]
+            fd = [prev]
+            for x in range(li, i + 1):
+                row = [prev[0] + 1.0]
+                tdx = td[x]
+                lx = l1[x]
+                if lx == li:
+                    for c, y in enumerate(ys, 1):
+                        ly = l2[y]
+                        if ly == lj:
+                            v = min(prev[c] + 1.0, row[c - 1] + 1.0,
+                                    prev[c - 1] + rename(x, y))
+                            tdx[y] = v
+                        else:
+                            v = min(prev[c] + 1.0, row[c - 1] + 1.0,
+                                    fd[0][ly - lj] + tdx[y])
+                        row.append(v)
+                else:
+                    base = fd[lx - li]
+                    for c, y in enumerate(ys, 1):
+                        row.append(min(prev[c] + 1.0, row[c - 1] + 1.0,
+                                       base[l2[y] - lj] + tdx[y]))
+                fd.append(row)
+                prev = row
     return td[n1 - 1][n2 - 1]
-
-
-_rename_memo: dict[tuple[int, int], float] = {}
-
-
-def _treedist(i: int, j: int, t1, t2, l1, l2, td) -> None:
-    li, lj = l1[i], l2[j]
-    m = i - li + 2
-    n = j - lj + 2
-    fd = [[0.0] * n for _ in range(m)]
-    for x in range(1, m):
-        fd[x][0] = fd[x - 1][0] + 1.0  # delete
-    for y in range(1, n):
-        fd[0][y] = fd[0][y - 1] + 1.0  # insert
-    for x in range(1, m):
-        node1 = t1[li + x - 1]
-        for y in range(1, n):
-            node2 = t2[lj + y - 1]
-            if l1[li + x - 1] == li and l2[lj + y - 1] == lj:
-                memo_key = (id(node1), id(node2))
-                cost = _rename_memo.get(memo_key)
-                if cost is None:
-                    cost = rename_cost(node1, node2)
-                    _rename_memo[memo_key] = cost
-                fd[x][y] = min(
-                    fd[x - 1][y] + 1.0,
-                    fd[x][y - 1] + 1.0,
-                    fd[x - 1][y - 1] + cost,
-                )
-                td[li + x - 1][lj + y - 1] = fd[x][y]
-            else:
-                p = l1[li + x - 1] - li
-                q = l2[lj + y - 1] - lj
-                fd[x][y] = min(
-                    fd[x - 1][y] + 1.0,
-                    fd[x][y - 1] + 1.0,
-                    fd[p][q] + td[li + x - 1][lj + y - 1],
-                )
 
 
 def teds_detail_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, int, int]:
@@ -399,11 +432,3 @@ def teds_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, int, int]
     full bracket-tree sizes)."""
     dist, na, nb = teds_detail_from_brackets(bracket_a, bracket_b)
     return 1.0 - dist / max(na, nb), na, nb
-
-
-def teds_from_html(html_a: str, html_b: str, structure_only: bool = False) -> float:
-    teds, _, _ = teds_from_brackets(
-        html_to_bracket(html_a, structure_only),
-        html_to_bracket(html_b, structure_only),
-    )
-    return teds

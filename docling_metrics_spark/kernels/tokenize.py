@@ -24,6 +24,10 @@ RE2-vs-Python-`re` semantics are mirrored explicitly:
 - RE2 ``$`` matches end-of-text only (no final-newline magic) → ``\\Z``.
 - RE2 ``\\s`` is ``[\\t\\n\\f\\r ]`` (NO vertical tab) → spelled out.
 - ``\\0`` (whole match) in RE2 replacements → ``\\g<0>``.
+- Each rule runs only when its guard — a literal every match contains —
+  is in the text; order and patterns are unchanged, so the guards skip
+  work, never change a token (``tests/test_tokenize_parity.py`` fuzzes the
+  guarded kernel against the unguarded transcript).
 - The C++ final split (``istringstream >>``) splits on C-locale isspace
   ``[ \\t\\n\\v\\f\\r]`` (WITH vertical tab, unlike RE2's ``\\s``) and
   treats multi-byte UTF-8 as opaque non-space bytes → an explicit ASCII
@@ -37,51 +41,60 @@ import re
 
 _A = re.ASCII
 
+# Each rule is (pattern, replacement, guard): the rule runs only when one
+# of the guard's literals is in the text, a condition every match needs
+# (most rules never match most texts, and `in` is far cheaper than a
+# regex scan). Order and patterns are the C++ chain's.
+
 # treebank.cpp:12-17 — starting quotes.
 _STARTING_QUOTES = [
-    (re.compile(r"^\"", _A), r"``"),
-    (re.compile(r"(``)", _A), r" \1 "),
-    (re.compile(r"([ \(\[{<])(\"|\'{2})", _A), r"\1 `` "),
+    (re.compile(r"^\"", _A), r"``", ('"',)),
+    (re.compile(r"(``)", _A), r" \1 ", ("``",)),
+    (re.compile(r"([ \(\[{<])(\"|\'{2})", _A), r"\1 `` ", ('"', "''")),
 ]
 
 # treebank.cpp:19-29 — punctuation.
 _PUNCTUATION = [
-    (re.compile(r"([:,])([^\d])", _A), r" \1 \2"),
-    (re.compile(r"([:,])\Z", _A), r" \1 "),
-    (re.compile(r"\.\.\.", _A), r" ... "),
-    (re.compile(r"[;@#$%&]", _A), r" \g<0> "),
+    (re.compile(r"([:,])([^\d])", _A), r" \1 \2", (":", ",")),
+    (re.compile(r"([:,])\Z", _A), r" \1 ", (":", ",")),
+    (re.compile(r"\.\.\.", _A), r" ... ", ("...",)),
+    (re.compile(r"[;@#$%&]", _A), r" \g<0> ", tuple(";@#$%&")),
     # Final period (possibly followed by closing brackets/quotes) at the
     # end of the text; RE2 `\s*$` = ASCII-space run to end-of-text.
-    (re.compile(r"([^\.])(\.)([\]\)}>\"\']*)[\t\n\f\r ]*\Z", _A), r"\1 \2\3 "),
-    (re.compile(r"[?!]", _A), r" \g<0> "),
-    (re.compile(r"([^'])' ", _A), r"\1 ' "),
+    (re.compile(r"([^\.])(\.)([\]\)}>\"\']*)[\t\n\f\r ]*\Z", _A), r"\1 \2\3 ",
+     (".",)),
+    (re.compile(r"[?!]", _A), r" \g<0> ", ("?", "!")),
+    (re.compile(r"([^'])' ", _A), r"\1 ' ", ("' ",)),
 ]
 
 # treebank.cpp:31-33 — parentheses and brackets.
-_PARENS_BRACKETS = (re.compile(r"[\]\[\(\)\{\}\<\>]", _A), r" \g<0> ")
+_PARENS_BRACKETS = [
+    (re.compile(r"[\]\[\(\)\{\}\<\>]", _A), r" \g<0> ", tuple("[](){}<>")),
+]
 
 # treebank.cpp:35-41 — optional PTB bracket-token conversion (the
 # reference's default is convert_parentheses=false, treebank.h:25).
 _CONVERT_PARENTHESES = [
-    (re.compile(r"\(", _A), "-LRB-"),
-    (re.compile(r"\)", _A), "-RRB-"),
-    (re.compile(r"\[", _A), "-LSB-"),
-    (re.compile(r"\]", _A), "-RSB-"),
-    (re.compile(r"\{", _A), "-LCB-"),
-    (re.compile(r"\}", _A), "-RCB-"),
+    (re.compile(r"\(", _A), "-LRB-", ("(",)),
+    (re.compile(r"\)", _A), "-RRB-", (")",)),
+    (re.compile(r"\[", _A), "-LSB-", ("[",)),
+    (re.compile(r"\]", _A), "-RSB-", ("]",)),
+    (re.compile(r"\{", _A), "-LCB-", ("{",)),
+    (re.compile(r"\}", _A), "-RCB-", ("}",)),
 ]
 
 # treebank.cpp:43-44 — double dashes.
-_DOUBLE_DASHES = (re.compile(r"--", _A), r" -- ")
+_DOUBLE_DASHES = [(re.compile(r"--", _A), r" -- ", ("--",))]
 
 # treebank.cpp:46-53 — ending quotes, in the C++ order: the bare `('')`
 # rule runs FIRST (NLTK instead has a `(\S)('')` rule later — the C++
 # chain is the parity target here, not NLTK).
 _ENDING_QUOTES = [
-    (re.compile(r"''", _A), " '' "),
-    (re.compile(r"\"", _A), " '' "),
-    (re.compile(r"([^' ])('[sS]|'[mM]|'[dD]|') ", _A), r"\1 \2 "),
-    (re.compile(r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) ", _A), r"\1 \2 "),
+    (re.compile(r"''", _A), " '' ", ("''",)),
+    (re.compile(r"\"", _A), " '' ", ('"',)),
+    (re.compile(r"([^' ])('[sS]|'[mM]|'[dD]|') ", _A), r"\1 \2 ", ("'",)),
+    (re.compile(r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) ", _A), r"\1 \2 ",
+     ("'",)),
 ]
 
 # RE2 `(?i)` performs Unicode SIMPLE case folding (CaseFolding.txt C+S
@@ -108,24 +121,34 @@ def _ci(literal: str) -> str:
     return "".join(out)
 
 
+def _contraction(head: str, tail: str, end: str = r"\b") -> tuple:
+    """A case-insensitive ``\\b(head)(tail)`` rule, guarded by the
+    lowercased literal: any fold-orbit match lowercases to it (the
+    literals hold no 's' or 'k', the letters with non-ASCII orbits), and
+    the earlier contraction rules only insert spaces, so one lowercased
+    copy of the text serves the whole stage."""
+    return (re.compile(rf"\b({_ci(head)})({_ci(tail)}){end}", _A),
+            " \\1 \\2 ", (head + tail,))
+
+
 # treebank.cpp:55-65 — contractions, case-insensitive, replacement
 # " \1 \2 ". Note `more'n` (the C++ pattern), not NLTK's `mor'n`; and the
 # wanna rule CONSUMES a trailing RE2-\s (no lookahead in RE2).
 _CONTRACTIONS2 = [
-    re.compile(rf"\b({_ci('can')})({_ci('not')})\b", _A),
-    re.compile(rf"\b({_ci('d')})({_ci(chr(39) + 'ye')})\b", _A),
-    re.compile(rf"\b({_ci('gim')})({_ci('me')})\b", _A),
-    re.compile(rf"\b({_ci('gon')})({_ci('na')})\b", _A),
-    re.compile(rf"\b({_ci('got')})({_ci('ta')})\b", _A),
-    re.compile(rf"\b({_ci('lem')})({_ci('me')})\b", _A),
-    re.compile(rf"\b({_ci('more')})({_ci(chr(39) + 'n')})\b", _A),
-    re.compile(rf"\b({_ci('wan')})({_ci('na')})[\t\n\f\r ]", _A),
+    _contraction("can", "not"),
+    _contraction("d", "'ye"),
+    _contraction("gim", "me"),
+    _contraction("gon", "na"),
+    _contraction("got", "ta"),
+    _contraction("lem", "me"),
+    _contraction("more", "'n"),
+    _contraction("wan", "na", "[\\t\\n\\f\\r ]"),
 ]
 
 # treebank.cpp:67-68.
 _CONTRACTIONS3 = [
-    re.compile(rf" ({_ci(chr(39) + 't')})({_ci('is')})\b", _A),
-    re.compile(rf" ({_ci(chr(39) + 't')})({_ci('was')})\b", _A),
+    (re.compile(rf" ({_ci(chr(39) + 't')})({_ci('is')})\b", _A), r" \1 \2 ", ("'",)),
+    (re.compile(rf" ({_ci(chr(39) + 't')})({_ci('was')})\b", _A), r" \1 \2 ", ("'",)),
 ]
 
 # istringstream `>>` split set: C-locale isspace (includes \v, which
@@ -155,21 +178,25 @@ def treebank_tokenize(text: str, convert_parentheses: bool = False) -> list[str]
             # fast path: no rule can fire — same result as the full chain
             # (asserted against the chain in tests/test_tokenize_parity.py)
             return toks
-    for pat, repl in _STARTING_QUOTES:
-        text = pat.sub(repl, text)
-    for pat, repl in _PUNCTUATION:
-        text = pat.sub(repl, text)
-    text = _PARENS_BRACKETS[0].sub(_PARENS_BRACKETS[1], text)
+    text = _apply(_STARTING_QUOTES, text)
+    text = _apply(_PUNCTUATION, text)
+    text = _apply(_PARENS_BRACKETS, text)
     if convert_parentheses:
-        for pat, repl in _CONVERT_PARENTHESES:
-            text = pat.sub(repl, text)
-    text = _DOUBLE_DASHES[0].sub(_DOUBLE_DASHES[1], text)
+        text = _apply(_CONVERT_PARENTHESES, text)
+    text = _apply(_DOUBLE_DASHES, text)
     # treebank.cpp:103 — pad so end-anchored quote/contraction rules fire.
-    text = " " + text + " "
-    for pat, repl in _ENDING_QUOTES:
-        text = pat.sub(repl, text)
-    for pat in _CONTRACTIONS2:
-        text = pat.sub(r" \1 \2 ", text)
-    for pat in _CONTRACTIONS3:
-        text = pat.sub(r" \1 \2 ", text)
+    text = _apply(_ENDING_QUOTES, " " + text + " ")
+    text = _apply(_CONTRACTIONS2, text, text.lower())
+    text = _apply(_CONTRACTIONS3, text)
     return _SPLIT_RE.findall(text)
+
+
+def _apply(rules: list, text: str, guarded: str | None = None) -> str:
+    """Run ``rules`` in order; a rule runs when one of its guard literals
+    is in ``guarded`` (the current text unless given)."""
+    for pat, repl, guard in rules:
+        for lit in guard:
+            if lit in (text if guarded is None else guarded):
+                text = pat.sub(repl, text)
+                break
+    return text

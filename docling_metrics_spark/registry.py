@@ -124,12 +124,12 @@ def _register_builtins() -> None:
         ).__dict__,
     )
 
-    from docling_metrics_spark.kernels.teds import html_to_bracket, teds_from_brackets
+    from docling_metrics_spark.kernels.teds import teds_from_trees, teds_tree
 
     def _teds_kernel(row: dict) -> dict:
         try:
-            teds, na, nb = teds_from_brackets(
-                html_to_bracket(row["html_a"]), html_to_bracket(row["html_b"])
+            teds, na, nb = teds_from_trees(
+                teds_tree(row["html_a"]), teds_tree(row["html_b"])
             )
             return {"teds": teds, "nodes_a": na, "nodes_b": nb, "error": 0}
         except ValueError:

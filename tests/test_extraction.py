@@ -9,7 +9,6 @@ tolerance-based (SURVEY.md §5 point 2).
 from docling_metrics_spark.datagen import gen_document, gen_documents
 from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.extraction.html_extract import (
-    canonicalize_table_html,
     extract_spans_from_html as extract,
 )
 
@@ -73,8 +72,15 @@ def test_media_and_table_spans():
 
 def test_table_canonicalization_idempotent():
     messy = '<table> <thead><tr><th colspan="2"> h </th></tr></thead> <tr><td>a</td><td>b</td></tr></table>'
-    c1 = canonicalize_table_html(messy)
-    assert canonicalize_table_html(c1) == c1
+
+    def table_text(html):
+        (span,) = extract(f"<body>{html}</body>")
+        return span["text"]
+
+    c1 = table_text(messy)
+    assert c1 == ('<table><thead><tr><td colspan="2"> h </td></tr></thead>'
+                  "<tr><td>a</td><td>b</td></tr></table>")
+    assert table_text(c1) == c1
 
 
 def test_whitespace_normalization():
@@ -110,3 +116,38 @@ def test_adversarial_deep_nesting_degrades_gracefully():
     )
     spans = extract_spans_from_html(with_img)
     assert [(s["kind"], s["media_ref"]) for s in spans] == [("image", "x.png")]
+
+
+def test_escaped_markup_in_table_cells_is_decoded_once():
+    """Entities in a cell are decoded by the one parse of the document; the
+    decoded text is cell content, not markup (a re-serialize/re-parse
+    round trip would decode it twice and drop ``<b>`` as a tag)."""
+    html = "<body><table><tr><td>x &lt;b&gt;y&lt;/b&gt; z &amp;amp;</td></tr></table></body>"
+    (span,) = extract(html)
+    assert span["text"] == "<table><tr><td>x <b>y</b> z &amp;</td></tr></table>"
+
+
+def test_hostile_tables_extract_without_raising():
+    """Tables the table parser refuses or never finishes still extract:
+    nesting past MAX_TABLE_DEPTH keeps the whitespace-normalized raw
+    re-serialization as span text, a table left open to the end of the
+    document is an empty table span, and a cell left open by ``</table>``
+    takes no later text."""
+    deep = (
+        "<body>" + '<table class="t"><tr>\n<td colspan="2">' * 250 + "x  y"
+        + "</td></tr></table>" * 250 + "<p>after</p></body>"
+    )
+    spans = extract(deep)
+    assert [s["kind"] for s in spans] == ["table", "text"]
+    assert spans[0]["text"] == (
+        '<table class="t"><tr> <td colspan="2">' * 250 + "x y"
+        + "</td></tr></table>" * 250
+    )
+
+    unclosed = "<body><p>before</p><table><tr><td>x"
+    assert [(s["kind"], s["text"]) for s in extract(unclosed)] == [
+        ("text", "before"), ("table", "")]
+
+    cell_left_open = "<body><table><td>a</table> trailing text</body>"
+    assert [(s["kind"], s["text"]) for s in extract(cell_left_open)] == [
+        ("table", "<table><td>a</td></table>")]

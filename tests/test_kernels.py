@@ -158,7 +158,8 @@ def test_teds_known_value():
 
 
 def test_teds_structure_only():
-    teds = T.teds_from_html(H1, H2, structure_only=True)
+    teds, _, _ = T.teds_from_trees(T.teds_tree(H1, structure_only=True),
+                                   T.teds_tree(H2, structure_only=True))
     # content ignored → only the missing cell costs: 1 - 1/8
     assert teds == pytest.approx(1 - 1 / 8, rel=REL)
 
@@ -649,7 +650,7 @@ def test_batched_matcher_equals_scalar_reference():
                            if max(r, default=0) >= 0.5)
         for lo, hi in AREA_RANGES.values():
             gt_ig = (g_area < lo) | (g_area > hi)
-            tp, on_ig = _match_all_thresholds(ious, gt_ig)
+            tp, on_ig = (f[0] for f in _match_all_thresholds(ious[None], gt_ig[None]))
             order = np.argsort(gt_ig, kind="stable")
             for ti, thr in enumerate(IOU_THRESHOLDS):
                 dtm, dt_ig = _reference_match(ious[order], gt_ig[order], thr)
@@ -741,3 +742,221 @@ def test_hostile_span_attributes_bounded():
               "bbox": [0, 0, 1, 1]}],
             "text",
         )
+
+
+# ---------------------------------------------------------------------------
+# Exactness references for the flat-array Zhang–Shasha and the TEDS tree memo
+# ---------------------------------------------------------------------------
+
+
+def _reference_ted(root1, root2) -> float:
+    """The scalar Zhang–Shasha the kernel replaced: a full forest-distance
+    matrix per keyroot pair and a rename cost looked up per node pair."""
+
+    def rename_cost(n1, n2):
+        if (n1.tag != n2.tag or (n1.colspan or None) != (n2.colspan or None)
+                or (n1.rowspan or None) != (n2.rowspan or None)):
+            return 1.0
+        if n1.tag in ("td", "th"):
+            c1, c2 = n1.content or [], n2.content or []
+            if c1 or c2:
+                return levenshtein(c1, c2) / max(len(c1), len(c2))
+        return 0.0
+
+    def postorder(root):
+        nodes, lml = [], []
+
+        def visit(node):
+            first = None
+            for child in node.children:
+                idx = visit(child)
+                if first is None:
+                    first = lml[idx]
+            nodes.append(node)
+            lml.append(len(nodes) - 1 if first is None else first)
+            return len(nodes) - 1
+
+        visit(root)
+        return nodes, lml
+
+    t1, l1 = postorder(root1)
+    t2, l2 = postorder(root2)
+    n1, n2 = len(t1), len(t2)
+    td = [[0.0] * n2 for _ in range(n1)]
+    for i in sorted({l1[k]: k for k in range(n1)}.values()):
+        for j in sorted({l2[k]: k for k in range(n2)}.values()):
+            li, lj = l1[i], l2[j]
+            m, n = i - li + 2, j - lj + 2
+            fd = [[0.0] * n for _ in range(m)]
+            for x in range(1, m):
+                fd[x][0] = fd[x - 1][0] + 1.0
+            for y in range(1, n):
+                fd[0][y] = fd[0][y - 1] + 1.0
+            for x in range(1, m):
+                for y in range(1, n):
+                    a, b = li + x - 1, lj + y - 1
+                    if l1[a] == li and l2[b] == lj:
+                        fd[x][y] = min(fd[x - 1][y] + 1.0, fd[x][y - 1] + 1.0,
+                                       fd[x - 1][y - 1] + rename_cost(t1[a], t2[b]))
+                        td[a][b] = fd[x][y]
+                    else:
+                        fd[x][y] = min(fd[x - 1][y] + 1.0, fd[x][y - 1] + 1.0,
+                                       fd[l1[a] - li][l2[b] - lj] + td[a][b])
+    return td[n1 - 1][n2 - 1]
+
+
+def test_flat_zhang_shasha_equals_scalar_reference():
+    """Bit-identical TED on random trees: cells with colspan/rowspan None,
+    0 or 2, th and td tags (th is not normalized on bracket input), shared
+    and empty contents, cells with child tables, non-cell leaves."""
+    import random
+
+    rng = random.Random(77)
+
+    def rtree(depth=0):
+        r = rng.random()
+        if depth >= 3 or r < 0.45:
+            if rng.random() < 0.15:
+                return T.TableNode(rng.choice(["tr", "col"]))
+            node = T.TableNode(
+                rng.choice(["td", "td", "th"]),
+                colspan=rng.choice([None, 0, 1, 2]),
+                rowspan=rng.choice([None, 0, 1, 2]),
+                content=rng.choice([None, [], list(rng.choice(["ab", "ba", "abc", "x"]))]),
+            )
+            if rng.random() < 0.1:
+                node.children.append(rtree(depth + 1))
+            return node
+        return T.TableNode(rng.choice(["table", "tr", "thead"]),
+                           children=[rtree(depth + 1) for _ in range(rng.randint(1, 4))])
+
+    for case in range(3000):
+        a, b = rtree(), rtree() if case % 5 else None
+        if b is None:  # a near twin: shares most structure and content
+            b = T.bracket_to_tree(T.tree_to_bracket(a))
+            b.children.append(T.TableNode("td", 1, 1, ["a"]))
+        assert T.tree_edit_distance(a, b) == _reference_ted(a, b), case
+
+
+_EDGE_TABLES = [
+    None,
+    "<table",
+    "<p>no table</p>",
+    "<table></table>",
+    "<table><tr><td>a</td><td>b</td></tr></table>",
+    "<table><tr><th>a</th><td>b</td></tr></table>",
+    '<table><tr><td colspan="0">a</td><td rowspan="2">b</td></tr></table>',
+    '<table><tr><td colspan="-1">a</td></tr></table>',
+    '<table><tr><td rowspan="-3">a</td></tr></table>',
+    '<table><tr><td colspan="">a</td><td colspan>b</td></tr></table>',
+    '<table><tr><td colspan="2">a</td></tr><tr><td>x</td><td>y</td></tr></table>',
+    "<table><tr><td>a<table><tr><td>in</td></tr></table></td></tr></table>",
+    "<table><tr><td>x &amp; y &lt;b&gt;</td></tr></table>",
+    "<table><caption>cap</caption><colgroup><col><col></colgroup>"
+    "<thead><tr><th>h</th></tr></thead><tr><td>a</td></tr></table>",
+    "<table><tr><td>ab</td><td>abc</td></tr><tr><td>b</td></tr></table>",
+    "<table><tr><td>ba</td><td>abc</td></tr><tr><td>b</td><td></td></tr></table>",
+]
+
+
+def test_tree_memo_teds_pairs_equal_bracket_path():
+    """Per-pair TEDS rows from the tree memo equal the bracket round trip
+    (HTML → bracket string → tree → TED, the equal-string shortcut and the
+    error sentinel) on documents of edge-case tables."""
+    import random
+
+    from docling_metrics_spark.operators.udfs import _doc_teds_pairs
+
+    def bracket_pairs(gt, pred):
+        memo = {}
+
+        def bracket(html):
+            if html is None:
+                return None
+            if html not in memo:
+                try:
+                    memo[html] = T.html_to_bracket(html)
+                except ValueError:
+                    memo[html] = None
+            return memo[html]
+
+        rows = []
+        for i in range(max(len(gt), len(pred))):
+            if i >= len(gt) or i >= len(pred):
+                rows.append({"idx": i, "score": 0.0, "err": False})
+                continue
+            ba, bb = bracket(gt[i]), bracket(pred[i])
+            try:
+                if ba is None or bb is None:
+                    raise ValueError
+                rows.append({"idx": i, "score": T.teds_from_brackets(ba, bb)[0],
+                             "err": False})
+            except ValueError:
+                rows.append({"idx": i, "score": 0.0, "err": True})
+        return rows
+
+    rng = random.Random(5)
+    for _ in range(2000):
+        gt = [rng.choice(_EDGE_TABLES) for _ in range(rng.randint(0, 4))]
+        pred = [rng.choice(_EDGE_TABLES) for _ in range(rng.randint(0, 4))]
+        assert _doc_teds_pairs(gt, pred) == bracket_pairs(gt, pred), (gt, pred)
+
+
+def test_map_batch_invariance():
+    """A document's core and full ``evaluate_map`` and its ``match_stats``
+    rows are identical whether it is matched alone or inside a mixed batch
+    (padded shape buckets shared with other documents' groups): giants,
+    empty documents, inverted and giant-area boxes, score ties — and a
+    100k-box document that is refused in its own entry only."""
+    import random
+
+    from docling_metrics_spark.kernels.layout import (
+        evaluate_map_docs,
+        match_stats,
+        match_stats_docs,
+    )
+
+    rng = random.Random(2024)
+
+    def rbox():
+        x, y = rng.uniform(0, 400), rng.uniform(0, 400)
+        w, h = rng.uniform(1, 200), rng.uniform(1, 200)
+        r = rng.random()
+        if r < 0.1:
+            return [x + w, y, x, y + h]  # inverted
+        if r < 0.15:
+            return [x, y, x + 2e5, y + 2e5]  # area > 1e10
+        return [x, y, x + w, y + h]
+
+    def rdoc(n_gt, n_pred, n_cls=4):
+        gt = [(rng.randrange(n_cls), rbox()) for _ in range(n_gt)]
+        pred = []
+        for _ in range(n_pred):
+            if gt and rng.random() < 0.6:
+                c, b = rng.choice(gt)
+                pred.append((c, [v + rng.uniform(-8, 8) for v in b],
+                             round(rng.random(), 1)))
+            else:
+                pred.append((rng.randrange(n_cls), rbox(), round(rng.random(), 1)))
+        return gt, pred
+
+    docs = [rdoc(rng.randint(0, 9), rng.randint(0, 12)) for _ in range(60)]
+    docs += [([], []), ([(0, [0, 0, 10, 10])], []), ([], [(1, [0, 0, 5, 5], 0.5)])]
+    docs += [rdoc(300, 250, n_cls=2), rdoc(40, 150, n_cls=1)]  # giants
+    hostile = [(0, [0.0, 0.0, 1.0, 1.0])] * 60_000
+    docs.insert(30, (hostile, [(0, [0.0, 0.0, 1.0, 1.0], 0.5)] * 40_001))
+    rng.shuffle(docs)
+
+    core = evaluate_map_docs(docs, surface="core")
+    full = evaluate_map_docs(docs)
+    stats = match_stats_docs(docs)
+    for k, (gt, pred) in enumerate(docs):
+        if len(gt) + len(pred) > 100_000:
+            assert core[k] is full[k] is stats[k] is None
+            with pytest.raises(ValueError, match="too many boxes"):
+                evaluate_map(gt, pred)
+            continue
+        assert core[k] == evaluate_map(gt, pred, surface="core"), k
+        assert full[k] == evaluate_map(gt, pred), k
+        assert stats[k] == match_stats(gt, pred), k
+    assert sum(r is None for r in core) == 1

@@ -266,3 +266,27 @@ _ASCII_FUZZ = st.sampled_from(
 def test_orbit_chain_equals_ignorecase_chain_on_ascii(parts):
     text = "".join(parts)
     assert treebank_tokenize(text) == _cpp_chain_tokenize_ci(text)
+
+
+# --- the kernel's rule guards ----------------------------------------------
+# The kernel runs a rule only when a literal every match needs is in the
+# text. Fuzz over exactly those literals (in every case the contraction
+# rules fold), so a guard that is not a necessary condition shows up as a
+# mismatch with the unguarded transcript.
+
+_GUARD_FUZZ = st.sampled_from(
+    list("ab T.\"'`,:;@#$%&?!()[]{}<>-\t\n\v") + [
+        "``", "''", "...", "--", "' ", "n't", "N'T", "'ll", "'S",
+        "cannot", "CanNot", "d'ye", "D'Ye", "gimme", "GIMME", "gonna",
+        "gotta", "lemme", "more'n", "MoRe'N", "wanna", "WANNA\t",
+        "'tis", "'TWAS", "'tiſ", "ſ", "İ", "K", "3.88",
+    ]
+)
+
+
+@settings(max_examples=1500, deadline=None)
+@given(st.lists(_GUARD_FUZZ, max_size=16))
+def test_guarded_kernel_equals_unguarded_chain(parts):
+    text = "".join(parts)
+    assert treebank_tokenize(text) == _cpp_chain_tokenize(text)
+    assert treebank_tokenize(text, True) == _cpp_chain_tokenize(text, True)

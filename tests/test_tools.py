@@ -51,3 +51,17 @@ def test_bench_scaling_prunes_stale_corpora(tmp_path, monkeypatch, capsys):
         "dms_scale_corpus_20000", "other_dir"]
     err = capsys.readouterr().err
     assert all(d in err for d in removed)
+
+
+def test_bench_scaling_tiers_follow_the_host_cpus():
+    """The N→4N pairs are measurable only when the host has 4N CPUs; the
+    rest are reported as unmeasurable, never as a pass, and with nothing
+    measurable the verdict is "unmeasured". No Spark, no subprocess."""
+    bs = _load_bench_scaling()
+    assert bs.scaling_pairs(4) == [(1, 4, True), (2, 8, False),
+                                   (4, 16, False), (8, 32, False)]
+    assert [ok for _, _, ok in bs.scaling_pairs(3)] == [False] * 4
+    assert all(ok for _, _, ok in bs.scaling_pairs(32))
+    assert bs.scaling_verdict(["unmeasurable"] * 4) == "unmeasured"
+    assert bs.scaling_verdict([0.85, "unmeasurable"]) == "pass"
+    assert bs.scaling_verdict([0.6, "unmeasurable", "unmeasurable"]) == "fail"

@@ -11,6 +11,9 @@ Protocol (north rule, BASELINE.json):
    cluster those are amortized across a long-running app).
 3. Report docs/sec at both levels and
    efficiency = (throughput_4N / throughput_N) / 4; gate is ≥ 0.8.
+   The tiers come from this process's CPU affinity: a pair whose 4N tier
+   needs more CPUs than the host has is reported as unmeasurable and is
+   not run; with no measurable pair the verdict is "unmeasured".
 
 Usage:  python tools/bench_scaling.py [n_docs]           # orchestrator
         python tools/bench_scaling.py --submit [n_docs]  # via spark-submit
@@ -153,24 +156,23 @@ def orchestrate(n_docs: int, via_submit: bool = False,
     tag = (f"_skew{skew_kw['skew_every']}x{skew_kw['skew_factor']}"
            if skew_kw else "")
     corpus = f"{CORPUS}{tag}_{n_docs}"
+    cpus = sorted(os.sched_getaffinity(0))
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
         prune_stale_corpora(keep=corpus)
-        spark = build_session(master="local[8]", shuffle_partitions=8)
+        spark = build_session(master=f"local[{len(cpus)}]", shuffle_partitions=8)
         write_corpus(spark, corpus, n_docs=n_docs, partitions=128, **skew_kw)
         spark.stop()
 
+    pairs = scaling_pairs(len(cpus))
     results = {}
     # taskset pins each run to a dedicated core allocation — the honest
     # stand-in for a cluster of N cores vs 4N cores (executors own their
     # cores; without pinning, local-mode Python workers ride idle cores and
-    # blur the tiers together).
-    for master, shuffle, cores, repeats in (
-        ("local[2]", 4, "0-1", 2),
-        ("local[4]", 8, "0-3", 2),
-        ("local[8]", 16, "0-7", 2),
-        ("local[16]", 32, "0-15", 2),
-        ("local[32]", 64, "0-31", 2),
-    ):
+    # blur the tiers together). Only tiers of a measurable pair run.
+    repeats = 2
+    for n in sorted({t for lo, hi, ok in pairs if ok for t in (lo, hi)}):
+        master, shuffle = f"local[{n}]", 2 * n
+        cores = ",".join(str(c) for c in cpus[:n])
         best = None
         successes = 0
         failures = 0
@@ -184,7 +186,7 @@ def orchestrate(n_docs: int, via_submit: bool = False,
                        if k != "PYTHONPATH"}
                 env["PYSPARK_PYTHON"] = sys.executable
                 env["PYSPARK_DRIVER_PYTHON"] = sys.executable
-                out_json = f"/tmp/dms_submit_scale_{master.strip('local[]')}.json"
+                out_json = f"/tmp/dms_submit_scale_{n}.json"
                 cmd = ["taskset", "-c", cores] + _submit_cmd(
                     master, shuffle, out_json, corpus
                 )
@@ -212,42 +214,51 @@ def orchestrate(n_docs: int, via_submit: bool = False,
                 best = r
         if best is None:
             raise RuntimeError(f"worker {master} produced no result")
-        results[master] = best
+        results[n] = best
 
-    t2 = results["local[2]"]["docs_per_sec"]
-    t4 = results["local[4]"]["docs_per_sec"]
-    t8 = results["local[8]"]["docs_per_sec"]
-    t16 = results["local[16]"]["docs_per_sec"]
-    t32 = results["local[32]"]["docs_per_sec"]
-    # Three independent N→4N stand-in pairs, each tier pinned to its own
-    # core allocation. One box confounds each pair differently: few active
-    # cores clock HIGHER (turbo boost inflates the small tier, deflating
-    # 2→8 and, less so, 4→16), while all 32 hyperthreads share one memory
-    # bus (deflating 8→32) — a real N vs 4N cluster has neither. Report
-    # every pair; the gate passes if ANY clean N→4N quadrupling reaches
-    # 0.8 (round-4 practice: 4→16 runs on disjoint-size core sets that
-    # dodge both the strongest turbo bins and full-bus saturation).
-    eff_2_8 = (t8 / t2) / 4.0
-    eff_4_16 = (t16 / t4) / 4.0
-    eff_8_32 = (t32 / t8) / 4.0
+    # Every N→4N stand-in pair is reported, each tier pinned to its own
+    # core allocation. A pair needing more CPUs than this host has is
+    # "unmeasurable": its 4N tier would share N's cores, so its ratio says
+    # nothing about scaling. One box also confounds the measurable pairs
+    # (few active cores clock higher; all cores share one memory bus),
+    # which a real N vs 4N cluster does not.
+    effs = {
+        f"scaling_efficiency_{lo}_to_{hi}": (
+            round((results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]) / 4.0, 4)
+            if ok else "unmeasurable"
+        )
+        for lo, hi, ok in pairs
+    }
+    any_result = next(iter(results.values()), {})
     report = {
-        "n_docs": results["local[8]"]["n_docs"],
-        "local2_docs_per_sec": t2,
-        "local4_docs_per_sec": t4,
-        "local8_docs_per_sec": t8,
-        "local16_docs_per_sec": t16,
-        "local32_docs_per_sec": t32,
-        "scaling_efficiency_2_to_8": round(eff_2_8, 4),
-        "scaling_efficiency_4_to_16": round(eff_4_16, 4),
-        "scaling_efficiency_8_to_32": round(eff_8_32, 4),
-        "gate": ">=0.8 on an N to 4N pair (2→8, 4→16 or 8→32)",
-        "pass": eff_2_8 >= 0.8 or eff_4_16 >= 0.8 or eff_8_32 >= 0.8,
-        "span_equal_rate": results["local[8]"]["span_equal_rate"],
+        "n_docs": any_result.get("n_docs"),
+        "host_cpus": len(cpus),
+        **{f"local{n}_docs_per_sec": r["docs_per_sec"] for n, r in results.items()},
+        **effs,
+        "gate": ">=0.8 on a measurable N to 4N pair",
+        "verdict": scaling_verdict(list(effs.values())),
+        "span_equal_rate": any_result.get("span_equal_rate"),
     }
     if skew_kw:
         report["skew"] = skew_kw
     print(json.dumps(report))
     return report
+
+
+def scaling_pairs(n_cpus: int) -> list[tuple[int, int, bool]]:
+    """The N→4N pairs (N = 1, 2, 4, 8) with whether each is measurable:
+    only when this host has 4N CPUs for the 4N tier."""
+    return [(n, 4 * n, 4 * n <= n_cpus) for n in (1, 2, 4, 8)]
+
+
+def scaling_verdict(effs: list) -> str:
+    """"pass" when a measured pair reaches 0.8, "fail" when pairs were
+    measured and none does, "unmeasured" when no pair could be measured
+    (an unmeasurable pair never counts as a pass)."""
+    measured = [e for e in effs if e != "unmeasurable"]
+    if not measured:
+        return "unmeasured"
+    return "pass" if max(measured) >= 0.8 else "fail"
 
 
 if __name__ == "__main__":
