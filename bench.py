@@ -98,10 +98,12 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
         _corpus(spark, sf_dir, cap=cap).count()
 
     # ANN index build (LSH signature table) is prep too — amortized over
-    # every search at lake scale.
+    # every search at lake scale — and so is shipping the package zip.
     from docling_metrics_spark.plans.queries import _lsh_sigs_table
+    from docling_metrics_spark.shipping import ensure_py_files
 
     _lsh_sigs_table(spark, sf_dir).count()
+    ensure_py_files(spark)
 
     # Best-of-N per query (default 3): the sandbox microVM shares a host,
     # and CPU steal can inflate a single run ~5× (BASELINE.md) — round-3
@@ -114,10 +116,12 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
     stats: dict[str, dict] = {}
 
     # Cached-intermediate transparency (VERDICT r4 #1/#2): queries built on
-    # _cached_materialize tables share kernel cost — whichever consumer
-    # runs first pays the build; later consumers (and later best-of-N
-    # iterations) read the cache. Disclose every timed run that consumed a
-    # pre-built table so per-query numbers are never silently credited.
+    # cached_materialize tables and fixtures share their cost — whichever
+    # step runs first (untimed prep, an earlier query or best-of-N
+    # iteration) pays the build; later consumers read the cache. Disclose
+    # every timed run that consumed a pre-built table so per-query numbers
+    # are never silently credited.
+    from docling_metrics_spark.cache import CACHE_EVENTS, invalidate_cache
     from docling_metrics_spark.plans import queries as Q
 
     shared: dict[str, list] = {}
@@ -138,14 +142,14 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
                 # the north rule requires, but a cost the r1-r4 flagship
                 # numbers (pre-sharing, pure kernel) did NOT carry; the
                 # r4→r5 flagship comparison in BASELINE.md notes this.
-                Q.invalidate_cache(Q._FLAGSHIP_PERDOC_PATH)
-            ev0 = len(Q.CACHE_EVENTS)
+                invalidate_cache(Q._FLAGSHIP_PERDOC_PATH)
+            ev0 = len(CACHE_EVENTS)
             t0 = time.time()
             df = fn(spark, sf_dir)
             _force(df)
             samples.append(time.time() - t0)
             reused = sorted(
-                {p for p, kind in Q.CACHE_EVENTS[ev0:] if kind == "reuse"}
+                {p for p, kind in CACHE_EVENTS[ev0:] if kind == "reuse"}
             )
             if reused:
                 cur = set(shared.get(name, []))
@@ -191,9 +195,10 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
         "unit": "sec",
         "queries": timings,
         "corpus_caps": caps,
-        # queries whose timed run consumed a _cached_materialize table a
-        # previous query/iteration already built (paths listed) — their
-        # per-query numbers exclude that build cost (VERDICT r4 #1/#2)
+        # queries whose timed run consumed a cached_materialize table or
+        # fixture that untimed prep or a previous query/iteration built
+        # (paths listed) — their per-query numbers exclude that build cost
+        # (VERDICT r4 #1/#2)
         "shared_intermediates": shared,
         # correct-by-design bounds inside verification/grading queries
         # (declared, not silent — VERDICT r4 #5)

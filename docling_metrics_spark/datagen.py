@@ -27,7 +27,6 @@ aggregation and AQE skew handling.
 from __future__ import annotations
 
 import random
-from typing import Iterator
 
 _WORDS = (
     "data span table scan merge join filter window batch stream document "
@@ -206,11 +205,6 @@ def _layout_boxes(rng: random.Random, spans: list[dict]):
         if y >= PAGE_H - 60:
             y = 40.0
     return gt, pred
-
-
-def gen_documents(n: int, seed: int = 42, start: int = 0, **kw) -> Iterator[dict]:
-    for i in range(start, start + n):
-        yield gen_document(i, seed=seed, **kw)
 
 
 # ---------------------------------------------------------------------------

@@ -197,7 +197,6 @@ def export_tore_report(
     n_classes: int,
     page_width: int,
     page_height: int,
-    n_salts: int = 8,
 ) -> dict:
     """End-to-end TORE report: dataset matrices (partial+final, one tiny
     vector to the driver) + per-image collapsed sheet (distributed CSV
@@ -213,7 +212,7 @@ def export_tore_report(
         partial_udf("gt_boxes", "pred_boxes").alias("cm"),
     )
     summed_rows = salted_array_sum(
-        partials.select("cm"), "cm", n_salts=n_salts, with_count=True
+        partials.select("cm"), "cm", with_count=True
     ).collect()
     n_cm = n_classes + 1
     # empty corpus → empty slot sum → all-zero matrix (report still valid)

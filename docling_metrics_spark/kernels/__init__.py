@@ -5,10 +5,3 @@ the single-process oracle used by the pytest suite. No Spark imports here —
 everything must be picklable into executor Python workers and runnable
 standalone.
 """
-
-from docling_metrics_spark.kernels.tokenize import treebank_tokenize  # noqa: F401
-from docling_metrics_spark.kernels.levenshtein import (  # noqa: F401
-    levenshtein,
-    levenshtein_dp,
-    normalized_edit_distance,
-)

@@ -119,19 +119,3 @@ def evaluate_smiles_pair(gt_smiles: str, pred_smiles: str | None) -> dict:
         "string_equality": pred == gt,
         "tanimoto": tanimoto(gt, pred) if valid else None,
     }
-
-
-def aggregate_smiles(results: list[dict]) -> dict:
-    """Dataset aggregate (docling_metrics_chemistry.py:294-345): rates and
-    null-skipping mean tanimoto, rounded to 3."""
-    n = len(results)
-    if n == 0:
-        return {"sample_count": 0, "validity_rate": None,
-                "equality_rate": None, "tanimoto_mean": None}
-    tans = [r["tanimoto"] for r in results if r["tanimoto"] is not None]
-    return {
-        "sample_count": n,
-        "validity_rate": round(sum(r["valid"] for r in results) / n, 3),
-        "equality_rate": round(sum(r["string_equality"] for r in results) / n, 3),
-        "tanimoto_mean": round(sum(tans) / len(tans), 3) if tans else None,
-    }

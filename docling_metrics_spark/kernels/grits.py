@@ -151,7 +151,7 @@ def _transpose(grid):
 def grits_detail(cells_a: list[dict], cells_b: list[dict],
                  task: str) -> tuple[float, int, int]:
     """(matched-reward total, grid cells A, grid cells B) for one task —
-    the un-normalized triple behind :func:`grits` (f = 2·total/(na+nb)),
+    the un-normalized triple behind the GriTS f-score (f = 2·total/(na+nb)),
     exposed so the pairs-materializing query can persist it and a SQL
     oracle re-derive the f-score normalization."""
     field = {"topology": "relspan", "content": "text", "location": "bbox"}[task]
@@ -175,24 +175,6 @@ def grits_detail(cells_a: list[dict], cells_b: list[dict],
         for ca, cb in col_map.items():
             total += reward(ga[ra][ca], gb[rb][cb])
     return total, na, nb
-
-
-def grits(cells_a: list[dict], cells_b: list[dict], task: str) -> float:
-    """GriTS f-score for one task over two cell lists."""
-    total, na, nb = grits_detail(cells_a, cells_b, task)
-    if na == 0 and nb == 0:
-        return 1.0
-    if na == 0 or nb == 0:
-        return 0.0
-    return 2.0 * total / (na + nb)
-
-
-def grits_all(cells_a: list[dict], cells_b: list[dict]) -> dict[str, float]:
-    return {
-        "grits_top": grits(cells_a, cells_b, "topology"),
-        "grits_con": grits(cells_a, cells_b, "content"),
-        "grits_loc": grits(cells_a, cells_b, "location"),
-    }
 
 
 def html_to_cells(html: str) -> list[dict]:

@@ -13,10 +13,10 @@ pixel confusion matrix. Pure numpy — runs inside Arrow UDFs.
   pass over the detections; :func:`_map_partials` pads the groups of a
   batch of documents into power-of-two shape buckets, one matcher call
   per bucket. A single document is the one-document batch. It is read by
-  :func:`match_stats` (the long-form rows both layout queries
-  materialize), :func:`evaluate_map` (the per-document surface; the
-  flagship scores a whole Arrow batch with :func:`evaluate_map_docs`) and
-  :func:`merged_map_local`. :func:`_surface` is the one reduction to the
+  :func:`match_stats_docs` (the long-form rows both layout queries
+  materialize) and :func:`evaluate_map` (the per-document surface; the
+  flagship scores a whole Arrow batch with :func:`evaluate_map_docs`).
+  :func:`_surface` is the one reduction to the
   12 scalars + per-class dicts. The reference delegates to
   torchmetrics/faster_coco_eval (map_layout_evaluator.py:201-208); we
   implement the protocol directly (torch unavailable, and from-scratch is
@@ -281,8 +281,8 @@ def _map_partials(
     docs: list[tuple[list, list]],
     areas: dict[str, tuple[float, float]] = AREA_RANGES,
 ) -> list:
-    """The COCO match behind :func:`match_stats`, :func:`evaluate_map`
-    and :func:`merged_map_local`, for a batch of ``(gt, pred)`` documents
+    """The COCO match behind :func:`match_stats_docs` and
+    :func:`evaluate_map`, for a batch of ``(gt, pred)`` documents
     matched together (:func:`_match_groups`).
 
     Per document, ``[(cls, area, n_gt, scores, tp, keep, ap)]``: the
@@ -611,12 +611,10 @@ def collapsed_confusion_matrix(cm: np.ndarray) -> np.ndarray:
     )
 
 
-def match_stats(
-    gt: list[tuple[int, list[float]]],
-    pred: list[tuple[int, list[float], float]],
-) -> list[dict]:
-    """Per-document COCO matching partials: the one long-form mAP table
-    behind both the per-document and the dataset-level surface.
+def match_stats_docs(docs: list[tuple[list, list]]) -> list[list[dict] | None]:
+    """Per-document COCO matching partials for a batch of ``(gt, pred)``
+    documents matched together: the one long-form mAP table behind both
+    the per-document and the dataset-level surface.
 
     The reference's dataset evaluation pools every page into one COCO run
     (map_layout_evaluator.py:50-99). That pooling IS decomposable: greedy
@@ -634,15 +632,9 @@ def match_stats(
     empty ``"all"`` bucket still does (``n_gt`` 0, no scores), so every
     class keeps its per-class key exactly like :func:`evaluate_map`.
 
-    Returns [{cls, thr_idx, area, scores, tp, n_gt, n_tp, tp_md1, tp_md10,
-    ap}]. Raises ValueError past the :func:`_check_box_budget` limit, like
-    :func:`evaluate_map`."""
-    return _stats_rows(_one(_map_partials([(gt, pred)])[0]))
-
-
-def match_stats_docs(docs: list[tuple[list, list]]) -> list[list[dict] | None]:
-    """:func:`match_stats` for a batch of ``(gt, pred)`` documents matched
-    together; a refused document's entry is None."""
+    Per document, [{cls, thr_idx, area, scores, tp, n_gt, n_tp, tp_md1,
+    tp_md10, ap}]; a document past the :func:`_check_box_budget` limit gets
+    None."""
     return [None if isinstance(parts, ValueError) else _stats_rows(parts)
             for parts in _map_partials(docs)]
 
@@ -684,28 +676,3 @@ def pooled_average_precision(
         return 0.0
     order = np.argsort(-scores, kind="stable")
     return average_precision(tp[order].astype(bool), n_gt)
-
-
-def merged_map_local(docs: list[tuple[list, list]]) -> dict[str, float]:
-    """Single-process oracle for dataset mAP: pool match partials from every
-    document per (class, threshold, area), AP + pooled recalls per group,
-    mean over groups — the same full surface as the distributed path."""
-    from collections import defaultdict
-
-    pool: dict[tuple, list] = defaultdict(lambda: [[], [], 0, 0, 0])
-    for parts in _map_partials(docs):
-        for st in _stats_rows(_one(parts)):
-            slot = pool[(st["cls"], st["thr_idx"], st["area"])]
-            slot[0].extend(st["scores"])
-            slot[1].extend(st["tp"])
-            slot[2] += st["n_gt"]
-            slot[3] += st["tp_md1"]
-            slot[4] += st["tp_md10"]
-
-    pools: dict[tuple, np.ndarray] = {}
-    for (cls, t, area), (scores, tp, n_gt, t1, t10) in pool.items():
-        v = pools.setdefault((cls, area), np.full((4, len(IOU_THRESHOLDS)), np.nan))
-        v[0, t] = pooled_average_precision(np.array(scores), np.array(tp), n_gt)
-        if n_gt:
-            v[1:, t] = (t1 / n_gt, t10 / n_gt, int(np.sum(tp)) / n_gt)
-    return _surface(pools)

@@ -1,19 +1,16 @@
 """Levenshtein edit distance over token sequences.
 
-Two implementations:
-
-- :func:`levenshtein` — Myers/Hyyrö bit-parallel algorithm (Myers 1999,
+:func:`levenshtein` — Myers/Hyyrö bit-parallel algorithm (Myers 1999,
   Hyyrö 2001 — published algorithms). Python arbitrary-precision ints act
   as a single unbounded bit vector, so no 64-bit block sweep is needed
   (the reference's C++ path blocks at 64 bits:
   cpp/src/edit_distance.cpp:26-50,120-128 — same algorithm family).
   Tokens are interned to ints first, mirroring the reference's interning
   (edit_distance.cpp:64-84), though with hashable Python tokens the
-  bitmask table keys on the token directly.
-
-- :func:`levenshtein_dp` — the O(n·m) two-row DP, kept as an independent
-  cross-check oracle (used by tests the way the reference cross-checks
-  Python-vs-C++ at rel-tol 1e-6: benchmarks/edit_distance_benchmark.py:90-102).
+  bitmask table keys on the token directly. The tests cross-check it
+  against a plain O(n·m) DP (tests/reference_kernels.py), the way the
+  reference cross-checks Python vs C++
+  (benchmarks/edit_distance_benchmark.py:90-102).
 
 Normalization matches the reference exactly
 (docling_metrics_text.py:183-203): ``dist / max(len_a, len_b)`` and ``0.0``
@@ -65,25 +62,6 @@ def levenshtein(a: Sequence[Hashable], b: Sequence[Hashable]) -> int:
         vp = hn | (~(d0 | hp) & mask)
         vn = hp & d0
     return score
-
-
-def levenshtein_dp(a: Sequence[Hashable], b: Sequence[Hashable]) -> int:
-    """Plain two-row DP Levenshtein — independent oracle implementation."""
-    m, n = len(a), len(b)
-    if m == 0:
-        return n
-    if n == 0:
-        return m
-    prev = list(range(n + 1))
-    cur = [0] * (n + 1)
-    for i in range(1, m + 1):
-        cur[0] = i
-        ai = a[i - 1]
-        for j in range(1, n + 1):
-            cost = 0 if ai == b[j - 1] else 1
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-        prev, cur = cur, prev
-    return prev[n]
 
 
 def normalized_edit_distance(

@@ -615,43 +615,3 @@ def evaluate_markush_pair(gt_cxsmiles: str, pred_cxsmiles: str | None) -> dict:
     )
     scores["valid"] = True
     return scores
-
-
-def aggregate_markush(results: list[dict]) -> dict:
-    """Dataset aggregate with the reference's conditional means
-    (docling_metrics_chemistry.py:294-345): r/m/sg averaged only over
-    samples that have the feature; cxsmi_equality over Markush samples."""
-    n = len(results)
-    if n == 0:
-        return {
-            "sample_count": 0,
-            "mean_tanimoto": 0.0,
-            "validity_rate": 0.0,
-            "string_equality_rate": 0.0,
-            "mean_r": None,
-            "mean_m": None,
-            "mean_sg": None,
-            "cxsmi_equality_rate": None,
-        }
-    r_vals = [r["r"] for r in results if r["r"] is not None]
-    m_vals = [r["m"] for r in results if r["m"] is not None]
-    sg_vals = [r["sg"] for r in results if r["sg"] is not None]
-    markush = [r for r in results if r["num_fragments_gt"] > 0]
-    return {
-        "sample_count": n,
-        "mean_tanimoto": round(sum(r["tanimoto"] for r in results) / n, 3),
-        "validity_rate": round(sum(1 for r in results if r["valid"]) / n, 3),
-        "string_equality_rate": round(
-            sum(1 for r in results if r["string_equality"]) / n, 3
-        ),
-        "mean_r": round(sum(r_vals) / len(r_vals), 3) if r_vals else None,
-        "mean_m": round(sum(m_vals) / len(m_vals), 3) if m_vals else None,
-        "mean_sg": round(sum(sg_vals) / len(sg_vals), 3) if sg_vals else None,
-        "cxsmi_equality_rate": (
-            round(
-                sum(1 for r in markush if r["cxsmi_equality"]) / len(markush), 3
-            )
-            if markush
-            else None
-        ),
-    }

@@ -25,13 +25,6 @@ def stable_hash64(data: str | bytes) -> int:
     return struct.unpack("<Q", hashlib.blake2b(data, digest_size=8).digest())[0]
 
 
-def stable_hash32(data: str | bytes) -> int:
-    """Deterministic 32-bit hash (blake2b-based; process-independent)."""
-    if isinstance(data, str):
-        data = data.encode("utf-8", "surrogatepass")
-    return struct.unpack("<I", hashlib.blake2b(data, digest_size=4).digest())[0]
-
-
 def _splitmix64(h: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 finalizer (Steele et al.) — avalanche mixing."""
     with np.errstate(over="ignore"):
@@ -68,25 +61,6 @@ def char_shingle_hashes(text: str, k: int = 5) -> np.ndarray:
     return np.unique(_splitmix64(h))
 
 
-def char_shingles(text: str, k: int = 5) -> set[int]:
-    """Set of 64-bit hashes of the k-character shingles of ``text``."""
-    return set(map(int, char_shingle_hashes(text, k)))
-
-
-def word_ngrams(tokens: list[str], n: int = 3) -> set[tuple[str, ...]]:
-    if len(tokens) < n:
-        return {tuple(tokens)} if tokens else set()
-    return {tuple(tokens[i : i + n]) for i in range(len(tokens) - n + 1)}
-
-
-def jaccard(a: set, b: set) -> float:
-    if not a and not b:
-        return 1.0
-    if not a or not b:
-        return 0.0
-    return len(a & b) / len(a | b)
-
-
 def _perm_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(seed)
     # Multiply-shift family (Dietzfelbinger et al.): h_i(x) = a_i*x + b_i
@@ -121,10 +95,6 @@ def minhash_signature(shingle_hashes: "set[int] | np.ndarray",
     return np.min(ax, axis=0)
 
 
-def minhash_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    return float(np.mean(sig_a == sig_b))
-
-
 def simhash(tokens: list[str], bits: int = 64) -> int:
     """Charikar SimHash over token unigrams with unit weights (vectorized:
     the per-token per-bit Python loop was the SimHash UDF's hot path)."""
@@ -140,7 +110,3 @@ def simhash(tokens: list[str], bits: int = 64) -> int:
     for i in np.nonzero(acc > 0)[0]:
         out |= 1 << int(i)
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & _MAX64).count("1")

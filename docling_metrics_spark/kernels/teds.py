@@ -265,13 +265,9 @@ def html_to_bracket(html: str, structure_only: bool = False) -> str:
     return tree_to_bracket(html_to_tree(html, structure_only))
 
 
-def bracket_to_html(bracket: str) -> str:
-    """Rebuild HTML from a bracket tree (spans emitted only when > 1,
-    reference teds.py:257-277)."""
-    return _node_to_html(bracket_to_tree(bracket))
-
-
 def _node_to_html(node: TableNode) -> str:
+    """Render a table tree as HTML (spans emitted only when > 1, reference
+    teds.py:257-277)."""
     if node.is_cell():
         attrs = ""
         if (node.colspan or 1) > 1:

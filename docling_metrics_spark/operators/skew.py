@@ -1,4 +1,4 @@
-"""Skew handling: salted two-stage aggregation and size-bucketed salting.
+"""Skew handling: salted two-stage aggregation.
 
 At 10^12 documents, grouped aggregations over low-cardinality or skewed keys
 (e.g. per-source, per-language, or the single global group) funnel into few
@@ -10,32 +10,11 @@ recomputed on the sum).
 Only algebraically decomposable aggregates belong here (sum, count, min,
 max, avg = sum/count). The helpers verify nothing silently: tests assert
 salted == unsalted on the same input (SURVEY.md §5 point 4).
-
-Also provided: ``size_salt`` — a deterministic salt derived from a row's
-payload size so a handful of giant documents spread over many partitions
-*before* an expensive UDF stage (AQE splits skewed shuffle partitions, but
-cannot split one monster row; spreading rows by size bucket balances the
-Arrow batches feeding Python workers).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-
-def with_salt(df: DataFrame, n_salts: int = 32, col_name: str = "_salt") -> DataFrame:
-    """Uniform random-ish but deterministic salt from a stable row hash."""
-    return df.withColumn(
-        col_name, F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int")
-    )
-
-
-def size_salt(size_col: Column, n_salts: int = 32) -> Column:
-    """Salt giant rows across partitions: rows in bigger size buckets get
-    spread over proportionally more salt values."""
-    bucket = F.least(F.ceil(F.log2(F.greatest(size_col, F.lit(1)) + 1)), F.lit(16))
-    return F.pmod(F.xxhash64(size_col) + (F.rand(seed=42) * bucket).cast("long"),
-                  F.lit(n_salts)).cast("int")
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_agg(
@@ -83,8 +62,7 @@ def salted_agg(
 
 
 def salted_array_sum(
-    df: DataFrame, array_col: str, n_salts: int = 32,
-    with_count: bool = False,
+    df: DataFrame, array_col: str, with_count: bool = False
 ) -> DataFrame:
     """Element-wise sum of an ARRAY<DOUBLE> column — the distributed twin of
     the reference's confusion-matrix summation (tore_layout_evaluator.py:
@@ -97,10 +75,9 @@ def salted_array_sum(
     ``groupBy(idx).sum(val)``. Spark's hash aggregate combines map-side, so
     every executor holds at most one double per array slot — constant memory
     regardless of row count (unlike a collect_list of whole arrays, which
-    buffers N/n_salts full matrices per reducer). The ``n_salts`` argument
-    is kept for API stability but is unnecessary here: the shuffle key is
-    the slot index, whose cardinality equals the array length, and partial
-    aggregation already fans the hot keys over all map tasks."""
+    buffers whole matrices per reducer). It needs no salt: the shuffle key
+    is the slot index, whose cardinality equals the array length, and
+    partial aggregation already fans the hot keys over all map tasks."""
     exploded = df.select(F.posexplode(array_col).alias("_idx", "_val"))
     slot_aggs = [F.sum("_val").alias("_sum")]
     if with_count:

@@ -605,7 +605,7 @@ MATCH_STATS_TYPE = ArrayType(
 
 @F.pandas_udf(MATCH_STATS_TYPE)
 def match_stats_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-    """Per-document COCO matching partials (kernels.layout.match_stats):
+    """Per-document COCO matching partials (kernels.layout.match_stats_docs):
     one entry per (class, threshold, area), the rows both the per-document
     ``layout_map`` surface and the pooled ``layout_map_dataset`` derive
     from. Kernel refusals (hostile box counts) emit an empty list, so the

@@ -23,6 +23,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from docling_metrics_spark.cache import SRC_TAG as _SRC_TAG, cached_materialize
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
@@ -60,6 +62,16 @@ def all_oracles() -> dict[str, str]:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _cached_table(spark, path: str, tag: str, build) -> DataFrame:
+    """Read back the table ``build()`` returns, materialized to ``path``
+    through :func:`~docling_metrics_spark.cache.cached_materialize`."""
+
+    def write(dest: str) -> None:
+        build().write.mode("overwrite").parquet(dest)
+
+    return spark.read.parquet(cached_materialize(path, tag, write))
 
 
 # NOTE on registration: the driver's correctness gate records the FIRST 50
@@ -580,44 +592,6 @@ def embedding_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _src_fingerprint() -> str:
-    """8-hex digest of the fixture-generating source (datagen, extraction,
-    kernels, UDFs, and this module). Every /tmp fixture/cache path embeds
-    it, so caches invalidate automatically when the generating code
-    changes instead of silently serving stale data across edits."""
-    import hashlib
-    import os as _os
-
-    pkg = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    h = hashlib.md5()
-    paths = [
-        _os.path.join(pkg, "datagen.py"),
-        _os.path.join(pkg, "extraction", "html_extract.py"),
-        _os.path.join(pkg, "operators", "udfs.py"),
-        # pipeline.py + skew.py feed the CACHED flagship per-doc table
-        # (round-5 sharing) — without them here, an edit to run_pipeline
-        # or the salted aggregation would serve stale cached results to
-        # the flagship, extraction_summary, AND their DuckDB oracles.
-        _os.path.join(pkg, "pipeline.py"),
-        _os.path.join(pkg, "operators", "skew.py"),
-        _os.path.abspath(__file__.rstrip("c")),
-    ]
-    kdir = _os.path.join(pkg, "kernels")
-    paths += [
-        _os.path.join(kdir, f) for f in sorted(_os.listdir(kdir))
-        if f.endswith(".py")
-    ]
-    # An unreadable source file raises: skipping it would drop it from the
-    # cache key, and its edits would then serve stale caches.
-    for f in paths:
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:8]
-
-
-_SRC_TAG = _src_fingerprint()
-
-
 # Per-query synthetic-corpus caps for the heavy UDF operators ("no silent
 # caps": bench.py reports these in its JSON output whenever a cap binds).
 CORPUS_CAPS: dict[str, int] = {
@@ -654,7 +628,6 @@ def _corpus(spark, sf_dir, cap: int = 2000):
     the same documents. 128 splits so every parallelism level gets full
     task fan-out (testdata parquet is single-row-group; this one is not)."""
     import hashlib
-    import os as _os
 
     from docling_metrics_spark.datagen import write_corpus
 
@@ -667,9 +640,10 @@ def _corpus(spark, sf_dir, cap: int = 2000):
     n = min(_CORPUS_SIZES[sf_dir], cap)
     path = (f"/tmp/dms_corpus_{_SRC_TAG}_"
             f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{n}")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        write_corpus(spark, path, n_docs=n, partitions=128)
-    return spark.read.parquet(path)
+    return spark.read.parquet(cached_materialize(
+        path, f"{sf_dir}|{n}",
+        lambda dest: write_corpus(spark, dest, n_docs=n, partitions=128),
+    ))
 
 
 _FLAGSHIP_PERDOC_PATH = f"/tmp/dms_flagship_perdoc_{_SRC_TAG}"
@@ -677,7 +651,7 @@ _FLAGSHIP_PERDOC_PATH = f"/tmp/dms_flagship_perdoc_{_SRC_TAG}"
 
 def _flagship_perdoc_table(spark, sf_dir):
     """Materialize the flagship per-document metric rows ONCE per
-    (tier, cap) and share them (the TORE-trio `_cached_materialize`
+    (tier, cap) and share them (the TORE-trio `_cached_table`
     pattern, VERDICT r4 #1): `extract_spans_pipeline` returns the rows,
     `extraction_summary` re-aggregates them, and the fused kernel stops
     executing twice per gate run. The write is the production checkpoint
@@ -685,7 +659,7 @@ def _flagship_perdoc_table(spark, sf_dir):
     invalidates the marker before each flagship timing so the flagship
     number always prices the live kernel, and discloses reuse by any
     other query via CACHE_EVENTS → shared_intermediates."""
-    return _cached_materialize(
+    return _cached_table(
         spark,
         _FLAGSHIP_PERDOC_PATH,
         f"{sf_dir}|{CORPUS_CAPS['extract_spans_pipeline']}",
@@ -758,7 +732,7 @@ def extraction_summary(spark, sf_dir):
     the same rows in one pass — a cross-engine gate on the distributed
     aggregation algebra itself. sum/avg/min/max are rounded identically in
     both engines (see :func:`_summary_oracle_sql`). The per-doc table is
-    the shared `_cached_materialize` one — when `extract_spans_pipeline`
+    the shared `_cached_table` one — when `extract_spans_pipeline`
     already ran this (tier, cap), the fused kernel is NOT re-executed
     (VERDICT r4 #1); the reuse is disclosed via CACHE_EVENTS."""
     from docling_metrics_spark.pipeline import aggregate_metrics
@@ -1122,7 +1096,7 @@ def _map_stats_table(spark, sf_dir, cap: int):
     ``layout_map`` derives its per-document surface from it and
     ``layout_map_dataset`` pools it, so a gate run pays the matching
     kernel once for both (reuse is disclosed via CACHE_EVENTS)."""
-    return _cached_materialize(
+    return _cached_table(
         spark,
         _MAP_STATS_PATH,
         f"{sf_dir}|{cap}",
@@ -1251,13 +1225,6 @@ def _scale_boxes_half(col):
 _TORE_CM_PATH = f"/tmp/dms_tore_cm_{_SRC_TAG}"
 
 
-#: (path, "build" | "reuse") per _cached_materialize call, in call order.
-#: bench.py snapshots this around each timed query to disclose which
-#: queries consumed a table another query already paid to build
-#: ("shared_intermediates", VERDICT r4 #1) — cached-table reuse must be
-#: visible in bench JSON, never silently credited.
-CACHE_EVENTS: list[tuple[str, str]] = []
-
 #: Named runtime counters queries publish for bench JSON ("no silent
 #: caps": e.g. rows excluded because they exceed an oracle encoding's
 #: domain are counted here, never dropped without a signal).
@@ -1274,49 +1241,13 @@ VERIFICATION_CAPS: dict[str, str] = {
 }
 
 
-def _cached_materialize(spark, path: str, tag: str, build):
-    """Materialize ``build()`` to the static ``path`` and return the
-    read-back table. The oracle SQL strings embed these paths at import
-    time, so the cache key cannot live in the path — it lives in a
-    ``_DMS_INPUT`` marker recording which input (sf_dir, cap) produced the
-    table: within a gate run the shared kernel runs once, not once per
-    query; a tier switch invalidates and rebuilds."""
-    import os
-
-    marker = os.path.join(path, "_DMS_INPUT")
-    if not (
-        os.path.exists(os.path.join(path, "_SUCCESS"))
-        and os.path.exists(marker)
-        and open(marker).read() == tag
-    ):
-        build().write.mode("overwrite").parquet(path)
-        with open(marker, "w") as f:
-            f.write(tag)
-        CACHE_EVENTS.append((path, "build"))
-    else:
-        CACHE_EVENTS.append((path, "reuse"))
-    return spark.read.parquet(path)
-
-
-def invalidate_cache(path: str) -> None:
-    """Force the next `_cached_materialize` on ``path`` to rebuild (drops
-    the marker, not the data). bench.py calls this before each flagship
-    timing so the headline always prices the live kernel — keep the
-    marker filename knowledge HERE, next to the code that writes it."""
-    import os
-
-    marker = os.path.join(path, "_DMS_INPUT")
-    if os.path.exists(marker):
-        os.remove(marker)
-
-
 def _tore_cm_table(spark, sf_dir):
     """Materialize the per-document flattened TORE confusion matrices
     (doc_id, cm ARRAY<DOUBLE>[(C+1)²]) to a fixed path — the shared
     intermediate all three TORE queries' DuckDB oracles re-aggregate (the
     extraction_summary pattern, VERDICT r3 #1). The rasterize kernel — the
     dominant cost of the three TORE queries — runs once per (tier, cap)
-    via :func:`_cached_materialize`."""
+    via :func:`_cached_table`."""
     from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
     from docling_metrics_spark.operators.udfs import make_tore_partial_udf
 
@@ -1331,7 +1262,7 @@ def _tore_cm_table(spark, sf_dir):
             ).alias("cm"),
         )
 
-    return _cached_materialize(
+    return _cached_table(
         spark,
         _TORE_CM_PATH,
         f"{sf_dir}|{CORPUS_CAPS['tore_confusion']}",
@@ -1441,7 +1372,7 @@ def tore_confusion(spark, sf_dir):
     from docling_metrics_spark.operators.udfs import make_tore_final_udf
 
     cmdf = _tore_cm_table(spark, sf_dir)
-    summed = salted_array_sum(cmdf.select("cm"), "cm", n_salts=8)
+    summed = salted_array_sum(cmdf.select("cm"), "cm")
 
     # Final step of the partial+final pattern: recompute dataset metrics on
     # the summed matrix (reference tore_layout_evaluator.py:242-245).
@@ -1942,7 +1873,6 @@ def _lsh_sigs_table(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
     self-join in the search would otherwise re-evaluate the signature UDF
     per plan branch. bench.py materializes it in untimed prep."""
     import hashlib
-    import os as _os
 
     from docling_metrics_spark.operators.udfs import make_multi_lsh_buckets_udf
 
@@ -1951,18 +1881,20 @@ def _lsh_sigs_table(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
         f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
         f"_{id_cap}_{n_tables}x{n_planes}_{seed}"
     )
-    if not _os.path.exists(_os.path.join(sig_path, "_SUCCESS")):
+
+    def build():
         udf = make_multi_lsh_buckets_udf(
             dim=64, n_planes=n_planes, n_tables=n_tables, seed=seed
         )
-        (
+        return (
             _t(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < id_cap)
             .select("vec_id", F.posexplode(udf("embedding")).alias("t", "bucket"))
-            .write.mode("overwrite")
-            .parquet(sig_path)
         )
-    return spark.read.parquet(sig_path)
+
+    return _cached_table(
+        spark, sig_path, f"{sf_dir}|{id_cap}|{n_tables}x{n_planes}|{seed}", build
+    )
 
 
 def _lsh_candidate_pairs(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
@@ -2538,7 +2470,7 @@ _GRITS_PAIRS_PATH = f"/tmp/dms_grits_pairs_{_SRC_TAG}"
 
 def _grits_score_sql(total: str) -> str:
     """f = 2·total/(na+nb) with the empty-grid edges (both empty → 1.0,
-    one empty → 0.0, parse error → 0.0) — grits() normalization in SQL."""
+    one empty → 0.0, parse error → 0.0) — the GriTS f-score normalization in SQL."""
     return f"""CASE WHEN err THEN 0.0
                WHEN na = 0 AND nb = 0 THEN 1.0
                WHEN na = 0 OR nb = 0 THEN 0.0
@@ -2806,23 +2738,19 @@ def teds_similarity_join(spark, sf_dir, threshold: float = 0.8):
     # otherwise each re-evaluate the stats UDF — the persisted tree-index
     # table of the reference's candidate index, histo_candidate_index.h)
     import hashlib as _hashlib
-    import os as _os
 
+    cap = CORPUS_CAPS["teds_similarity_join"]
     stats_path = (
         f"/tmp/dms_tsj_stats_{_SRC_TAG}_"
-        f"{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{CORPUS_CAPS['teds_similarity_join']}"
+        f"{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{cap}"
     )
-    if not _os.path.exists(_os.path.join(stats_path, "_SUCCESS")):
-        (
-            base.unionByName(perturbed)
-            .select("tid", table_tree_stats_udf("html").alias("st"))
-            .select("tid", "st.bracket", "st.n_nodes", "st.hist")
-            .filter(F.col("bracket").isNotNull())
-            .write.mode("overwrite")
-            .parquet(stats_path)
-        )
-    tables = spark.read.parquet(stats_path)
+    tables = _cached_table(
+        spark, stats_path, f"{sf_dir}|{cap}",
+        lambda: base.unionByName(perturbed)
+        .select("tid", table_tree_stats_udf("html").alias("st"))
+        .select("tid", "st.bracket", "st.n_nodes", "st.hist")
+        .filter(F.col("bracket").isNotNull()),
+    )
     # fixed-path long-form stats export (tid, n_nodes, tag, cnt): the
     # DuckDB oracle re-derives the log-size buckets + Kailing label bound
     # from THIS table in SQL (VERDICT r3 #5) — a JVM explode of the cached
@@ -2902,10 +2830,10 @@ _MEDIA_PATH = f"/tmp/dms_media_{_SRC_TAG}"
 def _materialize_media(spark, sf_dir, cap):
     """Explode media spans → synthesized binary payloads, persisted once so
     both multimodal queries decode from the same table and the DuckDB
-    oracles can read the raw BLOBs (cache protocol: :func:`_cached_materialize`)."""
+    oracles can read the raw BLOBs (cache protocol: :func:`_cached_table`)."""
     from docling_metrics_spark.multimodal import media_table
 
-    return _cached_materialize(
+    return _cached_table(
         spark,
         _MEDIA_PATH,
         f"{sf_dir}|{cap}",
@@ -3039,24 +2967,21 @@ def media_frame_sample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# The paths embed _SRC_TAG: the fixtures are cached by existence, so an
-# edit to datagen.py must move them rather than serve stale files.
+# The paths embed _SRC_TAG so the oracle SQL reads the fixture this
+# package version built.
 _COCO_FIXTURE_PATH = f"/tmp/dms_coco_fixture_{_SRC_TAG}"
 _MDPAIR_FIXTURE_PATH = f"/tmp/dms_mdpairs_fixture_{_SRC_TAG}"
 
 
 def _coco_fixture(spark, sf_dir) -> str:
     """Deterministic COCO-style JSON (images + annotations) derived from the
-    corpus layout boxes; written once per source tag."""
+    corpus layout boxes; built through the cache protocol."""
     import json as _json
     import os as _os
 
-    path = _COCO_FIXTURE_PATH
-    marker = _os.path.join(path, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(path, exist_ok=True)
-        from docling_metrics_spark.datagen import gen_document
+    from docling_metrics_spark.datagen import gen_document
 
+    def write(dest: str) -> None:
         anns, images = [], []
         ann_id = 0
         for i in range(200):
@@ -3072,14 +2997,14 @@ def _coco_fixture(spark, sf_dir) -> str:
                     "bbox": [x0, y0, x1 - x0, y1 - y0],
                 })
                 ann_id += 1
-        with open(_os.path.join(path, "annotations.json"), "w") as f:
+        with open(_os.path.join(dest, "annotations.json"), "w") as f:
             for a in anns:  # JSON-lines for spark.read.json
                 f.write(_json.dumps(a) + "\n")
-        with open(_os.path.join(path, "images.json"), "w") as f:
+        with open(_os.path.join(dest, "images.json"), "w") as f:
             for im in images:
                 f.write(_json.dumps(im) + "\n")
-        open(marker, "w").close()
-    return path
+
+    return cached_materialize(_COCO_FIXTURE_PATH, "", write)
 
 
 @query(
@@ -3134,30 +3059,27 @@ def _mdpair_fixture(spark, sf_dir) -> str:
     is deliberately missing to exercise the warn/anti-join branch."""
     import os as _os
 
-    path = _MDPAIR_FIXTURE_PATH
-    marker = _os.path.join(path, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(path, exist_ok=True)
-        from docling_metrics_spark.datagen import gen_document
+    from docling_metrics_spark.datagen import gen_document
 
-        def span_text(spans):
-            return " ".join(
-                s["text"] for s in sorted(spans, key=lambda s: s["offset"])
-                if s["text"] is not None
-            )
+    def span_text(spans):
+        return " ".join(
+            s["text"] for s in sorted(spans, key=lambda s: s["offset"])
+            if s["text"] is not None
+        )
 
+    def write(dest: str) -> None:
         for i in range(40):
             d = gen_document(i)
             sid = f"{i:04d}"
             # "(empty)" sentinel: Spark's text source emits no rows for a
             # zero-byte file while DuckDB read_text emits one — keep parity
-            with open(_os.path.join(path, f"GT_{sid}.md"), "w") as f:
+            with open(_os.path.join(dest, f"GT_{sid}.md"), "w") as f:
                 f.write(span_text(d["spans"]) or "(empty)")
             if i % 13 != 7:  # missing-prediction branch
-                with open(_os.path.join(path, f"pred_{sid}.md"), "w") as f:
+                with open(_os.path.join(dest, f"pred_{sid}.md"), "w") as f:
                     f.write(span_text(d["pred_spans"]) or "(empty)")
-        open(marker, "w").close()
-    return path
+
+    return cached_materialize(_MDPAIR_FIXTURE_PATH, "", write)
 
 
 @query(
@@ -3246,6 +3168,9 @@ def md_pair_missing(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+_SMILES_FIXTURE_PATH = f"/tmp/dms_smiles_fixture_{_SRC_TAG}"
+
+
 def _smiles_fixture(spark) -> str:
     """Deterministic SMILES GT/pred pairs parquet (the reference's JSON
     vector fixture shape, test_smiles_metric_json_vectors.py:15-19):
@@ -3254,8 +3179,7 @@ def _smiles_fixture(spark) -> str:
     import os as _os
     import random as _random
 
-    path = f"/tmp/dms_smiles_fixture_{_SRC_TAG}.parquet"
-    if not _os.path.exists(path):
+    def write(dest: str) -> None:
         rng = _random.Random(20260817)
         frags = ["C", "CC", "CCO", "c1ccccc1", "N", "O", "CC(=O)O",
                  "C(=O)N", "CCN(CC)CC", "c1ccncc1", "CC(C)C", "COC"]
@@ -3276,9 +3200,10 @@ def _smiles_fixture(spark) -> str:
         import pandas as _pd
 
         _pd.DataFrame(rows, columns=["sid", "gt_smiles", "pred_smiles"]).to_parquet(
-            path
+            _os.path.join(dest, "part-0.parquet")
         )
-    return path
+
+    return cached_materialize(_SMILES_FIXTURE_PATH, "", write)
 
 
 @query(
@@ -3290,7 +3215,7 @@ def _smiles_fixture(spark) -> str:
            CAST(sum(CASE WHEN pred_smiles IS NULL THEN 1 ELSE 0 END) AS BIGINT)
                AS n_missing,
            round(avg(length(gt_smiles)), 3) AS avg_gt_len
-    FROM read_parquet('/tmp/dms_smiles_fixture_{_SRC_TAG}.parquet')
+    FROM read_parquet('{_SMILES_FIXTURE_PATH}/*.parquet')
     """,
 )
 def smiles_equality(spark, sf_dir):
@@ -3365,6 +3290,9 @@ def smiles_quality(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+_MARKUSH_FIXTURE_PATH = f"/tmp/dms_markush_fixture_{_SRC_TAG}"
+
+
 def _markush_fixture(spark) -> str:
     """Deterministic Markush CXSMILES GT/pred pairs parquet.
 
@@ -3378,10 +3306,9 @@ def _markush_fixture(spark) -> str:
     import os as _os
     import random as _random
 
-    path = f"/tmp/dms_markush_fixture_{_SRC_TAG}.parquet"
-    if not _os.path.exists(path):
-        from docling_metrics_spark.kernels.markush import parse_fragment
+    from docling_metrics_spark.kernels.markush import parse_fragment
 
+    def write(dest: str) -> None:
         rng = _random.Random(20260817)
         cores = ["C1CCCCC1", "c1ccccc1", "CC(=O)NC", "CCOC(=O)C", "C1CCNCC1"]
         sides = ["CC", "CO", "CN", "CCl", "CBr"]
@@ -3423,8 +3350,11 @@ def _markush_fixture(spark) -> str:
             rows.append((i, gt, pred))
         import pandas as _pd
 
-        _pd.DataFrame(rows, columns=["sid", "gt_cx", "pred_cx"]).to_parquet(path)
-    return path
+        _pd.DataFrame(rows, columns=["sid", "gt_cx", "pred_cx"]).to_parquet(
+            _os.path.join(dest, "part-0.parquet")
+        )
+
+    return cached_materialize(_MARKUSH_FIXTURE_PATH, "", write)
 
 
 @query(
@@ -3437,7 +3367,7 @@ def _markush_fixture(spark) -> str:
                AS n_missing,
            CAST(sum(CASE WHEN gt_cx LIKE '%|%' THEN 1 ELSE 0 END) AS BIGINT)
                AS n_with_extension
-    FROM read_parquet('/tmp/dms_markush_fixture_{_SRC_TAG}.parquet')
+    FROM read_parquet('{_MARKUSH_FIXTURE_PATH}/*.parquet')
     """,
 )
 def markush_equality(spark, sf_dir):
@@ -3626,8 +3556,6 @@ def streaming_extract(spark, sf_dir):
     the DuckDB oracle re-aggregates the materialized stream output in one
     pass, cross-engine-gating the stream-side aggregation algebra; the
     rows themselves are pinned equal to the batch twin by pytest."""
-    import os as _os
-
     from docling_metrics_spark.datagen import generate_documents_df
     from docling_metrics_spark.pipeline import aggregate_metrics
     from docling_metrics_spark.streaming.windowed import (
@@ -3635,11 +3563,11 @@ def streaming_extract(spark, sf_dir):
         run_available_now,
     )
 
-    src = f"/tmp/dms_stream_corpus_{_SRC_TAG}"
-    if not _os.path.exists(_os.path.join(src, "_SUCCESS")):
-        generate_documents_df(spark, 400, partitions=8).write.mode(
-            "overwrite"
-        ).parquet(src)
+    src = cached_materialize(
+        f"/tmp/dms_stream_corpus_{_SRC_TAG}", "",
+        lambda dest: generate_documents_df(spark, 400, partitions=8)
+        .write.mode("overwrite").parquet(dest),
+    )
     per_doc = run_available_now(
         extract_documents_stream(spark, src), output_mode="append"
     )
@@ -3662,22 +3590,21 @@ def streaming_dedup(spark, sf_dir):
     first-seen-wins on the content fingerprint. Source has 100 injected
     duplicate documents (re-ids of docs 0-99), so n_unique < n_rows; batch
     twin asserted equal in tests/test_streaming.py."""
-    import os as _os
-
     from docling_metrics_spark.datagen import generate_documents_df
     from docling_metrics_spark.streaming.windowed import (
         dedup_documents_stream,
         run_available_now,
     )
 
-    src = f"/tmp/dms_stream_dedup_src_{_SRC_TAG}"
-    if not _os.path.exists(_os.path.join(src, "_SUCCESS")):
+    def write(dest: str) -> None:
         docs = generate_documents_df(spark, 400, partitions=8)
         dups = (
             generate_documents_df(spark, 100, partitions=2)
             .withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_dup")))
         )
-        docs.unionByName(dups).write.mode("overwrite").parquet(src)
+        docs.unionByName(dups).write.mode("overwrite").parquet(dest)
+
+    src = cached_materialize(f"/tmp/dms_stream_dedup_src_{_SRC_TAG}", "", write)
     uniq = run_available_now(
         dedup_documents_stream(spark, src), output_mode="append"
     )

@@ -98,14 +98,6 @@ def register_metric(name: str, input_cols: list[str],
     return m
 
 
-def get_metric(name: str) -> Metric:
-    return _METRICS[name]
-
-
-def all_metrics() -> dict[str, Metric]:
-    return dict(_METRICS)
-
-
 # ---------------------------------------------------------------------------
 # Built-in registrations: the reference's metric surface through this API
 # ---------------------------------------------------------------------------

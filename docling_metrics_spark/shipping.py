@@ -3,54 +3,38 @@
 
 The driver may import this repo from an arbitrary cwd via sys.path; executor
 Python workers know nothing about that path. ``ensure_py_files`` zips the
-package once (content-addressed in /tmp) and registers it with
-``sc.addPyFile`` so every UDF deserializes cleanly on any executor. On a
-real cluster the packaged zip goes through spark-submit instead; this helper
-is idempotent and a no-op when already registered.
+package once (named by the package digest, cached in /tmp) and registers it
+with ``sc.addPyFile`` so every UDF deserializes cleanly on any executor. On
+a real cluster the packaged zip goes through spark-submit instead; this
+helper is idempotent and a no-op when already registered.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import zipfile
 
-_SHIPPED: set[str] = set()
+from docling_metrics_spark.cache import cached_materialize, package_digest, package_files
 
-
-def _package_root() -> str:
-    return os.path.dirname(os.path.abspath(__file__))
+_SHIPPED: set[int] = set()
 
 
 def build_zip() -> str:
-    """Zip the package into /tmp, content-addressed; returns the path."""
-    root = _package_root()
-    files = []
-    for dirpath, _dirnames, filenames in os.walk(root):
-        for fn in sorted(filenames):
-            if fn.endswith(".py"):
-                files.append(os.path.join(dirpath, fn))
-    h = hashlib.md5()
-    for f in sorted(files):
-        h.update(f.encode())
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    path = f"/tmp/docling_metrics_spark-{h.hexdigest()[:12]}.zip"
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            parent = os.path.dirname(root)
-            for f in sorted(files):
-                z.write(f, os.path.relpath(f, parent))
-        os.replace(tmp, path)
-    return path
+    """Zip the package into /tmp under its digest; returns the zip path."""
+    name = f"docling_metrics_spark-{package_digest()}"
+
+    def write(dest: str) -> None:
+        with zipfile.ZipFile(os.path.join(dest, f"{name}.zip"), "w") as z:
+            for rel, path in package_files():
+                z.write(path, os.path.join("docling_metrics_spark", rel))
+
+    return os.path.join(cached_materialize(f"/tmp/{name}", "", write), f"{name}.zip")
 
 
 def ensure_py_files(spark) -> None:
     """Idempotently register the package zip with the live session."""
-    zip_path = build_zip()
-    key = f"{id(spark.sparkContext)}:{zip_path}"
-    if key in _SHIPPED:
+    sc = spark.sparkContext
+    if id(sc) in _SHIPPED:
         return
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED.add(key)
+    sc.addPyFile(build_zip())
+    _SHIPPED.add(id(sc))

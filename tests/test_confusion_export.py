@@ -10,7 +10,7 @@ import os
 
 import numpy as np
 
-from docling_metrics_spark.datagen import gen_documents, generate_documents_df
+from docling_metrics_spark.datagen import gen_document, generate_documents_df
 from docling_metrics_spark.export.confusion_export import (
     COLLAPSED_IMAGE_HEADERS,
     export_tore_report,
@@ -38,7 +38,7 @@ def _boxes(doc, key):
 def _local_dataset_matrix():
     total = np.zeros((N_CATEGORIES + 1, N_CATEGORIES + 1))
     per_doc = {}
-    for d in gen_documents(N_DOCS):
+    for d in map(gen_document, range(N_DOCS)):
         gt_img = rasterize_multilabel(
             _boxes(d, "gt_boxes"), PAGE_W, PAGE_H, N_CATEGORIES
         )

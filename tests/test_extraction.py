@@ -6,7 +6,7 @@ including skew giants and boilerplate-only documents. Exact equality, not
 tolerance-based (SURVEY.md §5 point 2).
 """
 
-from docling_metrics_spark.datagen import gen_document, gen_documents
+from docling_metrics_spark.datagen import gen_document
 from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.extraction.html_extract import (
     extract_spans_from_html as extract,
@@ -14,7 +14,7 @@ from docling_metrics_spark.extraction.html_extract import (
 
 
 def test_span_equality_corpus():
-    for doc in gen_documents(800):
+    for doc in map(gen_document, range(800)):
         got = extract_spans_from_html(doc["raw_html"])
         assert got == doc["spans"], doc["doc_id"]
 

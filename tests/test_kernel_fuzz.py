@@ -8,9 +8,10 @@ from hypothesis import strategies as st
 
 import docling_metrics_spark.kernels.teds as T
 from docling_metrics_spark.extraction.html_extract import extract_spans_from_html
-from docling_metrics_spark.kernels.grits import grits_all, html_to_cells
+from docling_metrics_spark.kernels.grits import html_to_cells
 from docling_metrics_spark.kernels.minhash import simhash
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
+from reference_kernels import grits
 
 html_soup = st.text(
     alphabet=st.sampled_from(list("<>/tabledivrspn=\"'0123456789 xyz&#;")),
@@ -97,9 +98,8 @@ def test_simhash_total(s):
 )
 @settings(max_examples=50, deadline=None)
 def test_grits_on_arbitrary_cells(cells_a, cells_b):
-    r = grits_all(cells_a, cells_b)
-    for v in r.values():
-        assert 0.0 <= v <= 1.0
+    for task in ("topology", "content", "location"):
+        assert 0.0 <= grits(cells_a, cells_b, task) <= 1.0
 
 
 def _boxes(n, with_score):

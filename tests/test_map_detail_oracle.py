@@ -10,7 +10,7 @@ import random
 import duckdb
 import pandas as pd
 
-from docling_metrics_spark.kernels.layout import evaluate_map, match_stats
+from docling_metrics_spark.kernels.layout import evaluate_map, match_stats_docs
 from docling_metrics_spark.operators.udfs import _fmt6_half_up, _sorted_json
 
 SCALARS = [
@@ -68,7 +68,7 @@ def test_map_detail_oracle_matches_surface(tmp_path):
     }
     rows = []
     for did, (gt, pred) in docs.items():
-        stats = match_stats(gt, pred)
+        stats = match_stats_docs([(gt, pred)])[0]
         if not stats:  # explode_outer's null row for an empty document
             rows.append({"doc_id": did, "cls": None})
         rows += [{"doc_id": did, **r} for r in stats]

@@ -5,12 +5,12 @@ molecule_scores.py:176-666) on the rdkit-free fallback layer."""
 import pytest
 
 from docling_metrics_spark.kernels.markush import (
-    aggregate_markush,
     evaluate_markush_pair,
     parse_cxsmiles,
     parse_extension,
     split_top_level_dots,
 )
+from reference_kernels import aggregate_markush
 
 
 # ---------------------------------------------------------------------------

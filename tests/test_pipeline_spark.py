@@ -6,12 +6,13 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from docling_metrics_spark.datagen import gen_documents, generate_documents_df
+from docling_metrics_spark.datagen import gen_document, generate_documents_df
 from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.kernels.layout import evaluate_map
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 from docling_metrics_spark.operators.skew import salted_agg, salted_array_sum
 from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
+from reference_kernels import merged_map_local
 
 N_DOCS = 120
 REL = 1e-6
@@ -43,7 +44,7 @@ def test_span_equality_all_docs(spark, per_doc):
 def test_metric_parity_vs_oracle(spark, per_doc):
     """Spark per-doc scores == single-process oracle at rel-tol 1e-6."""
     rows = {r.doc_id: r for r in per_doc.collect()}
-    for doc in gen_documents(N_DOCS):
+    for doc in map(gen_document, range(N_DOCS)):
         spans = extract_spans_from_html(doc["raw_html"])
         gt_text = " ".join(s["text"] for s in spans if s["text"] is not None)
         pred_text = " ".join(
@@ -157,11 +158,11 @@ def test_salted_array_sum(spark):
 
     data = [([1.0, 2.0, 3.0],), ([10.0, 20.0, 30.0],), ([100.0, 200.0, 300.0],)]
     df = spark.createDataFrame(data, "arr array<double>")
-    got = salted_array_sum(df, "arr", n_salts=4).collect()[0].summed
+    got = salted_array_sum(df, "arr").collect()[0].summed
     assert got == [111.0, 222.0, 333.0]
 
     # with_count: the row count rides the slot-sum job (no second count())
-    row = salted_array_sum(df, "arr", n_salts=4, with_count=True).collect()[0]
+    row = salted_array_sum(df, "arr", with_count=True).collect()[0]
     assert row.summed == [111.0, 222.0, 333.0]
     assert row.n_rows == 3
     empty = spark.createDataFrame([], "arr array<double>")
@@ -341,8 +342,6 @@ def test_dataset_map_matches_local(spark):
     single-process merged oracle, all 12 scalars + per-class dicts."""
     import json
 
-    from docling_metrics_spark.datagen import gen_document
-    from docling_metrics_spark.kernels.layout import merged_map_local
     from docling_metrics_spark.plans.queries import (
         _dataset_map_df,
         _match_stats_rows,

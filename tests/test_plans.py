@@ -133,7 +133,7 @@ def test_simhash_completeness_vs_bruteforce(spark):
     (pigeonhole over 4 16-bit blocks)."""
     import pandas as pd
 
-    from docling_metrics_spark.kernels.minhash import hamming64, simhash
+    from docling_metrics_spark.kernels.minhash import simhash
     from docling_metrics_spark.plans.queries import simhash_near_dup
 
     sf = "/root/testdata/sf0.001"
@@ -151,7 +151,7 @@ def test_simhash_completeness_vs_bruteforce(spark):
     expected = {}
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
-            h = hamming64(fps[a], fps[b])
+            h = (fps[a] ^ fps[b]).bit_count()
             if h <= 3:
                 expected[(a, b)] = h
     assert expected, "no close pairs in fixture — corpus drifted"
@@ -183,7 +183,7 @@ def test_teds_similarity_join_equals_bruteforce(spark):
     sound lower bounds for the TEDS cost model, and survivors are verified
     with the exact Zhang-Shasha TEDS — so the result must equal the
     brute-force all-pairs join."""
-    from docling_metrics_spark.datagen import gen_documents
+    from docling_metrics_spark.datagen import gen_document
     from docling_metrics_spark.kernels.teds import (
         html_to_bracket,
         teds_from_brackets,
@@ -199,7 +199,7 @@ def test_teds_similarity_join_equals_bruteforce(spark):
     import re
 
     tables = []
-    for d in gen_documents(100):  # matches the query's cap
+    for d in map(gen_document, range(100)):  # matches the query's cap
         for i, s in enumerate(
             sp for sp in d["spans"] if sp["kind"] == "table"
         ):
@@ -281,7 +281,7 @@ def test_teds_bracket_mode_agrees_with_html_mode(spark):
         html_to_bracket,
         teds_from_brackets,
     )
-    from docling_metrics_spark.datagen import gen_documents
+    from docling_metrics_spark.datagen import gen_document
     from docling_metrics_spark.plans.queries import teds_bracket_pairs
 
     got = {
@@ -289,7 +289,7 @@ def test_teds_bracket_mode_agrees_with_html_mode(spark):
         for r in teds_bracket_pairs(spark, "/root/testdata/sf0.001").collect()
     }
     checked = 0
-    for d in gen_documents(500):
+    for d in map(gen_document, range(500)):
         gts = [s["text"] for s in d["spans"] if s["kind"] == "table"]
         prs = [s["text"] for s in d["pred_spans"] if s["kind"] == "table"]
         if not gts or not prs or d["doc_id"] not in got:
@@ -351,7 +351,7 @@ def test_registry_fits_driver_window():
 def test_cached_materialize_invalidates_on_tag_change(spark, tmp_path):
     """The marker-file cache behind the TORE cm / media tables: same tag →
     the build thunk runs once; a tag change (tier/cap switch) rebuilds."""
-    from docling_metrics_spark.plans.queries import _cached_materialize
+    from docling_metrics_spark.plans.queries import _cached_table
 
     path = str(tmp_path / "cache")
     calls = []
@@ -360,25 +360,22 @@ def test_cached_materialize_invalidates_on_tag_change(spark, tmp_path):
         calls.append(1)
         return spark.range(3).withColumnRenamed("id", "v")
 
-    assert _cached_materialize(spark, path, "sfA|10", build).count() == 3
-    assert _cached_materialize(spark, path, "sfA|10", build).count() == 3
+    assert _cached_table(spark, path, "sfA|10", build).count() == 3
+    assert _cached_table(spark, path, "sfA|10", build).count() == 3
     assert len(calls) == 1, "same tag must not rebuild"
-    assert _cached_materialize(spark, path, "sfB|10", build).count() == 3
+    assert _cached_table(spark, path, "sfB|10", build).count() == 3
     assert len(calls) == 2, "tag change must rebuild"
 
 
 def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
     """bench.py's flagship headline depends on this contract: after
-    invalidate_cache(path), the next _cached_materialize with the SAME
+    invalidate_cache(path), the next cached_materialize with the SAME
     tag must re-run the build (pricing the live kernel) and log a
     'build' CACHE_EVENT — if invalidation ever became a no-op, the
     headline would silently report cached-parquet-read speed as kernel
     throughput."""
-    from docling_metrics_spark.plans.queries import (
-        CACHE_EVENTS,
-        _cached_materialize,
-        invalidate_cache,
-    )
+    from docling_metrics_spark.cache import CACHE_EVENTS, invalidate_cache
+    from docling_metrics_spark.plans.queries import _cached_table
 
     path = str(tmp_path / "cache")
     calls = []
@@ -387,11 +384,11 @@ def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
         calls.append(1)
         return spark.range(2).withColumnRenamed("id", "v")
 
-    _cached_materialize(spark, path, "sfA|10", build)
+    _cached_table(spark, path, "sfA|10", build)
     assert len(calls) == 1
     invalidate_cache(path)
     ev0 = len(CACHE_EVENTS)
-    _cached_materialize(spark, path, "sfA|10", build)
+    _cached_table(spark, path, "sfA|10", build)
     assert len(calls) == 2, "invalidate_cache must force a rebuild"
     assert CACHE_EVENTS[ev0:] == [(path, "build")]
     invalidate_cache(path)  # idempotent on a missing marker
@@ -402,24 +399,24 @@ def test_layout_map_queries_share_one_match_stats_table(spark):
     """``layout_map`` builds the one mAP partials table and
     ``layout_map_dataset`` reuses it: the matching kernel runs once for
     both layout queries on the same (tier, cap)."""
+    from docling_metrics_spark.cache import CACHE_EVENTS, invalidate_cache
     from docling_metrics_spark.plans import queries as Q
 
     sf = "/root/testdata/sf0.001"
-    Q.invalidate_cache(Q._MAP_STATS_PATH)
-    ev0 = len(Q.CACHE_EVENTS)
+    invalidate_cache(Q._MAP_STATS_PATH)
+    ev0 = len(CACHE_EVENTS)
     Q.layout_map(spark, sf).collect()
     Q.layout_map_dataset(spark, sf).collect()
-    shared = [e for e in Q.CACHE_EVENTS[ev0:] if e[0] == Q._MAP_STATS_PATH]
+    shared = [e for e in CACHE_EVENTS[ev0:] if e[0] == Q._MAP_STATS_PATH]
     assert shared == [
         (Q._MAP_STATS_PATH, "build"), (Q._MAP_STATS_PATH, "reuse"),
     ]
 
 
 def test_file_fixture_paths_embed_src_tag():
-    """The COCO and markdown-pair fixtures are cached by existence, so
-    their paths (and the oracle SQL reading them) must carry the source
-    tag: a datagen edit then writes fresh fixtures instead of serving
-    stale ones."""
+    """The COCO and markdown-pair fixture paths (and the oracle SQL reading
+    them) carry the package digest, so the oracle reads the fixture this
+    package version built."""
     from docling_metrics_spark.plans import queries as Q
 
     sf = "/root/testdata/sf0.001"
@@ -433,17 +430,17 @@ def test_file_fixture_paths_embed_src_tag():
 
 
 def test_src_fingerprint_unreadable_source_raises(monkeypatch):
-    """An unreadable source file must fail the cache key, not silently drop
-    out of it (its edits would then serve stale caches)."""
+    """An unreadable source file must fail the package digest (the cache
+    key and the zip name), not silently drop out of it (its edits would
+    then serve stale caches)."""
     import builtins
     import os
 
     import pytest
 
-    from docling_metrics_spark.plans import queries
+    from docling_metrics_spark import cache
 
-    pkg = os.path.dirname(os.path.dirname(os.path.abspath(queries.__file__)))
-    blocked = os.path.join(pkg, "operators", "udfs.py")
+    blocked = os.path.join(os.path.dirname(cache.__file__), "multimodal.py")
     real_open = builtins.open
 
     def fake_open(path, *args, **kwargs):
@@ -453,4 +450,4 @@ def test_src_fingerprint_unreadable_source_raises(monkeypatch):
 
     monkeypatch.setattr(builtins, "open", fake_open)
     with pytest.raises(PermissionError):
-        queries._src_fingerprint()
+        cache.package_digest()

@@ -4,11 +4,11 @@ mirroring the reference BaseMetric contract (base_types.py:34-54)."""
 import pytest
 from pyspark.sql import functions as F
 
-from docling_metrics_spark.registry import all_metrics, get_metric, register_metric
+from docling_metrics_spark.registry import _METRICS, register_metric
 
 
 def test_builtin_metrics_registered():
-    names = set(all_metrics())
+    names = set(_METRICS)
     assert {"text_pair", "teds_html", "hello_world"} <= names
 
 
@@ -17,7 +17,7 @@ def test_hello_world_metric(spark):
         [("1", "x", "x"), ("2", "x", "y"), ("3", "z", "z")],
         "id string, payload_a string, payload_b string",
     )
-    m = get_metric("hello_world")
+    m = _METRICS["hello_world"]
     rows = m.evaluate_samples(df).orderBy("id").collect()
     assert [r.hello_world_scores.score for r in rows] == [1.0, 0.0, 1.0]
     agg = m.evaluate_dataset(df).collect()[0]
@@ -34,7 +34,7 @@ def test_text_pair_via_registry_matches_kernel(spark):
         ("c", "one two three", ""),
     ]
     df = spark.createDataFrame(pairs, "id string, text_a string, text_b string")
-    m = get_metric("text_pair")
+    m = _METRICS["text_pair"]
     got = {
         r.id: r.s for r in m.evaluate_samples(df, out_col="s").orderBy("id").collect()
     }
@@ -72,7 +72,7 @@ def test_teds_html_error_channel(spark):
         ],
         "id string, html_a string, html_b string",
     )
-    m = get_metric("teds_html")
+    m = _METRICS["teds_html"]
     rows = {r.id: r.s for r in m.evaluate_samples(df, "s").collect()}
     assert rows["ok"].teds == pytest.approx(1.0)
     assert rows["ok"].error == 0
@@ -80,11 +80,10 @@ def test_teds_html_error_channel(spark):
 
 
 def test_no_test_only_udfs_or_queries():
-    """Every module-level pandas_udf and ``make_*_udf`` factory in
-    operators/udfs.py, and every public top-level function in
-    plans/queries.py that is not ``@query``-registered, must be referenced
-    by non-test code — a name only tests keep alive verifies a program
-    production never runs."""
+    """Every top-level function of every package module that is not
+    ``@query``-registered must be referenced by non-test code — a name only
+    tests keep alive verifies a program production never runs. A test's
+    reference implementation lives in tests/reference_kernels.py."""
     import ast
     from pathlib import Path
 
@@ -102,26 +101,20 @@ def test_no_test_only_udfs_or_queries():
             elif isinstance(node, ast.ImportFrom):
                 referenced.update(a.name for a in node.names)
 
-    def top_level_defs(rel: str):
-        tree = ast.parse((root / rel).read_text(encoding="utf-8"))
-        return [n for n in tree.body if isinstance(n, ast.FunctionDef)]
-
     def decorator_name(dec) -> str:
         fn = dec.func if isinstance(dec, ast.Call) else dec
         return fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
 
-    pkg = "docling_metrics_spark"
-    udfs = [
-        fn.name for fn in top_level_defs(f"{pkg}/operators/udfs.py")
-        if any(decorator_name(d) == "pandas_udf" for d in fn.decorator_list)
-        or (fn.name.startswith("make_") and fn.name.endswith("_udf"))
-    ]
-    assert udfs, "no UDFs found: the scan itself is broken"
-    assert sorted(set(udfs) - referenced) == []
-
-    queries = [
-        fn.name for fn in top_level_defs(f"{pkg}/plans/queries.py")
-        if not fn.name.startswith("_")
-        and not any(decorator_name(d) == "query" for d in fn.decorator_list)
-    ]
-    assert sorted(set(queries) - referenced) == []
+    orphans = []
+    n_defs = 0
+    for path in sorted((root / "docling_metrics_spark").rglob("*.py")):
+        for fn in ast.parse(path.read_text(encoding="utf-8")).body:
+            if not isinstance(fn, ast.FunctionDef) or any(
+                decorator_name(d) == "query" for d in fn.decorator_list
+            ):
+                continue
+            n_defs += 1
+            if fn.name not in referenced:
+                orphans.append(f"{path.relative_to(root).as_posix()}::{fn.name}")
+    assert n_defs > 100, "too few functions found: the scan itself is broken"
+    assert not orphans, "package functions only tests use:\n" + "\n".join(orphans)
