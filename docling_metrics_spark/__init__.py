@@ -14,7 +14,8 @@ as an idiomatic Spark DataFrame pipeline:
   over layout bboxes) as pandas UDFs,
 - exact span-sequence equality (kind, text, media_ref, order) computed
   JVM-side as a native array<struct> comparison,
-- salted two-stage aggregation for skewed giant documents,
+- two-stage (partial per task, then final) aggregation: a skewed giant
+  document is scored map-side and costs only its own partial row,
 - per-partition lineage + metrics checkpointing with anti-join resume.
 
 All metric kernels are implemented from scratch in pure Python/numpy

@@ -20,8 +20,8 @@ through the *heuristics* (tag classes, link ratio), not through any hidden
 channel, so span-sequence equality is a real test of the extraction rules.
 
 Skew knob: every ``skew_every``-th document is a "giant" with
-``skew_factor``× the median span count — exercising salted two-stage
-aggregation and AQE skew handling.
+``skew_factor``× the median span count — exercising map-side scoring of
+giants, the partial/final aggregation and AQE skew handling.
 """
 
 from __future__ import annotations

@@ -27,9 +27,11 @@ Pipeline pieces (reference parity targets, not copies):
   reference's C++ path uses APTED with identical costs; Zhang–Shasha
   computes the same exact TED value, per the north rule which names
   Zhang-Shasha explicitly.)
-- :func:`teds_from_trees` / :func:`teds_from_brackets` —
+- :func:`teds_from_trees` —
   ``1 − distance / max(n_nodes_a, n_nodes_b)`` with node counts taken from
-  the full trees (C++ path semantics, cpp_src/pybind/teds_manager.h:87-96).
+  the full trees (C++ path semantics, cpp_src/pybind/teds_manager.h:87-96);
+  for bracket input, :func:`teds_detail_from_brackets` returns the
+  un-normalized (distance, n_nodes_a, n_nodes_b) triple.
 
 Malformed bracket strings raise ``ValueError`` — the reference surfaces an
 (error_id, error_msg) channel and re-raises (docling_metrics_table.py:219-220);
@@ -406,8 +408,9 @@ def tree_edit_distance(root1: TableNode, root2: TableNode) -> float:
 
 def teds_detail_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, int, int]:
     """(tree-edit distance, size_a, size_b) — the un-normalized triple
-    behind :func:`teds_from_brackets`, exposed so the bracket-pairs query
-    can materialize it and a SQL oracle re-derive TEDS = 1 − d/max."""
+    of bracket-string TEDS, exposed so the bracket-pairs and TEDS-join
+    queries can materialize it and normalize it on the JVM (a SQL oracle
+    re-derives TEDS = 1 − d/max from the same triple)."""
     if bracket_a == bracket_b:
         # identical serialization ⇒ identical tree ⇒ TED 0; still parse to
         # reject malformed input, and take the size from the TREE — counting
@@ -419,12 +422,3 @@ def teds_detail_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, in
     ta = bracket_to_tree(bracket_a)
     tb = bracket_to_tree(bracket_b)
     return tree_edit_distance(ta, tb), ta.size(), tb.size()
-
-
-def teds_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, int, int]:
-    """TEDS = 1 − TED / max(sizes); returns (teds, size_a, size_b).
-
-    Formula: cpp_src/pybind/teds_manager.h:87-96 (C++ path node counts are
-    full bracket-tree sizes)."""
-    dist, na, nb = teds_detail_from_brackets(bracket_a, bracket_b)
-    return 1.0 - dist / max(na, nb), na, nb

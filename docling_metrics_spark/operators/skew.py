@@ -1,64 +1,21 @@
-"""Skew handling: salted two-stage aggregation.
+"""Skew handling: two-stage (partial, then final) aggregation.
 
 At 10^12 documents, grouped aggregations over low-cardinality or skewed keys
-(e.g. per-source, per-language, or the single global group) funnel into few
-reducers. The fix is the classic salt → partial → final pattern — the same
-partial/final split the reference uses for its TORE dataset matrix
-(tore_layout_evaluator.py:224-245: per-page partials summed, metrics
-recomputed on the sum).
+(e.g. per-source, per-language, or the single global group) must not funnel
+raw rows into few reducers. Spark's hash aggregate already combines
+map-side: every task emits one partial row per key and a final aggregate
+merges the partials — the same partial/final split the reference uses for
+its TORE dataset matrix (tore_layout_evaluator.py:224-245: per-page partials
+summed, metrics recomputed on the sum). The flagship summary
+(``pipeline.aggregate_metrics``) is a plain keyless ``agg`` for that reason.
 
-Only algebraically decomposable aggregates belong here (sum, count, min,
-max, avg = sum/count). The helpers verify nothing silently: tests assert
-salted == unsalted on the same input (SURVEY.md §5 point 4).
+This module holds the one aggregation that needs a shape of its own: the
+element-wise sum of an array column (the TORE confusion matrix).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str],
-    n_salts: int = 32,
-) -> DataFrame:
-    """Two-stage skew-safe aggregation.
-
-    Stage 1 groups by (group_cols + salt) — the hot key fans out over
-    ``n_salts`` reducers; stage 2 combines the partials per group key.
-    Emits, for every column c in ``sum_cols``: sum_c, cnt_c (non-null
-    count), avg_c, min_c, max_c — all exactly equal to their single-stage
-    counterparts (decomposable algebra)."""
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in (group_cols or df.columns[:1])], F.monotonically_increasing_id()),
-            F.lit(n_salts),
-        ),
-    )
-    partial_exprs = []
-    for c in sum_cols:
-        partial_exprs += [
-            F.sum(c).alias(f"_p_sum_{c}"),
-            F.count(c).alias(f"_p_cnt_{c}"),
-            F.min(c).alias(f"_p_min_{c}"),
-            F.max(c).alias(f"_p_max_{c}"),
-        ]
-    partials = salted.groupBy(*(group_cols + ["_salt"])).agg(*partial_exprs)
-
-    final_exprs = []
-    for c in sum_cols:
-        final_exprs += [
-            F.sum(f"_p_sum_{c}").alias(f"sum_{c}"),
-            F.sum(f"_p_cnt_{c}").alias(f"cnt_{c}"),
-            (F.sum(f"_p_sum_{c}") / F.sum(f"_p_cnt_{c}")).alias(f"avg_{c}"),
-            F.min(f"_p_min_{c}").alias(f"min_{c}"),
-            F.max(f"_p_max_{c}").alias(f"max_{c}"),
-        ]
-    if group_cols:
-        return partials.groupBy(*group_cols).agg(*final_exprs)
-    return partials.agg(*final_exprs)
 
 
 def salted_array_sum(

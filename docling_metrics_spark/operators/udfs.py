@@ -43,7 +43,6 @@ from docling_metrics_spark.kernels.teds import (
     html_to_bracket,
     html_to_tree,
     normalize_spans,
-    teds_from_brackets,
     tree_edit_distance,
 )
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
@@ -740,22 +739,6 @@ def table_tree_stats_udf(html: pd.Series) -> pd.DataFrame:
         except ValueError:
             rows.append({"bracket": None, "n_nodes": 0, "hist": {}})
     return pd.DataFrame(rows)
-
-
-@F.pandas_udf(DoubleType())
-def teds_pair_bracket_udf(bracket_a: pd.Series, bracket_b: pd.Series) -> pd.Series:
-    """Exact TEDS between two bracket columns (the join's verify step)."""
-    out = []
-    for a, b in zip(bracket_a, bracket_b):
-        if a is None or b is None:
-            out.append(0.0)
-            continue
-        try:
-            teds, _, _ = teds_from_brackets(a, b)
-            out.append(teds)
-        except ValueError:
-            out.append(0.0)
-    return pd.Series(out)
 
 
 TEDS_BRACKET_DETAIL_TYPE = StructType(

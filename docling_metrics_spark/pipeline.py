@@ -8,7 +8,7 @@ agg, which is the 100 TB design point):
       │  flagship_doc_udf: extract + text       [ONE fused Arrow UDF, narrow]
       │    + TEDS + mAP-core in one crossing
       ├─ extracted == spans                     [JVM array<struct> equality]
-      └─ salted two-stage aggregation           [the only shuffle]
+      └─ partial (per task) + final aggregate   [the only shuffle]
 
 Prediction span text is concatenated JVM-side (filter + transform +
 array_join on the spans array) so only the strings the kernels need cross
@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from docling_metrics_spark.operators.skew import salted_agg
 from docling_metrics_spark.operators.udfs import flagship_doc_udf
 
 
@@ -108,14 +107,24 @@ METRIC_COLS = [
 ]
 
 
-def aggregate_metrics(per_doc: DataFrame, n_salts: int = 32) -> DataFrame:
-    """Dataset-level summary via salted two-stage aggregation (skew-safe)."""
-    with_flags = per_doc.withColumn(
+def aggregate_metrics(per_doc: DataFrame) -> DataFrame:
+    """Dataset-level summary: for ``span_equal_int`` and each of
+    ``METRIC_COLS``, ``sum_``, ``cnt_`` (non-null count), ``avg_`` (sum /
+    count), ``min_`` and ``max_``.
+
+    One keyless ``agg``: Spark's hash aggregate runs a partial aggregate in
+    every task and a single final aggregate after one shuffle of one row
+    per task, so a giant document costs only its own map-side row. Salting
+    a keyless sum would add a shuffle stage and spread no hot key."""
+    exprs = []
+    for c in ["span_equal_int"] + METRIC_COLS:
+        exprs += [
+            F.sum(c).alias(f"sum_{c}"),
+            F.count(c).alias(f"cnt_{c}"),
+            (F.sum(c) / F.count(c)).alias(f"avg_{c}"),
+            F.min(c).alias(f"min_{c}"),
+            F.max(c).alias(f"max_{c}"),
+        ]
+    return per_doc.withColumn(
         "span_equal_int", F.col("span_equal").cast("double")
-    )
-    return salted_agg(
-        with_flags,
-        group_cols=[],
-        sum_cols=["span_equal_int"] + METRIC_COLS,
-        n_salts=n_salts,
-    )
+    ).agg(*exprs)

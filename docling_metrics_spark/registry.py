@@ -17,8 +17,7 @@ reference's map+fold pipeline (base_types.py:50-54): per-sample map then
 dataset-level aggregate over every numeric score column.
 
 Scale: the kernel runs inside executors in Arrow batches; the aggregate is
-Spark's native partial+final (optionally salted via operators.skew for
-skewed group keys).
+Spark's native partial+final hash aggregate.
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ from collections.abc import Hashable, Sequence
 import numpy as np
 
 from docling_metrics_spark.kernels.grits import grits_detail
+from docling_metrics_spark.kernels.teds import teds_detail_from_brackets
 from docling_metrics_spark.kernels.layout import (
     IOU_THRESHOLDS,
     _map_partials,
@@ -137,3 +138,13 @@ def grits(cells_a: list[dict], cells_b: list[dict], task: str) -> float:
     if na == 0 or nb == 0:
         return 0.0
     return 2.0 * total / (na + nb)
+
+
+def teds_from_brackets(bracket_a: str, bracket_b: str) -> tuple[float, int, int]:
+    """TEDS = 1 − TED / max(sizes); returns (teds, size_a, size_b).
+
+    Formula: cpp_src/pybind/teds_manager.h:87-96 (C++ path node counts are
+    full bracket-tree sizes). Production normalizes the same triple on the
+    JVM (``plans/queries._teds_from_detail``)."""
+    dist, na, nb = teds_detail_from_brackets(bracket_a, bracket_b)
+    return 1.0 - dist / max(na, nb), na, nb

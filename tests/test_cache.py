@@ -114,13 +114,16 @@ def test_interrupted_fixture_write_is_rebuilt(tmp_path, monkeypatch):
 
 
 def test_cache_checks_live_only_in_the_cache_protocol():
-    """Outside cache.py no package code decides build-vs-reuse by itself:
-    no ``os.path.exists`` call and no ``_SUCCESS`` / ``_DONE`` marker."""
+    """Outside cache.py no package, tools/ or bench.py code decides
+    build-vs-reuse by itself: no ``os.path.exists`` call and no
+    ``_SUCCESS`` / ``_DONE`` marker."""
+    repo = PKG.parent
     offenders = []
-    for path in sorted(PKG.rglob("*.py")):
-        if path.name == "cache.py" and path.parent == PKG:
+    sources = [*PKG.rglob("*.py"), *repo.glob("tools/*.py"), repo / "bench.py"]
+    for path in sorted(sources):
+        if path == PKG / "cache.py":
             continue
-        rel = path.relative_to(PKG).as_posix()
+        rel = path.relative_to(repo).as_posix()
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
             if (
                 isinstance(node, ast.Call)

@@ -37,7 +37,13 @@ from docling_metrics_spark.kernels.minhash import (
     minhash_signature,
     simhash,
 )
-from reference_kernels import grits, jaccard, levenshtein_dp, merged_map_local
+from reference_kernels import (
+    grits,
+    jaccard,
+    levenshtein_dp,
+    merged_map_local,
+    teds_from_brackets,
+)
 
 REL = 1e-6  # golden tolerance, matching test_text_metrics.py:10
 
@@ -139,7 +145,7 @@ def test_html_bracket_html_fixed_point():
 
 
 def test_teds_identical_is_one():
-    teds, na, nb = T.teds_from_brackets(T.html_to_bracket(H1), T.html_to_bracket(H1))
+    teds, na, nb = teds_from_brackets(T.html_to_bracket(H1), T.html_to_bracket(H1))
     assert teds == 1.0 and na == nb == 8
 
 
@@ -147,7 +153,7 @@ def test_teds_known_value():
     # H2 differs from H1 by one cell-content char swap (c→d: rename cost 1.0
     # via char-levenshtein 1/1) and one deleted cell (cost 1): TED = 2,
     # max size = 8 → TEDS = 0.75.
-    teds, na, nb = T.teds_from_brackets(T.html_to_bracket(H1), T.html_to_bracket(H2))
+    teds, na, nb = teds_from_brackets(T.html_to_bracket(H1), T.html_to_bracket(H2))
     assert na == 8 and nb == 7
     assert teds == pytest.approx(0.75, rel=REL)
 
@@ -162,7 +168,7 @@ def test_teds_structure_only():
 def test_teds_span_mismatch_costs_rename():
     h_a = "<table><tr><td>x</td></tr></table>"
     h_b = '<table><tr><td colspan="2">x</td></tr></table>'
-    teds, _, _ = T.teds_from_brackets(T.html_to_bracket(h_a), T.html_to_bracket(h_b))
+    teds, _, _ = teds_from_brackets(T.html_to_bracket(h_a), T.html_to_bracket(h_b))
     assert teds == pytest.approx(1 - 1 / 3, rel=REL)
 
 
@@ -424,12 +430,12 @@ def test_teds_fast_path_size_with_braces_in_cell_text():
 
     h = "<table><tr><td>{x} and {y}</td></tr></table>"
     b = T.html_to_bracket(h)
-    teds, na, nb = T.teds_from_brackets(b, b)
+    teds, na, nb = teds_from_brackets(b, b)
     assert teds == 1.0
     assert na == nb == T.bracket_to_tree(b).size()
     # and the sizes agree with the non-identical path for the same tree
     h2 = "<table><tr><td>other</td></tr></table>"
-    _, na2, _ = T.teds_from_brackets(b, T.html_to_bracket(h2))
+    _, na2, _ = teds_from_brackets(b, T.html_to_bracket(h2))
     assert na == na2
 
 
@@ -888,7 +894,7 @@ def test_tree_memo_teds_pairs_equal_bracket_path():
             try:
                 if ba is None or bb is None:
                     raise ValueError
-                rows.append({"idx": i, "score": T.teds_from_brackets(ba, bb)[0],
+                rows.append({"idx": i, "score": teds_from_brackets(ba, bb)[0],
                              "err": False})
             except ValueError:
                 rows.append({"idx": i, "score": 0.0, "err": True})

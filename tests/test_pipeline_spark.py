@@ -1,6 +1,8 @@
 """End-to-end Spark pipeline tests: extraction equality, metric parity vs
-the single-process oracle, salted-agg correctness, checkpoint resume."""
+the single-process oracle, summary-aggregation correctness, checkpoint
+resume."""
 
+import math
 import re
 
 import pytest
@@ -10,8 +12,8 @@ from docling_metrics_spark.datagen import gen_document, generate_documents_df
 from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.kernels.layout import evaluate_map
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
-from docling_metrics_spark.operators.skew import salted_agg, salted_array_sum
-from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
+from docling_metrics_spark.operators.skew import salted_array_sum
+from docling_metrics_spark.pipeline import METRIC_COLS, aggregate_metrics, run_pipeline
 from reference_kernels import merged_map_local
 
 N_DOCS = 120
@@ -120,37 +122,56 @@ def test_aggregate_metrics_summary(spark, per_doc):
     assert row["cnt_f1_score"] == N_DOCS
 
 
-def test_salted_agg_equals_unsalted(spark, per_doc):
-    """SURVEY §5 point 4: two-stage salted agg == naive single-stage."""
-    naive = per_doc.agg(
-        F.sum("edit_distance_score").alias("s"),
-        F.count("edit_distance_score").alias("c"),
-        F.min("edit_distance_score").alias("mn"),
-        F.max("edit_distance_score").alias("mx"),
-    ).collect()[0]
-    salted = salted_agg(
-        per_doc, group_cols=[], sum_cols=["edit_distance_score"], n_salts=16
-    ).collect()[0]
-    assert salted["sum_edit_distance_score"] == pytest.approx(naive["s"], rel=1e-12)
-    assert salted["cnt_edit_distance_score"] == naive["c"]
-    assert salted["min_edit_distance_score"] == naive["mn"]
-    assert salted["max_edit_distance_score"] == naive["mx"]
+def test_aggregate_metrics_equals_naive_fold(spark, per_doc):
+    """The two-stage summary == a single-process fold over the per-doc
+    rows, for every summed column (null-skipping, as SQL aggregates are)."""
+    row = aggregate_metrics(per_doc).collect()[0]
+    docs = per_doc.collect()
+    for c in ["span_equal_int"] + METRIC_COLS:
+        src = "span_equal" if c == "span_equal_int" else c
+        vals = [float(r[src]) for r in docs if r[src] is not None]
+        assert vals, c
+        assert row[f"sum_{c}"] == pytest.approx(math.fsum(vals), rel=1e-12), c
+        assert row[f"cnt_{c}"] == len(vals), c
+        assert row[f"avg_{c}"] == pytest.approx(
+            math.fsum(vals) / len(vals), rel=1e-12
+        ), c
+        assert row[f"min_{c}"] == min(vals), c
+        assert row[f"max_{c}"] == max(vals), c
 
 
-def test_salted_agg_grouped(spark, docs):
-    """Grouped variant vs Spark's own groupBy on a skewed key."""
-    df = docs.select(
-        (F.length("doc_id") % 2).alias("k"), F.size("spans").alias("v")
+def test_aggregate_metrics_partition_invariance(spark, per_doc):
+    """One input partition or seven: the same summary (counts, min and max
+    exactly; sums and means up to summation order)."""
+    one = aggregate_metrics(per_doc.repartition(1)).collect()[0].asDict()
+    seven = aggregate_metrics(per_doc.repartition(7)).collect()[0].asDict()
+    assert list(one) == list(seven)
+    for k in one:
+        if k.startswith(("sum_", "avg_")):
+            assert one[k] == pytest.approx(seven[k], rel=1e-12), k
+        else:
+            assert one[k] == seven[k], k
+
+
+def test_aggregate_metrics_empty_input_matches_duckdb(spark, docs, tmp_path):
+    """An empty per-doc table summarises to the DuckDB re-aggregation of
+    it: every cnt_ is 0 (SQL count over no rows), every other value null."""
+    import duckdb
+
+    from docling_metrics_spark.plans.queries import (
+        _rounded_summary,
+        _summary_oracle_sql,
     )
-    naive = {
-        r.k: (r.s, r.c)
-        for r in df.groupBy("k").agg(F.sum("v").alias("s"), F.count("v").alias("c")).collect()
-    }
-    salted = {
-        r.k: (r.sum_v, r.cnt_v)
-        for r in salted_agg(df, group_cols=["k"], sum_cols=["v"], n_salts=8).collect()
-    }
-    assert naive == salted
+
+    path = str(tmp_path / "per_doc_empty")
+    spark.createDataFrame([], run_pipeline(docs).schema).write.parquet(path)
+    got = _rounded_summary(aggregate_metrics(spark.read.parquet(path)))
+    want = duckdb.sql(_summary_oracle_sql(path))
+    assert got.columns == want.columns
+    got_row, want_row = tuple(got.collect()[0]), want.fetchone()
+    assert got_row == want_row
+    for name, v in zip(got.columns, got_row):
+        assert v == (0 if name.startswith("cnt_") else None), name
 
 
 def test_salted_array_sum(spark):

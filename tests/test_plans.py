@@ -63,6 +63,24 @@ def test_pipeline_is_narrow_before_agg(spark):
     assert "Exchange" not in plan, plan
 
 
+def test_summary_is_one_partial_final_aggregate(spark):
+    """aggregate_metrics is Spark's own two-stage aggregate: a partial
+    HashAggregate in every task, ONE Exchange of the partial rows, then a
+    final HashAggregate — no salt column and no second shuffle stage."""
+    from docling_metrics_spark.datagen import generate_documents_df
+    from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
+
+    summary = aggregate_metrics(run_pipeline(generate_documents_df(spark, 50)))
+    plan = _plan(summary, "simple")
+    nodes = [line.lstrip(" :+-*") for line in plan.splitlines()]
+    assert sum(n.startswith("Exchange ") for n in nodes) == 1, plan
+    aggs = [n for n in nodes if n.startswith("HashAggregate(")]
+    # printed root first: the final aggregate, then the per-task partial
+    assert len(aggs) == 2, plan
+    assert "partial_" not in aggs[0] and "partial_" in aggs[1], plan
+    assert "xxhash64" not in plan, plan
+
+
 def test_whole_stage_codegen_present(spark):
     # AQE materializes codegen spans only at execution; in the executed
     # final plan they surface as "*(n)" stage markers.
@@ -184,10 +202,8 @@ def test_teds_similarity_join_equals_bruteforce(spark):
     with the exact Zhang-Shasha TEDS — so the result must equal the
     brute-force all-pairs join."""
     from docling_metrics_spark.datagen import gen_document
-    from docling_metrics_spark.kernels.teds import (
-        html_to_bracket,
-        teds_from_brackets,
-    )
+    from docling_metrics_spark.kernels.teds import html_to_bracket
+    from reference_kernels import teds_from_brackets
     from docling_metrics_spark.plans.queries import teds_similarity_join
 
     got = {
@@ -277,10 +293,8 @@ def test_minhash_releases_signature_cache(spark):
 def test_teds_bracket_mode_agrees_with_html_mode(spark):
     """The bracket input mode must score identically to the HTML mode on
     the same first-table pairs (both reduce to teds_from_brackets)."""
-    from docling_metrics_spark.kernels.teds import (
-        html_to_bracket,
-        teds_from_brackets,
-    )
+    from docling_metrics_spark.kernels.teds import html_to_bracket
+    from reference_kernels import teds_from_brackets
     from docling_metrics_spark.datagen import gen_document
     from docling_metrics_spark.plans.queries import teds_bracket_pairs
 
