@@ -188,10 +188,8 @@ def run_checkpointed(
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    df = spark.read.option("basePath", os.path.join(out_dir, "metrics")).parquet(
-        os.path.join(out_dir, "metrics", "bucket=*")
-    )
-    return df
+    """Every written bucket; partition discovery adds ``bucket`` (int)."""
+    return spark.read.parquet(os.path.join(out_dir, "metrics"))
 
 
 def read_checkpoint(spark: SparkSession, out_dir: str) -> DataFrame:

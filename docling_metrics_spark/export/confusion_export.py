@@ -14,11 +14,12 @@ invoked from tore_layout_evaluator.py:280-320):
   F1(GT/Pred)) × cell ∈ (BG/BG, BG/cls, cls/BG, cls/cls)
   (tore_layout_evaluator.py:289-303).
 
-Spark-first re-expression: the dataset matrices come from the engine's
-partial+final path (per-doc partial UDF → salted element-wise array sum —
-one tiny (C+1)² vector reaches the driver), written driver-side as one CSV
-per matrix plus ``meta.json``; the per-image sheet is a DISTRIBUTED
-``df.write.csv`` of a narrow per-page UDF — no collect of per-page rows.
+Spark-first re-expression: each page is rasterized once, to its (C+1)²
+confusion matrix. The per-image sheet is a DISTRIBUTED ``df.write.csv`` of
+each page's collapsed 12-vector — no collect of per-page rows — and that
+same job observes the element-wise slot sum, so one tiny (C+1)² vector
+reaches the driver, which writes one CSV per dataset matrix plus
+``meta.json``.
 openpyxl is not available in this environment and everything it added is
 presentation (cell fills, borders, column widths, hidden-row flags): the
 reference hides all-zero rows/cols by toggling Excel visibility with the
@@ -33,7 +34,6 @@ import json
 import os
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type-hint resolution (CLAUDE.md)
 
 ALL_COLLAPSED_CLASSES_NAME = "all_classes"  # multi_label_confusion_matrix.py:64
 
@@ -75,7 +75,7 @@ def export_dataset_report(
 ) -> dict:
     """Write the Dataset report (reference ``build_ds_report`` content):
     five matrix CSVs + ``meta.json``. ``summed_matrix`` is the dataset
-    (C+1)² confusion matrix from the salted array sum — tiny, driver-side
+    (C+1)² confusion matrix from the slot sum — tiny, driver-side
     by design (the reference renders the same single matrix)."""
     from docling_metrics_spark.kernels.layout import (
         collapsed_confusion_matrix,
@@ -116,80 +116,6 @@ def export_dataset_report(
     return meta
 
 
-def collapsed_vector_from_cm(cm: np.ndarray) -> list:
-    """Per-page collapsed 12-vector (tore_layout_evaluator.py:289-303):
-    collapse the (C+1)² matrix to background-vs-all 2×2, then flatten the
-    precision/recall/F1 matrices in the exporter's header order
-    (:data:`COLLAPSED_IMAGE_HEADERS`). UNROUNDED — callers round (the
-    export sheet at 3 decimals; the registered query in-engine so its
-    DuckDB oracle shares the rounding semantics)."""
-    from docling_metrics_spark.kernels.layout import (
-        collapsed_confusion_matrix,
-        confusion_matrices,
-    )
-
-    pm, rm, fm = confusion_matrices(collapsed_confusion_matrix(cm))
-    return np.stack(
-        [pm.flatten(), rm.flatten(), fm.flatten()], axis=0
-    ).flatten().tolist()
-
-
-def make_image_vector_udf(n_classes: int, page_width: int, page_height: int):
-    """Per-page collapsed 12-vector UDF (tore_layout_evaluator.py:289-303):
-    rasterize → confusion matrix → collapse → flattened
-    precision/recall/F1 matrices, in the exporter's header order."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def image_vector_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-        from docling_metrics_spark.kernels.layout import (
-            confusion_matrix_from_masks,
-            rasterize_multilabel,
-        )
-        from docling_metrics_spark.operators.udfs import _gt_tuples
-
-        out = []
-        for g, p in zip(gt_boxes, pred_boxes):
-            gt_img = rasterize_multilabel(
-                _gt_tuples(g), page_width, page_height, n_classes
-            )
-            pred_img = rasterize_multilabel(
-                _gt_tuples(p), page_width, page_height, n_classes
-            )
-            cm = confusion_matrix_from_masks(gt_img, pred_img, n_classes)
-            out.append(
-                np.round(collapsed_vector_from_cm(cm), 3).tolist()
-            )
-        return pd.Series(out)
-
-    return image_vector_udf
-
-
-def make_image_vector_from_cm_udf(n_classes: int):
-    """The sheet's 12-vector from an already-computed flattened matrix
-    (the materialized table the TORE queries share) — UNROUNDED doubles;
-    the registered query rounds in-engine (Spark round == DuckDB round,
-    both HALF_UP) so the oracle can reproduce values exactly."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    n_cm = n_classes + 1
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def image_vector_from_cm_udf(cm_col: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                collapsed_vector_from_cm(
-                    np.asarray(arr, dtype=float).reshape(n_cm, n_cm)
-                )
-                for arr in cm_col
-            ]
-        )
-
-    return image_vector_from_cm_udf
-
-
 def export_tore_report(
     spark,
     docs,
@@ -198,59 +124,50 @@ def export_tore_report(
     page_width: int,
     page_height: int,
 ) -> dict:
-    """End-to-end TORE report: dataset matrices (partial+final, one tiny
-    vector to the driver) + per-image collapsed sheet (distributed CSV
-    write — scales to any corpus size). Returns the dataset meta."""
-    from pyspark.sql import functions as F
+    """End-to-end TORE report in ONE Spark job over ONE rasterizing pass:
+    the per-image sheet is a distributed CSV write of each page's collapsed
+    12-vector, and that same write observes the dataset slot sum and the
+    page count (an ``Observation``: per-task partials, merged on the
+    driver), from which the dataset matrices are written driver-side.
+    Returns the dataset meta."""
+    from pyspark.sql import Observation, functions as F
 
-    from docling_metrics_spark.operators.skew import salted_array_sum
-    from docling_metrics_spark.operators.udfs import make_tore_partial_udf
-
-    partial_udf = make_tore_partial_udf(n_classes, page_width, page_height)
-    partials = docs.select(
-        F.col("doc_id"),
-        partial_udf("gt_boxes", "pred_boxes").alias("cm"),
+    from docling_metrics_spark.operators.udfs import (
+        make_tore_partial_udf,
+        slot_sum,
+        tore_metrics_udf,
     )
-    summed_rows = salted_array_sum(
-        partials.select("cm"), "cm", with_count=True
-    ).collect()
+
     n_cm = n_classes + 1
-    # empty corpus → empty slot sum → all-zero matrix (report still valid)
-    summed = summed_rows[0].summed if summed_rows and summed_rows[0].summed else []
-    matrix = (
-        np.asarray(summed, dtype=float).reshape(n_cm, n_cm)
-        if summed
-        else np.zeros((n_cm, n_cm))
+    partial_udf = make_tore_partial_udf(n_classes, page_width, page_height)
+    dataset = Observation()
+    pages = docs.select(
+        "doc_id", partial_udf("gt_boxes", "pred_boxes").alias("cm")
+    ).observe(
+        dataset,
+        slot_sum("cm", n_cm * n_cm).alias("summed"),
+        F.count("*").alias("n_rows"),
     )
-
-    # rides the slot-sum job (with_count) — no second count() job.
-    # INVARIANT (ADVICE r4): n_rows counts rows via posexplode, which
-    # skips null/empty cm arrays — correct ONLY because
-    # make_tore_partial_udf emits a full (C+1)² array for EVERY document
-    # (even boxless ones rasterize to an all-background page). A partial
-    # UDF that could emit null/empty matrices would silently undercount
-    # images here; tests/test_confusion_export.py pins the boxless case.
-    num_images = int(summed_rows[0].n_rows) if summed_rows else 0
-    headers = ["background"] + [f"cat_{k}" for k in range(n_classes)]
-    meta = export_dataset_report(
-        matrix,
-        headers,
-        num_images=num_images,
-        num_pixels=num_images * page_width * page_height,
-        out_dir=os.path.join(out_dir, "dataset"),
-    )
-
-    vec_udf = make_image_vector_udf(n_classes, page_width, page_height)
-    image_rows = docs.select(
-        F.col("doc_id"), vec_udf("gt_boxes", "pred_boxes").alias("v")
+    image_rows = pages.select(
+        "doc_id", tore_metrics_udf("cm").collapsed_vector.alias("v")
     ).select(
         "doc_id",
         *[
-            F.col("v")[i].alias(h)
+            F.round(F.col("v")[i], 3).alias(h)
             for i, h in enumerate(COLLAPSED_IMAGE_HEADERS)
         ],
     )
     image_rows.write.mode("overwrite").option("header", "true").csv(
         os.path.join(out_dir, "images")
     )
-    return meta
+
+    observed = dataset.get
+    num_images = int(observed["n_rows"])
+    headers = ["background"] + [f"cat_{k}" for k in range(n_classes)]
+    return export_dataset_report(
+        np.asarray(observed["summed"], dtype=float).reshape(n_cm, n_cm),
+        headers,
+        num_images=num_images,
+        num_pixels=num_images * page_width * page_height,
+        out_dir=os.path.join(out_dir, "dataset"),
+    )

@@ -13,8 +13,10 @@ Python worker — these kernels are dependency-free, so init cost is nil.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -398,12 +400,13 @@ def flagship_doc_udf(
 
 
 def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
-    """Per-document flattened confusion-matrix partial (ARRAY<DOUBLE>).
+    """Per-document flattened confusion-matrix partial (ARRAY<DOUBLE>) —
+    the only TORE code that rasterizes.
 
-    The dataset-level matrix is then a plain ``agg(sum)`` over array slots —
+    The dataset-level matrix is then :func:`slot_sum` over the pages —
     the partial+final pattern of the reference's TORE dataset aggregation
     (tore_layout_evaluator.py:224-245) mapped onto Spark's native two-stage
-    aggregation."""
+    aggregation — and every metric comes from :func:`tore_metrics_udf`."""
     @F.pandas_udf(ArrayType(DoubleType()))
     def tore_partial_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
         out = []
@@ -422,6 +425,82 @@ def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
 
     assert tore_partial_udf.returnType.elementType == DoubleType()
     return tore_partial_udf
+
+
+def slot_sum(array_col: str, n_slots: int) -> Column:
+    """Element-wise sum of an ARRAY<DOUBLE> column as one aggregate
+    expression: a keyless ``agg`` of it is Spark's partial aggregate per
+    task, one Exchange, one final aggregate. The TORE slots hold pixel
+    counts (integer-valued doubles below 2^53), so the sum is exact in any
+    order. An empty input sums to zeros, not NULLs."""
+    return F.array(
+        *[F.coalesce(F.sum(F.col(array_col)[i]), F.lit(0.0))
+          for i in range(n_slots)]
+    )
+
+
+TORE_METRICS_TYPE = StructType(
+    [
+        StructField("precision_mean", DoubleType()),
+        StructField("recall_mean", DoubleType()),
+        StructField("f1_mean", DoubleType()),
+        StructField("collapsed_precision_mean", DoubleType()),
+        StructField("collapsed_recall_mean", DoubleType()),
+        StructField("collapsed_f1_mean", DoubleType()),
+        # key-sorted JSON strings, not MapType (VERDICT r2 #1)
+        StructField("classes_precision", StringType()),
+        StructField("classes_recall", StringType()),
+        StructField("classes_f1", StringType()),
+        StructField("total_weight", DoubleType()),
+        # the report's Images-sheet row, unrounded
+        StructField("collapsed_vector", ArrayType(DoubleType())),
+    ]
+)
+
+
+@F.pandas_udf(TORE_METRICS_TYPE)
+def tore_metrics_udf(cm_col: pd.Series) -> pd.DataFrame:
+    """Every TORE metric of one flattened (C+1)² confusion matrix — a
+    page's own (reference evaluate_sample, tore_layout_evaluator.py:
+    145-167) or the dataset sum (:242-245). C+1 is the square root of the
+    array length.
+
+    Fields: detailed and background-vs-all collapsed P/R/F1 means and the
+    per-class dicts (multi_label_confusion_matrix.py:396-488), the matrix
+    total, and ``collapsed_vector``: the collapsed precision/recall/F1
+    matrices flattened in the exporter's header order
+    (export.COLLAPSED_IMAGE_HEADERS, tore_layout_evaluator.py:289-303).
+    Unrounded; callers round in-engine, so Spark and the DuckDB oracles
+    share one HALF_UP rule."""
+    import numpy as np
+
+    from docling_metrics_spark.kernels.layout import (
+        collapsed_confusion_matrix,
+        confusion_matrices,
+        confusion_metrics,
+        confusion_per_class,
+    )
+
+    rows = []
+    for arr in cm_col:
+        n_cm = math.isqrt(len(arr))
+        cm = np.asarray(arr, dtype=float).reshape(n_cm, n_cm)
+        collapsed = collapsed_confusion_matrix(cm)
+        m = confusion_metrics(cm)
+        m.update(
+            {f"collapsed_{k}": v for k, v in confusion_metrics(collapsed).items()}
+        )
+        # HALF_UP %.6f string values so the DuckDB oracle can rebuild
+        # the same JSON from the materialized matrix cells (VERDICT r3 #1a)
+        m.update(
+            {k: _sorted_json6(v) for k, v in confusion_per_class(cm).items()}
+        )
+        m["total_weight"] = float(cm.sum())
+        m["collapsed_vector"] = np.concatenate(
+            [x.ravel() for x in confusion_matrices(collapsed)]
+        ).tolist()
+        rows.append(m)
+    return pd.DataFrame(rows, columns=TORE_METRICS_TYPE.fieldNames())
 
 
 @F.pandas_udf(LongType())
@@ -528,60 +607,6 @@ def grits_pairs_detail_udf(
             )
         out.append(pairs)
     return pd.Series(out)
-
-
-def make_tore_final_udf(n_classes: int):
-    """Final step of the TORE partial+final pattern: dataset P/R/F1
-    recomputed on the salted-summed matrix (tore_layout_evaluator.py:242-245)."""
-    import numpy as np
-
-    n_cm = n_classes + 1
-
-    @F.pandas_udf(
-        StructType(
-            [
-                StructField("precision_mean", DoubleType()),
-                StructField("recall_mean", DoubleType()),
-                StructField("f1_mean", DoubleType()),
-                StructField("collapsed_precision_mean", DoubleType()),
-                StructField("collapsed_recall_mean", DoubleType()),
-                StructField("collapsed_f1_mean", DoubleType()),
-                # key-sorted JSON strings, not MapType (VERDICT r2 #1)
-                StructField("classes_precision", StringType()),
-                StructField("classes_recall", StringType()),
-                StructField("classes_f1", StringType()),
-                StructField("total_weight", DoubleType()),
-            ]
-        )
-    )
-    def tore_final_udf(summed_col: pd.Series) -> pd.DataFrame:
-        from docling_metrics_spark.kernels.layout import (
-            collapsed_confusion_matrix,
-            confusion_metrics,
-            confusion_per_class,
-        )
-
-        rows = []
-        for arr in summed_col:
-            cm = np.asarray(arr, dtype=float).reshape(n_cm, n_cm)
-            m = confusion_metrics(cm)
-            # reference emits detailed (means + per-class dicts) and
-            # background-vs-all collapsed metrics
-            # (multi_label_confusion_matrix.py:396-488)
-            collapsed = confusion_metrics(collapsed_confusion_matrix(cm))
-            m["collapsed_precision_mean"] = collapsed["precision_mean"]
-            m["collapsed_recall_mean"] = collapsed["recall_mean"]
-            m["collapsed_f1_mean"] = collapsed["f1_mean"]
-            # HALF_UP %.6f string values so the DuckDB oracle can rebuild
-            # the same JSON from the materialized matrix cells (VERDICT r3 #1a)
-            m.update(
-                {k: _sorted_json6(v) for k, v in confusion_per_class(cm).items()}
-            )
-            m["total_weight"] = float(cm.sum())
-            rows.append(m)
-        return pd.DataFrame(rows)
-
-    return tore_final_udf
 
 
 MATCH_STATS_TYPE = ArrayType(
@@ -774,49 +799,3 @@ def teds_bracket_detail_udf(
         except ValueError:
             rows.append({"dist": 0.0, "na": 0, "nb": 0, "err": True})
     return pd.DataFrame(rows)
-
-
-def make_tore_page_from_cm_udf(n_classes: int, page_width: int, page_height: int):
-    """Per-PAGE TORE evaluation (reference evaluate_sample →
-    PageToreEvaluation, tore_layout_evaluator.py:145-167): each document's
-    own confusion matrix reduced to detailed + collapsed means and the
-    page pixel count.
-
-    Consumes the flattened per-document matrix produced by
-    :func:`make_tore_partial_udf` instead of re-rasterizing — the page
-    query materializes that matrix table first so a DuckDB oracle can
-    re-derive the same metrics from the identical cells (VERDICT r3 #1d);
-    this UDF is only the matrix→metrics arithmetic."""
-    n_cm = n_classes + 1
-
-    @F.pandas_udf(
-        StructType(
-            [
-                StructField("num_pixels", LongType()),
-                StructField("precision_mean", DoubleType()),
-                StructField("recall_mean", DoubleType()),
-                StructField("f1_mean", DoubleType()),
-                StructField("collapsed_f1_mean", DoubleType()),
-            ]
-        )
-    )
-    def tore_page_from_cm_udf(cm_col: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        from docling_metrics_spark.kernels.layout import (
-            collapsed_confusion_matrix,
-            confusion_metrics,
-        )
-
-        rows = []
-        for arr in cm_col:
-            cm = np.asarray(arr, dtype=float).reshape(n_cm, n_cm)
-            m = confusion_metrics(cm)
-            m["collapsed_f1_mean"] = confusion_metrics(
-                collapsed_confusion_matrix(cm)
-            )["f1_mean"]
-            m["num_pixels"] = page_width * page_height
-            rows.append(m)
-        return pd.DataFrame(rows)
-
-    return tore_page_from_cm_udf

@@ -1361,26 +1361,25 @@ SELECT round((SELECT avg(p) FROM prf2), 6) AS precision_mean,
 @query("tore_confusion", None)  # oracle attached below (needs module order)
 def tore_confusion(spark, sf_dir):
     """TORE-style dataset confusion matrix: per-doc partials (Arrow UDF,
-    materialized) → salted element-wise array sum → final P/R/F1
+    materialized) → keyless element-wise slot sum → final P/R/F1
     (partial+final pattern). The DuckDB oracle re-derives every output —
     means, collapsed means, per-class JSONs, total weight — from the
     materialized per-doc cells (reference matrix algebra,
-    multi_label_confusion_matrix.py:419-488), cross-checking the salted
-    sum AND the metric arithmetic."""
+    multi_label_confusion_matrix.py:419-488), cross-checking the sum AND
+    the metric arithmetic."""
     from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
-    from docling_metrics_spark.operators.skew import salted_array_sum
-    from docling_metrics_spark.operators.udfs import make_tore_final_udf
+    from docling_metrics_spark.operators.udfs import slot_sum, tore_metrics_udf
 
-    cmdf = _tore_cm_table(spark, sf_dir)
-    summed = salted_array_sum(cmdf.select("cm"), "cm")
-
+    n_cm = N_CATEGORIES + 1
+    summed = _tore_cm_table(spark, sf_dir).agg(
+        slot_sum("cm", n_cm * n_cm).alias("summed")
+    )
     # Final step of the partial+final pattern: recompute dataset metrics on
     # the summed matrix (reference tore_layout_evaluator.py:242-245).
-    final_udf = make_tore_final_udf(N_CATEGORIES)
-    out = summed.select(final_udf("summed").alias("m")).select("m.*")
-    # total_weight is rounded too (4 dp, the sum convention): the salted
-    # partial sums and the oracle's scan-order SUM(w) can differ in the
-    # last ulps, and compare_oracle's %.10g would render that difference
+    out = summed.select(tore_metrics_udf("summed").alias("m")).select(
+        "m.*"
+    ).drop("collapsed_vector")
+    # total_weight keeps the 4-dp sum convention its oracle shares
     return out.select(
         *[
             F.round(F.col(c), 6).alias(c)
@@ -1492,17 +1491,16 @@ def tore_page_metrics(spark, sf_dir):
     materialized first (shared with tore_confusion); the UDF is only the
     matrix→metrics arithmetic, which the DuckDB oracle re-derives per page
     from the same cells (VERDICT r3 #1d)."""
-    from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
-    from docling_metrics_spark.operators.udfs import make_tore_page_from_cm_udf
+    from docling_metrics_spark.operators.udfs import tore_metrics_udf
 
-    cmdf = _tore_cm_table(spark, sf_dir)
-    udf = make_tore_page_from_cm_udf(N_CATEGORIES, 640, 811)
-    out = cmdf.select("doc_id", udf("cm").alias("m")).select("doc_id", "m.*")
-    return out.select(
+    m = _tore_cm_table(spark, sf_dir).select(
+        "doc_id", tore_metrics_udf("cm").alias("m")
+    )
+    return m.select(
         "doc_id",
-        "num_pixels",
+        F.lit(640 * 811).cast("bigint").alias("num_pixels"),
         *[
-            F.round(F.col(c), 6).alias(c)
+            F.round(F.col(f"m.{c}"), 6).alias(c)
             for c in ("precision_mean", "recall_mean", "f1_mean",
                       "collapsed_f1_mean")
         ],
@@ -1565,20 +1563,18 @@ def tore_report_images(spark, sf_dir):
     """The confusion-report sink's Images sheet as a driver-visible query
     (VERDICT r3 #3): one row per page, the collapsed precision/recall/F1
     matrices flattened to the exporter's 12 columns
-    (export/confusion_export.py `collapsed_vector_from_cm`;
-    reference tore_layout_evaluator.py:289-303). Rounding is 3 decimals
-    like the sheet, applied in-engine (HALF_UP in Spark and DuckDB; the
-    CSV sink itself uses np.round — half-even — which only differs at
-    exact half-LSB ties)."""
+    (``tore_metrics_udf``'s ``collapsed_vector``; reference
+    tore_layout_evaluator.py:289-303), rounded to 3 decimals in-engine
+    (HALF_UP in Spark and DuckDB) — the same rule the CSV sink uses."""
     from docling_metrics_spark.export.confusion_export import (
         COLLAPSED_IMAGE_HEADERS,
-        make_image_vector_from_cm_udf,
     )
-    from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
+    from docling_metrics_spark.operators.udfs import tore_metrics_udf
 
     cmdf = _tore_cm_table(spark, sf_dir)
-    vec_udf = make_image_vector_from_cm_udf(N_CATEGORIES)
-    return cmdf.select("doc_id", vec_udf("cm").alias("v")).select(
+    return cmdf.select(
+        "doc_id", tore_metrics_udf("cm").collapsed_vector.alias("v")
+    ).select(
         "doc_id",
         *[
             F.round(F.col("v")[i], 3).alias(h)

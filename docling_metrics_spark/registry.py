@@ -30,7 +30,8 @@ import pandas as pd  # module-level: pandas_udf resolves type hints here
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
-_METRICS: dict[str, "Metric"] = {}
+from docling_metrics_spark.kernels.teds import teds_from_trees, teds_tree
+from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 
 
 @dataclass(frozen=True)
@@ -89,58 +90,51 @@ class Metric:
 def register_metric(name: str, input_cols: list[str],
                     result_schema: StructType | str,
                     batch_kernel: Callable[[dict], dict]) -> Metric:
-    """Register a metric under ``name``; returns the Metric handle. DDL
-    strings are kept verbatim and parsed when first used (registration must
-    work without a live SparkSession, like reference metric imports)."""
-    m = Metric(name, tuple(input_cols), result_schema, batch_kernel)
-    _METRICS[name] = m
-    return m
+    """Declare a metric under ``name``; returns the Metric handle callers
+    evaluate through. DDL strings are kept verbatim and parsed when first
+    used (declaring must work without a live SparkSession, like reference
+    metric imports)."""
+    return Metric(name, tuple(input_cols), result_schema, batch_kernel)
 
 
 # ---------------------------------------------------------------------------
-# Built-in registrations: the reference's metric surface through this API
+# Built-in metrics: the reference's metric surface through this API
 # ---------------------------------------------------------------------------
 
 
-def _register_builtins() -> None:
-    from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
-
-    register_metric(
-        "text_pair",
-        ["text_a", "text_b"],
-        "f1_score double, precision_score double, recall_score double, "
-        "edit_distance_score double, bleu_score double, meteor_score double",
-        lambda row: evaluate_text_pair(
-            row["text_a"] or "", row["text_b"] or ""
-        ).__dict__,
-    )
-
-    from docling_metrics_spark.kernels.teds import teds_from_trees, teds_tree
-
-    def _teds_kernel(row: dict) -> dict:
-        try:
-            teds, na, nb = teds_from_trees(
-                teds_tree(row["html_a"]), teds_tree(row["html_b"])
-            )
-            return {"teds": teds, "nodes_a": na, "nodes_b": nb, "error": 0}
-        except ValueError:
-            return {"teds": None, "nodes_a": None, "nodes_b": None, "error": 1}
-
-    register_metric(
-        "teds_html",
-        ["html_a", "html_b"],
-        "teds double, nodes_a int, nodes_b int, error int",
-        _teds_kernel,
-    )
-
-    # hello-world template analog (hello_world_metric.py:37-92): payload
-    # equality score — the minimal end-to-end example for metric authors.
-    register_metric(
-        "hello_world",
-        ["payload_a", "payload_b"],
-        "score double",
-        lambda row: {"score": 1.0 if row["payload_a"] == row["payload_b"] else 0.0},
-    )
+TEXT_PAIR = register_metric(
+    "text_pair",
+    ["text_a", "text_b"],
+    "f1_score double, precision_score double, recall_score double, "
+    "edit_distance_score double, bleu_score double, meteor_score double",
+    lambda row: evaluate_text_pair(
+        row["text_a"] or "", row["text_b"] or ""
+    ).__dict__,
+)
 
 
-_register_builtins()
+def _teds_kernel(row: dict) -> dict:
+    try:
+        teds, na, nb = teds_from_trees(
+            teds_tree(row["html_a"]), teds_tree(row["html_b"])
+        )
+        return {"teds": teds, "nodes_a": na, "nodes_b": nb, "error": 0}
+    except ValueError:
+        return {"teds": None, "nodes_a": None, "nodes_b": None, "error": 1}
+
+
+TEDS_HTML = register_metric(
+    "teds_html",
+    ["html_a", "html_b"],
+    "teds double, nodes_a int, nodes_b int, error int",
+    _teds_kernel,
+)
+
+# hello-world template analog (hello_world_metric.py:37-92): payload
+# equality score — the minimal end-to-end example for metric authors.
+HELLO_WORLD = register_metric(
+    "hello_world",
+    ["payload_a", "payload_b"],
+    "score double",
+    lambda row: {"score": 1.0 if row["payload_a"] == row["payload_b"] else 0.0},
+)

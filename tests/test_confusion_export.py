@@ -9,8 +9,13 @@ import json
 import os
 
 import numpy as np
+from pyspark.sql import functions as F
 
-from docling_metrics_spark.datagen import gen_document, generate_documents_df
+from docling_metrics_spark.datagen import (
+    BOXES_SCHEMA_DDL,
+    gen_document,
+    generate_documents_df,
+)
 from docling_metrics_spark.export.confusion_export import (
     COLLAPSED_IMAGE_HEADERS,
     export_tore_report,
@@ -23,6 +28,7 @@ from docling_metrics_spark.kernels.layout import (
     confusion_metrics,
     rasterize_multilabel,
 )
+from docling_metrics_spark.plans.queries import _scale_boxes_half
 
 N_DOCS = 30
 PAGE_W, PAGE_H = 640, 811
@@ -74,11 +80,9 @@ def test_export_tore_report_empty_corpus(spark, tmp_path):
 
 
 def test_export_tore_report_counts_boxless_docs(spark, tmp_path):
-    """num_images rides the posexplode slot-sum (n_rows), which skips
-    null/empty cm arrays — sound only while make_tore_partial_udf emits a
-    full matrix for EVERY document. Pin that invariant: boxless documents
-    (empty gt+pred arrays → all-background raster) must still be
-    counted."""
+    """Boxless documents (empty gt+pred arrays → all-background raster)
+    are pages too: each is counted in num_images and adds its whole page
+    to the background/background cell."""
     docs = generate_documents_df(spark, 7).selectExpr(
         "doc_id",
         "CAST(array() AS array<struct<category_id:int,bbox:array<double>,"
@@ -98,15 +102,79 @@ def test_export_tore_report_counts_boxless_docs(spark, tmp_path):
     assert got.sum() == got[0, 0]
 
 
-def test_export_tore_report_golden(spark, tmp_path):
-    docs = generate_documents_df(spark, N_DOCS).selectExpr(
+def _golden_docs(spark):
+    # the 640×811 raster of tore_confusion: halved coordinates
+    return generate_documents_df(spark, N_DOCS).select(
         "doc_id",
-        # the 640×811 raster of tore_confusion: halved coordinates
-        "transform(gt_boxes, b -> named_struct('category_id', b.category_id,"
-        " 'bbox', transform(b.bbox, v -> v / 2.0), 'score', b.score)) AS gt_boxes",
-        "transform(pred_boxes, b -> named_struct('category_id', b.category_id,"
-        " 'bbox', transform(b.bbox, v -> v / 2.0), 'score', b.score)) AS pred_boxes",
+        *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
     )
+
+
+def _read_images_sheet(out):
+    """(header row, {doc_id: values}) over every part file of the sheet."""
+    rows = {}
+    header_row = None
+    for f in glob.glob(os.path.join(out, "images", "*.csv")):
+        with open(f, newline="") as fh:
+            r = list(csv.reader(fh))
+        if not r:
+            continue
+        header_row = r[0]
+        for line in r[1:]:
+            rows[line[0]] = [float(v) for v in line[1:]]
+    return header_row, rows
+
+
+def test_export_tore_report_runs_one_job(spark, tmp_path):
+    """Each page is rasterized once: the Images-sheet write is the only
+    Spark job, and the dataset matrix and page count ride it as an
+    observation."""
+    sc = spark.sparkContext
+    sc.setJobGroup("tore_export_jobs", "export_tore_report")
+    try:
+        export_tore_report(
+            spark, _golden_docs(spark), str(tmp_path / "report"),
+            N_CATEGORIES, PAGE_W, PAGE_H,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("tore_export_jobs")) == 1
+
+
+def test_export_tore_report_rounds_like_the_query(spark, tmp_path):
+    """The Images sheet rounds HALF_UP like ``tore_report_images`` and its
+    DuckDB oracle. The recall cls/cls cell of generated doc 1257 is the
+    double nearest 0.9625: numpy's round-half-even on the scaled value
+    gives 0.962; Spark, DuckDB and Python's ``round`` give 0.963."""
+    import duckdb
+
+    doc = gen_document(1257)
+    docs = spark.createDataFrame(
+        [(doc["doc_id"], doc["gt_boxes"], doc["pred_boxes"])],
+        f"doc_id string, gt_boxes {BOXES_SCHEMA_DDL}, "
+        f"pred_boxes {BOXES_SCHEMA_DDL}",
+    ).select(
+        "doc_id",
+        *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
+    )
+    out = str(tmp_path / "report")
+    export_tore_report(spark, docs, out, N_CATEGORIES, PAGE_W, PAGE_H)
+
+    cm = confusion_matrix_from_masks(
+        rasterize_multilabel(_boxes(doc, "gt_boxes"), PAGE_W, PAGE_H, N_CATEGORIES),
+        rasterize_multilabel(_boxes(doc, "pred_boxes"), PAGE_W, PAGE_H, N_CATEGORIES),
+        N_CATEGORIES,
+    )
+    v = float(confusion_matrices(collapsed_confusion_matrix(cm))[1][1, 1])
+    assert float(np.round(v, 3)) == 0.962  # the tie this doc pins
+    col = COLLAPSED_IMAGE_HEADERS.index("Recall(GT/Pred): cls/cls")
+    got = _read_images_sheet(out)[1][doc["doc_id"]][col]
+    assert got == 0.963 == round(v, 3)
+    assert got == duckdb.sql(f"SELECT round({v!r}::DOUBLE, 3)").fetchone()[0]
+
+
+def test_export_tore_report_golden(spark, tmp_path):
+    docs = _golden_docs(spark)
     out = str(tmp_path / "report")
     meta = export_tore_report(
         spark, docs, out, N_CATEGORIES, PAGE_W, PAGE_H
@@ -157,18 +225,7 @@ def test_export_tore_report_golden(spark, tmp_path):
 
     # Images sheet: one row per doc, exact reference headers, values equal
     # the locally recomputed collapsed 12-vector (3 decimals)
-    files = glob.glob(os.path.join(out, "images", "*.csv"))
-    assert files
-    rows = {}
-    header_row = None
-    for f in files:
-        with open(f, newline="") as fh:
-            r = list(csv.reader(fh))
-        if not r:
-            continue
-        header_row = r[0]
-        for line in r[1:]:
-            rows[line[0]] = [float(v) for v in line[1:]]
+    header_row, rows = _read_images_sheet(out)
     assert header_row == ["doc_id"] + COLLAPSED_IMAGE_HEADERS
     assert len(rows) == N_DOCS
     for doc_id, cm in per_doc.items():

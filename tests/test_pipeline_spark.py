@@ -12,7 +12,7 @@ from docling_metrics_spark.datagen import gen_document, generate_documents_df
 from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.kernels.layout import evaluate_map
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
-from docling_metrics_spark.operators.skew import salted_array_sum
+from docling_metrics_spark.operators.udfs import slot_sum
 from docling_metrics_spark.pipeline import METRIC_COLS, aggregate_metrics, run_pipeline
 from reference_kernels import merged_map_local
 
@@ -174,21 +174,16 @@ def test_aggregate_metrics_empty_input_matches_duckdb(spark, docs, tmp_path):
         assert v == (0 if name.startswith("cnt_") else None), name
 
 
-def test_salted_array_sum(spark):
-    import numpy as np
-
+def test_slot_sum(spark):
     data = [([1.0, 2.0, 3.0],), ([10.0, 20.0, 30.0],), ([100.0, 200.0, 300.0],)]
     df = spark.createDataFrame(data, "arr array<double>")
-    got = salted_array_sum(df, "arr").collect()[0].summed
+    got = df.agg(slot_sum("arr", 3).alias("summed")).collect()[0].summed
     assert got == [111.0, 222.0, 333.0]
 
-    # with_count: the row count rides the slot-sum job (no second count())
-    row = salted_array_sum(df, "arr", with_count=True).collect()[0]
-    assert row.summed == [111.0, 222.0, 333.0]
-    assert row.n_rows == 3
+    # an empty input sums to zeros, not NULL slots
     empty = spark.createDataFrame([], "arr array<double>")
-    row = salted_array_sum(empty, "arr", with_count=True).collect()[0]
-    assert row.summed == [] and row.n_rows == 0
+    got = empty.agg(slot_sum("arr", 3).alias("summed")).collect()[0].summed
+    assert got == [0.0, 0.0, 0.0]
 
 
 def test_checkpoint_resume(spark, docs, tmp_path):

@@ -81,6 +81,18 @@ def test_summary_is_one_partial_final_aggregate(spark):
     assert "xxhash64" not in plan, plan
 
 
+def test_tore_slot_sum_is_one_partial_final_aggregate(spark):
+    """tore_confusion sums the per-page matrices with one keyless aggregate
+    over the array slots: ONE Exchange of the per-task partial rows, and
+    no posexplode (Generate) of the matrices into slot rows."""
+    from docling_metrics_spark.plans.queries import tore_confusion
+
+    plan = _plan(tore_confusion(spark, SF), "simple")
+    nodes = [line.lstrip(" :+-*") for line in plan.splitlines()]
+    assert sum(n.startswith("Exchange ") for n in nodes) == 1, plan
+    assert "Generate" not in plan and "posexplode" not in plan, plan
+
+
 def test_whole_stage_codegen_present(spark):
     # AQE materializes codegen spans only at execution; in the executed
     # final plan they surface as "*(n)" stage markers.

@@ -4,12 +4,17 @@ mirroring the reference BaseMetric contract (base_types.py:34-54)."""
 import pytest
 from pyspark.sql import functions as F
 
-from docling_metrics_spark.registry import _METRICS, register_metric
+from docling_metrics_spark.registry import (
+    HELLO_WORLD,
+    TEDS_HTML,
+    TEXT_PAIR,
+    register_metric,
+)
 
 
 def test_builtin_metrics_registered():
-    names = set(_METRICS)
-    assert {"text_pair", "teds_html", "hello_world"} <= names
+    names = [m.name for m in (TEXT_PAIR, TEDS_HTML, HELLO_WORLD)]
+    assert names == ["text_pair", "teds_html", "hello_world"]
 
 
 def test_hello_world_metric(spark):
@@ -17,7 +22,7 @@ def test_hello_world_metric(spark):
         [("1", "x", "x"), ("2", "x", "y"), ("3", "z", "z")],
         "id string, payload_a string, payload_b string",
     )
-    m = _METRICS["hello_world"]
+    m = HELLO_WORLD
     rows = m.evaluate_samples(df).orderBy("id").collect()
     assert [r.hello_world_scores.score for r in rows] == [1.0, 0.0, 1.0]
     agg = m.evaluate_dataset(df).collect()[0]
@@ -34,7 +39,7 @@ def test_text_pair_via_registry_matches_kernel(spark):
         ("c", "one two three", ""),
     ]
     df = spark.createDataFrame(pairs, "id string, text_a string, text_b string")
-    m = _METRICS["text_pair"]
+    m = TEXT_PAIR
     got = {
         r.id: r.s for r in m.evaluate_samples(df, out_col="s").orderBy("id").collect()
     }
@@ -72,7 +77,7 @@ def test_teds_html_error_channel(spark):
         ],
         "id string, html_a string, html_b string",
     )
-    m = _METRICS["teds_html"]
+    m = TEDS_HTML
     rows = {r.id: r.s for r in m.evaluate_samples(df, "s").collect()}
     assert rows["ok"].teds == pytest.approx(1.0)
     assert rows["ok"].error == 0

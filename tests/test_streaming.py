@@ -158,7 +158,7 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
 
 def test_streaming_extract_summary_matches_batch_summary(spark):
     """The registered streaming_extract query (stream → materialized
-    per-doc rows → salted aggregation, VERDICT r4 #4) must equal the batch
+    per-doc rows → partial/final aggregation, VERDICT r4 #4) must equal the batch
     aggregation of the same source — the streaming twin of
     extraction_summary's algebra, over the stream-materialized table."""
     from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline

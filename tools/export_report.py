@@ -28,7 +28,11 @@ def main() -> None:
 
     from docling_metrics_spark.export import export_tore_report
     from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
-    from docling_metrics_spark.plans.queries import CORPUS_CAPS, _corpus
+    from docling_metrics_spark.plans.queries import (
+        CORPUS_CAPS,
+        _corpus,
+        _scale_boxes_half,
+    )
     from docling_metrics_spark.session import build_session
 
     spark = build_session(app_name="dms-export-report")
@@ -37,17 +41,7 @@ def main() -> None:
     # same 640×811 raster as the tore_confusion query: halved coordinates
     docs = _corpus(spark, sf_dir, cap=CORPUS_CAPS["tore_confusion"]).select(
         "doc_id",
-        *[
-            F.transform(
-                F.col(c),
-                lambda b: F.struct(
-                    b.category_id.alias("category_id"),
-                    F.transform(b.bbox, lambda v: v / 2.0).alias("bbox"),
-                    b.score.alias("score"),
-                ),
-            ).alias(c)
-            for c in ("gt_boxes", "pred_boxes")
-        ],
+        *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
     )
     meta = export_tore_report(spark, docs, out_dir, N_CATEGORIES, 640, 811)
     print(
