@@ -669,7 +669,13 @@ def pooled_average_precision(
     scores: np.ndarray, tp: np.ndarray, n_gt: int
 ) -> float:
     """AP over pooled multi-image detections: global sort by score
-    descending (stable), then the usual 101-point interpolation."""
+    descending (stable), then the usual 101-point interpolation.
+
+    Tie rule: the stable sort keeps the input order among equal scores, so
+    callers concatenate the documents in ``doc_id`` order, each in its own
+    rank order. Ties then break by score descending, ``doc_id``, then rank
+    within the document: pycocotools' accumulate, which stable-sorts the
+    scores of images concatenated in image-id order."""
     if n_gt == 0:
         return float("nan")
     if len(scores) == 0:

@@ -650,13 +650,17 @@ POOLED_AP_SCHEMA = (
 def pooled_ap_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per (class, threshold, area) group: pool all documents' (score, tp)
     pairs, compute AP over the globally sorted pool + pooled recalls at
-    maxdet 1/10/100. NaN→None so downstream avg() null-skips empty pools."""
+    maxdet 1/10/100. NaN→None so downstream avg() null-skips empty pools.
+    The documents are concatenated in ``doc_id`` order, whatever order the
+    shuffle delivers them in (the tie rule of
+    :func:`~docling_metrics_spark.kernels.layout.pooled_average_precision`)."""
     import math
 
     import numpy as np
 
     from docling_metrics_spark.kernels.layout import pooled_average_precision
 
+    pdf = pdf.sort_values("doc_id", kind="stable")
     scores = np.concatenate([np.asarray(s, dtype=float) for s in pdf["scores"]]) \
         if len(pdf) else np.empty(0)
     tp = np.concatenate([np.asarray(t, dtype=int) for t in pdf["tp"]]) \

@@ -10,7 +10,12 @@ Conventions:
   sums) in BOTH engines so cross-engine summation order can't flip the hash,
 - each callable takes (spark, sf_dir) and loads only the tables it needs —
   filters/projections stay above the parquet scan so Catalyst pushes them
-  down (verified via .explain in tests/bench).
+  down (verified via .explain in tests/bench),
+- a query whose kernel is a Python UDF materializes the kernel rows with
+  :func:`_write_table` and derives its result from the read-back on the
+  JVM; its oracle SQL re-derives the same result from the same files
+  (:func:`_table_path`). Tables shared by several queries are built once
+  through :func:`_cached_table` instead.
 
 Spark-first notes are inline: broadcast hints on dimension joins, no UDFs in
 any oracle-checked query (pure built-in/codegen), window functions over
@@ -21,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from docling_metrics_spark.cache import SRC_TAG as _SRC_TAG, cached_materialize
 
@@ -72,6 +77,44 @@ def _cached_table(spark, path: str, tag: str, build) -> DataFrame:
         build().write.mode("overwrite").parquet(dest)
 
     return spark.read.parquet(cached_materialize(path, tag, write))
+
+
+#: Runtime counters of the per-query tables, ``"<name>.rows"`` and
+#: ``"<name>.<counter>"``, written only by :func:`_write_table` and
+#: published in bench JSON ("no silent caps": rows a query drops are
+#: counted here, never dropped without a signal).
+QUERY_COUNTERS: dict[str, int] = {}
+
+
+def _table_path(name: str) -> str:
+    """The one /tmp path of the table or fixture ``name``. It embeds the
+    package digest, so a session running other code never overwrites the
+    table this package's oracle SQL reads."""
+    return f"/tmp/dms_{name}_{_SRC_TAG}"
+
+
+def _write_table(df: DataFrame, name: str, **counters: Column) -> DataFrame:
+    """Write ``df`` to :func:`_table_path` ``(name)`` and return the
+    read-back: the materialize → read back → DuckDB re-derivation pattern
+    of every per-query table.
+
+    The path is fixed per name and overwritten by each invocation, so the
+    oracle always reads what the most recent Spark run of the query wrote,
+    whatever the tier. The write observes its row count and each
+    ``counters`` aggregate (``coalesce``-d to 0: a sum over no rows is
+    NULL) in the same job, and records them in :data:`QUERY_COUNTERS` as
+    ``"<name>.rows"`` and ``"<name>.<counter>"``. The read-back takes the
+    schema of ``df``, so it starts no schema-inference job."""
+    obs = Observation()
+    path = _table_path(name)
+    df.observe(
+        obs,
+        F.count("*").alias("rows"),
+        *[F.coalesce(c, F.lit(0)).alias(k) for k, c in counters.items()],
+    ).write.mode("overwrite").parquet(path)
+    for k, v in obs.get.items():
+        QUERY_COUNTERS[f"{name}.{k}"] = int(v)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 # NOTE on registration: the driver's correctness gate records the FIRST 50
@@ -646,7 +689,7 @@ def _corpus(spark, sf_dir, cap: int = 2000):
     ))
 
 
-_FLAGSHIP_PERDOC_PATH = f"/tmp/dms_flagship_perdoc_{_SRC_TAG}"
+_FLAGSHIP_PERDOC_PATH = _table_path("flagship_perdoc")
 
 
 def _flagship_perdoc_table(spark, sf_dir):
@@ -756,7 +799,7 @@ def _rounded_summary(agg):
     )
 
 
-_TOKEN_PAIRS_PATH = f"/tmp/dms_token_pairs_{_SRC_TAG}"
+_TOKEN_PAIRS_PATH = _table_path("token_pairs")
 
 # DuckDB recomputes ALL six text metrics independently from the
 # materialized token arrays (the score columns in the parquet are never
@@ -902,25 +945,22 @@ def token_edit_distance_pairs(spark, sf_dir):
         F.col("doc_id").alias("gt_id"), F.col("text").alias("text_a")
     )
     b = d.select(F.col("doc_id").alias("pred_id"), F.col("text").alias("text_b"))
-    (
-        a.join(b, F.col("pred_id") == F.col("gt_id") + 100)
-        .withColumn("r", token_pair_udf("text_a", "text_b"))
-        .select("gt_id", "pred_id", "r.*")
-        .write.mode("overwrite")
-        .parquet(_TOKEN_PAIRS_PATH)
-    )
-    t = spark.read.parquet(_TOKEN_PAIRS_PATH)
     # drop un-encodable pairs (>127 distinct tokens — the oracle cannot
     # recompute their Levenshtein) from the output in BOTH engines; the
     # testdata pairs max out at ~31 so nothing is dropped in practice —
     # but per the repo's no-silent-caps rule (ADVICE r4) any dropped row
-    # is counted, warned about, and surfaced in bench JSON via
-    # QUERY_COUNTERS so rows can never vanish without a runtime signal
-    # exact 3-valued-logic complement of the kept filter below — a row
-    # with NULL tok_err must be counted as dropped, not skipped by both
+    # is counted by the write's observation, warned about, and surfaced in
+    # bench JSON via QUERY_COUNTERS. The count is the exact 3-valued-logic
+    # complement of the kept filter — a row with NULL tok_err is dropped.
     kept = F.col("tok_err") | F.col("enc_a").isNotNull()
-    n_dropped = int(t.filter(~F.coalesce(kept, F.lit(False))).count())
-    QUERY_COUNTERS["token_edit_distance_pairs_unencodable_dropped"] = n_dropped
+    t = _write_table(
+        a.join(b, F.col("pred_id") == F.col("gt_id") + 100)
+        .withColumn("r", token_pair_udf("text_a", "text_b"))
+        .select("gt_id", "pred_id", "r.*"),
+        "token_pairs",
+        unencodable_dropped=F.sum((~F.coalesce(kept, F.lit(False))).cast("int")),
+    )
+    n_dropped = QUERY_COUNTERS["token_pairs.unencodable_dropped"]
     if n_dropped:
         import warnings
 
@@ -937,7 +977,7 @@ def token_edit_distance_pairs(spark, sf_dir):
     )
 
 
-def _teds_pairs_materialized(spark, sf_dir, cap, detail_udf, path):
+def _teds_pairs_materialized(spark, sf_dir, cap, detail_udf, name):
     """Shared shape of the TEDS pair queries: JVM table-span extraction →
     per-pair TEDS rows (one Arrow crossing) → explode + persist the long
     form → JVM re-aggregation to the doc level. The DuckDB oracle
@@ -948,7 +988,7 @@ def _teds_pairs_materialized(spark, sf_dir, cap, detail_udf, path):
     from docling_metrics_spark.pipeline import _table_htmls
 
     docs = _corpus(spark, sf_dir, cap=cap)
-    (
+    t = _write_table(
         docs.withColumn("gt_tables", _table_htmls("spans"))
         .withColumn("pred_tables", _table_htmls("pred_spans"))
         .filter(F.size("gt_tables") > 0)
@@ -958,11 +998,9 @@ def _teds_pairs_materialized(spark, sf_dir, cap, detail_udf, path):
             F.size("pred_tables").alias("n_pred"),
             F.explode(detail_udf("gt_tables", "pred_tables")).alias("p"),
         )
-        .select("doc_id", "n_gt", "n_pred", "p.*")
-        .write.mode("overwrite")
-        .parquet(path)
+        .select("doc_id", "n_gt", "n_pred", "p.*"),
+        name,
     )
-    t = spark.read.parquet(path)
     return t.groupBy("doc_id").agg(
         F.round(F.avg("score"), 6).alias("teds_mean"),
         F.first("n_gt").alias("n_tables_gt"),
@@ -972,7 +1010,7 @@ def _teds_pairs_materialized(spark, sf_dir, cap, detail_udf, path):
     )
 
 
-def _teds_pairs_oracle(path: str) -> str:
+def _teds_pairs_oracle(name: str) -> str:
     return f"""
     SELECT doc_id,
            round(avg(score), 6) AS teds_mean,
@@ -980,15 +1018,12 @@ def _teds_pairs_oracle(path: str) -> str:
            max(n_pred) AS n_tables_pred,
            least(max(n_gt), max(n_pred)) AS n_pairs,
            CAST(sum(CASE WHEN err THEN 1 ELSE 0 END) AS INT) AS error_count
-    FROM read_parquet('{path}/*.parquet')
+    FROM read_parquet('{_table_path(name)}/*.parquet')
     GROUP BY doc_id
     """
 
 
-_TEDS_HTML_PAIRS_PATH = f"/tmp/dms_teds_html_pairs_{_SRC_TAG}"
-
-
-@query("teds_table_pairs", _teds_pairs_oracle(_TEDS_HTML_PAIRS_PATH))
+@query("teds_table_pairs", _teds_pairs_oracle("teds_html_pairs"))
 def teds_table_pairs(spark, sf_dir):
     """TEDS (Zhang–Shasha on serialized cell trees) per document over the
     interleaved corpus' table spans; per-pair rows materialized, doc-level
@@ -997,11 +1032,11 @@ def teds_table_pairs(spark, sf_dir):
 
     return _teds_pairs_materialized(
         spark, sf_dir, CORPUS_CAPS["teds_table_pairs"],
-        teds_pairs_detail_udf, _TEDS_HTML_PAIRS_PATH,
+        teds_pairs_detail_udf, "teds_html_pairs",
     )
 
 
-_MAP_STATS_PATH = f"/tmp/dms_map_stats_{_SRC_TAG}"
+_MAP_STATS_PATH = _table_path("map_stats")
 
 
 # The 12 (alias, pool column, area, thr_idx) conditions that assemble a
@@ -1222,13 +1257,8 @@ def _scale_boxes_half(col):
     )
 
 
-_TORE_CM_PATH = f"/tmp/dms_tore_cm_{_SRC_TAG}"
+_TORE_CM_PATH = _table_path("tore_cm")
 
-
-#: Named runtime counters queries publish for bench JSON ("no silent
-#: caps": e.g. rows excluded because they exceed an oracle encoding's
-#: domain are counted here, never dropped without a signal).
-QUERY_COUNTERS: dict[str, int] = {}
 
 #: Correct-by-design bounds inside VERIFICATION queries (ADVICE/VERDICT
 #: r4 #5): these queries exist to GRADE an ANN/near-dup structure against
@@ -1588,10 +1618,10 @@ _ORACLES["tore_report_images"] = _tore_report_images_oracle()
 
 @query(
     "minhash_lsh_dedup",
-    """
+    f"""
     WITH sigs AS (
         SELECT doc_id, sig
-        FROM read_parquet('/tmp/dms_minhash_sigs/*.parquet')
+        FROM read_parquet('{_table_path("minhash_sigs")}/*.parquet')
     ),
     banded AS (
         SELECT doc_id, b.range AS band,
@@ -1650,13 +1680,10 @@ def minhash_lsh_dedup(spark, sf_dir, num_perm: int = 128, n_bands: int = 16,
     )
     # materialize: the signature table feeds banding AND both verify sides —
     # unmaterialized the UDF recomputes 3×; the oracle re-derives the full
-    # LSH result from this table. ONE fixed path, overwritten per
-    # invocation (same contract as /tmp/dms_minhash_pairs below).
-    sig_path = "/tmp/dms_minhash_sigs"
-    d.select("doc_id", minhash_sig_udf("text").alias("sig")).write.mode(
-        "overwrite"
-    ).parquet(sig_path)
-    sigs = spark.read.parquet(sig_path)
+    # LSH result from this table.
+    sigs = _write_table(
+        d.select("doc_id", minhash_sig_udf("text").alias("sig")), "minhash_sigs"
+    )
 
     bands = F.transform(
         F.sequence(F.lit(0), F.lit(n_bands - 1)),
@@ -1693,22 +1720,16 @@ def minhash_lsh_dedup(spark, sf_dir, num_perm: int = 128, n_bands: int = 16,
         .filter(F.col("jaccard_est") >= threshold)
     )
     # Materialize the (tiny) near-dup pair set — at cluster scale this
-    # write is the job's output table. ONE fixed path, overwritten per
-    # invocation: the true-Jaccard oracle reads the same path, so it always
-    # verifies the pairs the most recent Spark run emitted, regardless of
-    # tier. (The round-1 persist/unpersist cache dance is gone: the
-    # signature table is parquet now, nothing is left cached.)
-    out = "/tmp/dms_minhash_pairs"
-    result.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    # write is the job's output table; the true-Jaccard oracle verifies it.
+    return _write_table(result, "minhash_pairs")
 
 
 @query(
     "minhash_pairs_true_jaccard",
-    """
+    f"""
     WITH pairs AS (
         SELECT id_a, id_b
-        FROM read_parquet('/tmp/dms_minhash_pairs/*.parquet')
+        FROM read_parquet('{_table_path("minhash_pairs")}/*.parquet')
     ),
     sh AS (
         SELECT doc_id,
@@ -1755,10 +1776,10 @@ def minhash_pairs_true_jaccard(spark, sf_dir):
 
 @query(
     "simhash_near_dup",
-    """
+    f"""
     WITH fps AS (
         SELECT doc_id, fp
-        FROM read_parquet('/tmp/dms_simhash_fps/*.parquet')
+        FROM read_parquet('{_table_path("simhash_fps")}/*.parquet')
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.fp, b.fp)) AS hamming
@@ -1799,14 +1820,9 @@ def simhash_near_dup(spark, sf_dir, n_blocks: int = 4, max_hamming: int = 3):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # ONE fixed path overwritten per invocation (the minhash-pairs pattern):
-    # the oracle always brute-forces the fingerprints the most recent Spark
-    # run produced, regardless of tier.
-    fp_path = "/tmp/dms_simhash_fps"
-    d.select("doc_id", simhash_udf("text").alias("fp")).write.mode(
-        "overwrite"
-    ).parquet(fp_path)
-    fp = spark.read.parquet(fp_path)
+    fp = _write_table(
+        d.select("doc_id", simhash_udf("text").alias("fp")), "simhash_fps"
+    )
     blocks = F.array(
         *[
             F.struct(
@@ -1931,10 +1947,10 @@ def _lsh_candidate_pairs(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
 
 @query(
     "embedding_lsh_ann",
-    """
+    f"""
     WITH pairs AS (
         SELECT id_a, id_b
-        FROM read_parquet('/tmp/dms_lsh_ann_pairs/*.parquet')
+        FROM read_parquet('{_table_path("lsh_ann_pairs")}/*.parquet')
     ),
     -- DOUBLE[] cast = Spark's per-element double accumulation (_dot)
     emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
@@ -1956,14 +1972,10 @@ def embedding_lsh_ann(spark, sf_dir):
     tests/test_plans.py). The emitted pair set is materialized and the
     DuckDB oracle independently recomputes every pair's cosine from the raw
     embeddings table — a cross-engine gate on the verify step's arithmetic."""
-    out = "/tmp/dms_lsh_ann_pairs"
-    (
-        _lsh_candidate_pairs(spark, sf_dir)
-        .filter(F.col("cosine") >= 0.35)
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return spark.read.parquet(out).select("id_a", "id_b", "cosine")
+    return _write_table(
+        _lsh_candidate_pairs(spark, sf_dir).filter(F.col("cosine") >= 0.35),
+        "lsh_ann_pairs",
+    ).select("id_a", "id_b", "cosine")
 
 
 def _ivf_topk_df(spark, sf_dir, n_cells: int = 16, nprobe: int = 8,
@@ -2023,7 +2035,7 @@ def _ivf_topk_df(spark, sf_dir, n_cells: int = 16, nprobe: int = 8,
 
 @query(
     "embedding_ivf_topk",
-    """
+    f"""
     WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
                  FROM embeddings),
     scored AS (
@@ -2045,7 +2057,7 @@ def _ivf_topk_df(spark, sf_dir, n_cells: int = 16, nprobe: int = 8,
     ),
     ivf AS (
         SELECT DISTINCT qid, vec_id
-        FROM read_parquet('/tmp/dms_ivf_topk/*.parquet')
+        FROM read_parquet('{_table_path("ivf_topk")}/*.parquet')
     )
     SELECT e.qid,
            count(i.vec_id) AS n_hit,
@@ -2062,11 +2074,9 @@ def embedding_ivf_topk(spark, sf_dir, n_cells: int = 16, nprobe: int = 8,
     exact brute-force top-k over the full embeddings table; the DuckDB
     oracle recomputes the exact top-k independently and grades the same
     materialized rows — cross-engine-verified recall, not self-reported."""
-    out = "/tmp/dms_ivf_topk"
-    _ivf_topk_df(spark, sf_dir, n_cells, nprobe, k).write.mode(
-        "overwrite"
-    ).parquet(out)
-    ivf = spark.read.parquet(out).select("qid", "vec_id").distinct()
+    ivf = _write_table(
+        _ivf_topk_df(spark, sf_dir, n_cells, nprobe, k), "ivf_topk"
+    ).select("qid", "vec_id").distinct()
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding").withColumn(
         "nrm", F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
@@ -2152,7 +2162,7 @@ def _lsh_topk_df(spark, sf_dir, k: int = 5):
 
 @query(
     "embedding_lsh_topk",
-    """
+    f"""
     WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
                FROM embeddings WHERE vec_id < 300),
          scored AS (
@@ -2173,7 +2183,7 @@ def _lsh_topk_df(spark, sf_dir, k: int = 5):
          ),
          lsh AS (
              SELECT DISTINCT qid, vec_id
-             FROM read_parquet('/tmp/dms_lsh_topk/*.parquet')
+             FROM read_parquet('{_table_path("lsh_topk")}/*.parquet')
          )
     SELECT e.qid,
            count(l.vec_id) AS n_hit,
@@ -2191,9 +2201,9 @@ def embedding_lsh_topk(spark, sf_dir, k: int = 5):
     broken by vec_id in both engines) and grades the same materialized LSH
     rows — so the per-query recall numbers are cross-engine verified, not
     self-reported. VERDICT r2 #7's construction."""
-    out = "/tmp/dms_lsh_topk"
-    _lsh_topk_df(spark, sf_dir, k).write.mode("overwrite").parquet(out)
-    lsh = spark.read.parquet(out).select("qid", "vec_id").distinct()
+    lsh = _write_table(_lsh_topk_df(spark, sf_dir, k), "lsh_topk").select(
+        "qid", "vec_id"
+    ).distinct()
 
     e = (
         _t(spark, sf_dir, "embeddings")
@@ -2461,9 +2471,6 @@ def streaming_sessionize(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_GRITS_PAIRS_PATH = f"/tmp/dms_grits_pairs_{_SRC_TAG}"
-
-
 def _grits_score_sql(total: str) -> str:
     """f = 2·total/(na+nb) with the empty-grid edges (both empty → 1.0,
     one empty → 0.0, parse error → 0.0) — the GriTS f-score normalization in SQL."""
@@ -2480,7 +2487,7 @@ SELECT doc_id,
        round(avg({_grits_score_sql('total_loc')}), 6) AS grits_loc,
        CAST(sum(coalesce(nca, 0)) AS INT) AS n_cells_gt,
        CAST(sum(coalesce(ncb, 0)) AS INT) AS n_cells_pred
-FROM read_parquet('{_GRITS_PAIRS_PATH}/*.parquet')
+FROM read_parquet('{_table_path("grits_pairs")}/*.parquet')
 GROUP BY doc_id
 """
 
@@ -2498,7 +2505,7 @@ def grits_cells_pairs(spark, sf_dir):
     from docling_metrics_spark.pipeline import _table_htmls
 
     docs = _corpus(spark, sf_dir, cap=CORPUS_CAPS["grits_cells_pairs"])
-    (
+    t = _write_table(
         docs.withColumn("gt_tables", _table_htmls("spans"))
         .withColumn("pred_tables", _table_htmls("pred_spans"))
         .filter(F.size("gt_tables") > 0)
@@ -2508,11 +2515,9 @@ def grits_cells_pairs(spark, sf_dir):
                 grits_pairs_detail_udf("gt_tables", "pred_tables")
             ).alias("p"),
         )
-        .select("doc_id", "p.*")
-        .write.mode("overwrite")
-        .parquet(_GRITS_PAIRS_PATH)
+        .select("doc_id", "p.*"),
+        "grits_pairs",
     )
-    t = spark.read.parquet(_GRITS_PAIRS_PATH)
 
     def _score(total):
         return (
@@ -2533,10 +2538,7 @@ def grits_cells_pairs(spark, sf_dir):
     )
 
 
-_TEDS_CELLS_PAIRS_PATH = f"/tmp/dms_teds_cells_pairs_{_SRC_TAG}"
-
-
-@query("teds_cells_pairs", _teds_pairs_oracle(_TEDS_CELLS_PAIRS_PATH))
+@query("teds_cells_pairs", _teds_pairs_oracle("teds_cells_pairs"))
 def teds_cells_pairs(spark, sf_dir):
     """TEDS via the CELLS input mode (reference's third table input path,
     docling_metrics_table.py:190-199): table HTML → GriTS cells →
@@ -2546,18 +2548,16 @@ def teds_cells_pairs(spark, sf_dir):
 
     return _teds_pairs_materialized(
         spark, sf_dir, CORPUS_CAPS["teds_cells_pairs"],
-        teds_cells_pairs_detail_udf, _TEDS_CELLS_PAIRS_PATH,
+        teds_cells_pairs_detail_udf, "teds_cells_pairs",
     )
 
-
-_TEDS_BRACKET_DETAIL_PATH = f"/tmp/dms_teds_bracket_detail_{_SRC_TAG}"
 
 _TEDS_BRACKET_ORACLE = f"""
 SELECT doc_id,
        round(CASE WHEN err THEN 0.0
                   ELSE 1.0 - CAST(dist AS DOUBLE) / greatest(na, nb)
              END, 6) AS teds
-FROM read_parquet('{_TEDS_BRACKET_DETAIL_PATH}/*.parquet')
+FROM read_parquet('{_table_path("teds_bracket_detail")}/*.parquet')
 """
 
 
@@ -2608,21 +2608,18 @@ def teds_bracket_pairs(spark, sf_dir):
         )
         .filter(F.col("bracket_a").isNotNull() & F.col("bracket_b").isNotNull())
     )
-    (
+    t = _write_table(
         paired.select(
             "doc_id",
             teds_bracket_detail_udf("bracket_a", "bracket_b").alias("d"),
-        )
-        .select("doc_id", "d.*")
-        .write.mode("overwrite")
-        .parquet(_TEDS_BRACKET_DETAIL_PATH)
+        ).select("doc_id", "d.*"),
+        "teds_bracket_detail",
     )
-    t = spark.read.parquet(_TEDS_BRACKET_DETAIL_PATH)
     return t.select("doc_id", F.round(_teds_from_detail(), 6).alias("teds"))
 
 
-_TSJ_STATS_LONG_PATH = f"/tmp/dms_tsj_statslong_{_SRC_TAG}"
-_TSJ_PAIRS_PATH = f"/tmp/dms_tsj_pairs_{_SRC_TAG}"
+_TSJ_STATS_LONG_PATH = _table_path("tsj_statslong")
+_TSJ_PAIRS_PATH = _table_path("tsj_pairs")
 
 
 def _tsj_oracle(threshold: float = 0.8) -> str:
@@ -2747,13 +2744,14 @@ def teds_similarity_join(spark, sf_dir, threshold: float = 0.8):
         .select("tid", "st.bracket", "st.n_nodes", "st.hist")
         .filter(F.col("bracket").isNotNull()),
     )
-    # fixed-path long-form stats export (tid, n_nodes, tag, cnt): the
-    # DuckDB oracle re-derives the log-size buckets + Kailing label bound
-    # from THIS table in SQL (VERDICT r3 #5) — a JVM explode of the cached
-    # stats, no UDF re-evaluation
-    tables.select(
-        "tid", "n_nodes", F.explode("hist").alias("tag", "cnt")
-    ).write.mode("overwrite").parquet(_TSJ_STATS_LONG_PATH)
+    # long-form stats export (tid, n_nodes, tag, cnt): the DuckDB oracle
+    # re-derives the log-size buckets + Kailing label bound from THIS table
+    # in SQL (VERDICT r3 #5) — a JVM explode of the cached stats, no UDF
+    # re-evaluation
+    _write_table(
+        tables.select("tid", "n_nodes", F.explode("hist").alias("tag", "cnt")),
+        "tsj_statslong",
+    )
     log_base = math.log(1.0 / threshold)
     key0 = F.floor(F.log(F.col("n_nodes").cast("double")) / F.lit(log_base))
     banded = tables.select(
@@ -2808,21 +2806,20 @@ def teds_similarity_join(spark, sf_dir, threshold: float = 0.8):
     detail = cand.select(
         "tid_a", "tid_b", teds_bracket_detail_udf("ba", "bb").alias("d")
     ).select("tid_a", "tid_b", "d.*")
-    detail.select(
-        "tid_a", "tid_b", F.round(_teds_from_detail(), 6).alias("teds")
-    ).write.mode("overwrite").parquet(_TSJ_PAIRS_PATH)
-    return (
-        spark.read.parquet(_TSJ_PAIRS_PATH)
-        .filter(F.col("teds") >= threshold)
-        # no terminal orderBy: a global sort range-partitions — the
-        # driver's check is order-insensitive
-    )
+    # no terminal orderBy: a global sort range-partitions, and the oracle
+    # comparison is order-insensitive
+    return _write_table(
+        detail.select(
+            "tid_a", "tid_b", F.round(_teds_from_detail(), 6).alias("teds")
+        ),
+        "tsj_pairs",
+    ).filter(F.col("teds") >= threshold)
 
 
 _ORACLES["teds_similarity_join"] = _tsj_oracle()
 
 
-_MEDIA_PATH = f"/tmp/dms_media_{_SRC_TAG}"
+_MEDIA_PATH = _table_path("media")
 
 
 def _materialize_media(spark, sf_dir, cap):
@@ -2965,10 +2962,8 @@ def media_frame_sample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# The paths embed _SRC_TAG so the oracle SQL reads the fixture this
-# package version built.
-_COCO_FIXTURE_PATH = f"/tmp/dms_coco_fixture_{_SRC_TAG}"
-_MDPAIR_FIXTURE_PATH = f"/tmp/dms_mdpairs_fixture_{_SRC_TAG}"
+_COCO_FIXTURE_PATH = _table_path("coco_fixture")
+_MDPAIR_FIXTURE_PATH = _table_path("mdpairs_fixture")
 
 
 def _coco_fixture(spark, sf_dir) -> str:
@@ -3159,7 +3154,7 @@ def md_pair_missing(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_SMILES_FIXTURE_PATH = f"/tmp/dms_smiles_fixture_{_SRC_TAG}"
+_SMILES_FIXTURE_PATH = _table_path("smiles_fixture")
 
 
 def _smiles_fixture(spark) -> str:
@@ -3229,8 +3224,6 @@ def smiles_equality(spark, sf_dir):
     )
 
 
-_SMILES_SCORED_PATH = f"/tmp/dms_smiles_scored_{_SRC_TAG}"
-
 _SMILES_QUALITY_ORACLE = f"""
 SELECT count(*) AS sample_count,
        round(avg(CASE WHEN valid IS NULL THEN NULL
@@ -3240,7 +3233,7 @@ SELECT count(*) AS sample_count,
                       WHEN string_equality THEN CAST(1.0 AS DOUBLE)
                       ELSE CAST(0.0 AS DOUBLE) END), 3) AS equality_rate,
        round(avg(tanimoto), 3) AS tanimoto_mean
-FROM read_parquet('{_SMILES_SCORED_PATH}/*.parquet')
+FROM read_parquet('{_table_path("smiles_scored")}/*.parquet')
 """
 
 
@@ -3262,10 +3255,9 @@ def smiles_quality(spark, sf_dir):
     )
     path = _smiles_fixture(spark)
     d = spark.read.parquet(path)
-    m.evaluate_samples(d, out_col="s").select("sid", "s.*").write.mode(
-        "overwrite"
-    ).parquet(_SMILES_SCORED_PATH)
-    scored = spark.read.parquet(_SMILES_SCORED_PATH)
+    scored = _write_table(
+        m.evaluate_samples(d, out_col="s").select("sid", "s.*"), "smiles_scored"
+    )
     return scored.agg(
         F.count("*").alias("sample_count"),
         F.round(F.avg(F.col("valid").cast("double")), 3).alias("validity_rate"),
@@ -3281,7 +3273,7 @@ def smiles_quality(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_MARKUSH_FIXTURE_PATH = f"/tmp/dms_markush_fixture_{_SRC_TAG}"
+_MARKUSH_FIXTURE_PATH = _table_path("markush_fixture")
 
 
 def _markush_fixture(spark) -> str:
@@ -3381,9 +3373,6 @@ def markush_equality(spark, sf_dir):
     )
 
 
-_MARKUSH_SCORED_PATH = f"/tmp/dms_markush_scored_{_SRC_TAG}"
-
-
 def _bool_rate(col: str) -> str:
     return (
         f"CASE WHEN {col} IS NULL THEN NULL WHEN {col} THEN "
@@ -3402,7 +3391,7 @@ SELECT count(*) AS sample_count,
        round(avg(CASE WHEN num_fragments_gt > 0
                       THEN {_bool_rate("cxsmi_equality")} END), 3)
            AS cxsmi_equality_rate
-FROM read_parquet('{_MARKUSH_SCORED_PATH}/*.parquet')
+FROM read_parquet('{_table_path("markush_scored")}/*.parquet')
 """
 
 
@@ -3420,12 +3409,11 @@ def markush_quality(spark, sf_dir):
     d = spark.read.parquet(path).repartition(
         spark.sparkContext.defaultParallelism
     )
-    d.select(
-        "sid", markush_pair_udf("gt_cx", "pred_cx").alias("s")
-    ).select("sid", "s.*").write.mode("overwrite").parquet(
-        _MARKUSH_SCORED_PATH
+    scored = _write_table(
+        d.select("sid", markush_pair_udf("gt_cx", "pred_cx").alias("s"))
+        .select("sid", "s.*"),
+        "markush_scored",
     )
-    scored = spark.read.parquet(_MARKUSH_SCORED_PATH)
     return scored.agg(
         F.count("*").alias("sample_count"),
         F.round(F.avg("tanimoto"), 3).alias("mean_tanimoto"),
@@ -3532,10 +3520,7 @@ def bucketed_order_revenue(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_STREAM_PERDOC_PATH = f"/tmp/dms_stream_perdoc_{_SRC_TAG}"
-
-
-@query("streaming_extract", _summary_oracle_sql(_STREAM_PERDOC_PATH))
+@query("streaming_extract", _summary_oracle_sql(_table_path("stream_perdoc")))
 def streaming_extract(spark, sf_dir):
     """The flagship pipeline lifted onto a file stream (AvailableNow):
     identical narrow code path as batch, so stream == batch per document
@@ -3555,16 +3540,15 @@ def streaming_extract(spark, sf_dir):
     )
 
     src = cached_materialize(
-        f"/tmp/dms_stream_corpus_{_SRC_TAG}", "",
+        _table_path("stream_corpus"), "",
         lambda dest: generate_documents_df(spark, 400, partitions=8)
         .write.mode("overwrite").parquet(dest),
     )
     per_doc = run_available_now(
         extract_documents_stream(spark, src), output_mode="append"
     )
-    per_doc.write.mode("overwrite").parquet(_STREAM_PERDOC_PATH)
     return _rounded_summary(
-        aggregate_metrics(spark.read.parquet(_STREAM_PERDOC_PATH))
+        aggregate_metrics(_write_table(per_doc, "stream_perdoc"))
     )
 
 
@@ -3573,7 +3557,7 @@ def streaming_extract(spark, sf_dir):
     f"""
     SELECT count(DISTINCT md5(raw_html)) AS n_unique,
            count(DISTINCT md5(raw_html)) AS n_distinct_fp
-    FROM read_parquet('/tmp/dms_stream_dedup_src_{_SRC_TAG}/*.parquet')
+    FROM read_parquet('{_table_path("stream_dedup_src")}/*.parquet')
     """,
 )
 def streaming_dedup(spark, sf_dir):
@@ -3595,7 +3579,7 @@ def streaming_dedup(spark, sf_dir):
         )
         docs.unionByName(dups).write.mode("overwrite").parquet(dest)
 
-    src = cached_materialize(f"/tmp/dms_stream_dedup_src_{_SRC_TAG}", "", write)
+    src = cached_materialize(_table_path("stream_dedup_src"), "", write)
     uniq = run_available_now(
         dedup_documents_stream(spark, src), output_mode="append"
     )
@@ -3607,14 +3591,14 @@ def streaming_dedup(spark, sf_dir):
 
 @query(
     "checkpointed_metrics",
-    """
+    f"""
     SELECT l.bucket,
            count(*) AS n_commits,
            CAST(sum(l.n_docs) AS BIGINT) AS n_docs,
            (SELECT count(*)
-            FROM read_parquet('/tmp/dms_ckpt_query/metrics/bucket=*/*.parquet'))
+            FROM read_parquet('{_table_path("ckpt_query")}/metrics/bucket=*/*.parquet'))
                AS total_docs
-    FROM read_parquet('/tmp/dms_ckpt_query/checkpoint/*.parquet') l
+    FROM read_parquet('{_table_path("ckpt_query")}/checkpoint/*.parquet') l
     GROUP BY l.bucket
     ORDER BY l.bucket
     """,
@@ -3635,7 +3619,7 @@ def checkpointed_metrics(spark, sf_dir):
         run_checkpointed,
     )
 
-    out = "/tmp/dms_ckpt_query"
+    out = _table_path("ckpt_query")
     _shutil.rmtree(out, ignore_errors=True)
     docs = _corpus(spark, sf_dir, cap=CORPUS_CAPS["checkpointed_metrics"])
     try:  # crash after 2 buckets…
@@ -3653,13 +3637,11 @@ def checkpointed_metrics(spark, sf_dir):
     )
 
 
-_MAP_APS_PATH = f"/tmp/dms_map_aps_{_SRC_TAG}"
-
-
 @query(
     "layout_map_dataset",
     _map_surface_sql(
-        f"SELECT * FROM read_parquet('{_MAP_APS_PATH}/*.parquet')", None, None
+        f"SELECT * FROM read_parquet('{_table_path('map_aps')}/*.parquet')",
+        None, None,
     ),
 )
 def layout_map_dataset(spark, sf_dir):
@@ -3677,27 +3659,23 @@ def layout_map_dataset(spark, sf_dir):
     consistency-test pattern of the reference's
     edit_distance_benchmark.py:90-102)."""
     stats = _map_stats_table(spark, sf_dir, CORPUS_CAPS["layout_map_dataset"])
-    return _dataset_map_df(stats, materialize_path=_MAP_APS_PATH)
+    return _map_surface(_write_table(_pooled_aps(stats), "map_aps"), [], None)
 
 
-def _dataset_map_df(stats, materialize_path: str | None = None):
-    """Pooled dataset-mAP plan over :func:`_match_stats_rows` rows (shared
-    by the registered query and the dataset tests). With
-    ``materialize_path`` the pooled per-(cls, thr, area) table is written
-    to parquet and re-read — the table the DuckDB oracle aggregates."""
+def _pooled_aps(stats):
+    """The pooled per-(cls, thr_idx, area) AP/AR table of
+    ``pooled_ap_group`` over :func:`_match_stats_rows` rows. ``doc_id``
+    rides into each group, so each pool is concatenated in doc_id order
+    whatever order the shuffle delivers."""
     from docling_metrics_spark.operators.udfs import (
         POOLED_AP_SCHEMA,
         pooled_ap_group,
     )
 
-    aps = (
+    return (
         stats.filter(F.col("cls").isNotNull())
-        .select("cls", "thr_idx", "area", "scores", "tp", "n_gt",
+        .select("doc_id", "cls", "thr_idx", "area", "scores", "tp", "n_gt",
                 "tp_md1", "tp_md10")
         .groupBy("cls", "thr_idx", "area")
         .applyInPandas(pooled_ap_group, schema=POOLED_AP_SCHEMA)
     )
-    if materialize_path is not None:
-        aps.write.mode("overwrite").parquet(materialize_path)
-        aps = stats.sparkSession.read.parquet(materialize_path)
-    return _map_surface(aps, [], None)

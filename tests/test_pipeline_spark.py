@@ -353,15 +353,20 @@ def test_teds_error_channel(spark):
     assert row[0].idx == 0 and row[0].err is True and row[0].score == 0.0
 
 
+def _dataset_map_df(stats):
+    """The ``layout_map_dataset`` plan over ``stats`` without its table
+    write: the pooled AP table, then the dataset surface."""
+    from docling_metrics_spark.plans.queries import _map_surface, _pooled_aps
+
+    return _map_surface(_pooled_aps(stats), [], None)
+
+
 def test_dataset_map_matches_local(spark):
-    """Distributed pooled mAP (the production ``_dataset_map_df`` plan) ==
+    """Distributed pooled mAP (the production ``layout_map_dataset`` plan) ==
     single-process merged oracle, all 12 scalars + per-class dicts."""
     import json
 
-    from docling_metrics_spark.plans.queries import (
-        _dataset_map_df,
-        _match_stats_rows,
-    )
+    from docling_metrics_spark.plans.queries import _match_stats_rows
 
     local_docs = [gen_document(i) for i in range(200)]
     args = [
@@ -392,6 +397,42 @@ def test_dataset_map_matches_local(spark):
         assert set(got_d) == set(want[col]), col
         for cat, w in want[col].items():
             assert abs(float(got_d[cat]) - w) < 5.01e-7, (col, cat)
+
+
+def test_dataset_map_ignores_input_row_order(spark):
+    """Pooled AP breaks score ties by doc_id, then rank within the document
+    (pycocotools' image-id order), whatever order the rows arrive in. The
+    500 generated docs (seed 42) round scores to 4 decimals, so their pools
+    hold ties: read in descending doc_id order from one partition, or
+    spread over 7 partitions, they give the rows of the generated order,
+    and those equal the doc-order pooling of ``merged_map_local``."""
+    import json
+
+    from docling_metrics_spark.plans.queries import _match_stats_rows
+
+    stats = _match_stats_rows(generate_documents_df(spark, 500, seed=42)).cache()
+    rows = [
+        _dataset_map_df(s).collect()
+        for s in (stats,
+                  stats.orderBy(F.desc("doc_id")).coalesce(1),
+                  stats.repartition(7))
+    ]
+    stats.unpersist()
+    assert rows[0] == rows[1] == rows[2]
+
+    want = merged_map_local([
+        (
+            [(b["category_id"], b["bbox"]) for b in d["gt_boxes"]],
+            [(b["category_id"], b["bbox"], b["score"]) for b in d["pred_boxes"]],
+        )
+        for d in (gen_document(i, seed=42) for i in range(500))
+    ])
+    got = rows[0][0]
+    for k in ("map", "map_50", "map_75", "map_large", "mar_1", "mar_10",
+              "mar_100", "mar_large"):
+        assert abs(got[k] - want[k]) < 5.01e-7, (k, got[k], want[k])
+    for cat, w in want["map_per_class"].items():
+        assert abs(float(json.loads(got["map_per_class"])[cat]) - w) < 5.01e-7, cat
 
 
 def test_dataset_map_single_doc_equals_per_doc(spark):
@@ -434,10 +475,7 @@ def _assert_one_doc_dataset_equals_per_doc(one):
     import json
 
     from docling_metrics_spark.operators.udfs import _gt_tuples, _pred_tuples
-    from docling_metrics_spark.plans.queries import (
-        _dataset_map_df,
-        _match_stats_rows,
-    )
+    from docling_metrics_spark.plans.queries import _match_stats_rows
 
     doc = one.collect()[0]
     per = evaluate_map(_gt_tuples(doc.gt_boxes), _pred_tuples(doc.pred_boxes))

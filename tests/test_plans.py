@@ -351,6 +351,14 @@ def test_materialized_derivations_are_jvm_only(spark):
         # streaming twin of extraction_summary: the returned plan must be
         # parquet-read + agg; its only UDF execution is the stream sink
         Q.streaming_extract,
+        Q.smiles_quality,
+        Q.markush_quality,
+        Q.minhash_lsh_dedup,
+        Q.simhash_near_dup,
+        Q.embedding_lsh_ann,
+        Q.embedding_ivf_topk,
+        Q.embedding_lsh_topk,
+        Q.teds_similarity_join,
     ):
         plan = _plan(fn(spark, sf))
         for node in (
@@ -453,6 +461,46 @@ def test_file_fixture_paths_embed_src_tag():
     assert coco in oracles["coco_layout_load"]
     assert mdpairs in oracles["md_pair_scan"]
     assert mdpairs in oracles["md_pair_missing"]
+
+
+def test_oracle_tmp_paths_embed_src_tag():
+    """Every /tmp table an oracle reads carries the package digest, so a
+    session running other code cannot overwrite the tables this package's
+    oracles re-derive from."""
+    import re
+
+    from docling_metrics_spark.plans import queries as Q
+
+    paths = {
+        (name, p)
+        for name, sql in Q.all_oracles().items()
+        for p in re.findall(r"/tmp/dms_[^'/*]*", sql)
+    }
+    assert paths
+    untagged = sorted(x for x in paths if Q._SRC_TAG not in x[1])
+    assert not untagged, untagged
+
+
+def test_token_pairs_count_dropped_rows_in_their_write(spark):
+    """The dropped-row count rides the token-pair table's write as an
+    observation, and the read-back takes the written schema: the query
+    runs 3 Spark jobs before any action on its result (6 when the count ran
+    as two jobs of its own and the read-back inferred its schema), and the
+    counters equal a recount of the read-back."""
+    from docling_metrics_spark.plans import queries as Q
+
+    sc = spark.sparkContext
+    sc.setJobGroup("token_pairs_jobs", "token_edit_distance_pairs")
+    try:
+        Q.token_edit_distance_pairs(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("token_pairs_jobs")) == 3
+    assert Q.QUERY_COUNTERS["token_pairs.unencodable_dropped"] == 0
+    read_back = spark.read.parquet(Q._TOKEN_PAIRS_PATH)
+    assert Q.QUERY_COUNTERS["token_pairs.rows"] == read_back.count() > 0
+    kept = F.col("tok_err") | F.col("enc_a").isNotNull()
+    assert read_back.filter(~F.coalesce(kept, F.lit(False))).count() == 0
 
 
 def test_src_fingerprint_unreadable_source_raises(monkeypatch):
