@@ -131,6 +131,7 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
         if fn is None:
             continue
         samples = []
+        runs = []  # per timed iteration: seconds and the cached tables reused
         for _ in range(repeats):
             if name == "extract_spans_pipeline":
                 # the flagship headline (docs/sec) must always price the
@@ -151,6 +152,7 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
             reused = sorted(
                 {p for p, kind in CACHE_EVENTS[ev0:] if kind == "reuse"}
             )
+            runs.append({"s": round(samples[-1], 3), "reused": reused})
             if reused:
                 cur = set(shared.get(name, []))
                 shared[name] = sorted(cur | set(reused))
@@ -162,6 +164,7 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
                 "max": round(srt[-1], 3),
                 "mean": round(sum(srt) / len(srt), 3),
                 "median": round(srt[len(srt) // 2], 3),
+                "samples": runs,
             }
         if name == "extract_spans_pipeline":
             # Row count for docs/sec, measured OUTSIDE the timed window

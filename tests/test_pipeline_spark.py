@@ -353,6 +353,45 @@ def test_teds_error_channel(spark):
     assert row[0].idx == 0 and row[0].err is True and row[0].score == 0.0
 
 
+def test_worker_task_setup_does_not_reread_zips(spark):
+    """pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. In a worker that has imported the package, that call must
+    leave every zip archive's cached directory as it is: pyspark.zip and the
+    spark-core jar are unchanged, so re-reading them is waste."""
+    import pandas as pd
+
+    @F.pandas_udf("struct<unchanged:boolean,zips:int>")
+    def probe(v: pd.Series) -> pd.DataFrame:
+        import importlib
+        import sys
+        import zipimport
+
+        import docling_metrics_spark  # noqa: F401
+
+        zips = {
+            f.archive
+            for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        }
+        held = {a: zipimport._zip_directory_cache.get(a) for a in zips}
+        importlib.invalidate_caches()
+        unchanged = all(
+            d is not None and zipimport._zip_directory_cache.get(a) is d
+            for a, d in held.items()
+        )
+        return pd.DataFrame({"unchanged": [unchanged] * len(v), "zips": len(zips)})
+
+    rows = (
+        spark.range(8, numPartitions=8)
+        .select(probe("id").alias("p"))
+        .select("p.*")
+        .collect()
+    )
+    assert len(rows) == 8
+    assert all(r.unchanged for r in rows), rows
+    assert all(r.zips >= 1 for r in rows), rows
+
+
 def _dataset_map_df(stats):
     """The ``layout_map_dataset`` plan over ``stats`` without its table
     write: the pooled AP table, then the dataset surface."""
