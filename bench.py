@@ -22,8 +22,6 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf resolves type hints here
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Headline queries: flagship UDF pipeline + one per operator family
@@ -64,7 +62,7 @@ def _force(df) -> None:
 
 
 def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
-    from docling_metrics_spark.session import build_session
+    from docling_metrics_spark.session import build_session, warm_python_workers
     import __spark_entry__ as E
 
     spark = build_session(master=master, shuffle_partitions=shuffle_partitions)
@@ -72,23 +70,9 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
     timings: dict[str, float] = {}
     n_docs = 0
 
-    # Warm the JVM AND the Python worker pool (a pandas UDF forks one
-    # worker per slot and pays pandas/numpy import once, here instead of
-    # inside the first measured query).
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair  # noqa: F401
-
-        return v * 1.0
-
-    n_slots = spark.sparkContext.defaultParallelism
-    (
-        spark.range(n_slots * 4, numPartitions=n_slots * 4)
-        .select(F.sum(_warm(F.col("id").cast("double"))))
-        .collect()
-    )
+    # Warm the JVM AND the Python worker pool here instead of inside the
+    # first measured query.
+    warm_python_workers(spark)
 
     # Materialize the synthetic corpora OUTSIDE the timed loop — corpus
     # synthesis is table prep (a lake table in deployment), not query work.

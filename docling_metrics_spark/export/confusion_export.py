@@ -71,12 +71,11 @@ def export_dataset_report(
     num_images: int,
     num_pixels: int,
     out_dir: str,
-    title: str = DATASET_TITLE,
 ) -> dict:
-    """Write the Dataset report (reference ``build_ds_report`` content):
-    five matrix CSVs + ``meta.json``. ``summed_matrix`` is the dataset
-    (C+1)² confusion matrix from the slot sum — tiny, driver-side
-    by design (the reference renders the same single matrix)."""
+    """Write the Dataset report (reference ``build_ds_report`` content),
+    titled ``DATASET_TITLE``: five matrix CSVs + ``meta.json``.
+    ``summed_matrix`` is the dataset (C+1)² confusion matrix from the slot
+    sum — tiny, driver-side (the reference renders the same matrix)."""
     from docling_metrics_spark.kernels.layout import (
         collapsed_confusion_matrix,
         confusion_matrices,
@@ -104,7 +103,7 @@ def export_dataset_report(
         )
 
     meta = {
-        "title": title,
+        "title": DATASET_TITLE,
         "num_images": int(num_images),
         "num_pixels": int(num_pixels),
         "headers": headers,

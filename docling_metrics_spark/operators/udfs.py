@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
@@ -516,36 +517,36 @@ def simhash_udf(text: pd.Series) -> pd.Series:
     return pd.Series(vals.view("int64"))
 
 
-def make_multi_lsh_buckets_udf(dim: int, n_planes: int, n_tables: int,
-                               seed: int = 42):
-    """OR-amplified SRP-LSH: ``n_tables`` independent hyperplane sets, one
-    integer bucket id per table (bits packed small-endian). Emitting all
-    tables from one Arrow batch keeps the Python crossing to a single UDF;
-    the posexplode into (table, bucket) rows is JVM-side."""
-    import numpy as np
+#: The SRP-LSH hyperplanes [tables T, planes per table P, embedding dim],
+#: drawn from a fixed seed so that every worker draws the same ones.
+LSH_PLANES = np.random.RandomState(42).randn(24, 4, 64)
 
-    rs = np.random.RandomState(seed)
-    planes = rs.randn(n_tables, n_planes, dim)  # [T, P, dim]
-    weights = (1 << np.arange(n_planes)).astype(np.int64)  # [P]
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def multi_lsh_buckets_udf(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())  # [n, dim]
-        # [n, T, P] signs → packed ints [n, T]
-        bits = np.einsum("nd,tpd->ntp", mat, planes) > 0
-        buckets = (bits.astype(np.int64) * weights[None, None, :]).sum(axis=2)
-        return pd.Series(list(buckets.astype(np.int32)))
+@F.pandas_udf(ArrayType(IntegerType()))
+def multi_lsh_buckets_udf(emb: pd.Series) -> pd.Series:
+    """OR-amplified SRP-LSH: one integer bucket id per table of
+    ``LSH_PLANES`` (bits packed small-endian). Emitting all tables from one
+    Arrow batch keeps the Python crossing to a single UDF; the posexplode
+    into (table, bucket) rows is JVM-side."""
+    weights = (1 << np.arange(LSH_PLANES.shape[1])).astype(np.int64)  # [P]
+    mat = np.stack(emb.to_numpy())  # [n, dim]
+    # [n, T, P] signs → packed ints [n, T]
+    bits = np.einsum("nd,tpd->ntp", mat, LSH_PLANES) > 0
+    buckets = (bits.astype(np.int64) * weights[None, None, :]).sum(axis=2)
+    return pd.Series(list(buckets.astype(np.int32)))
 
-    return multi_lsh_buckets_udf
+
+#: MinHash signature width, shared by the UDF and the dedup query's estimate.
+MINHASH_PERMS = 128
 
 
 @F.pandas_udf(ArrayType(LongType()))
 def minhash_sig_udf(text: pd.Series) -> pd.Series:
-    """128-perm MinHash signature as array<bigint> (uint64 bit-view), so
-    banding, bucket hashing, and pairwise verification all stay JVM-side."""
+    """MinHash signature as array<bigint> (uint64 bit-view), so banding,
+    bucket hashing, and pairwise verification all stay JVM-side."""
     out = []
     for t in text:
-        sig = minhash_signature(char_shingle_hashes(t or "", 5), num_perm=128)
+        sig = minhash_signature(char_shingle_hashes(t or "", 5), MINHASH_PERMS)
         out.append(sig.view("int64").tolist())
     return pd.Series(out)
 

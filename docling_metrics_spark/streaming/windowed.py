@@ -37,31 +37,31 @@ EVENTS_SCHEMA = (
 )
 
 
-def read_events_stream(spark: SparkSession, source_dir: str,
-                       schema: str = EVENTS_SCHEMA,
-                       glob: str | None = None) -> DataFrame:
-    """File-source stream over a directory of parquet event files.
+def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream of ``EVENTS_SCHEMA`` rows over a directory of
+    parquet event files.
 
     ``source_dir`` may be a directory or a single file path (the file's
     parent directory is streamed with a ``pathGlobFilter`` on its name).
     With an Iceberg catalog this becomes
     ``spark.readStream.format("iceberg")``; the file source has the same
     incremental-listing semantics in the sandbox."""
+    reader = spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 4)
     if source_dir.endswith(".parquet") and not os.path.isdir(source_dir):
-        glob = os.path.basename(source_dir)
+        reader = reader.option("pathGlobFilter", os.path.basename(source_dir))
         source_dir = os.path.dirname(source_dir)
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 4)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
     return reader.parquet(source_dir)
 
 
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
+#: The tumbling window of :func:`windowed_event_counts`.
+EVENT_WINDOW = "1 hour"
+
+
+def windowed_event_counts(events: DataFrame, watermark: str) -> DataFrame:
     """Tumbling event-time window counts per event_type behind a watermark."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        .groupBy(F.window("ts", EVENT_WINDOW).alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -116,12 +116,13 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(stream_df: DataFrame, checkpoint_dir: str | None = None,
+def run_available_now(stream_df: DataFrame,
                       output_mode: str = "complete") -> DataFrame:
     """Run a streaming query to completion with Trigger.AvailableNow into an
-    in-memory sink; returns the final result as a batch DataFrame."""
+    in-memory sink, checkpointed to a fresh temporary directory; returns
+    the final result as a batch DataFrame."""
     spark = stream_df.sparkSession
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="dms_stream_ckpt_")
+    checkpoint_dir = tempfile.mkdtemp(prefix="dms_stream_ckpt_")
     name = "dms_stream_" + os.path.basename(checkpoint_dir).replace("-", "_")
     q = (
         stream_df.writeStream.format("memory")
@@ -177,21 +178,23 @@ def dedup_documents_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     ).dropDuplicates(["fp"])
 
 
-def interval_join_stream(spark: SparkSession, source_dir: str,
-                         left_type: str = "click",
-                         right_type: str = "purchase",
-                         within: str = "30 minutes",
-                         watermark: str = "2 hours") -> DataFrame:
-    """Watermarked stream-stream interval join: pair each ``left_type``
-    event with the same user's ``right_type`` events that follow within
-    ``within``. Both sides carry watermarks and the join condition bounds
-    event time on both sides, so Spark can age out join state — the
-    canonical bounded-state stream-stream join. Batch twin = the same
-    self-join in one SQL statement (oracled in plans/queries.py)."""
+JOIN_LEFT_TYPE, JOIN_RIGHT_TYPE = "click", "purchase"
+JOIN_WITHIN_MINUTES = 30
+JOIN_WATERMARK = "2 hours"
+
+
+def interval_join_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Watermarked stream-stream interval join: pair each
+    ``JOIN_LEFT_TYPE`` event with the same user's ``JOIN_RIGHT_TYPE``
+    events that follow within ``JOIN_WITHIN_MINUTES``. Both sides carry
+    the ``JOIN_WATERMARK`` and the join condition bounds event time on
+    both sides, so Spark can age out join state — the canonical
+    bounded-state stream-stream join. Batch twin = the same self-join in
+    one SQL statement (oracled in plans/queries.py)."""
     left = (
         read_events_stream(spark, source_dir)
-        .filter(F.col("event_type") == left_type)
-        .withWatermark("ts", watermark)
+        .filter(F.col("event_type") == JOIN_LEFT_TYPE)
+        .withWatermark("ts", JOIN_WATERMARK)
         .select(
             F.col("user_id").alias("l_user"),
             F.col("event_id").alias("l_event"),
@@ -200,8 +203,8 @@ def interval_join_stream(spark: SparkSession, source_dir: str,
     )
     right = (
         read_events_stream(spark, source_dir)
-        .filter(F.col("event_type") == right_type)
-        .withWatermark("ts", watermark)
+        .filter(F.col("event_type") == JOIN_RIGHT_TYPE)
+        .withWatermark("ts", JOIN_WATERMARK)
         .select(
             F.col("user_id").alias("r_user"),
             F.col("event_id").alias("r_event"),
@@ -212,6 +215,6 @@ def interval_join_stream(spark: SparkSession, source_dir: str,
         right,
         F.expr(
             f"l_user = r_user AND r_ts >= l_ts "
-            f"AND r_ts <= l_ts + interval {within}"
+            f"AND r_ts <= l_ts + interval {JOIN_WITHIN_MINUTES} minutes"
         ),
     )

@@ -481,6 +481,23 @@ def test_oracle_tmp_paths_embed_src_tag():
     assert not untagged, untagged
 
 
+def test_warm_corpus_read_starts_no_job(spark):
+    """A warm ``_corpus`` call (its table already built) reads back with the
+    schema ``write_corpus`` writes, so it starts no schema-inference job:
+    building a plan over the corpus runs no Spark job."""
+    from docling_metrics_spark.plans import queries as Q
+
+    cap = Q.CORPUS_CAPS["teds_similarity_join"]
+    Q._corpus(spark, SF, cap)  # builds the table, or reuses it
+    sc = spark.sparkContext
+    sc.setJobGroup("corpus_warm_jobs", "warm _corpus")
+    try:
+        Q._corpus(spark, SF, cap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("corpus_warm_jobs")) == []
+
+
 def test_token_pairs_count_dropped_rows_in_their_write(spark):
     """The dropped-row count rides the token-pair table's write as an
     observation, and the read-back takes the written schema: the query

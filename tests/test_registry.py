@@ -123,3 +123,82 @@ def test_no_test_only_udfs_or_queries():
                 orphans.append(f"{path.relative_to(root).as_posix()}::{fn.name}")
     assert n_defs > 100, "too few functions found: the scan itself is broken"
     assert not orphans, "package functions only tests use:\n" + "\n".join(orphans)
+
+
+def test_no_single_valued_defaults():
+    """Every parameter with a default in a query, operator, stream, export
+    or session function is passed by some caller outside the tests (by
+    keyword, by position or by ``**`` forwarding). A default no production
+    caller overrides is one value spelled twice, once as the default and
+    once wherever it is checked (an oracle's literal): it belongs in one
+    module constant instead. A caller that forwards its own parameter of
+    the same name (or an enclosing function's) does not count."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "docling_metrics_spark"
+    scanned = [pkg / "session.py"]
+    for d in ("plans", "operators", "streaming", "export"):
+        scanned += sorted((pkg / d).rglob("*.py"))
+    callers = [root / "__spark_entry__.py", root / "bench.py"]
+    for d in ("docling_metrics_spark", "tools", "perfbench"):
+        callers += sorted((root / d).rglob("*.py"))
+
+    # (function name, parameter) -> positional index, None if keyword-only
+    defaults: dict[tuple[str, str], int | None] = {}
+    where: dict[tuple[str, str], str] = {}
+    for path in scanned:
+        rel = path.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            keyed = {p: pos.index(p) for p in pos[len(pos) - len(a.defaults):]}
+            keyed.update(
+                (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            )
+            for p, idx in keyed.items():
+                defaults[(fn.name, p)] = idx
+                where[(fn.name, p)] = rel
+    assert len(defaults) >= 5, "too few defaults found: the scan is broken"
+
+    def own_params(fn) -> set[str]:
+        a = fn.args
+        return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+
+    passed: set[tuple[str, str]] = set()
+
+    def visit(node, params: set[str]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            params = params | own_params(node)  # closures forward too
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+            def forwards(value, p: str) -> bool:
+                return isinstance(value, ast.Name) and value.id == p and p in params
+
+            for (fname, p), idx in defaults.items():
+                if fname != name:
+                    continue
+                for kw in node.keywords:
+                    if kw.arg is None or (kw.arg == p and not forwards(kw.value, p)):
+                        passed.add((fname, p))
+                if idx is not None and not any(
+                    isinstance(x, ast.Starred) for x in node.args[: idx + 1]
+                ) and len(node.args) > idx and not forwards(node.args[idx], p):
+                    passed.add((fname, p))
+        for child in ast.iter_child_nodes(node):
+            visit(child, params)
+
+    for path in callers:
+        visit(ast.parse(path.read_text(encoding="utf-8")), set())
+    unset = sorted(
+        f"{where[k]}::{k[0]}.{k[1]}" for k in defaults if k not in passed
+    )
+    assert not unset, (
+        "defaults no caller outside the tests overrides (make each a module "
+        "constant):\n" + "\n".join(unset)
+    )

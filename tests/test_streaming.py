@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_windowed_counts_match_batch(spark):
     stream = read_events_stream(spark, f"{SF_DIR}/events.parquet")
     got = run_available_now(
-        windowed_event_counts(stream, window="1 hour", watermark="3650 days")
+        windowed_event_counts(stream, watermark="3650 days")
     )
     batch = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
@@ -75,7 +75,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    agg = windowed_event_counts(stream, window="1 hour", watermark="1 hour")
+    agg = windowed_event_counts(stream, watermark="1 hour")
     ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.format("memory")
@@ -145,9 +145,7 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
     generate_documents_df(spark, 60, partitions=4).write.parquet(src)
 
     got = run_available_now(
-        extract_documents_stream(spark, src),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        output_mode="append",
+        extract_documents_stream(spark, src), output_mode="append"
     )
     batch = run_pipeline(spark.read.parquet(src))
     cols = ["doc_id", "span_equal", "n_spans", "edit_distance_score", "f1_score"]

@@ -40,18 +40,14 @@ import subprocess
 import sys
 import time
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CORPUS = "/tmp/dms_scale_corpus"
 
 
 def worker(master: str, shuffle_partitions: int, corpus: str) -> None:
-    from pyspark.sql import functions as F
-
     from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
-    from docling_metrics_spark.session import build_session
+    from docling_metrics_spark.session import build_session, warm_python_workers
 
     spark = build_session(
         app_name=f"dms-scale-{master}",
@@ -66,21 +62,8 @@ def worker(master: str, shuffle_partitions: int, corpus: str) -> None:
             "spark.sql.execution.pyspark.udf.faulthandler.enabled": "true",
         },
     )
-    # Warm-up: JVM JIT + Python worker pool spin-up (pandas UDF so every
-    # task slot forks a Python worker and pays module import once, here,
-    # not in the timed region — a long-running cluster app amortizes this).
-    @F.pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair  # noqa: F401
-
-        return v * 1.0
-
-    n_slots = spark.sparkContext.defaultParallelism
-    (
-        spark.range(n_slots * 4, numPartitions=n_slots * 4)
-        .select(F.sum(_warm(F.col("id").cast("double"))))
-        .collect()
-    )
+    # Warm-up: JVM JIT + Python worker pool spin-up, not in the timed region.
+    warm_python_workers(spark)
 
     docs = spark.read.parquet(corpus)
     t0 = time.time()

@@ -19,9 +19,7 @@ import json
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution
-
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -29,23 +27,11 @@ def main() -> None:
     spark = SparkSession.builder.appName("dms-submit").getOrCreate()
     # resolved from the --py-files zip on driver and executors alike
     from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
+    from docling_metrics_spark.session import warm_python_workers
 
-    # Warm-up: JVM JIT + Python worker pool spin-up (pandas UDF so every
-    # task slot forks a worker and pays module import here, outside the
-    # timed region — the same protocol as tools/bench_scaling.py's
-    # in-process worker; a long-running cluster app amortizes this).
-    @F.pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair  # noqa: F401
-
-        return v * 1.0
-
-    n_slots = spark.sparkContext.defaultParallelism
-    (
-        spark.range(n_slots * 4, numPartitions=n_slots * 4)
-        .select(F.sum(_warm(F.col("id").cast("double"))))
-        .collect()
-    )
+    # Warm-up: JVM JIT + Python worker pool spin-up, outside the timed
+    # region (the same protocol as tools/bench_scaling.py's worker).
+    warm_python_workers(spark)
 
     docs = spark.read.parquet(corpus)
     t0 = time.time()
