@@ -158,32 +158,27 @@ def run_checkpointed(
     if not todo:
         return 0
 
+    subset = docs.withColumn(
+        "bucket", bucket_of(F.col("doc_id"), n_buckets)
+    ).filter(F.col("bucket").isin(todo))
+    per_doc = run_pipeline(subset.drop("bucket")).withColumn(
+        "bucket", bucket_of(F.col("doc_id"), n_buckets)
+    )
+    # dynamic overwrite as this write's own option: only the buckets in
+    # the data are replaced, and no other write in the session is affected
+    per_doc.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(metrics_dir)
+    # Commit point: one lineage file per bucket, in bucket order.
     processed = 0
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        subset = docs.withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        ).filter(F.col("bucket").isin(todo))
-        per_doc = run_pipeline(subset.drop("bucket")).withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
+    for bucket in todo:
+        if fail_after_buckets is not None and processed >= fail_after_buckets:
+            raise RuntimeError(f"injected failure after {processed} buckets")
+        n_docs = _footer_count(os.path.join(metrics_dir, f"bucket={bucket}"))
+        _commit_lineage(
+            ckpt_dir, f"{corpus_fingerprint}:{bucket}", bucket, n_docs
         )
-        per_doc.write.mode("overwrite").partitionBy("bucket").parquet(
-            metrics_dir
-        )
-        # Commit point: one lineage file per bucket, in bucket order.
-        for bucket in todo:
-            if fail_after_buckets is not None and processed >= fail_after_buckets:
-                raise RuntimeError(
-                    f"injected failure after {processed} buckets"
-                )
-            n_docs = _footer_count(os.path.join(metrics_dir, f"bucket={bucket}"))
-            _commit_lineage(
-                ckpt_dir, f"{corpus_fingerprint}:{bucket}", bucket, n_docs
-            )
-            processed += 1
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        processed += 1
     return processed
 
 

@@ -115,14 +115,7 @@ def export_dataset_report(
     return meta
 
 
-def export_tore_report(
-    spark,
-    docs,
-    out_dir: str,
-    n_classes: int,
-    page_width: int,
-    page_height: int,
-) -> dict:
+def export_tore_report(spark, docs, out_dir: str) -> dict:
     """End-to-end TORE report in ONE Spark job over ONE rasterizing pass:
     the per-image sheet is a distributed CSV write of each page's collapsed
     12-vector, and that same write observes the dataset slot sum and the
@@ -131,17 +124,20 @@ def export_tore_report(
     Returns the dataset meta."""
     from pyspark.sql import Observation, functions as F
 
+    from docling_metrics_spark.kernels.datagen_meta import (
+        N_CATEGORIES,
+        TORE_PIXELS,
+    )
     from docling_metrics_spark.operators.udfs import (
-        make_tore_partial_udf,
         slot_sum,
         tore_metrics_udf,
+        tore_partial_udf,
     )
 
-    n_cm = n_classes + 1
-    partial_udf = make_tore_partial_udf(n_classes, page_width, page_height)
+    n_cm = N_CATEGORIES + 1
     dataset = Observation()
     pages = docs.select(
-        "doc_id", partial_udf("gt_boxes", "pred_boxes").alias("cm")
+        "doc_id", tore_partial_udf("gt_boxes", "pred_boxes").alias("cm")
     ).observe(
         dataset,
         slot_sum("cm", n_cm * n_cm).alias("summed"),
@@ -162,11 +158,11 @@ def export_tore_report(
 
     observed = dataset.get
     num_images = int(observed["n_rows"])
-    headers = ["background"] + [f"cat_{k}" for k in range(n_classes)]
+    headers = ["background"] + [f"cat_{k}" for k in range(N_CATEGORIES)]
     return export_dataset_report(
         np.asarray(observed["summed"], dtype=float).reshape(n_cm, n_cm),
         headers,
         num_images=num_images,
-        num_pixels=num_images * page_width * page_height,
+        num_pixels=num_images * TORE_PIXELS,
         out_dir=os.path.join(out_dir, "dataset"),
     )

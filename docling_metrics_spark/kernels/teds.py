@@ -14,10 +14,10 @@ Pipeline pieces (reference parity targets, not copies):
   colspan/rowspan attributes parsed with default 1, cell text
   char-tokenized. Its handlers also build the trees of extraction's table
   spans, fed event by event from the document parse.
-- :func:`normalize_spans` / :func:`teds_tree` — HTML and cells input are
-  scored on their trees directly: normalizing the spans as the bracket
-  round trip would (0 → 1, negative → error) makes that exactly the
-  bracket path's score without serializing. Bracket strings are parsed
+- :func:`normalize_spans` — HTML and cells input are scored on their
+  trees directly: normalizing the spans as the bracket round trip would
+  (0 → 1, negative → error) makes that exactly the bracket path's score
+  without serializing. Bracket strings are parsed
   only when they are the input (the bracket input mode and the TEDS join).
 - :func:`tree_edit_distance` — the Zhang–Shasha algorithm (Zhang & Shasha,
   SIAM J. Comput. 1989 — published) with the reference's custom costs
@@ -27,11 +27,11 @@ Pipeline pieces (reference parity targets, not copies):
   reference's C++ path uses APTED with identical costs; Zhang–Shasha
   computes the same exact TED value, per the north rule which names
   Zhang-Shasha explicitly.)
-- :func:`teds_from_trees` —
-  ``1 − distance / max(n_nodes_a, n_nodes_b)`` with node counts taken from
-  the full trees (C++ path semantics, cpp_src/pybind/teds_manager.h:87-96);
-  for bracket input, :func:`teds_detail_from_brackets` returns the
-  un-normalized (distance, n_nodes_a, n_nodes_b) triple.
+- TEDS = ``1 − distance / max(n_nodes_a, n_nodes_b)`` with node counts
+  taken from the full trees (C++ path semantics,
+  cpp_src/pybind/teds_manager.h:87-96); for bracket input,
+  :func:`teds_detail_from_brackets` returns the un-normalized
+  (distance, n_nodes_a, n_nodes_b) triple.
 
 Malformed bracket strings raise ``ValueError`` — the reference surfaces an
 (error_id, error_msg) channel and re-raises (docling_metrics_table.py:219-220);
@@ -299,18 +299,6 @@ def normalize_spans(root: TableNode) -> TableNode:
             node.rowspan = node.rowspan or 1
         stack.extend(node.children)
     return root
-
-
-def teds_tree(html: str, structure_only: bool = False) -> TableNode:
-    """HTML table → the tree TEDS scores (:func:`html_to_tree`, then
-    :func:`normalize_spans`); raises ValueError like the parser."""
-    return normalize_spans(html_to_tree(html, structure_only))
-
-
-def teds_from_trees(tree_a: TableNode, tree_b: TableNode) -> tuple[float, int, int]:
-    """TEDS = 1 − TED / max(sizes); returns (teds, size_a, size_b)."""
-    na, nb = tree_a.size(), tree_b.size()
-    return 1.0 - tree_edit_distance(tree_a, tree_b) / max(na, nb), na, nb
 
 
 # ---------------------------------------------------------------------------

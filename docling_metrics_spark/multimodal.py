@@ -55,6 +55,10 @@ FEATURES_SCHEMA = (
 FRAMES_SCHEMA = (
     "doc_id string, media_ref string, frame_index int, frame_checksum string"
 )
+#: ``sample_frames`` keeps every ``FRAME_EVERY``-th ``FRAME_BYTES``-byte
+#: block of a payload's body (the bytes after its header).
+FRAME_EVERY = 4
+FRAME_BYTES = 256
 
 
 def synth_payload(media_ref: str, media_type: int = 0,
@@ -166,9 +170,9 @@ def decode_media_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(decode, schema=FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every: int = 4,
-                  frame_bytes: int = 256) -> DataFrame:
-    """Frame sampling over video payloads: every k-th fixed-size block."""
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling over video payloads: every ``FRAME_EVERY``-th
+    ``FRAME_BYTES``-byte block."""
 
     header_size = HEADER.size  # plain int: struct.Struct doesn't pickle
 
@@ -179,9 +183,9 @@ def sample_frames(media: DataFrame, every: int = 4,
                 pdf["doc_id"], pdf["media_ref"], pdf["payload"]
             ):
                 body = bytes(payload)[header_size:]
-                n_frames = max(len(body) // frame_bytes, 1)
-                for i in range(0, n_frames, every):
-                    frame = body[i * frame_bytes:(i + 1) * frame_bytes]
+                n_frames = max(len(body) // FRAME_BYTES, 1)
+                for i in range(0, n_frames, FRAME_EVERY):
+                    frame = body[i * FRAME_BYTES:(i + 1) * FRAME_BYTES]
                     rows.append({
                         "doc_id": doc_id, "media_ref": ref, "frame_index": i,
                         # hex-domain md5, same rationale as _decode_stub

@@ -31,6 +31,11 @@ from pyspark.sql.types import (
 )
 
 from docling_metrics_spark.extraction.html_extract import extract_spans_from_html
+from docling_metrics_spark.kernels.datagen_meta import (
+    N_CATEGORIES,
+    TORE_PAGE_H,
+    TORE_PAGE_W,
+)
 from docling_metrics_spark.kernels.layout import (
     confusion_matrix_from_masks,
     evaluate_map_docs,
@@ -400,32 +405,29 @@ def flagship_doc_udf(
     return pd.DataFrame(rows)
 
 
-def make_tore_partial_udf(n_classes: int, page_width: int, page_height: int):
-    """Per-document flattened confusion-matrix partial (ARRAY<DOUBLE>) —
-    the only TORE code that rasterizes.
+@F.pandas_udf(ArrayType(DoubleType()))
+def tore_partial_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
+    """Per-document flattened confusion-matrix partial (ARRAY<DOUBLE>) on
+    the ``TORE_PAGE_W`` × ``TORE_PAGE_H`` raster — the only TORE code that
+    rasterizes.
 
     The dataset-level matrix is then :func:`slot_sum` over the pages —
     the partial+final pattern of the reference's TORE dataset aggregation
     (tore_layout_evaluator.py:224-245) mapped onto Spark's native two-stage
     aggregation — and every metric comes from :func:`tore_metrics_udf`."""
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def tore_partial_udf(gt_boxes: pd.Series, pred_boxes: pd.Series) -> pd.Series:
-        out = []
-        for g, p in zip(gt_boxes, pred_boxes):
-            # TORE rasterization is score-free: both sides use the
-            # (category_id, bbox) shape
-            gt_img = rasterize_multilabel(
-                _gt_tuples(g), page_width, page_height, n_classes
-            )
-            pred_img = rasterize_multilabel(
-                _gt_tuples(p), page_width, page_height, n_classes
-            )
-            cm = confusion_matrix_from_masks(gt_img, pred_img, n_classes)
-            out.append(cm.ravel().tolist())
-        return pd.Series(out)
-
-    assert tore_partial_udf.returnType.elementType == DoubleType()
-    return tore_partial_udf
+    out = []
+    for g, p in zip(gt_boxes, pred_boxes):
+        # TORE rasterization is score-free: both sides use the
+        # (category_id, bbox) shape
+        gt_img = rasterize_multilabel(
+            _gt_tuples(g), TORE_PAGE_W, TORE_PAGE_H, N_CATEGORIES
+        )
+        pred_img = rasterize_multilabel(
+            _gt_tuples(p), TORE_PAGE_W, TORE_PAGE_H, N_CATEGORIES
+        )
+        cm = confusion_matrix_from_masks(gt_img, pred_img, N_CATEGORIES)
+        out.append(cm.ravel().tolist())
+    return pd.Series(out)
 
 
 def slot_sum(array_col: str, n_slots: int) -> Column:

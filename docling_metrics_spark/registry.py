@@ -1,6 +1,7 @@
 """Metric extension API — the engine's analog of the reference's
-``BaseMetric`` contract (docling-metrics-core base_types.py:34-54 and the
-hello-world template hello_world_metric.py:37-92).
+``BaseMetric`` contract (docling-metrics-core base_types.py:34-54; the
+reference's hello-world template, hello_world_metric.py:37-92, is
+re-expressed in tests/test_registry.py).
 
 A metric is three declared pieces:
 
@@ -29,9 +30,6 @@ import pandas as pd  # module-level: pandas_udf resolves type hints here
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
-
-from docling_metrics_spark.kernels.teds import teds_from_trees, teds_tree
-from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 
 
 @dataclass(frozen=True)
@@ -96,45 +94,3 @@ def register_metric(name: str, input_cols: list[str],
     metric imports)."""
     return Metric(name, tuple(input_cols), result_schema, batch_kernel)
 
-
-# ---------------------------------------------------------------------------
-# Built-in metrics: the reference's metric surface through this API
-# ---------------------------------------------------------------------------
-
-
-TEXT_PAIR = register_metric(
-    "text_pair",
-    ["text_a", "text_b"],
-    "f1_score double, precision_score double, recall_score double, "
-    "edit_distance_score double, bleu_score double, meteor_score double",
-    lambda row: evaluate_text_pair(
-        row["text_a"] or "", row["text_b"] or ""
-    ).__dict__,
-)
-
-
-def _teds_kernel(row: dict) -> dict:
-    try:
-        teds, na, nb = teds_from_trees(
-            teds_tree(row["html_a"]), teds_tree(row["html_b"])
-        )
-        return {"teds": teds, "nodes_a": na, "nodes_b": nb, "error": 0}
-    except ValueError:
-        return {"teds": None, "nodes_a": None, "nodes_b": None, "error": 1}
-
-
-TEDS_HTML = register_metric(
-    "teds_html",
-    ["html_a", "html_b"],
-    "teds double, nodes_a int, nodes_b int, error int",
-    _teds_kernel,
-)
-
-# hello-world template analog (hello_world_metric.py:37-92): payload
-# equality score — the minimal end-to-end example for metric authors.
-HELLO_WORLD = register_metric(
-    "hello_world",
-    ["payload_a", "payload_b"],
-    "score double",
-    lambda row: {"score": 1.0 if row["payload_a"] == row["payload_b"] else 0.0},
-)

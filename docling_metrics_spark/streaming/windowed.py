@@ -24,7 +24,7 @@ watermarks bound state size; checkpointLocation gives exactly-once sinks.
 from __future__ import annotations
 
 import os
-import tempfile
+import uuid
 from typing import Iterable
 
 import pandas as pd
@@ -119,16 +119,15 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
 def run_available_now(stream_df: DataFrame,
                       output_mode: str = "complete") -> DataFrame:
     """Run a streaming query to completion with Trigger.AvailableNow into an
-    in-memory sink, checkpointed to a fresh temporary directory; returns
-    the final result as a batch DataFrame."""
+    in-memory sink; returns the final result as a batch DataFrame. Given
+    no checkpoint location, Spark checkpoints the memory sink to a
+    temporary directory of its own and deletes it when the query stops."""
     spark = stream_df.sparkSession
-    checkpoint_dir = tempfile.mkdtemp(prefix="dms_stream_ckpt_")
-    name = "dms_stream_" + os.path.basename(checkpoint_dir).replace("-", "_")
+    name = f"dms_stream_{uuid.uuid4().hex}"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

@@ -20,7 +20,12 @@ from docling_metrics_spark.export.confusion_export import (
     COLLAPSED_IMAGE_HEADERS,
     export_tore_report,
 )
-from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
+from docling_metrics_spark.kernels.datagen_meta import (
+    N_CATEGORIES,
+    TORE_PAGE_H,
+    TORE_PAGE_W,
+    TORE_PIXELS,
+)
 from docling_metrics_spark.kernels.layout import (
     collapsed_confusion_matrix,
     confusion_matrices,
@@ -31,7 +36,6 @@ from docling_metrics_spark.kernels.layout import (
 from docling_metrics_spark.plans.queries import _scale_boxes_half
 
 N_DOCS = 30
-PAGE_W, PAGE_H = 640, 811
 
 
 def _boxes(doc, key):
@@ -46,10 +50,10 @@ def _local_dataset_matrix():
     per_doc = {}
     for d in map(gen_document, range(N_DOCS)):
         gt_img = rasterize_multilabel(
-            _boxes(d, "gt_boxes"), PAGE_W, PAGE_H, N_CATEGORIES
+            _boxes(d, "gt_boxes"), TORE_PAGE_W, TORE_PAGE_H, N_CATEGORIES
         )
         pred_img = rasterize_multilabel(
-            _boxes(d, "pred_boxes"), PAGE_W, PAGE_H, N_CATEGORIES
+            _boxes(d, "pred_boxes"), TORE_PAGE_W, TORE_PAGE_H, N_CATEGORIES
         )
         cm = confusion_matrix_from_masks(gt_img, pred_img, N_CATEGORIES)
         per_doc[d["doc_id"]] = cm
@@ -69,9 +73,7 @@ def _read_matrix_csv(path):
 def test_export_tore_report_empty_corpus(spark, tmp_path):
     """An empty corpus yields a valid all-zero report, not a crash."""
     docs = generate_documents_df(spark, 5).filter("false")
-    meta = export_tore_report(
-        spark, docs, str(tmp_path / "empty"), N_CATEGORIES, 64, 81
-    )
+    meta = export_tore_report(spark, docs, str(tmp_path / "empty"))
     assert meta["num_images"] == 0
     _, _, got = _read_matrix_csv(
         str(tmp_path / "empty" / "dataset" / "confusion_matrix.csv")
@@ -90,20 +92,18 @@ def test_export_tore_report_counts_boxless_docs(spark, tmp_path):
         "CAST(array() AS array<struct<category_id:int,bbox:array<double>,"
         "score:double>>) AS pred_boxes",
     )
-    meta = export_tore_report(
-        spark, docs, str(tmp_path / "boxless"), N_CATEGORIES, 64, 81
-    )
+    meta = export_tore_report(spark, docs, str(tmp_path / "boxless"))
     assert meta["num_images"] == 7
-    # all pixels are background agreement: cm[0,0] == 7 * 64 * 81
+    # all pixels are background agreement
     _, _, got = _read_matrix_csv(
         str(tmp_path / "boxless" / "dataset" / "confusion_matrix.csv")
     )
-    assert got[0, 0] == 7 * 64 * 81
+    assert got[0, 0] == 7 * TORE_PIXELS
     assert got.sum() == got[0, 0]
 
 
 def _golden_docs(spark):
-    # the 640×811 raster of tore_confusion: halved coordinates
+    # the raster of tore_confusion: halved coordinates
     return generate_documents_df(spark, N_DOCS).select(
         "doc_id",
         *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
@@ -132,10 +132,7 @@ def test_export_tore_report_runs_one_job(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("tore_export_jobs", "export_tore_report")
     try:
-        export_tore_report(
-            spark, _golden_docs(spark), str(tmp_path / "report"),
-            N_CATEGORIES, PAGE_W, PAGE_H,
-        )
+        export_tore_report(spark, _golden_docs(spark), str(tmp_path / "report"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("tore_export_jobs")) == 1
@@ -158,13 +155,13 @@ def test_export_tore_report_rounds_like_the_query(spark, tmp_path):
         *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
     )
     out = str(tmp_path / "report")
-    export_tore_report(spark, docs, out, N_CATEGORIES, PAGE_W, PAGE_H)
+    export_tore_report(spark, docs, out)
 
-    cm = confusion_matrix_from_masks(
-        rasterize_multilabel(_boxes(doc, "gt_boxes"), PAGE_W, PAGE_H, N_CATEGORIES),
-        rasterize_multilabel(_boxes(doc, "pred_boxes"), PAGE_W, PAGE_H, N_CATEGORIES),
-        N_CATEGORIES,
+    gt_img, pred_img = (
+        rasterize_multilabel(_boxes(doc, k), TORE_PAGE_W, TORE_PAGE_H, N_CATEGORIES)
+        for k in ("gt_boxes", "pred_boxes")
     )
+    cm = confusion_matrix_from_masks(gt_img, pred_img, N_CATEGORIES)
     v = float(confusion_matrices(collapsed_confusion_matrix(cm))[1][1, 1])
     assert float(np.round(v, 3)) == 0.962  # the tie this doc pins
     col = COLLAPSED_IMAGE_HEADERS.index("Recall(GT/Pred): cls/cls")
@@ -176,15 +173,15 @@ def test_export_tore_report_rounds_like_the_query(spark, tmp_path):
 def test_export_tore_report_golden(spark, tmp_path):
     docs = _golden_docs(spark)
     out = str(tmp_path / "report")
-    meta = export_tore_report(
-        spark, docs, out, N_CATEGORIES, PAGE_W, PAGE_H
-    )
+    meta = export_tore_report(spark, docs, out)
 
     total, per_doc = _local_dataset_matrix()
 
-    # dataset meta block (reference build_ds_report header cells)
+    # dataset meta block (reference build_ds_report header cells), on the
+    # raster every TORE query and report rasterizes at: half the datagen page
+    assert (TORE_PAGE_W, TORE_PAGE_H) == (640, 811)
     assert meta["num_images"] == N_DOCS
-    assert meta["num_pixels"] == N_DOCS * PAGE_W * PAGE_H
+    assert meta["num_pixels"] == N_DOCS * TORE_PAGE_W * TORE_PAGE_H
     assert meta["headers"][0] == "background"
     assert meta["collapsed_headers"] == ["background", "all_classes"]
     assert json.load(open(os.path.join(out, "dataset", "meta.json"))) == meta

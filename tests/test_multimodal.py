@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from docling_metrics_spark.datagen import generate_documents_df
 from docling_metrics_spark.multimodal import (
+    FRAME_EVERY,
     HEADER,
     MAGIC,
     decode_media_features,
@@ -103,10 +104,10 @@ def test_multimodal_query_plans_end_at_mapinpandas(spark):
 def test_frame_sampling(spark):
     docs = generate_documents_df(spark, 60)
     media = media_table(docs)
-    frames = sample_frames(media, every=2, frame_bytes=128)
+    frames = sample_frames(media)
     rows = frames.collect()
     n_videos = media.filter("media_type = 'video'").count()
     if n_videos == 0:
         return
     assert len(rows) > 0
-    assert {r.frame_index % 2 for r in rows} == {0}
+    assert {r.frame_index % FRAME_EVERY for r in rows} == {0}

@@ -236,6 +236,33 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     }
 
 
+def test_checkpoint_leaves_session_overwrite_mode_alone(
+    spark, docs, tmp_path, monkeypatch
+):
+    """Dynamic partition overwrite is the bucket write's own option: the
+    session-wide ``partitionOverwriteMode`` keeps its value while a run
+    commits and after a run that crashes, so no other write in the session
+    sees it change."""
+    from docling_metrics_spark import checkpoint
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    seen = []
+    commit = checkpoint._commit_lineage
+
+    def observed_commit(*args):
+        seen.append(spark.conf.get(key))
+        commit(*args)
+
+    monkeypatch.setattr(checkpoint, "_commit_lineage", observed_commit)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        checkpoint.run_checkpointed(
+            spark, docs, str(tmp_path / "out"), n_buckets=4, fail_after_buckets=2
+        )
+    assert seen == [before, before]
+    assert spark.conf.get(key) == before
+
+
 def _parquet_mtimes(out_dir):
     """{bucket dir: {file: mtime}} of every written metric bucket."""
     import os

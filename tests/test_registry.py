@@ -1,28 +1,27 @@
 """Extension API: register_metric → evaluate_samples / evaluate_dataset,
-mirroring the reference BaseMetric contract (base_types.py:34-54)."""
+mirroring the reference BaseMetric contract (base_types.py:34-54). Each
+test registers its own metric; kernels are defined inside the tests so
+they ship to the Python workers by value."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from docling_metrics_spark.registry import (
-    HELLO_WORLD,
-    TEDS_HTML,
-    TEXT_PAIR,
-    register_metric,
-)
-
-
-def test_builtin_metrics_registered():
-    names = [m.name for m in (TEXT_PAIR, TEDS_HTML, HELLO_WORLD)]
-    assert names == ["text_pair", "teds_html", "hello_world"]
+from docling_metrics_spark.registry import register_metric
 
 
 def test_hello_world_metric(spark):
+    """The reference's hello-world template (hello_world_metric.py:37-92):
+    a payload-equality score, the minimal end-to-end metric."""
+    m = register_metric(
+        "hello_world",
+        ["payload_a", "payload_b"],
+        "score double",
+        lambda row: {"score": 1.0 if row["payload_a"] == row["payload_b"] else 0.0},
+    )
     df = spark.createDataFrame(
         [("1", "x", "x"), ("2", "x", "y"), ("3", "z", "z")],
         "id string, payload_a string, payload_b string",
     )
-    m = HELLO_WORLD
     rows = m.evaluate_samples(df).orderBy("id").collect()
     assert [r.hello_world_scores.score for r in rows] == [1.0, 0.0, 1.0]
     agg = m.evaluate_dataset(df).collect()[0]
@@ -33,13 +32,21 @@ def test_hello_world_metric(spark):
 def test_text_pair_via_registry_matches_kernel(spark):
     from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 
+    m = register_metric(
+        "text_pair",
+        ["text_a", "text_b"],
+        "f1_score double, precision_score double, recall_score double, "
+        "edit_distance_score double, bleu_score double, meteor_score double",
+        lambda row: evaluate_text_pair(
+            row["text_a"] or "", row["text_b"] or ""
+        ).__dict__,
+    )
     pairs = [
         ("a", "the quick brown fox", "the quick brown fox"),
         ("b", "alpha beta gamma", "alpha gamma delta"),
         ("c", "one two three", ""),
     ]
     df = spark.createDataFrame(pairs, "id string, text_a string, text_b string")
-    m = TEXT_PAIR
     got = {
         r.id: r.s for r in m.evaluate_samples(df, out_col="s").orderBy("id").collect()
     }
@@ -61,6 +68,7 @@ def test_custom_metric_registration(spark):
             "ratio": len(row["text_b"] or "") / max(len(row["text_a"] or ""), 1)
         },
     )
+    assert (m.name, m.input_cols) == ("len_ratio", ("text_a", "text_b"))
     df = spark.createDataFrame(
         [("aaaa", "aa")], "text_a string, text_b string"
     )
@@ -69,6 +77,31 @@ def test_custom_metric_registration(spark):
 
 
 def test_teds_html_error_channel(spark):
+    """A kernel that raises on one row degrades that row to an error
+    struct: TEDS over two HTML tables, ``error`` set where parsing fails."""
+    from docling_metrics_spark.kernels.teds import (
+        html_to_tree,
+        normalize_spans,
+        tree_edit_distance,
+    )
+
+    def teds_kernel(row: dict) -> dict:
+        try:
+            ta, tb = (
+                normalize_spans(html_to_tree(row[c])) for c in ("html_a", "html_b")
+            )
+            na, nb = ta.size(), tb.size()
+            teds = 1.0 - tree_edit_distance(ta, tb) / max(na, nb)
+        except ValueError:
+            return {"teds": None, "nodes_a": None, "nodes_b": None, "error": 1}
+        return {"teds": teds, "nodes_a": na, "nodes_b": nb, "error": 0}
+
+    m = register_metric(
+        "teds_html",
+        ["html_a", "html_b"],
+        "teds double, nodes_a int, nodes_b int, error int",
+        teds_kernel,
+    )
     df = spark.createDataFrame(
         [
             ("ok", "<table><tr><td>a</td></tr></table>",
@@ -77,7 +110,6 @@ def test_teds_html_error_channel(spark):
         ],
         "id string, html_a string, html_b string",
     )
-    m = TEDS_HTML
     rows = {r.id: r.s for r in m.evaluate_samples(df, "s").collect()}
     assert rows["ok"].teds == pytest.approx(1.0)
     assert rows["ok"].error == 0
@@ -126,9 +158,11 @@ def test_no_test_only_udfs_or_queries():
 
 
 def test_no_single_valued_defaults():
-    """Every parameter with a default in a query, operator, stream, export
-    or session function is passed by some caller outside the tests (by
-    keyword, by position or by ``**`` forwarding). A default no production
+    """Every parameter with a default in a query, operator, stream, export,
+    extraction, session, media, checkpoint, pipeline, datagen, registry,
+    cache or shipping function is passed by some caller outside the tests
+    (by keyword, by position or by ``**`` forwarding). The kernels keep
+    defaults that mirror the reference's signatures. A default no production
     caller overrides is one value spelled twice, once as the default and
     once wherever it is checked (an oracle's literal): it belongs in one
     module constant instead. A caller that forwards its own parameter of
@@ -138,8 +172,12 @@ def test_no_single_valued_defaults():
 
     root = Path(__file__).resolve().parents[1]
     pkg = root / "docling_metrics_spark"
-    scanned = [pkg / "session.py"]
-    for d in ("plans", "operators", "streaming", "export"):
+    scanned = [
+        pkg / f"{m}.py"
+        for m in ("session", "multimodal", "checkpoint", "pipeline", "datagen",
+                  "registry", "cache", "shipping")
+    ]
+    for d in ("plans", "operators", "streaming", "export", "extraction"):
         scanned += sorted((pkg / d).rglob("*.py"))
     callers = [root / "__spark_entry__.py", root / "bench.py"]
     for d in ("docling_metrics_spark", "tools", "perfbench"):

@@ -29,6 +29,23 @@ def test_windowed_counts_match_batch(spark):
     assert g == b and len(g) > 0
 
 
+def test_available_now_run_leaves_no_directory_behind(spark):
+    """The memory sink checkpoints to Spark's own temporary directory,
+    which Spark deletes when the query stops: a run to completion leaves
+    the JVM's temporary directory as it found it."""
+    import os
+
+    tmp = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+    stream = read_events_stream(spark, f"{SF_DIR}/events.parquet")
+    # one run first, so directories a session makes once are already there
+    run_available_now(windowed_event_counts(stream, watermark="3650 days"))
+    before = set(os.listdir(tmp))
+    got = run_available_now(windowed_event_counts(stream, watermark="3650 days"))
+    assert got.count() > 0
+    new = set(os.listdir(tmp)) - before
+    assert not {d for d in new if os.path.isdir(os.path.join(tmp, d))}, new
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Three micro-batches; the final batch's too-late event is dropped.
 

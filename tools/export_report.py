@@ -27,7 +27,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from docling_metrics_spark.export import export_tore_report
-    from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
     from docling_metrics_spark.plans.queries import (
         CORPUS_CAPS,
         _corpus,
@@ -38,12 +37,12 @@ def main() -> None:
     spark = build_session(app_name="dms-export-report")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same 640×811 raster as the tore_confusion query: halved coordinates
+    # the tore_confusion query's raster: halved coordinates
     docs = _corpus(spark, sf_dir, cap=CORPUS_CAPS["tore_confusion"]).select(
         "doc_id",
         *[_scale_boxes_half(F.col(c)).alias(c) for c in ("gt_boxes", "pred_boxes")],
     )
-    meta = export_tore_report(spark, docs, out_dir, N_CATEGORIES, 640, 811)
+    meta = export_tore_report(spark, docs, out_dir)
     print(
         f"report written to {out_dir}: {meta['num_images']} images, "
         f"{meta['num_pixels']} pixels, headers={meta['headers']}"
